@@ -41,16 +41,28 @@ object Bench {
     // separate scheduling noise from plan cost without 10 JVM launches.
     val reps = sys.env.get("SPARK_GRAFT_REPEAT").flatMap(_.toIntOption)
       .filter(_ > 1).filter(_ => args.nonEmpty).getOrElse(1)
-    val results = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
+    // A cell that throws is FAILED, not timed: its time-to-failure is
+    // no query time, and folding it would plant a bogus floor. Failed
+    // cells leave `queries` and are listed under "failed" instead.
+    val results: Seq[(String, Option[Double])] =
+      picked.toSeq.sortBy(_._1).map { case (name, fn) =>
+        val times = (1 to reps).map { _ =>
+          val t0 = System.nanoTime()
+          try {
+            fn(spark, sfDir).count()
+            Some((System.nanoTime() - t0) / 1e9)
+          } catch {
+            case e: Throwable =>
+              System.err.println(s"bench: $name failed: $e")
+              None
+          }
+        }
+        if (reps > 1)
+          println(s"""{"metric":"repeat","query":"$name","reps":[${times.map(_.fold("null")(t => "%.3f".formatLocal(java.util.Locale.ROOT, t))).mkString(",")}]}""")
+        name -> (if (times.contains(None)) None else Some(times.flatten.min))
       }
-      if (reps > 1)
-        println(s"""{"metric":"repeat","query":"$name","reps":[${times.map(t => "%.3f".formatLocal(java.util.Locale.ROOT, t)).mkString(",")}]}""")
-      name -> times.min
-    }
+    val timed = results.collect { case (n, Some(t)) => n -> t }
+    val failed = results.collect { case (n, None) => n }
     // The driver parses JSON from a bounded tail of the build output. At
     // 87 queries a single line with the full per-query map overflows that
     // window and the total is lost (BENCH_r03 parsed=null). So: emit the
@@ -60,15 +72,18 @@ object Bench {
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def toJson(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    def names(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     // repeat runs emit NO queries_part lines: a warm min-of-N is
     // systematically below a protocol single-shot measurement, and the
     // part lines are exactly what tools/foldbench.py parses — printing
     // them would let a repeat log silently fold biased-low floors
     if (reps == 1) results.grouped(12).zipWithIndex.foreach { case (part, i) =>
-      println(s"""{"metric":"queries_part","part":${i + 1},"queries":${toJson(part)}}""")
+      val partTimed = part.collect { case (n, Some(t)) => n -> t }
+      val partFailed = part.collect { case (n, None) => n }
+      println(s"""{"metric":"queries_part","part":${i + 1},"queries":${toJson(partTimed)},"failed":${names(partFailed)}}""")
     }
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val slowest = results.sortBy(-_._2).take(8)
+    val total = timed.map(_._2).sum
+    val slowest = timed.sortBy(-_._2).take(8)
     // median per-entry ratio vs BENCH_QUERIES.json (the committed
     // quiet min-of-N map — the same statistic tools/foldbench.py
     // computes); the map is a flat {"queries":{name:sec,...}}, so the
@@ -103,7 +118,7 @@ object Bench {
     // visible in the block either way
     val ratios =
       if (sfMismatch || reps > 1) Seq.empty[Double]
-      else results.flatMap { case (n, v) =>
+      else timed.flatMap { case (n, v) =>
         committed.get(n).filter(_ > 0).map(v / _) }.sorted
     val medianRatio =
       if (ratios.isEmpty) -1.0
@@ -116,7 +131,7 @@ object Bench {
     // capture, so the complete map is also written to a file — the one
     // durable record of every per-query timing.
     val fullJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${toJson(results)},$calib,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${toJson(timed)},"failed":${names(failed)},$calib,"sf":"$sfDir"}"""
     // Single-run timings land in BENCH_LAST_RUN.json — NOT in
     // BENCH_QUERIES.json, which holds the protocol-governed quiet
     // min-of-N map (SCALING.md "Benchmark protocol") and must not be
@@ -127,7 +142,7 @@ object Bench {
         fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // `slowest` (not `queries`): this is a subset — summing it would NOT
     // reproduce the total. Full map: BENCH_LAST_RUN.json + the part lines.
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","slowest":${toJson(slowest)},$calib,"queries_file":"BENCH_LAST_RUN.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","failed":${failed.size},"slowest":${toJson(slowest)},$calib,"queries_file":"BENCH_LAST_RUN.json","sf":"$sfDir"}""")
     spark.stop()
   }
 }

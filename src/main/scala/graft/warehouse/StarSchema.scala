@@ -270,17 +270,25 @@ object StarSchema {
   }
 
   /** Post-load integrity validation (`etl/pipeline.py:567-609`):
-    * anti-join orphan counts for every FK + a pass/fail verdict.
+    * orphan counts for every FK + a pass/fail verdict, as ONE lazy
+    * 1-row relation — nothing runs until a caller reads it. Each FK is
+    * an anti join of the fact's key pair against the dimension's key
+    * (a NULL FK has no match, so it counts as an orphan, and an anti
+    * join emits each fact row at most once, so duplicate dimension
+    * keys cannot inflate a count); the two branches share the fact
+    * subplan and one global aggregate counts both.
     */
   def integrityCheck(spark: SparkSession, fact: DataFrame, dimB: DataFrame,
                      dimO: DataFrame): DataFrame = {
-    import spark.implicits._
-    val orphanBiz = Joins.orphans(fact,
-      dimB.select(col("business_id")), Seq("business_id")).count()
-    val orphanOwn = Joins.orphans(fact,
-      dimO.select(col("owner_id")), Seq("owner_id")).count()
-    Seq((orphanBiz, orphanOwn, orphanBiz == 0 && orphanOwn == 0))
-      .toDF("orphaned_business_fk", "orphaned_owner_fk", "passed")
+    val keys = fact.select("business_id", "owner_id")
+    def orphaned(dim: DataFrame, key: String) =
+      Joins.orphans(keys, dim.select(key), Seq(key)).select(lit(key).as("fk"))
+    orphaned(dimB, "business_id").union(orphaned(dimO, "owner_id"))
+      .agg(
+        count(when(col("fk") === "business_id", 1)).as("orphaned_business_fk"),
+        count(when(col("fk") === "owner_id", 1)).as("orphaned_owner_fk"))
+      .withColumn("passed",
+        col("orphaned_business_fk") === 0 && col("orphaned_owner_fk") === 0)
   }
 
   /** Register the reference's three reporting views
@@ -423,29 +431,49 @@ object StarSchema {
         |CROSS JOIN (SELECT SUM(total_owners) AS tot FROM counts) t""".stripMargin)
   }
 
-  /** Full warehouse load over a cleaned staging table — every table the
-    * reference load populates (`create_dimensions` → `create_facts` →
-    * `create_aggregations` → validation). `dateId` stamps the daily
-    * aggregate rows (the reference uses CURRENT_DATE; a parameter keeps
-    * loads reproducible).
+  /** The three dimensions of one load (`create_dimensions`):
+    * `dim_business`, `dim_owner` and the `dim_role` seed.
     */
-  def loadAll(spark: SparkSession, cleaned: DataFrame,
+  def dimensions(cleaned: DataFrame): Map[String, DataFrame] = Map(
+    "dim_business" -> dimBusiness(cleaned),
+    "dim_owner" -> dimOwner(cleaned),
+    "dim_role" -> dimRole(cleaned.sparkSession))
+
+  /** Everything downstream of the star's core (`create_facts` →
+    * `create_aggregations` → validation): `core` holds the three
+    * [[dimensions]] and `fact_business_ownership`, lazy or read back
+    * from storage; the result is `core` plus the metrics and
+    * demographics facts, the three daily aggregates and the
+    * [[integrityCheck]] verdict, all lazy over `core` except the
+    * demographics fact's two-phase rank, which checkpoints its range
+    * partitioning when built ([[factOwnerDemographics]]).
+    */
+  def derived(core: Map[String, DataFrame],
               dateId: String = "2024-01-01"): Map[String, DataFrame] = {
-    val dimB = dimBusiness(cleaned)
-    val dimO = dimOwner(cleaned)
-    val dimR = dimRole(spark)
-    val fact = factOwnership(cleaned, dimB, dimO, dimR)
+    val dimB = core("dim_business")
+    val dimO = core("dim_owner")
+    val dimR = core("dim_role")
+    val fact = core("fact_business_ownership")
     val metrics = factBusinessMetrics(fact)
-    Map(
-      "dim_business" -> dimB,
-      "dim_owner" -> dimO,
-      "dim_role" -> dimR,
-      "fact_business_ownership" -> fact,
+    core ++ Map(
       "fact_business_metrics" -> metrics,
       "fact_owner_demographics" -> factOwnerDemographics(dimO),
       "agg_daily_business" -> aggDailyBusiness(dimB, metrics, dateId),
       "agg_daily_owners" -> aggDailyOwners(dimO, fact, dimR, dateId),
       "agg_role_distribution" -> aggRoleDistribution(fact),
-      "integrity" -> integrityCheck(spark, fact, dimB, dimO))
+      "integrity" -> integrityCheck(fact.sparkSession, fact, dimB, dimO))
+  }
+
+  /** Full warehouse load over a cleaned staging table — every table the
+    * reference load populates, lazily: [[dimensions]], the ownership
+    * fact over them, then [[derived]]. `dateId` stamps the daily
+    * aggregate rows (the reference uses CURRENT_DATE; a parameter keeps
+    * loads reproducible).
+    */
+  def loadAll(spark: SparkSession, cleaned: DataFrame,
+              dateId: String = "2024-01-01"): Map[String, DataFrame] = {
+    val dims = dimensions(cleaned)
+    derived(dims + ("fact_business_ownership" -> factOwnership(cleaned,
+      dims("dim_business"), dims("dim_owner"), dims("dim_role"))), dateId)
   }
 }

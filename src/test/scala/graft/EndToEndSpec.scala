@@ -3,11 +3,15 @@ package graft
 import graft.analytics.Report
 import graft.core.Tables
 import graft.ingest.Ingestion
-import graft.lake.LakeStorage
+import graft.lake.{LakeStorage, VersionedTable}
 import graft.operators.{Packing, Sampling}
 import graft.serve.QueryService
 import graft.textops.Curation
 import graft.warehouse.StarSchema
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -15,7 +19,7 @@ import java.nio.file.Files
   * CSV → ingest/clean → lake layers → analytics report → star-schema
   * warehouse → integrity gate → serve-layer queries.
   */
-class EndToEndSpec extends SparkSpec {
+class EndToEndSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("full pipeline: csv -> lake -> report -> warehouse -> serve") {
@@ -125,8 +129,35 @@ class EndToEndSpec extends SparkSpec {
     assert(dist.nonEmpty)
     assert(dist.map(_.getAs[Long]("total_owners")).sum === 5)
 
+    // the star's core is published once under <lakeRoot>/warehouse/,
+    // and the views read it: no scan of the processed layer, and no
+    // Window — the primary-owner flag was computed at publish time
+    val tables = Seq("dim_business", "dim_owner", "fact_business_ownership")
+    tables.foreach { t =>
+      assert(res.paths(t) === s"$work/lake/warehouse/$t")
+      assert(VersionedTable.listVersions(spark, res.paths(t)).size === 1)
+    }
+    val viewNames = Seq("v_role_distribution", "v_business_ownership_summary")
+    def viewRows(): Map[String, Set[Row]] = viewNames.map(v =>
+      v -> spark.sql(s"SELECT * FROM $v").collect().toSet).toMap
+    val published = viewRows()
+    viewNames.foreach { v =>
+      val q = spark.sql(s"SELECT * FROM $v")
+      q.collect()
+      val plan = q.queryExecution.executedPlan
+      val roots = collectWithSubqueries(plan) {
+        case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+      }.flatten
+      assert(roots.exists(_.contains("/warehouse/fact_business_ownership/")), roots)
+      assert(roots.forall(_.contains("/warehouse/")), roots)
+      assert(!roots.exists(_.contains("processed/business_owners")), roots)
+      assert(collectWithSubqueries(plan) { case w: WindowExec => w }.isEmpty,
+        s"$v plans a Window:\n$plan")
+    }
+
     // re-run of the same date is idempotent: dynamic partition
-    // overwrite replaces the partition instead of duplicating it
+    // overwrite replaces the partition instead of duplicating it, and
+    // each warehouse table gets a new version with the same view rows
     val res2 = Pipeline.runFull(spark, csvPath, s"$work/lake",
       dateId = "2024-08-01")
     assert(res2.integrityPassed)
@@ -134,6 +165,15 @@ class EndToEndSpec extends SparkSpec {
     assert(LakeStorage
       .readLatest(spark, s"$work/lake", "aggregated", "role_distribution")
       .count() === 5)
+    tables.foreach(t =>
+      assert(VersionedTable.listVersions(spark, res2.paths(t)).size === 2))
+    assert(viewRows() === published)
+
+    // the same views over the lazy load of the same input agree
+    StarSchema.registerViews(spark,
+      StarSchema.loadAll(spark, res2.cleaned, "2024-08-01"),
+      loadTs = "2024-08-01 00:00:00")
+    assert(viewRows() === published)
   }
 
   test("training-data lifecycle: near-dedup -> curate -> split -> report") {

@@ -98,4 +98,25 @@ class FloorAgeSpec extends AnyFunSuite {
     assert(age.contains("\"session\": 7") || age.contains("\"session\":7"),
       s"a partial apply must not advance the session clock: $age")
   }
+
+  test("--apply refuses a failed cell, even when another run timed it") {
+    assume(script.isFile)
+    val dir = fixture(Map("q_a" -> 1.0, "q_b" -> 2.0), session = 3,
+      lastReproduced = Map("q_a" -> 3, "q_b" -> 3))
+    // two graft.Bench stdout logs: q_b threw in the first and finished
+    // fast in the second; q_a finished in both
+    def log(name: String, queries: String, failed: String): Unit =
+      java.nio.file.Files.write(dir.toPath.resolve(name),
+        s"""{"metric":"queries_part","part":1,"queries":$queries,"failed":$failed}\n"""
+          .getBytes("UTF-8"))
+    log("run1.log", """{"q_a":0.9}""", """["q_b"]""")
+    log("run2.log", """{"q_a":0.95,"q_b":0.5}""", "[]")
+    val (rc, out) = run(dir, "--apply", "run1.log", "run2.log")
+    assert(rc === 0, out)
+    assert(out.contains("refused (failed in a run): 1 — q_b"), out)
+    val mp = new String(java.nio.file.Files.readAllBytes(
+      dir.toPath.resolve("BENCH_QUERIES.json")), "UTF-8")
+    assert(mp.contains("\"q_a\": 0.9"), s"the timed cell folds: $mp")
+    assert(mp.contains("\"q_b\": 2.0"), s"the failed cell must not fold: $mp")
+  }
 }

@@ -204,6 +204,52 @@ class WarehouseSpec extends SparkSpec {
     assert(verdict.getAs[Long]("orphaned_business_fk") === 0L)
   }
 
+  test("integrity check counts planted orphans, lazily and over published tables") {
+    // three bad fact rows: an unknown business, an unknown owner, and a
+    // NULL owner FK (no dimension row can match a NULL key)
+    val fact = wh("fact_business_ownership")
+    val one = fact.orderBy("owner_id", "title").limit(1)
+    val planted = fact
+      .union(one.withColumn("business_id", lit(-1L)))
+      .union(one.withColumn("owner_id", lit(-2L)))
+      .union(one.withColumn("owner_id", lit(null).cast("long")))
+    def verdict(gate: org.apache.spark.sql.DataFrame) = {
+      val r = gate.collect().head
+      (r.getAs[Long]("orphaned_business_fk"), r.getAs[Long]("orphaned_owner_fk"),
+        r.getAs[Boolean]("passed"))
+    }
+    val dimB = wh("dim_business")
+    val dimO = wh("dim_owner")
+    val lazyGate = StarSchema.derived(wh + ("fact_business_ownership" -> planted))
+    assert(verdict(lazyGate("integrity")) === ((1L, 2L, false)))
+    // duplicate dimension keys cannot inflate an orphan count
+    assert(verdict(StarSchema.integrityCheck(spark, planted,
+      dimB.union(dimB), dimO.union(dimO))) === ((1L, 2L, false)))
+
+    // the same tables published and read back with their known schema
+    val root = java.nio.file.Files.createTempDirectory("graft_gate").toString
+    def published(df: org.apache.spark.sql.DataFrame, t: String) = {
+      graft.lake.VersionedTable.publish(df, s"$root/$t")
+      graft.lake.VersionedTable.readCurrent(spark, s"$root/$t", df.schema)
+    }
+    val stored = StarSchema.derived(wh ++ Map(
+      "dim_business" -> published(dimB, "dim_business"),
+      "dim_owner" -> published(dimO, "dim_owner"),
+      "fact_business_ownership" -> published(planted, "fact")))
+    assert(verdict(stored("integrity")) === ((1L, 2L, false)))
+    assert(stored("integrity").columns.toSeq ===
+      Seq("orphaned_business_fk", "orphaned_owner_fk", "passed"))
+
+    // the gate is lazy: building it over a fact that fails when read
+    // runs nothing; only reading the verdict does
+    val poisoned = planted.withColumn("business_id",
+      when(col("business_id") === -1L, raise_error(lit("fact was read")))
+        .otherwise(col("business_id")))
+    val gate = StarSchema.integrityCheck(spark, poisoned, dimB, dimO)
+    assert(intercept[Exception](gate.collect()).getMessage
+      .contains("fact was read"))
+  }
+
   test("dim_date generates correct calendar attributes") {
     val dd = StarSchema.dimDate(spark, "2024-02-01", "2024-03-01")
     assert(dd.count() === 30)

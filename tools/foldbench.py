@@ -11,7 +11,9 @@ Spark JVM). This tool makes the fold reproducible:
 
 Each argument is a `graft.Bench` stdout log (the sharded
 `queries_part` lines are parsed; `BENCH_LAST_RUN.json` from the most
-recent run works too if passed as a .json file). Per query the MIN
+recent run works too if passed as a .json file). A cell listed under
+"failed" in any run threw instead of finishing: it has no time and is
+never folded, seeded or stamped. Per query the MIN
 across all given runs is compared to the committed map: lower values
 fold, queries absent from the map are SEEDED (new bench surface —
 seed only from >= 2 quiet runs per protocol; the tool warns on 1).
@@ -72,18 +74,21 @@ AGE_FILE = "BENCH_FLOOR_AGE.json"
 
 
 def parse(path):
-    """Returns (per-query seconds, scale-factor dir or None)."""
+    """Returns (per-query seconds, scale-factor dir or None, names of
+    the cells that failed — they carry no time)."""
     if path.endswith(".json"):
         d = json.load(open(path))
-        return d["queries"], d.get("sf")
-    qs, sf = {}, None
+        return d["queries"], d.get("sf"), set(d.get("failed", []))
+    qs, sf, failed = {}, None, set()
     for line in open(path):
         line = line.strip()
         if line.startswith('{"metric":"queries_part"'):
-            qs.update(json.loads(line)["queries"])
+            part = json.loads(line)
+            qs.update(part["queries"])
+            failed.update(part.get("failed", []))
         elif line.startswith('{"metric":"total"'):
             sf = json.loads(line).get("sf", sf)
-    return qs, sf
+    return qs, sf, failed
 
 
 def main():
@@ -102,7 +107,7 @@ def main():
     # (every sf0.01 time undercuts its sf0.1 floor), so a known
     # mismatch is a hard error, an unknown sf only a warning
     map_sf = mp.get("sf")
-    for a, _, sf in parsed:
+    for a, _, sf, _ in parsed:
         if sf and map_sf and sf != map_sf:
             sys.exit(f"ERROR: {a} was measured at sf '{sf}' but the "
                      f"committed map is for '{map_sf}' — refusing to "
@@ -110,7 +115,14 @@ def main():
         if not sf:
             print(f"WARNING: {a} carries no sf stamp — "
                   f"verify it was taken at {map_sf} before --apply")
-    runs = [(a, q) for a, q, _ in parsed]
+    runs = [(a, q) for a, q, _, _ in parsed]
+    # a cell that failed in any run is never folded, seeded or stamped:
+    # a failed cell has no time, and a later timed run does not vouch
+    # for the one that threw
+    failed = set().union(*(f for _, _, _, f in parsed))
+    if failed:
+        print(f"refused (failed in a run): {len(failed)} — "
+              + ", ".join(sorted(failed)))
     age = (json.load(open(AGE_FILE)) if os.path.exists(AGE_FILE)
            else {"session": 0, "last_reproduced": {}})
     for name, run in runs:
@@ -121,7 +133,8 @@ def main():
     merged = {}
     for _, run in runs:
         for k, v in run.items():
-            merged[k] = min(v, merged.get(k, v))
+            if k not in failed:
+                merged[k] = min(v, merged.get(k, v))
     seeds = {k: v for k, v in merged.items() if k not in committed}
     folds = {k: (committed[k], v) for k, v in merged.items()
              if k in committed and v < committed[k]}

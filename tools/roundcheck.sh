@@ -1,7 +1,10 @@
 #!/usr/bin/env bash
 # One-command round gate — the full local correctness protocol:
 #   1. unit specs (incl. PartitionInvarianceSpec's 12-family
-#      bit-identical check at two awkward execution configs)
+#      bit-identical check at two awkward execution configs), then the
+#      benchmark harness's own tests — its build compiles the engine
+#      sources with the harness, so an engine signature change that
+#      breaks perfbench fails here
 #   2. sf0.01 oracle pack: Verify dump + DuckDB compare (the driver's
 #      own gate; full pack — 199 queries as of r18)
 #   3. the same pack at 7 cores / 7 shuffle partitions — the full-pack
@@ -15,6 +18,7 @@ cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
 
 sbt -batch test
+(cd perfbench && sbt -batch test)
 
 sbt -batch "runMain graft.Verify $SF_DIR /tmp/roundcheck_out"
 python3 tools/check.py "$SF_DIR" /tmp/roundcheck_out

@@ -459,12 +459,12 @@ object ScaleBench {
       def fresh(p: String): String = {
         fs.delete(new org.apache.hadoop.fs.Path(p), true); p
       }
-      // One SEED per store family, copied per state-mode variant
-      // (r17): the eager/amortized/segmented probes start from
+      // One SEED per store family, copied per state-layout variant
+      // (r17): the eager/segmented probes start from
       // bit-identical store trees (a VersionedTable root is
       // location-independent files + markers), and the L-point seeding
       // cost — minutes of chunked admission at 200k rows — is paid
-      // once instead of three times per family. Seeds are rebuilt
+      // once instead of once per variant. Seeds are rebuilt
       // every session on purpose: caching them across sessions would
       // silently measure probes against state a code change no longer
       // produces.
@@ -538,22 +538,14 @@ object ScaleBench {
           Streaming.nearDedupBatchStep(probe(i), "doc_id", "text", "ts",
             ndRoot, retention = "3650 days").count(): Unit
         }))
-        // amortized-republish variant (pruneEvery > 1, r16 — the
-        // band-store twin of q_store_novelty_amortized_batch): probe
-        // batches append O(batch) survivor-band deltas instead of
-        // rewriting the store; the collision probe join remains
-        val ndaRoot = copyStore(ndSeed, s"/tmp/graft_scale/store/$name/nda")
-        timed(name, "q_store_neardedup_amortized_batch")(Seq(0L, 1L).map(i => () => {
-          Streaming.nearDedupBatchStep(probe(i), "doc_id", "text", "ts",
-            ndaRoot, retention = "3650 days", pruneEvery = 10).count(): Unit
-        }))
-        // segment-mode variant (pruneEvery = 0, r17 row — the band-store
-        // twin of q_store_novelty_segmented_batch): probe batches append
-        // one STAMPED segment; no republish ever after bootstrap
+        // segment-mode variant (r17 row — the band-store twin of
+        // q_store_novelty_segmented_batch): probe batches append one
+        // STAMPED segment; no republish ever after bootstrap
         val ndsRoot = copyStore(ndSeed, s"/tmp/graft_scale/store/$name/nds")
         timed(name, "q_store_neardedup_segmented_batch")(Seq(0L, 1L).map(i => () => {
           Streaming.nearDedupBatchStep(probe(i), "doc_id", "text", "ts",
-            ndsRoot, retention = "3650 days", pruneEvery = 0).count(): Unit
+            ndsRoot, retention = "3650 days",
+            maxSegments = Streaming.SegmentMergeBound).count(): Unit
         }))
         // novelty shingle store: minNovelty 0 admits the whole seed
         val nvSeed = fresh(s"/tmp/graft_scale/store/$name/nv_seed")
@@ -567,25 +559,16 @@ object ScaleBench {
           Streaming.noveltyGateBatchStep(probe(i), "doc_id", "text", "ts",
             nvRoot, minNovelty = 0.5, retention = "3650 days").count(): Unit
         }))
-        // amortized-pruning variant (pruneEvery > 1): same seed, but the
-        // probe batches append O(batch) deltas instead of rewriting the
-        // store — the row quantifies how much of the eager per-batch
-        // cost was the republish (the O(store) scan for scoring remains)
-        val nvaRoot = copyStore(nvSeed, s"/tmp/graft_scale/store/$name/nva")
-        timed(name, "q_store_novelty_amortized_batch")(Seq(0L, 1L).map(i => () => {
-          Streaming.noveltyGateBatchStep(probe(i), "doc_id", "text", "ts",
-            nvaRoot, minNovelty = 0.5, retention = "3650 days",
-            pruneEvery = 10).count(): Unit
-        }))
-        // segment-mode variant (pruneEvery = 0, r16): probe batches
-        // append one STAMPED segment and vacuum expired ones — the
-        // expected reading equals the amortized row (same probe, same
-        // O(batch) write) with the scheduled fold gone entirely
+        // segment-mode variant (r16): same seed, but the probe batches
+        // append one STAMPED segment and vacuum expired ones instead of
+        // rewriting the store — the row quantifies how much of the
+        // eager per-batch cost was the republish (the O(store) scan for
+        // scoring remains)
         val nvsRoot = copyStore(nvSeed, s"/tmp/graft_scale/store/$name/nvs")
         timed(name, "q_store_novelty_segmented_batch")(Seq(0L, 1L).map(i => () => {
           Streaming.noveltyGateBatchStep(probe(i), "doc_id", "text", "ts",
             nvsRoot, minNovelty = 0.5, retention = "3650 days",
-            pruneEvery = 0).count(): Unit
+            maxSegments = Streaming.SegmentMergeBound).count(): Unit
         }))
         // KMV global: axis = batches already folded (state O(k) always)
         val folds = name match { case "S" => 1; case "M" => 10; case _ => 100 }
@@ -684,21 +667,7 @@ object ScaleBench {
             threshold = 0.9999, sdRoot, retention = "3650 days")
             .count(): Unit
         }))
-        // amortized-republish variant (pruneEvery > 1, r15 — the
-        // semdedup twin of q_store_novelty_amortized_batch): probe
-        // batches append O(batch) survivor deltas instead of rewriting
-        // the d-double vector store; the bucketed probe join remains
-        val sdaRoot = copyStore(sdSeed, s"/tmp/graft_scale/store/$name/semdedupa")
-        timed(name, "q_store_semdedup_amortized_batch")(Seq(0L, 1L).map(i => () => {
-          Streaming.semanticDedupBatchStep(
-            e.where(col("vec_id") >= 200000L + i * probeN &&
-              col("vec_id") < 200000L + (i + 1) * probeN),
-            "vec_id", "embedding", "ts", cent, "b", "cv",
-            threshold = 0.9999, sdaRoot, retention = "3650 days",
-            pruneEvery = 10).count(): Unit
-        }))
-        // segment-mode variant (pruneEvery = 0, r17 row — the vector-
-        // store twin): probe batches append one STAMPED survivor
+        // segment-mode variant (r17 row — the vector-store twin): probe batches append one STAMPED survivor
         // segment; the quantizer is unchanged, so no republish fires
         val sdsRoot = copyStore(sdSeed, s"/tmp/graft_scale/store/$name/semdedups")
         timed(name, "q_store_semdedup_segmented_batch")(Seq(0L, 1L).map(i => () => {
@@ -707,80 +676,8 @@ object ScaleBench {
               col("vec_id") < 200000L + (i + 1) * probeN),
             "vec_id", "embedding", "ts", cent, "b", "cv",
             threshold = 0.9999, sdsRoot, retention = "3650 days",
-            pruneEvery = 0).count(): Unit
+            maxSegments = Streaming.SegmentMergeBound).count(): Unit
         }))
-      }
-    }
-
-    // Many-segment metadata sweep (opt-in: `runMain graft.ScaleBench
-    // SEGSWEEP`): segment mode's live segment count = retention /
-    // batch-interval — ~60 at 1-hour/1-minute, ~10k at 7-day/1-minute.
-    // Per batch the maintenance pass lists pending segments and opens
-    // each _maxts stamp, and the merged store read unions every
-    // segment's files — both O(segments). This sweep measures a probe
-    // batch against a store whose overlay is pre-split into many
-    // single-batch segments, then the same store after compactSegments
-    // bounds the backlog, pinning (a) how the per-batch cost grows
-    // with segment count and (b) that the L1 merge restores it.
-    if (args.contains("SEGSWEEP")) {
-      import graft.stream.Streaming
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      def fresh(p: String): String = {
-        fs.delete(new org.apache.hadoop.fs.Path(p), true); p
-      }
-      val probeN = 2000L
-      val corpusPath = "/tmp/graft_scale/store/corpus.parquet"
-      if (!new java.io.File(s"$corpusPath/_SUCCESS").exists())
-        docs(spark, 200000L + 2 * probeN, vocab = 15000)
-          .withColumn("ts", to_timestamp(lit("2024-01-01 00:00:00")))
-          .write.mode("overwrite").parquet(corpusPath)
-      val c = spark.read.parquet(corpusPath)
-      for (segs <- Seq(10, 100, 500)) {
-        val root = fresh(s"/tmp/graft_scale/segsweep/$segs/nv")
-        // bootstrap base with 2000 docs, then land `segs` single-doc
-        // stamped segments (tiny on purpose: the axis is segment
-        // COUNT — metadata and file-listing cost — not row volume)
-        Streaming.noveltyGateBatchStep(c.where(col("doc_id") < 2000L),
-          "doc_id", "text", "ts", root, minNovelty = 0.0,
-          retention = "3650 days").count()
-        // maxSegments = 0 THROUGHOUT the sweep: the axis is the
-        // unbounded backlog itself — the r18 bounded default would
-        // fold it mid-build (and the tripwire warning firing here is
-        // the expected demo of exactly that)
-        for (i <- 0 until segs)
-          Streaming.noveltyGateBatchStep(
-            c.where(col("doc_id") === 2000L + i), "doc_id", "text", "ts",
-            root, minNovelty = 0.0, retention = "3650 days",
-            pruneEvery = 0, maxSegments = 0).count()
-        isolate(spark)
-        val times = Seq(0L, 1L).map { i =>
-          val t0 = System.nanoTime()
-          Streaming.noveltyGateBatchStep(
-            c.where(col("doc_id") >= 200000L + i * probeN &&
-              col("doc_id") < 200000L + (i + 1) * probeN),
-            "doc_id", "text", "ts", root, minNovelty = 0.5,
-            retention = "3650 days", pruneEvery = 0, maxSegments = 0).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"""{"segments":$segs,"query":"q_segsweep_probe","sec":${times.min}%.3f}""")
-        // L1 merge down to 8 segments, then re-probe
-        val t0 = System.nanoTime()
-        val folded = graft.lake.VersionedTable.compactSegments(
-          spark, root, maxSegments = 8)
-        val tm = (System.nanoTime() - t0) / 1e9
-        println(f"""{"segments":$segs,"query":"q_segsweep_compact","folded":${folded.size},"sec":$tm%.3f}""")
-        isolate(spark)
-        val times2 = Seq(0L, 1L).map { i =>
-          val t0b = System.nanoTime()
-          Streaming.noveltyGateBatchStep(
-            c.where(col("doc_id") >= 200000L + i * probeN &&
-              col("doc_id") < 200000L + (i + 1) * probeN),
-            "doc_id", "text", "ts", root, minNovelty = 0.5,
-            retention = "3650 days", pruneEvery = 0, maxSegments = 0).count()
-          (System.nanoTime() - t0b) / 1e9
-        }
-        println(f"""{"segments":$segs,"query":"q_segsweep_probe_compacted","sec":${times2.min}%.3f}""")
       }
     }
 
@@ -790,15 +687,11 @@ object ScaleBench {
     println("query,S_sec,M_sec,L_sec,XL_sec,XLV_sec,M_over_S,L_over_M,XL_over_L,XLV_over_L")
     val storeQs =
       if (args.contains("STORE"))
-        Seq("q_store_neardedup_batch", "q_store_neardedup_amortized_batch",
-          "q_store_neardedup_segmented_batch",
-          "q_store_novelty_batch", "q_store_novelty_amortized_batch",
-          "q_store_novelty_segmented_batch",
+        Seq("q_store_neardedup_batch", "q_store_neardedup_segmented_batch",
+          "q_store_novelty_batch", "q_store_novelty_segmented_batch",
           "q_store_kmv_batch", "q_store_kmv_group_batch",
           "q_store_drift_batch", "q_store_drift_amortized_batch",
-          "q_store_semdedup_batch",
-          "q_store_semdedup_amortized_batch",
-          "q_store_semdedup_segmented_batch")
+          "q_store_semdedup_batch", "q_store_semdedup_segmented_batch")
       else Nil
     for (q <- heavy ++ Seq("q_chain_cc", "q_mor_read", "q_hardneg_batch")
         ++ storeQs) {

@@ -45,7 +45,7 @@ object SparkEntry {
     * materialized, so only measured wins are listed.
     */
   private val MaterializeOracles: Set[String] = Set(
-    "q_s_neardedup_step", "q_s_neardedup_amortized_step",
+    "q_s_neardedup_step",
     "q_s_neardedup_segmented_step", "q_s_neardedup_segmented_bounded_step",
     "q_s_neardedup_segmented_bounded_skew_step",
     "q_t_minhash_lsh", "q_t_edit_verify", "q_t_simhash",

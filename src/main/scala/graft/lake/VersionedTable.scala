@@ -850,8 +850,8 @@ object VersionedTable {
   val MaxTsFile = "_maxts"
 
   /** Read a delta directory's [[MaxTsFile]] expiry stamp. None when
-    * absent (an un-stamped pruneEvery-fold delta — silent, that's the
-    * republish path's property) and ALSO when present but unreadable
+    * absent (an un-stamped delta, e.g. the drift store's pruneEvery
+    * backlog — silent, that's the republish path's property) and ALSO when present but unreadable
     * or unparsable (a torn write on a store without atomic create, or
     * a checksum error on the re-read): the segment is skipped LOUDLY
     * rather than throwing, because one bad sidecar must not
@@ -896,11 +896,11 @@ object VersionedTable {
 
   /** Physically drop the PENDING delta segments whose stamped max
     * event time falls STRICTLY before `horizon` — the segment-mode
-    * (`pruneEvery = 0`) expiry path: per batch the stateful steps
+    * (`maxSegments > 0`) expiry path: per batch the stateful steps
     * append one stamped segment and drop the segments that fell fully
     * behind the batch's retention horizon, so state maintenance never
-    * rewrites live rows. Un-stamped MARKED deltas (a pruneEvery-fold
-    * backlog, or pre-seam appends) are never touched by this path —
+    * rewrites live rows. Un-stamped MARKED deltas (the drift store's
+    * pruneEvery backlog, or pre-seam appends) are never touched by this path —
     * only a republish's [[vacuumDeltas]] subsumes those. A stamp that
     * exists but does not parse (a torn write on a filesystem without
     * atomic create — the marker-commit discipline makes this a
@@ -973,9 +973,8 @@ object VersionedTable {
     * there instead. Un-stamped and unparsable-stamp segments are left
     * alone (they belong to the republish path). Expiry granularity
     * coarsens for merged rows — they now leave the store only when the
-    * merged stamp expires — which is decision-invisible for the same
-    * reason amortized mode's logical expiry is: the steps' horizon
-    * filter drops expired rows on READ.
+    * merged stamp expires — which is decision-invisible because the
+    * steps' horizon filter drops expired rows on READ.
     *
     * Crash-safe under the single-writer contract: the merged segment
     * commits (marker) BEFORE the constituents are dropped, so a crash
@@ -1261,7 +1260,7 @@ object VersionedTable {
     * dead — the same horizon rule the base vacuum uses. This is the
     * physical-cleanup half of [[compactDeltas]], callable on its own
     * by paths that fold pending deltas through their own [[publish]]
-    * (e.g. the novelty gate's amortized republish) and would otherwise
+    * (e.g. a retention store's republish over pending segments) and would otherwise
     * orphan every subsumed delta directory forever. Returns the
     * removed names; no-op when the root has no published version.
     */

@@ -103,42 +103,14 @@ object StreamQueries extends QueryPack {
         .orderBy("vec_id")
     }),
 
-    // The AMORTIZED (pruneEvery = 3) twin of q_s_semdedup_step, on a
-    // THREE-batch fold so the last batch actually reads through the
-    // delta overlay: batch 1 (ids ≡ 0 mod 3) bootstraps the base,
-    // batch 2 (≡ 1) scores against the base and appends its survivors
-    // as an O(batch) delta, batch 3 (≡ 2) scores against base ∪
-    // pending delta — the read path the eager twin never exercises.
-    // Hash-matching the same decision SQL proves the delta overlay is
+    // The SEGMENT-mode twin of q_s_semdedup_step, on a THREE-batch
+    // fold so the last batch actually reads through the segments:
+    // batch 1 (ids ≡ 0 mod 3) bootstraps the base, batches 2 (≡ 1) and
+    // 3 (≡ 2) land as STAMPED segments and no republish ever happens,
+    // so batch 3 scores against base ∪ segment — the read path the
+    // two-batch twin never exercises. Hash-matching the segment-blind
+    // three-tier replay proves the LSM segment layout
     // decision-invisible, not just spec-asserted.
-    "q_s_semdedup_amortized_step" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val cent = emb.orderBy("vec_id").limit(4)
-        .select(col("vec_id").cast("long").as("b"),
-          transform(col("embedding"), x => x.cast("double")).as("cv"))
-      val withTs = emb.withColumn("ts",
-        lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"semastep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
-      def step(b: org.apache.spark.sql.DataFrame) =
-        Streaming.semanticDedupBatchStep(b, "vec_id", "embedding", "ts",
-          cent, "b", "cv", threshold = 0.35, store, retention = "10 days",
-          pruneEvery = 3)
-      step(withTs.where(col("vec_id") % 3 === 0))
-      step(withTs.where(col("vec_id") % 3 === 1))
-      step(withTs.where(col("vec_id") % 3 === 2))
-        .select(col("vec_id"))
-        .orderBy("vec_id")
-    }),
-
-    // The SEGMENT-mode (pruneEvery = 0) twin: the same three-batch
-    // fold, but batches 2/3 land as STAMPED segments and no republish
-    // ever happens — the merged read is the amortized twin's, so the
-    // SAME oracle SQL hash-proves the LSM segment layout
-    // decision-invisible too (not just spec-asserted).
     "q_s_semdedup_segmented_step" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val cent = emb.orderBy("vec_id").limit(4)
@@ -154,7 +126,7 @@ object StreamQueries extends QueryPack {
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.semanticDedupBatchStep(b, "vec_id", "embedding", "ts",
           cent, "b", "cv", threshold = 0.35, store, retention = "10 days",
-          pruneEvery = 0)
+          maxSegments = Streaming.SegmentMergeBound)
       step(withTs.where(col("vec_id") % 3 === 0))
       step(withTs.where(col("vec_id") % 3 === 1))
       step(withTs.where(col("vec_id") % 3 === 2))
@@ -183,7 +155,7 @@ object StreamQueries extends QueryPack {
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.semanticDedupBatchStep(b, "vec_id", "embedding", "ts",
           cent, "b", "cv", threshold = 0.35, store, retention = "10 days",
-          pruneEvery = 0, maxSegments = 1)
+          maxSegments = 1)
       step(withTs.where(col("vec_id") % 4 === 0))
       step(withTs.where(col("vec_id") % 4 === 1))
       step(withTs.where(col("vec_id") % 4 === 2))
@@ -222,34 +194,8 @@ object StreamQueries extends QueryPack {
         .orderBy("doc_id")
     }),
 
-    // The AMORTIZED (pruneEvery = 3) twin of q_s_novelty_step, on a
-    // three-batch mod-3 fold so batch 3 scores through base ∪ pending
-    // delta (see q_s_semdedup_amortized_step's rationale): batch 1
-    // bootstraps, batch 2's admitted shingles land as a delta, batch 3
-    // gates against the union — hash-checked against SQL that replays
-    // the exact two-stage reference accumulation.
-    "q_s_novelty_amortized_step" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).withColumn("ts",
-        lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"novastep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
-      def step(b: org.apache.spark.sql.DataFrame) =
-        Streaming.noveltyGateBatchStep(b, "doc_id", "text", "ts",
-          store, minNovelty = 0.5, retention = "10 days", shingleN = 5,
-          family = graft.textops.HashFamily.Md5Portable, pruneEvery = 3)
-      step(docs.where(col("doc_id") % 3 === 0))
-      step(docs.where(col("doc_id") % 3 === 1))
-      step(docs.where(col("doc_id") % 3 === 2))
-        .select("doc_id", "novelty")
-        .orderBy("doc_id")
-    }),
-
-    // The SEGMENT-mode (pruneEvery = 0) novelty twin — same mod-3
-    // fold through stamped segments, no republish; same oracle SQL as
-    // the amortized twin (see q_s_semdedup_segmented_step).
+    // The SEGMENT-mode novelty twin — a three-batch mod-3 fold through
+    // stamped segments, no republish (see q_s_semdedup_segmented_step).
     "q_s_novelty_segmented_step" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
@@ -261,7 +207,8 @@ object StreamQueries extends QueryPack {
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.noveltyGateBatchStep(b, "doc_id", "text", "ts",
           store, minNovelty = 0.5, retention = "10 days", shingleN = 5,
-          family = graft.textops.HashFamily.Md5Portable, pruneEvery = 0)
+          family = graft.textops.HashFamily.Md5Portable,
+          maxSegments = Streaming.SegmentMergeBound)
       step(docs.where(col("doc_id") % 3 === 0))
       step(docs.where(col("doc_id") % 3 === 1))
       step(docs.where(col("doc_id") % 3 === 2))
@@ -288,8 +235,7 @@ object StreamQueries extends QueryPack {
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.noveltyGateBatchStep(b, "doc_id", "text", "ts",
           store, minNovelty = 0.5, retention = "10 days", shingleN = 5,
-          family = graft.textops.HashFamily.Md5Portable, pruneEvery = 0,
-          maxSegments = 1)
+          family = graft.textops.HashFamily.Md5Portable, maxSegments = 1)
       step(docs.where(col("doc_id") % 4 === 0))
       step(docs.where(col("doc_id") % 4 === 1))
       step(docs.where(col("doc_id") % 4 === 2))
@@ -323,34 +269,9 @@ object StreamQueries extends QueryPack {
         .orderBy("doc_id")
     }),
 
-    // The AMORTIZED (pruneEvery = 3) twin of q_s_neardedup_step, on a
-    // three-batch mod-3 fold so batch 3's collision probe reads
-    // base ∪ pending delta (see q_s_semdedup_amortized_step's
-    // rationale) — the r16 near-dedup analogue of the novelty/semdedup
-    // amortization, hash-checked to prove the delta overlay is
-    // decision-invisible.
-    "q_s_neardedup_amortized_step" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).withColumn("ts",
-        lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"nndastep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
-      def step(b: org.apache.spark.sql.DataFrame) =
-        Streaming.nearDedupBatchStep(b, "doc_id", "text", "ts", store,
-          retention = "10 days",
-          family = graft.textops.HashFamily.Md5Portable, pruneEvery = 3)
-      step(docs.where(col("doc_id") % 3 === 0))
-      step(docs.where(col("doc_id") % 3 === 1))
-      step(docs.where(col("doc_id") % 3 === 2))
-        .select(col("doc_id"))
-        .orderBy("doc_id")
-    }),
-
-    // The SEGMENT-mode (pruneEvery = 0) near-dedup twin — same mod-3
-    // fold through stamped segments, no republish; same oracle SQL as
-    // the amortized twin (see q_s_semdedup_segmented_step).
+    // The SEGMENT-mode near-dedup twin — a three-batch mod-3 fold
+    // through stamped segments, no republish (see
+    // q_s_semdedup_segmented_step).
     "q_s_neardedup_segmented_step" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
@@ -362,7 +283,8 @@ object StreamQueries extends QueryPack {
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.nearDedupBatchStep(b, "doc_id", "text", "ts", store,
           retention = "10 days",
-          family = graft.textops.HashFamily.Md5Portable, pruneEvery = 0)
+          family = graft.textops.HashFamily.Md5Portable,
+          maxSegments = Streaming.SegmentMergeBound)
       step(docs.where(col("doc_id") % 3 === 0))
       step(docs.where(col("doc_id") % 3 === 1))
       step(docs.where(col("doc_id") % 3 === 2))
@@ -388,8 +310,7 @@ object StreamQueries extends QueryPack {
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.nearDedupBatchStep(b, "doc_id", "text", "ts", store,
           retention = "10 days",
-          family = graft.textops.HashFamily.Md5Portable, pruneEvery = 0,
-          maxSegments = 1)
+          family = graft.textops.HashFamily.Md5Portable, maxSegments = 1)
       step(docs.where(col("doc_id") % 4 === 0))
       step(docs.where(col("doc_id") % 4 === 1))
       step(docs.where(col("doc_id") % 4 === 2))
@@ -420,8 +341,7 @@ object StreamQueries extends QueryPack {
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.nearDedupBatchStep(b, "doc_id", "text", "ts", store,
           retention = "10 days",
-          family = graft.textops.HashFamily.Md5Portable, pruneEvery = 0,
-          maxSegments = 1)
+          family = graft.textops.HashFamily.Md5Portable, maxSegments = 1)
       step(docs.where(col("doc_id") % 10 <= 7))
       step(docs.where(col("doc_id") % 10 === 8))
       step(docs.where(col("doc_id") % 20 === 9))
@@ -573,10 +493,9 @@ object StreamQueries extends QueryPack {
     }),
   )
 
-  // Shared by the amortized AND segment-mode twins: the two modes
-  // differ only in state LAYOUT (delta backlog vs stamped LSM
-  // segments) — the three-batch decision algebra is identical, which
-  // is exactly what hash-matching both against ONE SQL replay proves.
+  // The segment-mode twin's three-batch decision algebra, which knows
+  // nothing about the stamped segments the Spark side reads through —
+  // the hash match is what proves the layout decision-invisible.
   private lazy val nearDedupOverlaySql: String =
     s"""WITH ${graft.textops.TextQueries.minhashCandCtes},
         |coll AS MATERIALIZED (SELECT doc_a AS da, doc_b AS db FROM cand
@@ -1059,22 +978,20 @@ object StreamQueries extends QueryPack {
         |    WHERE c.db = d.doc_id AND c.da % 2 = 1 AND c.da < d.doc_id)
         |ORDER BY doc_id""".stripMargin,
 
-    // The mod-3 amortized twin: tier-1 survivors form the base, tier-2
+    // The mod-3 segmented twin: tier-1 survivors form the base, tier-2
     // survivors (decided against the base and smaller tier-2 mates)
-    // form the delta, tier 3 probes base ∪ delta plus its own smaller
+    // form a segment, tier 3 probes base ∪ segment plus its own smaller
     // mates — identical decision algebra to the eager twin, which is
-    // exactly what makes the delta overlay's invisibility checkable.
-    "q_s_neardedup_amortized_step" -> nearDedupOverlaySql,
+    // exactly what makes the segment layout's invisibility checkable.
     "q_s_neardedup_segmented_step" -> nearDedupOverlaySql,
     "q_s_neardedup_segmented_bounded_step" -> nearDedupOverlay4Sql,
     "q_s_neardedup_segmented_bounded_skew_step" -> nearDedupSkew4Sql,
 
-    // Mirrors the three-batch amortized novelty fold (mod-3 splits):
+    // Mirrors the three-batch segmented novelty fold (mod-3 splits):
     // reference tier 1 = all tier-1 shingles (empty store admits
     // everything), tier 2 gates against tier 1 and its ADMITTED
-    // shingles extend the reference (on the Spark side: as a pending
-    // delta), tier 3 gates against the two-tier union.
-    "q_s_novelty_amortized_step" -> noveltyOverlaySql,
+    // shingles extend the reference (on the Spark side: as a stamped
+    // segment), tier 3 gates against the two-tier union.
     "q_s_novelty_segmented_step" -> noveltyOverlaySql,
     "q_s_novelty_segmented_bounded_step" -> noveltyOverlay4Sql,
 
@@ -1110,14 +1027,13 @@ object StreamQueries extends QueryPack {
         |UNION ALL SELECT doc_id, novelty FROM shless
         |ORDER BY doc_id""".stripMargin,
 
-    // Mirrors the three-batch amortized fold (mod-3 splits): tier-1
+    // Mirrors the three-batch segmented fold (mod-3 splits): tier-1
     // survivors become the base, tier-2 survivors (gated against the
-    // base and smaller tier-2 mates) become the delta, tier 3 gates
-    // against base ∪ delta and its own smaller mates. Identical
+    // base and smaller tier-2 mates) become a segment, tier 3 gates
+    // against base ∪ segment and its own smaller mates. Identical
     // decision algebra to the eager twin — that the Spark side reads
-    // tier-2 survivors through the delta overlay is exactly what this
-    // hash check proves invisible.
-    "q_s_semdedup_amortized_step" -> semdedupOverlaySql,
+    // tier-2 survivors through the segment is exactly what this hash
+    // check proves invisible.
     "q_s_semdedup_segmented_step" -> semdedupOverlaySql,
     "q_s_semdedup_segmented_bounded_step" -> semdedupOverlay4Sql,
 

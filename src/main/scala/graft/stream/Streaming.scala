@@ -39,14 +39,25 @@ object Streaming {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
 
+  /** A retention store's base ∪ its pending segments
+    * (version names under the root), both read with the known schema.
+    */
+  private def readLayers(spark: SparkSession, storePath: String,
+                         schema: org.apache.spark.sql.types.StructType,
+                         segments: Seq[String]): DataFrame = {
+    val base = readStoreOrEmpty(spark, storePath, schema)
+    if (segments.isEmpty) base
+    else base.unionByName(spark.read.schema(schema)
+      .parquet(segments.map(d => s"$storePath/$d"): _*))
+  }
+
   /** Default batch-side row cap for the STORE-SHUFFLE-FREE probe the
     * stateful dedup/novelty steps use (r16): when the batch's key
     * relation fits, the store probe runs as
     * store-scan ⋈ broadcast(batch) — the store streams through a
     * BroadcastHashJoin with NO exchange on the store side, so a
-    * non-republish batch never shuffles O(store) rows; the only
-    * remaining store-wide shuffle is the every-`pruneEvery`-th
-    * republish fold. Past the cap the classic shuffled probe takes
+    * segment-mode batch never shuffles O(store) rows; the only
+    * remaining store-wide shuffle is the republish fold. Past the cap the classic shuffled probe takes
     * over (broadcasting unbounded batch rows would sink the driver,
     * not the executors). ~4M (shingle|band, id) rows ≈ low hundreds
     * of MB broadcast — sized for a micro-batch, not a backfill.
@@ -59,20 +70,15 @@ object Streaming {
     */
   val ProbeBroadcastMaxVecRows: Long = 250000L
 
-  /** Default L1-merge bound for segment mode (r18): every public
-    * segment-capable step/writer folds the oldest stamped segments once
-    * the pending backlog exceeds this ([[graft.lake.VersionedTable
-    * .compactSegments]]). 64 keeps the measured O(segments) metadata
-    * term flat (the SEGSWEEP sweep is flat to ~100 segments) while
-    * making the fold rare — at 1-minute batches it fires about once an
-    * hour and rewrites at most ~64 batch-sized segments, never the
-    * base. A caller can pass `maxSegments = 0` for explicitly-unbounded
-    * mode (e.g. a bulk backfill that republishes at the end), which
-    * warns loudly once the backlog passes this bound — unbounded was
-    * previously the silent default, on exactly the deployments
-    * (long retention / short batches) that hit the O(segments) term.
+  /** A segment-mode `maxSegments` for long-running stores (r18): the
+    * L1 merge ([[graft.lake.VersionedTable.compactSegments]]) folds the
+    * oldest stamped segments once more than this many are pending. 64
+    * keeps the measured O(segments) metadata term flat (SCALING.md's
+    * segment sweep is flat to ~100 segments) while making the merge
+    * rare — at 1-minute batches it fires about once an hour and
+    * rewrites at most ~64 batch-sized segments, never the base.
     */
-  val DefaultMaxSegments: Int = 64
+  val SegmentMergeBound: Int = 64
 
   /** The store-vs-batch collision probe shared by
     * [[noveltyGateBatchStep]], [[nearDedupBatchCompute]] and
@@ -425,26 +431,10 @@ object Streaming {
     * per-batch signature work, and the retention horizon bounds the
     * live store at steady state.
     *
-    * AMORTIZED REPUBLISH (`pruneEvery = N > 1`, r16 — the trade
-    * [[noveltyGateBatchStep]] got in r14 and the semdedup store in
-    * r15, closing the last per-batch O(store) write term among the
-    * stateful streaming stores): non-republish batches `appendDelta`
-    * only the SURVIVORS' bands (an O(batch) write), and every Nth
-    * batch the horizon-filtered merged view (base ∪ pending deltas)
-    * republishes as a fresh base and vacuums the subsumed delta dirs.
-    * The DECISION is unchanged in both modes — the store read is
-    * always base ∪ pending deltas and the horizon filter applies per
-    * batch — so on-time batches drop and admit identically to eager;
-    * expiry is LOGICAL between republishes (a LATE batch can collide
-    * with bands the eager form would already have pruned, for up to
-    * N−1 batches — the novelty gate's exact contract). The republish
-    * fold collapses `(band, key)` duplicates keep-newest; only the
-    * logical-expiry corner can introduce them (an expired base row
-    * plus its delta re-admission), because within any read layer set
-    * survivors never band-collide with live state or each other — the
-    * collision IS the drop criterion. Eager (`pruneEvery = 1`) stays
-    * the default: the physical-expiry late-data contract is
-    * spec-pinned.
+    * STATE LAYOUT: `maxSegments` picks it, exactly as for
+    * [[noveltyGateBatchStep]] (see its state-layout paragraph) — 0
+    * republishes the pruned band store every batch, N > 0 appends one
+    * stamped survivor-band segment per batch.
     *
     * Every stage is an equi-join or aggregation on hashed keys; the
     * 1-row horizon aggregate rides a broadcast join, nothing collects
@@ -469,38 +459,20 @@ object Streaming {
                          numHashes: Int = 64, bands: Int = 16,
                          family: graft.textops.HashFamily =
                            graft.textops.HashFamily.Xx64,
-                         pruneEvery: Int = 1,
                          probeBroadcastMaxRows: Long =
                            ProbeBroadcastMaxRows,
-                         maxSegments: Int = DefaultMaxSegments): DataFrame = {
-    require(pruneEvery >= 0,
-      s"pruneEvery must be >= 0 (0 = segment mode), got $pruneEvery")
-    val spark = batch.sparkSession
-    val hasBase = graft.lake.VersionedTable.isVersioned(spark, storePath)
-    val deltaPaths =
-      if (hasBase) graft.lake.VersionedTable.pendingDeltas(spark, storePath)
-      else Seq.empty[String]
-    // ONE bounds collection per batch, shared by the decision filter
-    // and (in segment mode) the stamp/vacuum — observed for free on the
-    // compute half's banding pass ([[observeBounds]])
-    val (survivors, newStore, delta, bounds) = nearDedupBatchCompute(batch,
-      idCol, textCol, tsCol, storePath, retention, shingleN, numHashes,
-      bands, family, deltaPaths, probeBroadcastMaxRows)
-    val seg = if (pruneEvery == 0 && hasBase) Some(bounds) else None
-    nearDedupPublishOrDelta(spark, storePath, hasBase, deltaPaths,
-      pruneEvery, newStore, delta, seg, maxSegments)
-    survivors
-  }
+                         maxSegments: Int = 0): DataFrame =
+    retentionStep(batch, storePath, maxSegments) { segments =>
+      nearDedupBatchCompute(batch, idCol, textCol, tsCol, storePath,
+        retention, shingleN, numHashes, bands, family, segments,
+        probeBroadcastMaxRows)
+    }
 
-  /** The decision half of [[nearDedupBatchStep]]: survivors (eagerly
-    * materialized) plus the LAZY next store content — the full
-    * horizon-filtered fold AND the O(batch) survivor-band delta — with
-    * the state publish left to the caller — the seam that lets
-    * [[nearDedupWriter]] commit the sink BEFORE the state, which is
-    * what makes the pair crash-consistent (see the writer's scaladoc).
-    * The 4th element is the batch's [[observeBounds]] (max event time,
-    * horizon), collected by the banding pass for the caller's segment
-    * stamp/vacuum.
+  /** The decision half of [[nearDedupBatchStep]] ([[StoreDecision]]
+    * with the survivors as `out` and their bands as the segment) — the
+    * seam that lets [[nearDedupWriter]] commit the sink BEFORE the
+    * state, which is what makes the pair crash-consistent (see the
+    * writer's scaladoc).
     */
   private[graft] def nearDedupBatchCompute(batch: DataFrame, idCol: String,
                                     textCol: String, tsCol: String,
@@ -512,8 +484,7 @@ object Streaming {
                                     deltaPaths: Seq[String] = Nil,
                                     probeBroadcastMaxRows: Long =
                                       ProbeBroadcastMaxRows)
-      : (DataFrame, DataFrame, DataFrame,
-         (Option[Timestamp], Option[Timestamp])) = {
+      : StoreDecision = {
     import org.apache.spark.sql.types._
     val spark = batch.sparkSession
     // band keys are a one-way function of the LSH geometry — a changed
@@ -523,16 +494,10 @@ object Streaming {
       s"neardedup;shingleN=$shingleN;numHashes=$numHashes;bands=$bands;family=$family")
     val storeSchema = StructType(Seq(StructField("band", IntegerType),
       StructField("key", LongType), StructField("_ts", TimestampType)))
-    val base = readStoreOrEmpty(spark, storePath, storeSchema)
-    // base ∪ pending deltas (amortized mode): cross-layer (band, key)
-    // duplicates only arise in the logical-expiry corner and are
-    // harmless to the collision probe (dropped ids are distinct-ed)
-    val store =
-      if (deltaPaths.isEmpty) base
-      else base.unionByName(
-        spark.read.schema(storeSchema)
-          .parquet(deltaPaths.map(d => s"$storePath/$d"): _*)
-          .select("band", "key", "_ts"))
+    // cross-layer (band, key) duplicates only arise from re-admission
+    // after expiry and are harmless to the collision probe (dropped
+    // ids are distinct-ed)
+    val store = readLayers(spark, storePath, storeSchema, deltaPaths)
     // batch-sized; computed ONCE — four consumers below (store probe,
     // both sides of the in-batch self-join, survivor band extraction)
     // would otherwise each recompute the minhash banding. The same
@@ -575,119 +540,82 @@ object Streaming {
     val survBands = bandsDf
       .join(survivors.select(col(idCol), col(tsCol).as("_ts")), Seq(idCol))
       .select("band", "key", "_ts")
-    // the republish fold collapses logical-expiry twins keep-newest;
-    // the eager path (no overlay) is duplicate-free by construction
+    // the republish fold collapses re-admitted twins keep-newest; a
+    // store with no pending segments is duplicate-free by construction
     // and skips the extra shuffle
     val merged = liveStore.unionByName(survBands)
     val folded =
       if (deltaPaths.isEmpty) merged
       else merged.groupBy("band", "key").agg(max(col("_ts")).as("_ts"))
-    (survivors, folded, survBands, bounds)
+    StoreDecision(survivors, folded, survBands, bounds)
   }
 
-  /** Shared state-publish tail of [[nearDedupBatchStep]] and
-    * [[nearDedupWriter]]: bootstrap and every `pruneEvery`-th batch
-    * (the pending-delta backlog counts batches since the last
-    * republish) publish the full fold and vacuum the subsumed deltas;
-    * every other batch appends the O(batch) survivor-band delta. In
-    * SEGMENT mode (`seg` present, pruneEvery = 0) the delta lands
-    * stamped and fully-expired segments are physically dropped — see
-    * the [[noveltyGateBatchStep]] SEGMENT MODE contract.
+  /** One retention step's decision, with the state write left to
+    * [[commitState]]: `out` (materialized), the LAZY horizon-pruned
+    * fold of every live layer plus the batch (`folded`, the next
+    * base), the batch-only `segment`, the batch's [[observeBounds]]
+    * (max event time, horizon), and whether this batch must republish
+    * whatever the layout (semdedup's quantizer change).
     */
-  private def nearDedupPublishOrDelta(spark: SparkSession, storePath: String,
-                                      hasBase: Boolean,
-                                      deltaPaths: Seq[String],
-                                      pruneEvery: Int, newStore: DataFrame,
-                                      delta: DataFrame,
-                                      seg: Option[(Option[Timestamp],
-                                        Option[Timestamp])] = None,
-                                      maxSegments: Int = 0): Unit = {
-    if (!hasBase || pruneEvery == 1 ||
-        (pruneEvery > 1 && deltaPaths.size + 1 >= pruneEvery)) {
-      // manifest-versioned publish: the new store version becomes
-      // visible atomically via marker creation; a crash mid-write
-      // leaves the old version current (orphan dir vacuumed later)
-      graft.lake.VersionedTable.publish(newStore, storePath)
-      // the new base subsumes the folded deltas; physically drop the
-      // ones no retained-base reader can still need, or every
-      // republish would orphan pruneEvery-1 delta dirs on disk forever
-      if (deltaPaths.nonEmpty)
+  private[graft] final case class StoreDecision(
+      out: DataFrame, folded: DataFrame, segment: DataFrame,
+      bounds: (Option[Timestamp], Option[Timestamp]),
+      forceRepublish: Boolean = false)
+
+  private def requireMaxSegments(maxSegments: Int): Unit =
+    require(maxSegments >= 0,
+      s"maxSegments must be >= 0 (0 = republish every batch), got $maxSegments")
+
+  /** The shared body of the three retention steps and their writers:
+    * list the store layers once (so the decision read and the state
+    * write agree on them), decide, hand `out` to `sink` — the writers'
+    * merge-on-read upsert, which commits BEFORE the state so a crash
+    * between the two converges on redelivery — then [[commitState]].
+    */
+  private[graft] def retentionStep(batch: DataFrame, storePath: String,
+                                   maxSegments: Int,
+                                   sink: DataFrame => Unit = _ => ())(
+                                   decide: Seq[String] => StoreDecision)
+      : DataFrame = {
+    requireMaxSegments(maxSegments)
+    val spark = batch.sparkSession
+    val hasBase = graft.lake.VersionedTable.isVersioned(spark, storePath)
+    val segments =
+      if (hasBase) graft.lake.VersionedTable.pendingDeltas(spark, storePath)
+      else Seq.empty[String]
+    val d = decide(segments)
+    sink(d.out)
+    commitState(spark, storePath, hasBase, segments, maxSegments, d)
+    d.out
+  }
+
+  /** The one publish rule of the retention stores (see
+    * [[noveltyGateBatchStep]]'s state-layout paragraph): with no base
+    * yet, at `maxSegments = 0`, or on a forced republish, publish the
+    * pruned fold as the new base and vacuum the segments it subsumed;
+    * otherwise append the batch's stamped segment, drop the segments
+    * that fell fully behind this batch's horizon, and L1-merge the
+    * oldest once more than `maxSegments` are pending. Vacuum runs
+    * before the merge so expired segments drop from metadata alone
+    * instead of being rewritten into the merged one.
+    */
+  private def commitState(spark: SparkSession, storePath: String,
+                          hasBase: Boolean, segments: Seq[String],
+                          maxSegments: Int, d: StoreDecision): Unit =
+    if (!hasBase || maxSegments == 0 || d.forceRepublish) {
+      // manifest-versioned publish: the new version becomes visible
+      // atomically via its marker; a crash mid-write leaves the old
+      // version current
+      graft.lake.VersionedTable.publish(d.folded, storePath)
+      if (segments.nonEmpty)
         graft.lake.VersionedTable.vacuumDeltas(spark, storePath)
-    } else seg match {
-      case Some((mx, hz)) =>
-        segmentAppendAndMaintain(spark, storePath, delta, mx, hz, maxSegments)
-      case None =>
-        graft.lake.VersionedTable.appendDelta(delta, storePath)
-    }
-  }
-
-  /** The segment-mode state-maintenance tail shared by all three
-    * retention-horizon stores: append the batch's stamped segment,
-    * physically drop the segments that fell fully behind this batch's
-    * horizon, and — when `maxSegments > 0` (r17) — fold the oldest
-    * stamped segments into one ([[graft.lake.VersionedTable
-    * .compactSegments]]) so the live segment count stays at the
-    * caller's bound without a separate maintenance job. Vacuum runs
-    * BEFORE the merge: expired segments should drop from metadata
-    * alone, not be rewritten into the merged one. The merge is
-    * decision-invisible (these overlays are row SETS the readers union
-    * and fold commutatively; expiry granularity coarsens to the merged
-    * stamp, the same logical-expiry contract amortized mode already
-    * carries). `maxSegments = 0` leaves the backlog unbounded — the
-    * SEGSWEEP-measured O(segments) metadata term is gentle locally,
-    * but a 7-day-retention / 1-minute-batch deployment (~10k live
-    * segments) hits it, so since r18 unbounded mode is explicit-only
-    * (the public defaults are [[DefaultMaxSegments]]) and warns loudly
-    * ([[warnUnboundedBacklog]]) once the backlog passes that bound.
-    */
-  private def segmentAppendAndMaintain(spark: SparkSession,
-                                       storePath: String, delta: DataFrame,
-                                       mx: Option[Timestamp],
-                                       hz: Option[Timestamp],
-                                       maxSegments: Int): Unit = {
-    graft.lake.VersionedTable.appendDeltaStamped(delta, storePath, mx)
-    hz.foreach(h =>
-      graft.lake.VersionedTable.vacuumExpiredDeltas(spark, storePath, h))
-    if (maxSegments > 0)
+    } else {
+      graft.lake.VersionedTable.appendDeltaStamped(d.segment, storePath,
+        d.bounds._1)
+      d.bounds._2.foreach(h =>
+        graft.lake.VersionedTable.vacuumExpiredDeltas(spark, storePath, h))
       graft.lake.VersionedTable.compactSegments(spark, storePath, maxSegments)
-    else warnUnboundedBacklog(spark, storePath)
-  }
-
-  /** Store paths [[warnUnboundedBacklog]] has already warned about,
-    * JVM-wide. `private[graft]` so specs (and an operator who fixed the
-    * store) can re-arm the tripwire with `remove(path)`. */
-  private[graft] val warnedUnboundedPaths: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The explicit-unbounded segment-mode tripwire: when a caller opted
-    * out of L1 merges (`maxSegments = 0`) and the pending backlog has
-    * grown past `threshold`, say so on stderr — the per-batch metadata
-    * pass and the merged read's file list are growing O(segments) on
-    * this store, which is exactly the silent degradation the bounded
-    * default exists to prevent. Warns ONCE per store path per JVM
-    * (r19, was an ADVICE trap: the documented unbounded use case is a
-    * long backfill, and a per-batch warning plus its extra directory
-    * listing turned the tripwire into a per-batch tax) — after the
-    * first warning the step skips even the listing, so a long
-    * unbounded backfill pays exactly one extra listing per batch
-    * before the bound trips and zero after.
-    */
-  private[graft] def warnUnboundedBacklog(spark: SparkSession,
-                                          storePath: String,
-                                          threshold: Int =
-                                            DefaultMaxSegments): Unit = {
-    if (warnedUnboundedPaths.contains(storePath)) return
-    val pending =
-      graft.lake.VersionedTable.pendingDeltas(spark, storePath).size
-    if (pending > threshold) {
-      warnedUnboundedPaths.add(storePath)
-      Console.err.println(
-        s"WARN graft.stream: segment-mode store $storePath has $pending " +
-          s"pending segments with maxSegments = 0 (unbounded) — the " +
-          s"per-batch metadata pass grows O(segments); set maxSegments " +
-          s"(default $DefaultMaxSegments) to bound it with in-step L1 merges")
     }
-  }
 
   /** One micro-batch step of VOCABULARY-DRIFT MONITORING — the
     * streaming form of [[graft.textops.TextAnalysis.jensenShannon]]:
@@ -719,16 +647,14 @@ object Streaming {
     * Returns 1 row: (jsd_bits, n_a = batch tokens, n_b = reference
     * tokens).
     *
-    * AMORTIZED REPUBLISH (`pruneEvery = N > 1`, r16 — the
-    * [[noveltyGateBatchStep]] trade, closing the last
-    * vocabulary-proportional per-batch write term among the stateful
-    * stores): non-republish batches `appendDelta` only THIS batch's
-    * (token, count) rows (an O(batch-vocabulary) write); every Nth
+    * AMORTIZED REPUBLISH (`pruneEvery = N > 1`, r16 — closing the
+    * last vocabulary-proportional per-batch write term among the
+    * stateful stores): non-republish batches `appendDelta` only THIS
+    * batch's (token, count) rows (an O(batch-vocabulary) write); every Nth
     * batch the re-summed merged view (base ∪ pending deltas)
     * republishes as a fresh base and vacuums the subsumed delta dirs.
-    * Unlike the retention-horizon stores there is NO logical-expiry
-    * corner here: the reference is an exact long-count fold, so the
-    * merged read is bit-identical to what eager mode would have
+    * This store has no horizon, so there is no expiry corner: the
+    * reference is an exact long-count fold, so the merged read is bit-identical to what eager mode would have
     * published, and every verdict — on-time OR late — is bit-identical
     * across modes (the per-token JSD terms reduce through the
     * decimal-exact order-invariant sum, spec-pinned). The per-batch
@@ -921,50 +847,42 @@ object Streaming {
     * growth"): per-batch cost of a fixed probe batch is flat across
     * the first store decade and ~1.8× on the second (10.1M live
     * shingles) — the O(live-store) scan + republish term, which the
-    * retention horizon bounds at steady state. The amortized row
-    * (r14): pruneEvery = 10 cuts the L-point batch from 2.39 s to
-    * 1.47 s and the second-decade slope from 1.8× to 1.3× — the
-    * republish leaves the per-batch path, the scoring semi-join
-    * remains. For deployments whose
-    * horizon outgrows the per-batch rewrite, `pruneEvery = N > 1`
-    * AMORTIZES it over the same [[graft.lake.VersionedTable]]
-    * manifest: non-republish batches `appendDelta` only the batch's
-    * admitted shingles (an O(batch) write), and every Nth batch the
-    * horizon-filtered merged view republishes as a fresh base whose
-    * timestamp subsumes the deltas. Scoring is UNCHANGED in both
-    * modes — the store read is base ∪ pending deltas and the horizon
-    * filter still applies per batch, so on-time (monotone event-time)
-    * batches admit identically to the eager fold; what changes is
-    * that expiry is LOGICAL between republishes: physically-retained
-    * expired shingles mean a LATE batch (its own horizon older than
-    * the store clock) can score against shingles the eager form would
-    * already have dropped, for up to N−1 batches. The eager form
-    * (`pruneEvery = 1`) stays the default because that physical-expiry
-    * late-data contract is spec-pinned.
+    * retention horizon bounds at steady state.
     *
-    * SEGMENT MODE (`pruneEvery = 0`, r16): no republish ever happens
-    * after the bootstrap — the LSM trade. Each batch appends its
-    * admitted shingles as ONE segment stamped with the batch's max
-    * event time ([[graft.lake.VersionedTable.appendDeltaStamped]]),
-    * and drops whole segments whose stamp fell fully behind this
-    * batch's horizon ([[graft.lake.VersionedTable.vacuumExpiredDeltas]]
-    * — an O(segments) metadata pass, no rows rewritten). Scoring is
-    * the same merged read as amortized mode, so decisions on on-time
-    * batches equal eager's; the late-data window is "until the
-    * CONTAINING segment fully expires" (≤ one batch's event-time span
-    * past the horizon — tighter than a long pruneEvery backlog). Live
-    * segment count is bounded by retention/batch-interval; a shingle
-    * re-admitted after expiry lands in a newer segment, so duplicate
-    * store keys exist exactly where amortized mode has them (the
-    * probes absorb them by construction). This removes the LAST
-    * store-proportional write from the steady-state path: per batch =
-    * one store scan (probe) + O(batch) append + O(segments) metadata.
-    * The bootstrap base is one batch's fold and persists physically
-    * (logically dead once past the horizon), and a crash between a
-    * segment's parquet write and its commit marker leaves an
-    * unmarked orphan dir that only a republish's vacuum sweeps — run
-    * a one-off `pruneEvery >= 1` batch to compact if either residue
-    * ever matters.
+    * STATE LAYOUT, shared by the three retention stores (this gate,
+    * [[nearDedupBatchStep]], [[semanticDedupBatchStep]]) and their
+    * writers; `maxSegments` is the one knob. The store is a
+    * [[graft.lake.VersionedTable]] base plus event-time-stamped
+    * segments, and every decision reads base ∪ pending segments behind
+    * the batch's horizon filter, so on-time batches decide the same
+    * under either setting:
+    *
+    *   - `maxSegments = 0` (the default) republishes the horizon-pruned
+    *     fold of every live layer plus the batch as a new base each
+    *     batch and vacuums the segments it subsumed — an O(live store)
+    *     write per batch, and PHYSICAL expiry (the late-data contract
+    *     below);
+    *   - `maxSegments = N > 0` is the LSM trade (r16): after the
+    *     bootstrap publish, each batch appends its rows as ONE segment
+    *     stamped with its max event time
+    *     ([[graft.lake.VersionedTable.appendDeltaStamped]]), drops the
+    *     segments whose stamp fell fully behind its horizon
+    *     ([[graft.lake.VersionedTable.vacuumExpiredDeltas]], metadata
+    *     only) and, once more than N are pending, folds the oldest into
+    *     one ([[graft.lake.VersionedTable.compactSegments]]). Per batch:
+    *     one store scan, an O(batch) append and O(segments) metadata;
+    *     the base is never rewritten. Expiry is per segment, so a LATE
+    *     batch can still see rows whose segment has not fully expired
+    *     (≤ one batch's event-time span past the horizon, coarsened to
+    *     the merged stamp after an L1 merge), and a row re-admitted
+    *     after expiry lands in a newer segment — the probes absorb the
+    *     duplicate keys and a republish fold collapses them
+    *     keep-newest. The bootstrap base persists physically (logically
+    *     dead past the horizon); one batch at `maxSegments = 0` compacts
+    *     the store if that ever matters. [[SegmentMergeBound]] suits a
+    *     long-running stream.
+    *
+    * Negative `maxSegments` is rejected.
     *
     * LATE DATA: the horizon derives from each batch's OWN max event
     * time — processing-order micro-batch semantics with no watermark
@@ -974,8 +892,9 @@ object Streaming {
     * scores against every currently-live shingle — including content
     * admitted "in its future" — and CANNOT resurrect expired shingles:
     * expiry is physical (pruned rows left the store at prior
-    * publishes), and the late batch's older horizon retains nothing
-    * beyond what already survived, so the store never re-grows. Its
+    * publishes at `maxSegments = 0`), and the late batch's older
+    * horizon retains nothing beyond what already survived, so the
+    * store never re-grows. Its
     * own admitted shingles enter at their old event times and fall out
     * at the next fresh batch's prune; and because the fold keeps each
     * shingle's NEWEST timestamp, a late duplicate never rewinds a live
@@ -1002,36 +921,19 @@ object Streaming {
                            shingleN: Int = 3,
                            family: graft.textops.HashFamily =
                              graft.textops.HashFamily.Xx64,
-                           pruneEvery: Int = 1,
                            probeBroadcastMaxRows: Long =
                              ProbeBroadcastMaxRows,
-                           maxSegments: Int = DefaultMaxSegments): DataFrame = {
-    require(pruneEvery >= 0,
-      s"pruneEvery must be >= 0 (0 = segment mode), got $pruneEvery")
-    val spark = batch.sparkSession
-    val hasBase = graft.lake.VersionedTable.isVersioned(spark, storePath)
-    val deltaPaths =
-      if (hasBase) graft.lake.VersionedTable.pendingDeltas(spark, storePath)
-      else Seq.empty[String]
-    // ONE bounds collection per batch, shared by the decision filter
-    // and (in segment mode) the stamp/vacuum — observed for free on the
-    // compute half's shingle pass ([[observeBounds]])
-    val (admitted, newStore, delta, bounds) = noveltyGateBatchCompute(batch,
-      idCol, textCol, tsCol, storePath, minNovelty, retention, shingleN,
-      family, deltaPaths, probeBroadcastMaxRows)
-    val seg = if (pruneEvery == 0 && hasBase) Some(bounds) else None
-    noveltyPublishOrDelta(spark, storePath, hasBase, deltaPaths, pruneEvery,
-      newStore, delta, seg, maxSegments)
-    admitted
-  }
+                           maxSegments: Int = 0): DataFrame =
+    retentionStep(batch, storePath, maxSegments) { segments =>
+      noveltyGateBatchCompute(batch, idCol, textCol, tsCol, storePath,
+        minNovelty, retention, shingleN, family, segments,
+        probeBroadcastMaxRows)
+    }
 
-  /** The decision half of [[noveltyGateBatchStep]]: admitted rows
-    * (eagerly materialized) plus the LAZY next store content — the
-    * horizon-filtered full fold AND the O(batch) admitted-shingle
-    * delta — with the state publish left to the caller; the seam that
-    * lets [[noveltyGateWriter]] commit the sink BEFORE the state. The
-    * 4th element is the batch's [[observeBounds]], collected by the
-    * shingle pass for the caller's segment stamp/vacuum.
+  /** The decision half of [[noveltyGateBatchStep]] ([[StoreDecision]]
+    * with the admitted rows as `out` and their shingles as the
+    * segment) — the seam that lets [[noveltyGateWriter]] commit the
+    * sink BEFORE the state.
     */
   private[graft] def noveltyGateBatchCompute(batch: DataFrame, idCol: String,
                                       textCol: String, tsCol: String,
@@ -1042,8 +944,7 @@ object Streaming {
                                       deltaPaths: Seq[String] = Nil,
                                       probeBroadcastMaxRows: Long =
                                         ProbeBroadcastMaxRows)
-      : (DataFrame, DataFrame, DataFrame,
-         (Option[Timestamp], Option[Timestamp])) = {
+      : StoreDecision = {
     import org.apache.spark.sql.types._
     require(minNovelty >= 0 && minNovelty <= 1,
       s"minNovelty must be in [0,1], got $minNovelty")
@@ -1054,16 +955,9 @@ object Streaming {
       s"novelty;shingleN=$shingleN;family=$family")
     val storeSchema = StructType(Seq(StructField("shingle", LongType),
       StructField("_ts", TimestampType)))
-    val base = readStoreOrEmpty(spark, storePath, storeSchema)
-    // base ∪ pending deltas: duplicates across layers are harmless to
-    // the left_semi probe, and the republish fold takes max(_ts)
-    // (pendingDeltas returns version NAMES under the root)
-    val store =
-      if (deltaPaths.isEmpty) base
-      else base.unionByName(
-        spark.read.schema(storeSchema)
-          .parquet(deltaPaths.map(d => s"$storePath/$d"): _*)
-          .select("shingle", "_ts"))
+    // duplicates across layers are harmless to the probe, and the
+    // republish fold takes max(_ts)
+    val store = readLayers(spark, storePath, storeSchema, deltaPaths)
     // batch-sized; computed ONCE — three consumers (store probe,
     // per-doc totals, admitted-shingle extraction). The same
     // materialization delivers the batch bounds and the probe's
@@ -1104,45 +998,12 @@ object Streaming {
       .select("shingle", "_ts")
     val newStore = liveStore.unionByName(admittedShingles)
       .groupBy("shingle").agg(max(col("_ts")).as("_ts"))
-    // the batch-local delta fold (appendDelta's unique-key contract: a
-    // shingle shared by several admitted docs lands once, newest ts)
+    // the batch-local segment fold (a shingle shared by several
+    // admitted docs lands once, newest ts)
     val delta = admittedShingles
       .groupBy("shingle").agg(max(col("_ts")).as("_ts"))
-    (admitted, newStore, delta, bounds)
+    StoreDecision(admitted, newStore, delta, bounds)
   }
-
-  /** Shared state-publish tail of [[noveltyGateBatchStep]] and
-    * [[noveltyGateWriter]]: bootstrap and every `pruneEvery`-th batch
-    * (the pending-delta backlog counts batches since the last
-    * republish) publish the horizon-filtered full fold and vacuum the
-    * subsumed deltas; every other batch appends the O(batch)
-    * admitted-shingle delta. In SEGMENT mode (`seg` present,
-    * pruneEvery = 0) the delta lands stamped with the batch's max
-    * event time and whole segments that fell fully behind this batch's
-    * horizon are physically dropped — no republish ever happens after
-    * the bootstrap.
-    */
-  private def noveltyPublishOrDelta(spark: SparkSession, storePath: String,
-                                    hasBase: Boolean, deltaPaths: Seq[String],
-                                    pruneEvery: Int, newStore: DataFrame,
-                                    delta: DataFrame,
-                                    seg: Option[(Option[Timestamp],
-                                      Option[Timestamp])] = None,
-                                    maxSegments: Int = 0): Unit =
-    if (!hasBase || pruneEvery == 1 ||
-        (pruneEvery > 1 && deltaPaths.size + 1 >= pruneEvery)) {
-      graft.lake.VersionedTable.publish(newStore, storePath)
-      // the new base subsumes the folded deltas; physically drop the
-      // ones no retained-base reader can still need, or every
-      // republish would orphan pruneEvery-1 delta dirs on disk forever
-      if (deltaPaths.nonEmpty)
-        graft.lake.VersionedTable.vacuumDeltas(spark, storePath)
-    } else seg match {
-      case Some((mx, hz)) =>
-        segmentAppendAndMaintain(spark, storePath, delta, mx, hz, maxSegments)
-      case None =>
-        graft.lake.VersionedTable.appendDelta(delta, storePath)
-    }
 
   /** `foreachBatch` streaming novelty gate, crash-consistent end to
     * end — the [[nearDedupWriter]] ordering applied to the novelty
@@ -1170,34 +1031,25 @@ object Streaming {
                         tsCol: String, storePath: String,
                         admittedPath: String, minNovelty: Double,
                         retention: String = "1 hour",
-                        compactEvery: Int = 10, pruneEvery: Int = 1,
-                        shingleN: Int = 3,
+                        compactEvery: Int = 10, shingleN: Int = 3,
                         family: graft.textops.HashFamily =
                           graft.textops.HashFamily.Xx64,
                         probeBroadcastMaxRows: Long = ProbeBroadcastMaxRows,
-                        maxSegments: Int = DefaultMaxSegments)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+                        maxSegments: Int = 0)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    requireMaxSegments(maxSegments)
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        require(pruneEvery >= 0,
-          s"pruneEvery must be >= 0 (0 = segment mode), got $pruneEvery")
-        val spark = batch.sparkSession
-        val hasBase = graft.lake.VersionedTable.isVersioned(spark, storePath)
-        val deltaPaths =
-          if (hasBase)
-            graft.lake.VersionedTable.pendingDeltas(spark, storePath)
-          else Seq.empty[String]
-        val (admitted, newStore, delta, bounds) = noveltyGateBatchCompute(
-          batch, idCol, textCol, tsCol, storePath, minNovelty, retention,
-          shingleN, family, deltaPaths, probeBroadcastMaxRows)
-        // sink commits BEFORE state (crash-consistency ordering above)
-        morUpsertStep(admitted, Seq(idCol), admittedPath, batchId,
-          compactEvery)
-        val seg = if (pruneEvery == 0 && hasBase) Some(bounds) else None
-        noveltyPublishOrDelta(spark, storePath, hasBase, deltaPaths,
-          pruneEvery, newStore, delta, seg, maxSegments)
+        retentionStep(batch, storePath, maxSegments,
+            morUpsertStep(_, Seq(idCol), admittedPath, batchId, compactEvery)) {
+          segments =>
+            noveltyGateBatchCompute(batch, idCol, textCol, tsCol, storePath,
+              minNovelty, retention, shingleN, family, segments,
+              probeBroadcastMaxRows)
+        }
         ()
     }
+  }
 
   /** `foreachBatch` streaming near-dedup, crash-consistent end to end:
     * per batch, survivors are UPSERTED by key into a
@@ -1212,7 +1064,11 @@ object Streaming {
     *    converges (same keys), and the state publish completes;
     *  - crash after the state publish → redelivery finds every batch
     *    document colliding with its OWN bands, survivors are empty,
-    *    both writes are no-ops.
+    *    both writes are no-ops;
+    *  - at `maxSegments > 0`, crash after the stamped append but before
+    *    its vacuum or merge → the same self-collision empties the
+    *    survivors, and the redelivered state write appends an empty
+    *    segment and completes the vacuum and merge.
     *
     * The old append-sink ordering lost a batch's survivors in the
     * middle case (documented as the "re-ingest the gap at rest" trade);
@@ -1232,37 +1088,26 @@ object Streaming {
   def nearDedupWriter(docs: DataFrame, idCol: String, textCol: String,
                       tsCol: String, storePath: String, survivorsPath: String,
                       retention: String = "1 hour", compactEvery: Int = 10,
-                      pruneEvery: Int = 1, shingleN: Int = 3,
+                      shingleN: Int = 3,
                       numHashes: Int = 64, bands: Int = 16,
                       family: graft.textops.HashFamily =
                         graft.textops.HashFamily.Xx64,
                       probeBroadcastMaxRows: Long = ProbeBroadcastMaxRows,
-                      maxSegments: Int = DefaultMaxSegments)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+                      maxSegments: Int = 0)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    requireMaxSegments(maxSegments)
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        require(pruneEvery >= 0,
-          s"pruneEvery must be >= 0 (0 = segment mode), got $pruneEvery")
-        val spark = batch.sparkSession
-        val hasBase = graft.lake.VersionedTable.isVersioned(spark, storePath)
-        val deltaPaths =
-          if (hasBase)
-            graft.lake.VersionedTable.pendingDeltas(spark, storePath)
-          else Seq.empty[String]
-        val (survivors, newStore, delta, bounds) = nearDedupBatchCompute(
-          batch, idCol, textCol, tsCol, storePath, retention, shingleN,
-          numHashes, bands, family, deltaPaths, probeBroadcastMaxRows)
-        // sink commits BEFORE state (the crash-consistency ordering
-        // above); in amortized/segment mode a redelivered batch lands
-        // an identical-content delta whose bands collide with its own —
-        // the same convergence as the eager republish
-        morUpsertStep(survivors, Seq(idCol), survivorsPath, batchId,
-          compactEvery)
-        val seg = if (pruneEvery == 0 && hasBase) Some(bounds) else None
-        nearDedupPublishOrDelta(spark, storePath, hasBase, deltaPaths,
-          pruneEvery, newStore, delta, seg, maxSegments)
+        retentionStep(batch, storePath, maxSegments,
+            morUpsertStep(_, Seq(idCol), survivorsPath, batchId, compactEvery)) {
+          segments =>
+            nearDedupBatchCompute(batch, idCol, textCol, tsCol, storePath,
+              retention, shingleN, numHashes, bands, family, segments,
+              probeBroadcastMaxRows)
+        }
         ()
     }
+  }
 
   /** `foreachBatch` keyed-upsert sink via merge-on-read deltas — the
     * scale path for high-frequency streaming upserts where
@@ -1473,43 +1318,25 @@ object Streaming {
     * Stores written before this seam (no `_qfp` column)
     * conservatively re-bucket.
     *
-    * AMORTIZED REPUBLISH (`pruneEvery = N > 1`, r15 — the same trade
-    * [[noveltyGateBatchStep]] got in r14): the eager path rewrites the
-    * FULL store (live rows ∪ survivors) every batch — an O(store)
-    * write term that dominates once the retention horizon holds more
-    * vectors than a batch admits. With `pruneEvery = N`, non-republish
-    * batches `appendDelta` only the batch's survivors (an O(batch)
-    * write of d-double rows), and every Nth batch the horizon-filtered
-    * merged view (base ∪ pending deltas) republishes as a fresh base
-    * and vacuums the subsumed delta dirs. The DECISION is unchanged in
-    * both modes — the store read is always base ∪ pending deltas and
-    * the horizon filter applies per batch — so on-time batches drop
-    * and admit identically to eager; what changes is that expiry is
-    * LOGICAL between republishes (physically-retained expired vectors
-    * mean a LATE batch can collide with vectors the eager form would
-    * already have dropped, for up to N−1 batches — the novelty gate's
-    * exact contract). Two semdedup-specific invariants: (a) deltas
-    * are stamped with the SAME `_qfp` as the base they overlay, and a
-    * batch that observes a CHANGED quantizer always republishes
-    * immediately regardless of the delta backlog — so every readable
-    * layer set stays fingerprint-uniform and the limit-1 fast-path
-    * probe stays O(1); (b) the republish fold collapses duplicates
-    * keyed on `(_sid, _svec)` (keep-newest) — exactly the
-    * logical-expiry twin class (a late batch holding both a base row
-    * and its bit-identical delta re-admission live), and nothing
-    * else: a source that REUSES an id for a different vector keeps
-    * both rows, as the eager path does, so the two modes never
-    * diverge on future drop decisions. Eager (`pruneEvery = 1`) stays
-    * the default: the physical-expiry late-data contract is
-    * spec-pinned.
+    * STATE LAYOUT: `maxSegments` picks it, as for
+    * [[noveltyGateBatchStep]] (see its state-layout paragraph), with
+    * two vector-store invariants: (a) segments carry the SAME `_qfp`
+    * as the base they overlay, and a batch that observes a CHANGED
+    * quantizer republishes at once whatever `maxSegments` says, so
+    * every readable layer set stays fingerprint-uniform and the
+    * limit-1 fast-path probe stays O(1); (b) a republish over pending
+    * segments collapses duplicates keyed on `(_sid, _svec)`
+    * (keep-newest) — exactly the re-admitted twin class (a base row
+    * and its bit-identical segment re-admission), and nothing else: a
+    * source that REUSES an id for a different vector keeps both rows,
+    * as a store without segments does, so the layouts never diverge
+    * on future drop decisions.
     *
-    * MEASURED (SCALING.md STORE tier, two r15 sessions): L-point
-    * (200k×64d store) batch 2.75 → 2.39 s — the amortization removes
-    * the O(store·d) base rewrite (~0.3-0.4 s at L); the remaining
-    * cost is the bucketed pair work, which the QUANTIZER bounds (grow
-    * the centroid set with the corpus — free under `_qfp`). The two
-    * knobs together leave nothing O(store) in the per-batch path but
-    * the horizon-filtered scan retention bounds at steady state.
+    * MEASURED (SCALING.md STORE tier, r15): at the L point (200k×64d
+    * store) the O(store·d) base rewrite costs ~0.3-0.4 s of a 2.75 s
+    * batch, which segment mode removes; the remaining cost is the
+    * bucketed pair work, which the QUANTIZER bounds (grow the centroid
+    * set with the corpus — free under `_qfp`).
     *
     * Below `probeBroadcastMaxRows` batch vectors the store probe
     * broadcasts the BATCH side ([[ProbeBroadcastMaxVecRows]]): the
@@ -1529,76 +1356,20 @@ object Streaming {
                              bucketCol: String, centroidVecCol: String,
                              threshold: Double, storePath: String,
                              retention: String = "1 hour",
-                             pruneEvery: Int = 1,
                              probeBroadcastMaxRows: Long =
                                ProbeBroadcastMaxVecRows,
-                             maxSegments: Int = DefaultMaxSegments): DataFrame = {
-    require(pruneEvery >= 0,
-      s"pruneEvery must be >= 0 (0 = segment mode), got $pruneEvery")
-    val spark = batch.sparkSession
-    val hasBase = graft.lake.VersionedTable.isVersioned(spark, storePath)
-    val deltaPaths =
-      if (hasBase) graft.lake.VersionedTable.pendingDeltas(spark, storePath)
-      else Seq.empty[String]
-    // ONE bounds collection per batch, shared by the decision filter
-    // and (in segment mode) the stamp/vacuum — observed for free on the
-    // compute half's bucket-assignment pass ([[observeBounds]])
-    val (survivors, newStore, delta, quantizerCurrent, bounds) =
+                             maxSegments: Int = 0): DataFrame =
+    retentionStep(batch, storePath, maxSegments) { segments =>
       semanticDedupBatchCompute(batch, idCol, vecCol, tsCol, centroids,
         bucketCol, centroidVecCol, threshold, storePath, retention,
-        deltaPaths, probeBroadcastMaxRows)
-    val seg = if (pruneEvery == 0 && hasBase) Some(bounds) else None
-    semanticPublishOrDelta(spark, storePath, hasBase, deltaPaths, pruneEvery,
-      quantizerCurrent, newStore, delta, seg, maxSegments)
-    survivors
-  }
-
-  /** Shared republish-vs-delta decision of [[semanticDedupBatchStep]]
-    * and [[semanticDedupWriter]]: republish on bootstrap, in eager
-    * mode, on a quantizer change (fingerprint uniformity — see the
-    * step scaladoc), and every `pruneEvery`-th batch (the pending
-    * backlog counts batches since the last republish); otherwise
-    * append the batch's survivors as an O(batch) delta. In SEGMENT
-    * mode (`seg` present, pruneEvery = 0) the delta lands stamped and
-    * fully-expired segments are physically dropped
-    * ([[noveltyGateBatchStep]] SEGMENT MODE contract) — EXCEPT on a
-    * quantizer change, which still forces an immediate republish so
-    * every readable layer stays fingerprint-uniform.
-    */
-  private def semanticPublishOrDelta(spark: SparkSession, storePath: String,
-                                     hasBase: Boolean, deltaPaths: Seq[String],
-                                     pruneEvery: Int, quantizerCurrent: Boolean,
-                                     newStore: DataFrame, delta: DataFrame,
-                                     seg: Option[(Option[Timestamp],
-                                       Option[Timestamp])] = None,
-                                     maxSegments: Int = 0)
-      : Unit =
-    if (!hasBase || pruneEvery == 1 || !quantizerCurrent ||
-        (pruneEvery > 1 && deltaPaths.size + 1 >= pruneEvery)) {
-      graft.lake.VersionedTable.publish(newStore, storePath)
-      // the new base subsumes the folded deltas (same rationale as the
-      // novelty gate: without the vacuum every republish orphans
-      // pruneEvery-1 delta dirs on disk forever)
-      if (deltaPaths.nonEmpty)
-        graft.lake.VersionedTable.vacuumDeltas(spark, storePath)
-    } else seg match {
-      case Some((mx, hz)) =>
-        segmentAppendAndMaintain(spark, storePath, delta, mx, hz, maxSegments)
-      case None =>
-        graft.lake.VersionedTable.appendDelta(delta, storePath)
+        segments, probeBroadcastMaxRows)
     }
 
-  /** Decision half of [[semanticDedupBatchStep]] — survivors plus the
-    * lazy next store (full fold) AND the batch-only delta, publish
-    * deferred to the caller (the [[semanticDedupWriter]]
-    * crash-consistency seam and the amortized-republish choice).
-    * `deltaPaths` is the pending overlay the store read must union in
-    * (version names under the root; the callers list it once so the
-    * backlog count and the read agree). The returned Boolean is the
-    * quantizer fast-path verdict: false forces a republish so layers
-    * stay fingerprint-uniform. The last element is the batch's
-    * [[observeBounds]], collected by the bucket-assignment pass for the
-    * caller's segment stamp/vacuum.
+  /** Decision half of [[semanticDedupBatchStep]] ([[StoreDecision]]
+    * with the survivors as `out` and their vectors as the segment) —
+    * the [[semanticDedupWriter]] crash-consistency seam. A changed
+    * quantizer sets `forceRepublish` so layers stay
+    * fingerprint-uniform.
     */
   private[graft] def semanticDedupBatchCompute(batch: DataFrame, idCol: String,
                                         vecCol: String, tsCol: String,
@@ -1609,8 +1380,7 @@ object Streaming {
                                         deltaPaths: Seq[String] = Seq.empty,
                                         probeBroadcastMaxRows: Long =
                                           ProbeBroadcastMaxVecRows)
-      : (DataFrame, DataFrame, DataFrame, Boolean,
-         (Option[Timestamp], Option[Timestamp])) = {
+      : StoreDecision = {
     import org.apache.spark.sql.types._
     val spark = batch.sparkSession
     // quantizer fingerprint: order-independent combine of per-centroid
@@ -1635,16 +1405,10 @@ object Streaming {
       StructField("_qfp", LongType)))
     // schema-enforced read: pre-seam stores lack the fingerprint column
     // physically and read it as null — the stale-quantizer fallback
-    val storeBase = readStoreOrEmpty(spark, storePath, storeSchema)
-    // base ∪ pending deltas (amortized mode): deltas always carry _qfp
-    // and — by the forced-republish-on-change invariant — the SAME one
-    // as the base under them, so the union stays fingerprint-uniform
-    val store =
-      if (deltaPaths.isEmpty) storeBase
-      else storeBase.unionByName(
-        spark.read.schema(storeSchema)
-          .parquet(deltaPaths.map(d => s"$storePath/$d"): _*)
-          .select("bucket", "_sid", "_svec", "_ts", "_qfp"))
+    // segments always carry _qfp and — by the forced-republish-on-
+    // change invariant — the SAME one as the base under them, so the
+    // union stays fingerprint-uniform
+    val store = readLayers(spark, storePath, storeSchema, deltaPaths)
     // every published version stamps ONE uniform fingerprint (the
     // whole new store gets `lit(qfp)` below), so the FIRST row decides
     // the fast path — a limit(1) that short-circuits after one row
@@ -1730,27 +1494,25 @@ object Streaming {
       .select(col("bucket"), col(idCol).as("_sid"), col("_v").as("_svec"),
         col("_ts"))
     val merged = liveStore.unionByName(survStore)
-    // Behind a delta overlay, duplicates fall in two classes: a base
-    // row and its logically-expired-then-readmitted delta twin (SAME
-    // vector — the intended fold target), and an id-REUSING source
-    // that admitted a different vector under an old id (eager mode
-    // keeps both rows live, so both must survive the fold too or the
-    // two modes diverge on future drop decisions). Keying keep-newest
-    // on (_sid, _svec) — array grouping keys are exact here, vectors
-    // re-enter the store bit-identically — collapses exactly the twin
-    // class and nothing else. The eager path has no overlay and skips
-    // the extra shuffle.
+    // Behind pending segments, duplicates fall in two classes: a base
+    // row and its expired-then-readmitted segment twin (SAME vector —
+    // the intended fold target), and an id-REUSING source that
+    // admitted a different vector under an old id (a store without
+    // segments keeps both rows live, so both must survive the fold too
+    // or the layouts diverge on future drop decisions). Keying
+    // keep-newest on (_sid, _svec) — array grouping keys are exact
+    // here, vectors re-enter the store bit-identically — collapses
+    // exactly the twin class and nothing else. A store with no pending
+    // segments skips the extra shuffle.
     val folded =
       if (deltaPaths.isEmpty) merged
       else merged.groupBy(col("_sid"), col("_svec"))
         .agg(max(struct(col("_ts"), col("bucket"))).as("_m"))
         .select(col("_m.bucket").as("bucket"), col("_sid"),
           col("_svec"), col("_m._ts").as("_ts"))
-    (survivors,
-      folded.withColumn("_qfp", lit(qfp)),
-      survStore.withColumn("_qfp", lit(qfp)),
-      quantizerCurrent,
-      bounds)
+    StoreDecision(survivors, folded.withColumn("_qfp", lit(qfp)),
+      survStore.withColumn("_qfp", lit(qfp)), bounds,
+      forceRepublish = !quantizerCurrent)
   }
 
   /** `foreachBatch` wrapper over the semantic batch step — same
@@ -1769,37 +1531,24 @@ object Streaming {
                           bucketCol: String, centroidVecCol: String,
                           threshold: Double, storePath: String,
                           survivorsPath: String, retention: String = "1 hour",
-                          compactEvery: Int = 10, pruneEvery: Int = 1,
+                          compactEvery: Int = 10,
                           probeBroadcastMaxRows: Long =
                             ProbeBroadcastMaxVecRows,
-                          maxSegments: Int = DefaultMaxSegments)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+                          maxSegments: Int = 0)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    requireMaxSegments(maxSegments)
     rows.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        require(pruneEvery >= 0,
-          s"pruneEvery must be >= 0 (0 = segment mode), got $pruneEvery")
-        val spark = batch.sparkSession
-        val hasBase = graft.lake.VersionedTable.isVersioned(spark, storePath)
-        val deltaPaths =
-          if (hasBase)
-            graft.lake.VersionedTable.pendingDeltas(spark, storePath)
-          else Seq.empty[String]
-        val (survivors, newStore, delta, quantizerCurrent, bounds) =
-          semanticDedupBatchCompute(batch, idCol, vecCol, tsCol, centroids,
-            bucketCol, centroidVecCol, threshold, storePath, retention,
-            deltaPaths, probeBroadcastMaxRows)
-        // O(batch) merge-on-read survivors sink (see nearDedupWriter);
-        // sink commits BEFORE state, so a crash between the two
-        // converges on redelivery in every state mode (a delta-mode
-        // redelivery lands an identical-content delta; the store read
-        // then drops the batch against its own vectors → no-ops)
-        morUpsertStep(survivors, Seq(idCol), survivorsPath, batchId,
-          compactEvery)
-        val seg = if (pruneEvery == 0 && hasBase) Some(bounds) else None
-        semanticPublishOrDelta(spark, storePath, hasBase, deltaPaths,
-          pruneEvery, quantizerCurrent, newStore, delta, seg, maxSegments)
+        retentionStep(batch, storePath, maxSegments,
+            morUpsertStep(_, Seq(idCol), survivorsPath, batchId, compactEvery)) {
+          segments =>
+            semanticDedupBatchCompute(batch, idCol, vecCol, tsCol, centroids,
+              bucketCol, centroidVecCol, threshold, storePath, retention,
+              segments, probeBroadcastMaxRows)
+        }
         ()
     }
+  }
 
   /** Online refresh of the learned quality gate
     * ([[graft.textops.QualityModel]]): one mass-normalized GD round on

@@ -103,7 +103,7 @@ class OracleRewriteSpec extends AnyFunSuite {
     val oracles = SparkEntry.oracleSql // computing this runs the
     // insertion-only require over every whitelisted query
     val whitelist = Set(
-      "q_s_neardedup_step", "q_s_neardedup_amortized_step",
+      "q_s_neardedup_step",
       "q_s_neardedup_segmented_step", "q_s_neardedup_segmented_bounded_step",
       "q_s_neardedup_segmented_bounded_skew_step",
       "q_t_minhash_lsh", "q_t_edit_verify", "q_t_simhash",

@@ -109,9 +109,10 @@ class PartitionInvarianceSpec extends SparkSpec {
   /** The stateful streaming steps claim the same invariance but WRITE
     * state, so the comparison runs each step sequence into a FRESH
     * store per config and compares both the per-batch results and the
-    * final published store contents — this pins the r15 delta-fold
-    * paths (amortized republish) against partition-order sensitivity
-    * too, which the read-only families above can't reach.
+    * final published store contents — this pins the per-batch
+    * republish folds (and drift's amortized delta re-sum) against
+    * partition-order sensitivity too, which the read-only families
+    * above can't reach.
     */
   test("stateful steps (novelty, near-dedup, semdedup, drift amortized, KMV) publish bit-identical state across partitionings") {
     import graft.stream.Streaming
@@ -144,30 +145,29 @@ class PartitionInvarianceSpec extends SparkSpec {
         varied.foreach(spark.conf.unset)
         conf.foreach { case (k, v) => spark.conf.set(k, v) }
         val out = scala.collection.mutable.ArrayBuffer[String]()
-        // novelty gate, amortized (two batches: append-delta, republish)
+        // novelty gate (two batches, each republishing the fold)
         val nv = s"$base/$tag/nv"
         for ((lo, hi) <- Seq((0, 60), (40, 120)))
           out += Streaming.noveltyGateBatchStep(docBatch(lo, hi), "doc_id",
-              "text", "ts", nv, minNovelty = 0.3, retention = "10 days",
-              pruneEvery = 2)
+              "text", "ts", nv, minNovelty = 0.3, retention = "10 days")
             .select("doc_id", "novelty").collect().map(canon).sorted
             .mkString("|")
         out += VersionedTable.readCurrent(spark, nv)
           .collect().map(canon).sorted.mkString("|")
-        // near-dedup band store, amortized (r16)
+        // near-dedup band store
         val nd = s"$base/$tag/nd"
         for ((lo, hi) <- Seq((0, 60), (40, 120)))
           out += Streaming.nearDedupBatchStep(docBatch(lo, hi), "doc_id",
-              "text", "ts", nd, retention = "10 days", pruneEvery = 2)
+              "text", "ts", nd, retention = "10 days")
             .select("doc_id").as[Long].collect().sorted.mkString(",")
         out += VersionedTable.readCurrent(spark, nd)
           .collect().map(canon).sorted.mkString("|")
-        // semantic dedup, amortized
+        // semantic dedup
         val sd = s"$base/$tag/sd"
         for ((lo, hi) <- Seq((0, 60), (40, 120)))
           out += Streaming.semanticDedupBatchStep(vecBatch(lo, hi), "vec_id",
               "embedding", "ts", cents, "b", "cv", threshold = 0.95, sd,
-              retention = "10 days", pruneEvery = 2)
+              retention = "10 days")
             .select("vec_id").as[Long].collect().sorted.mkString(",")
         out += VersionedTable.readCurrent(spark, sd)
           .collect().map(canon).sorted.mkString("|")
@@ -205,8 +205,8 @@ class PartitionInvarianceSpec extends SparkSpec {
     assert(a.exists(_.nonEmpty))
   }
 
-  /** SEGMENT mode (`pruneEvery = 0`, the r16 LSM layout) has different
-    * PHYSICAL state than the amortized mode the test above pins —
+  /** SEGMENT mode (`maxSegments > 0`, the r16 LSM layout) has different
+    * PHYSICAL state than the republishing layout the test above pins —
     * stamped segment files plus `_maxts` expiry metadata, vacuumed per
     * batch — so its invariance needs its own pin: per-batch decisions,
     * the MERGED state (base ∪ pending segments — the relation every
@@ -270,21 +270,23 @@ class PartitionInvarianceSpec extends SparkSpec {
         for ((b, lo, hi) <- batches)
           out += Streaming.noveltyGateBatchStep(docBatch(b, lo, hi), "doc_id",
               "text", "ts", nv, minNovelty = 0.3, retention = "2 days",
-              pruneEvery = 0)
+              maxSegments = Streaming.SegmentMergeBound)
             .select("doc_id", "novelty").collect().map(canon).sorted
             .mkString("|")
         out += stateOf(nv)
         val nd = s"$base/$tag/nd"
         for ((b, lo, hi) <- batches)
           out += Streaming.nearDedupBatchStep(docBatch(b, lo, hi), "doc_id",
-              "text", "ts", nd, retention = "2 days", pruneEvery = 0)
+              "text", "ts", nd, retention = "2 days",
+              maxSegments = Streaming.SegmentMergeBound)
             .select("doc_id").as[Long].collect().sorted.mkString(",")
         out += stateOf(nd)
         val sd = s"$base/$tag/sd"
         for ((b, lo, hi) <- batches)
           out += Streaming.semanticDedupBatchStep(vecBatch(b, lo, hi),
               "vec_id", "embedding", "ts", cents, "b", "cv",
-              threshold = 0.95, sd, retention = "2 days", pruneEvery = 0)
+              threshold = 0.95, sd, retention = "2 days",
+              maxSegments = Streaming.SegmentMergeBound)
             .select("vec_id").as[Long].collect().sorted.mkString(",")
         out += stateOf(sd)
         out.toSeq

@@ -448,10 +448,10 @@ class PlanSpec extends SparkSpec {
       batch((1L, "alpha beta gamma delta epsilon zeta eta theta", "2024-01-01 10:00:00")),
       "doc_id", "text", "ts", root, minNovelty = 0.0, retention = "1 hour")
       .count()
-    val (_, newStore, _, _) = Streaming.noveltyGateBatchCompute(
+    val newStore = Streaming.noveltyGateBatchCompute(
       batch((2L, "one two three four five six seven eight", "2024-01-02 09:00:00")),
       "doc_id", "text", "ts", root, minNovelty = 0.0, retention = "1 hour",
-      shingleN = 3)
+      shingleN = 3).folded
     // string-level assert (the AQE wrapper hides the scan from plan
     // collectors until finalization): the store's FileScan must carry
     // the horizon as a PUSHED filter, not only a post-scan Filter

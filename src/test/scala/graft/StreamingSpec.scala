@@ -216,80 +216,22 @@ class StreamingSpec extends SparkSpec {
     assert(ts2.toSeq === Seq("2024-01-01 12:30:00.0", "2024-01-01 12:40:00.0"))
   }
 
-  test("novelty gate pruneEvery: amortized deltas score like eager, republish folds on schedule, expiry is logical between republishes") {
+  test("near-dedup segment mode: decisions match eager, no republish after bootstrap, expired segments drop whole") {
     import graft.stream.Streaming
     import graft.lake.VersionedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_novprune").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_nndseg").toString
     val eagerStore = dir + "/eager"
-    val amortStore = dir + "/amort"
+    val segStore = dir + "/seg"
     def batch(rows: (Long, String, String)*) =
       rows.toDF("doc_id", "text", "tss")
         .withColumn("ts", col("tss").cast("timestamp")).drop("tss")
     def run(b: org.apache.spark.sql.DataFrame) = {
-      def ids(store: String, pe: Int) =
-        Streaming.noveltyGateBatchStep(b, "doc_id", "text", "ts", store,
-          minNovelty = 0.5, retention = "1 hour", pruneEvery = pe)
-          .select("doc_id").as[Long].collect().sorted.toSeq
-      val (e, a) = (ids(eagerStore, 1), ids(amortStore, 3))
-      assert(e === a, "amortized admissions diverged from eager")
-      e
-    }
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val fresh = "rivers mountains valleys forests deserts plains islands caves cliffs dunes"
-    // b1 bootstraps BOTH stores with a published base (no deltas yet)
-    assert(run(batch((1L, base, "2024-01-01 10:00:00"))) === Seq(1L))
-    assert(VersionedTable.pendingDeltas(spark, amortStore).isEmpty)
-    val baseV1 = VersionedTable.currentVersion(spark, amortStore)
-    // b2: near-repeat refuses, fresh admits — the amortized store only
-    // appends a delta (base version untouched)
-    assert(run(batch(
-      (2L, base.replace("kappa", "lambda"), "2024-01-01 10:10:00"),
-      (3L, fresh, "2024-01-01 10:11:00"))) === Seq(3L))
-    assert(VersionedTable.pendingDeltas(spark, amortStore).size === 1)
-    assert(VersionedTable.currentVersion(spark, amortStore) === baseV1)
-    // b3 beyond retention: expired shingles no longer refuse — in the
-    // amortized store they are still PHYSICALLY present (logical
-    // expiry: the horizon filter excludes them at scoring time), and
-    // batch-mate doc 5 must see delta-resident doc-4 shingles
-    assert(run(batch((4L, base.replace("kappa", "mu"), "2024-01-01 12:30:00")))
-      === Seq(4L))
-    assert(VersionedTable.pendingDeltas(spark, amortStore).size === 2)
-    val amortTs = VersionedTable.readCurrent(spark, amortStore)
-      .select("_ts").distinct().as[Timestamp].collect().map(_.toString).sorted
-    assert(amortTs.contains("2024-01-01 10:00:00.0"),
-      "between republishes the base must retain expired shingles (logical expiry)")
-    val eagerTs = VersionedTable.readCurrent(spark, eagerStore)
-      .select("_ts").distinct().as[Timestamp].collect().map(_.toString).sorted
-    assert(!eagerTs.contains("2024-01-01 10:00:00.0"),
-      "eager mode prunes physically every batch")
-    // b4 is the 3rd batch since republish → the amortized store folds:
-    // deltas subsumed, base identical to the eager store's fold
-    assert(run(batch((5L, base.replace("kappa", "nu"), "2024-01-01 12:40:00")))
-      === Seq.empty)
-    assert(VersionedTable.pendingDeltas(spark, amortStore).isEmpty)
-    assert(VersionedTable.currentVersion(spark, amortStore) !== baseV1)
-    def snapshot(store: String) = VersionedTable.readCurrent(spark, store)
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1).toString)).sorted.toSeq
-    assert(snapshot(amortStore) === snapshot(eagerStore),
-      "the republished fold must equal the eager store")
-  }
-
-  test("near-dedup pruneEvery: amortized deltas decide like eager, republish folds on schedule, expiry is logical between republishes") {
-    import graft.stream.Streaming
-    import graft.lake.VersionedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_nndprune").toString
-    val eagerStore = dir + "/eager"
-    val amortStore = dir + "/amort"
-    def batch(rows: (Long, String, String)*) =
-      rows.toDF("doc_id", "text", "tss")
-        .withColumn("ts", col("tss").cast("timestamp")).drop("tss")
-    def run(b: org.apache.spark.sql.DataFrame) = {
-      def ids(store: String, pe: Int) =
+      def ids(store: String, ms: Int) =
         Streaming.nearDedupBatchStep(b, "doc_id", "text", "ts", store,
-          retention = "1 hour", pruneEvery = pe)
+          retention = "1 hour", maxSegments = ms)
           .select("doc_id").as[Long].collect().sorted.toSeq
-      val (e, a) = (ids(eagerStore, 1), ids(amortStore, 3))
-      assert(e === a, "amortized survivors diverged from eager")
+      val (e, a) = (ids(eagerStore, 0), ids(segStore, Streaming.SegmentMergeBound))
+      assert(e === a, "segment-mode survivors diverged from eager")
       e
     }
     // the crash-convergence spec pins that `cat` band-collides with
@@ -297,40 +239,45 @@ class StreamingSpec extends SparkSpec {
     val base = "the quick brown fox jumps over the lazy dog near the old barn"
     val cat = base.replace("dog", "cat")
     val fresh = "completely different words about stars planets moons comets asteroids orbits"
-    // b1 bootstraps BOTH stores with a published base (no deltas yet)
+    // b1 bootstraps BOTH stores with a published base (no segments yet)
     assert(run(batch((1L, base, "2024-01-01 10:00:00"))) === Seq(1L))
-    assert(VersionedTable.pendingDeltas(spark, amortStore).isEmpty)
-    val baseV1 = VersionedTable.currentVersion(spark, amortStore)
+    assert(VersionedTable.pendingDeltas(spark, segStore).isEmpty)
+    val baseV1 = VersionedTable.currentVersion(spark, segStore)
     // b2: near-dup of stored doc 1 drops, fresh text admits — the
-    // amortized store only appends a delta (base version untouched)
+    // segment store appends ONE stamped segment (base untouched)
     assert(run(batch(
       (2L, cat, "2024-01-01 10:10:00"),
       (3L, fresh, "2024-01-01 10:11:00"))) === Seq(3L))
-    assert(VersionedTable.pendingDeltas(spark, amortStore).size === 1)
-    assert(VersionedTable.currentVersion(spark, amortStore) === baseV1)
-    // b3 beyond retention: doc 1's bands expired, its twin re-admits.
-    // Amortized: the base STILL physically holds the t0 bands (logical
-    // expiry — the horizon filter excludes them at decision time);
+    assert(VersionedTable.pendingDeltas(spark, segStore).size === 1)
+    assert(VersionedTable.currentVersion(spark, segStore) === baseV1)
+    // b3 beyond retention: doc 1's bands expired, its twin re-admits;
+    // b2's segment (stamp 10:11) fell fully behind the 11:30 horizon
+    // and drops WHOLE, leaving only b3's own segment. The bootstrap
+    // base still physically holds the 10:00 bands (logically dead);
     // eager pruned them at publish
     assert(run(batch((4L, base, "2024-01-01 12:30:00"))) === Seq(4L))
-    assert(VersionedTable.pendingDeltas(spark, amortStore).size === 2)
+    assert(VersionedTable.pendingDeltas(spark, segStore).size === 1,
+      "expired segment must vacuum whole; the new batch appends one")
+    assert(VersionedTable.currentVersion(spark, segStore) === baseV1)
     def tsOnDisk(store: String) = VersionedTable.readCurrent(spark, store)
       .select("_ts").distinct().as[Timestamp].collect().map(_.toString).sorted
-    assert(tsOnDisk(amortStore).contains("2024-01-01 10:00:00.0"),
-      "between republishes the base must retain expired bands (logical expiry)")
+    assert(tsOnDisk(segStore).contains("2024-01-01 10:00:00.0"))
     assert(!tsOnDisk(eagerStore).contains("2024-01-01 10:00:00.0"),
       "eager mode prunes physically every batch")
-    // b4 is the 3rd batch since republish → the amortized store folds:
-    // deltas subsumed + vacuumed, base identical to the eager store's,
-    // and doc 4's delta-resident bands drop its live twin in BOTH modes
+    // b4: doc 4's SEGMENT-resident bands drop its live twin in BOTH
+    // layouts, and the live rows (those at or past b4's 11:40 horizon)
+    // of base ∪ segments equal the eager store
     assert(run(batch((5L, cat, "2024-01-01 12:40:00"))) === Seq.empty)
-    assert(VersionedTable.pendingDeltas(spark, amortStore).isEmpty)
-    assert(VersionedTable.currentVersion(spark, amortStore) !== baseV1)
-    def snapshot(store: String) = VersionedTable.readCurrent(spark, store)
-      .collect().map(r => (r.getInt(0), r.getLong(1),
-        r.getTimestamp(2).toString)).sorted.toSeq
-    assert(snapshot(amortStore) === snapshot(eagerStore),
-      "the republished fold must equal the eager store")
+    assert(VersionedTable.currentVersion(spark, segStore) === baseV1)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.where(col("_ts") >= lit(Timestamp.valueOf("2024-01-01 11:40:00")))
+        .collect().map(r => (r.getInt(0), r.getLong(1),
+          r.getTimestamp(2).toString)).sorted.toSeq
+    val segLive = VersionedTable.pendingDeltas(spark, segStore)
+      .foldLeft(VersionedTable.readCurrent(spark, segStore)) { (df, d) =>
+        df.unionByName(spark.read.parquet(s"$segStore/$d")) }
+    assert(rows(segLive) === rows(VersionedTable.readCurrent(spark, eagerStore)),
+      "the live segment-mode state must equal the eager store")
   }
 
   test("novelty gate segment mode (pruneEvery = 0): decisions match eager, no republish after bootstrap, expired segments drop whole") {
@@ -342,11 +289,11 @@ class StreamingSpec extends SparkSpec {
       rows.toDF("doc_id", "text", "tss")
         .withColumn("ts", col("tss").cast("timestamp")).drop("tss")
     def run(b: org.apache.spark.sql.DataFrame) = {
-      def ids(store: String, pe: Int) =
+      def ids(store: String, ms: Int) =
         Streaming.noveltyGateBatchStep(b, "doc_id", "text", "ts", store,
-          minNovelty = 0.5, retention = "1 hour", pruneEvery = pe)
+          minNovelty = 0.5, retention = "1 hour", maxSegments = ms)
           .select("doc_id").as[Long].collect().sorted.toSeq
-      val (e, a) = (ids(eagerStore, 1), ids(segStore, 0))
+      val (e, a) = (ids(eagerStore, 0), ids(segStore, Streaming.SegmentMergeBound))
       assert(e === a, "segment-mode admissions diverged from eager")
       e
     }
@@ -385,7 +332,7 @@ class StreamingSpec extends SparkSpec {
   test("segment mode with maxSegments: backlog stays bounded via in-step L1 merges, decisions and state match the unbounded run") {
     import graft.lake.VersionedTable
     val dir = java.nio.file.Files.createTempDirectory("graft_novsegb").toString
-    val unb = dir + "/unbounded"
+    val unb = dir + "/unmerged"
     val bnd = dir + "/bounded"
     def batch(rows: (Long, String, String)*) =
       rows.toDF("doc_id", "text", "tss")
@@ -396,8 +343,7 @@ class StreamingSpec extends SparkSpec {
     def text(i: Int) = (0 until 10).map(j => s"w${i}x$j").mkString(" ")
     def step(store: String, ms: Int, b: org.apache.spark.sql.DataFrame) =
       Streaming.noveltyGateBatchStep(b, "doc_id", "text", "ts", store,
-        minNovelty = 0.5, retention = "3650 days", pruneEvery = 0,
-        maxSegments = ms)
+        minNovelty = 0.5, retention = "3650 days", maxSegments = ms)
         .select("doc_id").as[Long].collect().sorted.toSeq
     // batch i: one fresh doc + one near-repeat of the PREVIOUS batch's
     // admitted doc — every decision probes the full merged state, so a
@@ -408,13 +354,14 @@ class StreamingSpec extends SparkSpec {
         (2L * i, text(i), f"2024-01-01 10:0${i - 1}%d:00"),
         (2L * i + 1, prev.replaceFirst("\\w+$", "omega"),
           f"2024-01-01 10:0${i - 1}%d:30"))
-      val u = step(unb, 0, b)
+      // SegmentMergeBound (64): 6 batches never reach it
+      val u = step(unb, Streaming.SegmentMergeBound, b)
       val v = step(bnd, 2, b)
       assert(u === v, s"bounded segment mode diverged at batch $i")
       assert(u === (if (i == 1) Seq(2L * i, 2L * i + 1) else Seq(2L * i)),
         s"unexpected admissions at batch $i: $u")
     }
-    // 6 batches: bootstrap publish + 5 stamped segments unbounded; the
+    // 6 batches: bootstrap publish + 5 stamped segments unmerged; the
     // bound holds the bounded store at <= 2 pending segments
     assert(VersionedTable.pendingDeltas(spark, unb).size === 5)
     assert(VersionedTable.pendingDeltas(spark, bnd).size <= 2)
@@ -432,57 +379,14 @@ class StreamingSpec extends SparkSpec {
     assert(rows(unb) === rows(bnd))
   }
 
-  test("explicit-unbounded segment mode warns loudly once the backlog passes the bound") {
-    import graft.lake.VersionedTable
-    val root = java.nio.file.Files.createTempDirectory("graft_wub")
-      .toString + "/store"
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    VersionedTable.publish(Seq((0L, "base")).toDF("k", "v"), root)
-    (1 to 3).foreach { i =>
-      VersionedTable.appendDeltaStamped(
-        Seq((i.toLong, s"seg$i")).toDF("k", "v"), root,
-        Some(ts(f"2024-01-01 10:0$i:00")))
-    }
-    def captured(threshold: Int): String = {
-      val buf = new java.io.ByteArrayOutputStream()
-      Console.withErr(new java.io.PrintStream(buf, true, "UTF-8")) {
-        Streaming.warnUnboundedBacklog(spark, root, threshold)
-      }
-      buf.toString("UTF-8")
-    }
-    // under the bound: silent (bounded-default deployments never pay
-    // more than the one listing this helper shares with the step)
-    assert(captured(threshold = 5).isEmpty)
-    // past it: loud, self-describing, actionable
-    val w = captured(threshold = 2)
-    assert(w.contains("maxSegments = 0"))
-    assert(w.contains("3 pending segments"))
-    assert(w.contains(root))
-    // once per store path per JVM (r19): a long unbounded backfill must
-    // not pay the warning + its directory listing on every batch
-    assert(captured(threshold = 2).isEmpty)
-    assert(Streaming.warnedUnboundedPaths.contains(root))
-    // re-armed (an operator fixed the store), it fires again
-    Streaming.warnedUnboundedPaths.remove(root)
-    assert(captured(threshold = 2).contains("3 pending segments"))
-    Streaming.warnedUnboundedPaths.remove(root)
-    // the r18 contract this guards: unbounded is explicit-only — the
-    // public steps/writers default to a bounded backlog
-    assert(Streaming.DefaultMaxSegments === 64)
-  }
-
-  test("amortized novelty republish physically vacuums subsumed deltas past the reader horizon") {
+  test("amortized drift republish physically vacuums subsumed deltas past the reader horizon") {
     import graft.stream.Streaming
     import graft.lake.VersionedTable
-    val store = java.nio.file.Files.createTempDirectory("graft_novvac")
-      .toString + "/nv"
+    val store = java.nio.file.Files.createTempDirectory("graft_driftvac")
+      .toString + "/dr"
     def step(id: Long) =
-      Streaming.noveltyGateBatchStep(
-        Seq((id, s"fresh words for batch $id", "2024-01-01 10:00:00"))
-          .toDF("doc_id", "text", "tss")
-          .withColumn("ts", col("tss").cast("timestamp")).drop("tss"),
-        "doc_id", "text", "ts", store, minNovelty = 0.0,
-        retention = "1 hour", pruneEvery = 2).count()
+      Streaming.driftMonitorBatchStep(Seq(s"fresh words for batch $id")
+        .toDF("text"), "text", store, pruneEvery = 2).count()
     def deltaDirsOnDisk = new java.io.File(store).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("d-"))
       .map(_.getName).sorted.toSeq
@@ -583,145 +487,105 @@ class StreamingSpec extends SparkSpec {
       "the republished fold must equal the eager store")
   }
 
-  test("semantic dedup pruneEvery: amortized deltas decide like eager, republish folds on schedule, expiry is logical between republishes") {
+  test("semantic dedup segment mode: decisions match eager, no republish after bootstrap, expired segments drop whole") {
     import graft.lake.VersionedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_semprune").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_semseg").toString
     val eagerStore = dir + "/eager"
-    val amortStore = dir + "/amort"
+    val segStore = dir + "/seg"
     val cents = Seq(0L -> Seq(0.0, 1.0), 1L -> Seq(1.0, 0.0)).toDF("b", "cv")
     def batch(rows: (Long, Seq[Double], String)*) =
       rows.toDF("vec_id", "embedding", "tss")
         .withColumn("ts", col("tss").cast("timestamp")).drop("tss")
     def run(b: org.apache.spark.sql.DataFrame) = {
-      def ids(store: String, pe: Int) =
+      def ids(store: String, ms: Int) =
         Streaming.semanticDedupBatchStep(b, "vec_id", "embedding", "ts",
           cents, "b", "cv", threshold = 0.9, store, retention = "1 hour",
-          pruneEvery = pe)
+          maxSegments = ms)
           .select("vec_id").as[Long].collect().sorted.toSeq
-      val (e, a) = (ids(eagerStore, 1), ids(amortStore, 3))
-      assert(e === a, "amortized decisions diverged from eager")
+      val (e, a) = (ids(eagerStore, 0), ids(segStore, Streaming.SegmentMergeBound))
+      assert(e === a, "segment-mode decisions diverged from eager")
       e
     }
-    // b1 bootstraps BOTH stores with a published base (no deltas yet)
+    // b1 bootstraps BOTH stores with a published base (no segments yet)
     assert(run(batch((1L, Seq(1.0, 0.05), "2024-01-01 10:00:00"))) === Seq(1L))
-    assert(VersionedTable.pendingDeltas(spark, amortStore).isEmpty)
-    val baseV1 = VersionedTable.currentVersion(spark, amortStore)
+    assert(VersionedTable.pendingDeltas(spark, segStore).isEmpty)
+    val baseV1 = VersionedTable.currentVersion(spark, segStore)
     // b2: near-dup of stored vec 1 drops, orthogonal vec 3 admits — the
-    // amortized store only appends a delta (base version untouched)
+    // segment store appends ONE stamped segment (base untouched)
     assert(run(batch(
       (2L, Seq(0.995, 0.04), "2024-01-01 10:10:00"),
       (3L, Seq(0.05, 1.0), "2024-01-01 10:11:00"))) === Seq(3L))
-    assert(VersionedTable.pendingDeltas(spark, amortStore).size === 1)
-    assert(VersionedTable.currentVersion(spark, amortStore) === baseV1)
-    // b3 beyond retention: vec 1's twin re-admits (store row expired).
-    // Amortized: the base STILL physically holds vec 1 (logical expiry
-    // — the horizon filter excludes it at decision time); eager pruned
-    // it at publish
+    assert(VersionedTable.pendingDeltas(spark, segStore).size === 1)
+    assert(VersionedTable.currentVersion(spark, segStore) === baseV1)
+    // b3 beyond retention: vec 1's twin re-admits (store row expired)
+    // and b2's segment drops WHOLE. The bootstrap base STILL physically
+    // holds vec 1 (logically dead past the horizon); eager pruned it
     assert(run(batch((4L, Seq(0.99, 0.06), "2024-01-01 12:30:00")))
       === Seq(4L))
-    assert(VersionedTable.pendingDeltas(spark, amortStore).size === 2)
-    assert(VersionedTable.readCurrent(spark, amortStore)
-      .where(col("_sid") === 1L).count() === 1L,
-      "between republishes the base must retain expired vectors (logical expiry)")
+    assert(VersionedTable.pendingDeltas(spark, segStore).size === 1,
+      "expired segment must vacuum whole; the new batch appends one")
+    assert(VersionedTable.readCurrent(spark, segStore)
+      .where(col("_sid") === 1L).count() === 1L)
     assert(VersionedTable.readCurrent(spark, eagerStore)
       .where(col("_sid") === 1L).count() === 0L,
       "eager mode prunes physically every batch")
-    // b4 is the 3rd batch since republish → the amortized store folds:
-    // deltas subsumed + vacuumed, base identical to the eager store's
+    // b4: vec 4's SEGMENT-resident row drops its twin in BOTH layouts,
+    // still without a republish; the live rows (at or past b4's 11:40
+    // horizon) of base ∪ segments equal the eager store
     assert(run(batch((5L, Seq(0.98, 0.07), "2024-01-01 12:40:00")))
       === Seq.empty)
-    assert(VersionedTable.pendingDeltas(spark, amortStore).isEmpty)
-    assert(VersionedTable.currentVersion(spark, amortStore) !== baseV1)
-    def snapshot(store: String) = VersionedTable.readCurrent(spark, store)
-      .select("bucket", "_sid", "_ts", "_qfp").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).toString,
-        r.getLong(3))).sorted.toSeq
-    assert(snapshot(amortStore) === snapshot(eagerStore),
-      "the republished fold must equal the eager store")
+    assert(VersionedTable.currentVersion(spark, segStore) === baseV1)
+    def live(df: org.apache.spark.sql.DataFrame) =
+      df.where(col("_ts") >= lit(Timestamp.valueOf("2024-01-01 11:40:00")))
+        .select("bucket", "_sid", "_ts", "_qfp").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).toString,
+          r.getLong(3))).sorted.toSeq
+    val segAll = VersionedTable.pendingDeltas(spark, segStore)
+      .foldLeft(VersionedTable.readCurrent(spark, segStore)) { (df, d) =>
+        df.unionByName(spark.read.parquet(s"$segStore/$d")) }
+    assert(live(segAll) === live(VersionedTable.readCurrent(spark, eagerStore)),
+      "the live segment-mode state must equal the eager store")
   }
 
-  test("semantic dedup pruneEvery: an id-reusing source keeps BOTH vectors through the republish fold (eager/amortized parity)") {
+  test("semantic dedup segment mode: an id-reusing source keeps BOTH vectors live and through a compacting republish (eager/segment parity)") {
     import graft.lake.VersionedTable
     val dir = java.nio.file.Files.createTempDirectory("graft_semreuse").toString
     val eagerStore = dir + "/eager"
-    val amortStore = dir + "/amort"
+    val segStore = dir + "/seg"
     val cents = Seq(0L -> Seq(0.0, 1.0), 1L -> Seq(1.0, 0.0)).toDF("b", "cv")
     def batch(rows: (Long, Seq[Double], String)*) =
       rows.toDF("vec_id", "embedding", "tss")
         .withColumn("ts", col("tss").cast("timestamp")).drop("tss")
-    def run(b: org.apache.spark.sql.DataFrame) = {
-      def ids(store: String, pe: Int) =
+    def run(b: org.apache.spark.sql.DataFrame,
+            segMax: Int = Streaming.SegmentMergeBound) = {
+      def ids(store: String, ms: Int) =
         Streaming.semanticDedupBatchStep(b, "vec_id", "embedding", "ts",
           cents, "b", "cv", threshold = 0.9, store, retention = "10 days",
-          pruneEvery = pe)
+          maxSegments = ms)
           .select("vec_id").as[Long].collect().sorted.toSeq
-      val (e, a) = (ids(eagerStore, 1), ids(amortStore, 2))
-      assert(e === a, "amortized decisions diverged from eager")
+      val (e, a) = (ids(eagerStore, 0), ids(segStore, segMax))
+      assert(e === a, "segment-mode decisions diverged from eager")
       e
     }
     // b1 admits id 1 with vector A; b2 REUSES id 1 for an orthogonal
     // vector B (it survives — not a near-dup of A). Eager mode now
-    // holds two live store rows under _sid=1.
+    // holds two live store rows under _sid=1; the segment store holds
+    // A in its base and B in a segment
     assert(run(batch((1L, Seq(1.0, 0.05), "2024-01-01 10:00:00"))) === Seq(1L))
     assert(run(batch((1L, Seq(0.05, 1.0), "2024-01-01 10:10:00"))) === Seq(1L))
-    // b3 is the amortized store's republish batch: a keep-newest fold
-    // keyed on _sid alone would drop vector A there, so a b4 probe
-    // near A would admit in amortized mode but drop in eager — the
-    // (_sid, _svec)-keyed fold keeps both
     assert(run(batch((7L, Seq(-1.0, -1.0), "2024-01-01 10:20:00"))) === Seq(7L))
-    assert(VersionedTable.pendingDeltas(spark, amortStore).isEmpty)
-    assert(run(batch((9L, Seq(0.99, 0.06), "2024-01-01 10:30:00"))) === Seq.empty)
-    assert(VersionedTable.readCurrent(spark, amortStore)
+    assert(VersionedTable.pendingDeltas(spark, segStore).size === 2)
+    // b4 compacts the segment store with one maxSegments = 0 batch: a
+    // keep-newest fold keyed on _sid alone would drop vector A there,
+    // so a b5 probe near A would admit in the segment store but drop in
+    // eager — the (_sid, _svec)-keyed fold keeps both
+    assert(run(batch((8L, Seq(-1.0, 0.9), "2024-01-01 10:25:00")), segMax = 0)
+      === Seq(8L))
+    assert(VersionedTable.pendingDeltas(spark, segStore).isEmpty)
+    assert(VersionedTable.readCurrent(spark, segStore)
       .where(col("_sid") === 1L).count() === 2L,
       "the republish fold dropped one of an id-reusing source's vectors")
-  }
-
-  test("semantic dedup pruneEvery: a quantizer change mid-cycle forces an immediate republish (fingerprint-uniform layers)") {
-    import graft.lake.VersionedTable
-    val store = java.nio.file.Files.createTempDirectory("graft_semqprune")
-      .toString + "/store"
-    def batch(rows: (Long, Seq[Double], String)*) =
-      rows.toDF("vec_id", "embedding", "tss")
-        .withColumn("ts", col("tss").cast("timestamp")).drop("tss")
-    def cents(rows: (Long, Seq[Double])*) = rows.toDF("b", "cv")
-    val c1 = cents(0L -> Seq(1.0, 1.0))
-    val c4 = cents(0L -> Seq(0.0, 1.0), 1L -> Seq(1.0, 0.0),
-      2L -> Seq(-1.0, 0.0), 3L -> Seq(0.0, -1.0))
-    def step(b: org.apache.spark.sql.DataFrame,
-             c: org.apache.spark.sql.DataFrame) =
-      Streaming.semanticDedupBatchStep(b, "vec_id", "embedding", "ts",
-        c, "b", "cv", threshold = 0.9, store, retention = "10 days",
-        pruneEvery = 5)
-        .select("vec_id").as[Long].collect().sorted.toSeq
-    // bootstrap base under the 1-bucket quantizer, then one delta
-    assert(step(batch((1L, Seq(1.0, 0.05), "2024-01-01 10:00:00")), c1)
-      === Seq(1L))
-    assert(step(batch((2L, Seq(0.05, 1.0), "2024-01-01 10:10:00")), c1)
-      === Seq(2L))
-    assert(VersionedTable.pendingDeltas(spark, store).size === 1)
-    val oldBase = VersionedTable.currentVersion(spark, store)
-    // the quantizer GROWS with two batches still owed before the next
-    // scheduled republish: the change must republish NOW — vec 3 is a
-    // near-dup of DELTA-resident vec 2 (filed under old bucket 0, now
-    // bucket 0 of a different quantizer) and must still drop, vec 4 is
-    // a new direction and admits
-    assert(step(batch(
-      (3L, Seq(0.06, 1.0), "2024-01-01 10:20:00"),
-      (4L, Seq(-1.0, 0.02), "2024-01-01 10:20:00")), c4) === Seq(4L))
-    assert(VersionedTable.pendingDeltas(spark, store).isEmpty,
-      "a quantizer change must force the republish (uniform _qfp layers)")
-    assert(VersionedTable.currentVersion(spark, store) !== oldBase)
-    val qfps = VersionedTable.readCurrent(spark, store)
-      .select("_qfp").distinct().as[Long].collect()
-    assert(qfps.length === 1, s"republished store must be fingerprint-uniform, got ${qfps.length} values")
-    // same-quantizer follow-up rides the O(1) fast path and appends a
-    // delta again (backlog restarted after the forced republish); an
-    // all-dropped batch's delta is empty — same contract as novelty
-    assert(step(batch((5L, Seq(0.98, 0.07), "2024-01-01 10:30:00")), c4)
-      === Seq.empty)
-    val pend = VersionedTable.pendingDeltas(spark, store)
-    assert(pend.size === 1, "backlog restarts after the forced republish")
-    assert(spark.read.parquet(s"$store/${pend.head}").count() === 0L)
+    assert(run(batch((9L, Seq(0.99, 0.06), "2024-01-01 10:30:00"))) === Seq.empty)
   }
 
   test("semantic dedup segment mode: never republishes on schedule, but a quantizer change still does") {
@@ -739,7 +603,7 @@ class StreamingSpec extends SparkSpec {
              c: org.apache.spark.sql.DataFrame) =
       Streaming.semanticDedupBatchStep(b, "vec_id", "embedding", "ts",
         c, "b", "cv", threshold = 0.9, store, retention = "10 days",
-        pruneEvery = 0)
+        maxSegments = Streaming.SegmentMergeBound)
         .select("vec_id").as[Long].collect().sorted.toSeq
     assert(step(batch((1L, Seq(1.0, 0.05), "2024-01-01 10:00:00")), c1)
       === Seq(1L))
@@ -1063,29 +927,139 @@ class StreamingSpec extends SparkSpec {
         "completely different words about stars planets moons comets asteroids orbits"))
       .toDF("doc_id", "ts", "text")
     // attempt 1: sink commit succeeds, state publish never happens
-    val (surv1, _, _, _) = Streaming.nearDedupBatchCompute(batch, "doc_id", "text",
-      "ts", store, "1 hour", 3, 64, 16)
+    val surv1 = Streaming.nearDedupBatchCompute(batch, "doc_id", "text",
+      "ts", store, "1 hour", 3, 64, 16).out
     Streaming.morUpsertStep(surv1, Seq("doc_id"), sink, 0L, 10)
     assert(!graft.lake.VersionedTable.isVersioned(spark, store)) // "crashed"
     // attempt 2 (re-delivery): the full writer step runs to completion
-    val (surv2, store2, _, _) = Streaming.nearDedupBatchCompute(batch, "doc_id",
+    val d2 = Streaming.nearDedupBatchCompute(batch, "doc_id",
       "text", "ts", store, "1 hour", 3, 64, 16)
-    Streaming.morUpsertStep(surv2, Seq("doc_id"), sink, 0L, 10)
-    graft.lake.VersionedTable.publish(store2, store)
+    Streaming.morUpsertStep(d2.out, Seq("doc_id"), sink, 0L, 10)
+    graft.lake.VersionedTable.publish(d2.folded, store)
     val out = graft.lake.VersionedTable
       .readCurrentMerged(spark, sink, Seq("doc_id"))
       .select("doc_id").as[Long].collect().sorted
     assert(out.toSeq === Seq(1L, 3L)) // converged: no loss, no duplicates
     // attempt 3 (re-delivery AFTER state publish): everything collides
     // with its own bands — survivors empty, sink unchanged
-    val (surv3, _, _, _) = Streaming.nearDedupBatchCompute(batch, "doc_id", "text",
-      "ts", store, "1 hour", 3, 64, 16)
+    val surv3 = Streaming.nearDedupBatchCompute(batch, "doc_id", "text",
+      "ts", store, "1 hour", 3, 64, 16).out
     assert(surv3.isEmpty)
     Streaming.morUpsertStep(surv3, Seq("doc_id"), sink, 0L, 10)
     val out3 = graft.lake.VersionedTable
       .readCurrentMerged(spark, sink, Seq("doc_id"))
       .select("doc_id").as[Long].collect().sorted
     assert(out3.toSeq === Seq(1L, 3L))
+  }
+
+  test("near-dedup writer at maxSegments = 2 converges when a crash lands before the stamped append or before its vacuum and merge") {
+    import graft.lake.VersionedTable
+    implicit val sqlCtx = spark.sqlContext
+    // 20-word texts over disjoint vocabularies: a near-copy (last word
+    // swapped) shares 17 of 19 distinct shingles with its original and
+    // band-collides under the default LSH geometry; unrelated texts
+    // share none
+    def text(tag: String) = (0 until 20).map(j => s"$tag$j").mkString(" ")
+    def near(tag: String) = text(tag).replaceFirst("\\w+$", "omega")
+    val batches = Seq(
+      Seq((1L, "10:00", text("a")), (2L, "10:01", text("b"))),
+      Seq((3L, "10:10", text("c")), (4L, "10:11", near("a"))),
+      Seq((5L, "10:20", text("d")), (6L, "10:21", near("c"))),
+      // the crash batch: its append makes 3 pending segments, so the
+      // L1 merge is due (nothing has expired yet)
+      Seq((7L, "10:30", text("e")), (8L, "10:31", near("d")),
+        (9L, "10:32", near("e"))),
+      // the next batch: horizon 10:25 — c and d expired, e live, and
+      // the uncrashed run's merged segment (stamp 10:21) vacuums whole
+      Seq((10L, "11:25", near("c")), (11L, "11:25", near("e")),
+        (12L, "11:25", near("d")), (13L, "11:25", text("f"))))
+      .map(_.map { case (id, t, txt) =>
+        (id, Timestamp.valueOf(s"2024-01-01 $t:00"), txt) })
+    def df(rows: Seq[(Long, Timestamp, String)]) = rows.toDF("doc_id", "ts", "text")
+    def sinkRows(sink: String) = VersionedTable
+      .readCurrentMerged(spark, sink, Seq("doc_id"))
+      .select("doc_id", "ts", "text").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1).toString, r.getString(2)))
+      .sorted.toSeq
+    // the uncrashed reference: the real writer over a MemoryStream
+    val ref = java.nio.file.Files.createTempDirectory("graft_segcrash_ref").toString
+    val input = MemoryStream[(Long, Timestamp, String)]
+    val q = Streaming.nearDedupWriter(input.toDF().toDF("doc_id", "ts", "text"),
+        "doc_id", "text", "ts", ref + "/store", ref + "/sink", maxSegments = 2)
+      .option("checkpointLocation", ref + "/chk").start()
+    val refSinks = batches.map { b =>
+      input.addData(b: _*); q.processAllAvailable(); sinkRows(ref + "/sink")
+    }
+    q.stop()
+    val refNext = refSinks(4).map(_._1).toSet -- refSinks(3).map(_._1)
+    assert(refNext === Set(10L, 12L, 13L))
+    assert(refSinks(3).map(_._1) === Seq(1L, 2L, 3L, 5L, 7L))
+    // the crashed runs drive the writer's own compute/publish seam
+    def crashed(tag: String, appended: Boolean): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_segcrash_$tag").toString
+      val (store, sink) = (dir + "/store", dir + "/sink")
+      def compute(b: Seq[(Long, Timestamp, String)], segs: Seq[String]) =
+        Streaming.nearDedupBatchCompute(df(b), "doc_id", "text", "ts", store,
+          "1 hour", 3, 64, 16, deltaPaths = segs)
+      def step(id: Int) =
+        Streaming.retentionStep(df(batches(id)), store, 2,
+            Streaming.morUpsertStep(_, Seq("doc_id"), sink, id.toLong, 10)) {
+          segs => compute(batches(id), segs)
+        }.select("doc_id").as[Long].collect().toSet
+      (0 to 2).foreach(step)
+      // attempt 1 of batch 3: the sink commits, then the crash
+      val d = compute(batches(3), VersionedTable.pendingDeltas(spark, store))
+      Streaming.morUpsertStep(d.out, Seq("doc_id"), sink, 3L, 10)
+      if (appended) {
+        VersionedTable.appendDeltaStamped(d.segment, store, d.bounds._1)
+        assert(VersionedTable.pendingDeltas(spark, store).size === 3,
+          "crashed before the merge: three segments pending")
+      } else
+        assert(VersionedTable.pendingDeltas(spark, store).size === 2)
+      // redelivery of batch 3, then the next batch
+      step(3)
+      assert(VersionedTable.pendingDeltas(spark, store).size <= 2,
+        "the redelivered state write completes the merge")
+      assert(sinkRows(sink) === refSinks(3), s"$tag: sink diverged after redelivery")
+      assert(step(4) === refNext, s"$tag: next batch decided differently")
+      assert(sinkRows(sink) === refSinks(4), s"$tag: sink diverged after the next batch")
+    }
+    crashed("before_append", appended = false)
+    crashed("before_merge", appended = true)
+  }
+
+  test("retention writers and steps reject a negative maxSegments when built, before any query starts") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_negseg").toString
+    val docs = MemoryStream[(Long, Timestamp, String)].toDF()
+      .toDF("doc_id", "ts", "text")
+    val vecs = MemoryStream[(Long, Timestamp, Seq[Double])].toDF()
+      .toDF("vid", "ts", "vec")
+    val cent = Seq((0L, Seq(1.0, 0.0))).toDF("b", "cv")
+    val active = spark.streams.active.length
+    val errs = Seq(
+      intercept[IllegalArgumentException] {
+        Streaming.nearDedupWriter(docs, "doc_id", "text", "ts",
+          dir + "/nd", dir + "/nds", maxSegments = -1)
+      },
+      intercept[IllegalArgumentException] {
+        Streaming.noveltyGateWriter(docs, "doc_id", "text", "ts",
+          dir + "/nv", dir + "/nva", minNovelty = 0.5, maxSegments = -1)
+      },
+      intercept[IllegalArgumentException] {
+        Streaming.semanticDedupWriter(vecs, "vid", "vec", "ts", cent, "b",
+          "cv", threshold = 0.9, dir + "/sd", dir + "/sds", maxSegments = -1)
+      },
+      intercept[IllegalArgumentException] {
+        Streaming.nearDedupBatchStep(Seq((1L, "a b c d", "2024-01-01 10:00:00"))
+            .toDF("doc_id", "text", "tss")
+            .withColumn("ts", col("tss").cast("timestamp")),
+          "doc_id", "text", "ts", dir + "/step", maxSegments = -1)
+      })
+    errs.foreach(e => assert(e.getMessage.contains("maxSegments must be >= 0")))
+    assert(spark.streams.active.length === active)
+    assert(!new java.io.File(dir + "/step").exists(),
+      "a rejected step must not touch its store")
   }
 
   test("streaming novelty gate writer: admitted rows land in the MOR sink, state advances across batches") {
@@ -1128,15 +1102,15 @@ class StreamingSpec extends SparkSpec {
       (2L, Timestamp.valueOf("2024-01-01 10:01:00"), "tiny doc"))
       .toDF("doc_id", "ts", "text")
     // attempt 1: sink commit succeeds, state publish never happens
-    val (adm1, _, _, _) = Streaming.noveltyGateBatchCompute(batch, "doc_id",
-      "text", "ts", store, 0.5, "10 days", 3)
+    val adm1 = Streaming.noveltyGateBatchCompute(batch, "doc_id",
+      "text", "ts", store, 0.5, "10 days", 3).out
     Streaming.morUpsertStep(adm1, Seq("doc_id"), sink, 0L, 10)
     assert(!graft.lake.VersionedTable.isVersioned(spark, store)) // "crashed"
     // attempt 2 (re-delivery): the full writer step runs to completion
-    val (adm2, store2, _, _) = Streaming.noveltyGateBatchCompute(batch, "doc_id",
+    val d2 = Streaming.noveltyGateBatchCompute(batch, "doc_id",
       "text", "ts", store, 0.5, "10 days", 3)
-    Streaming.morUpsertStep(adm2, Seq("doc_id"), sink, 0L, 10)
-    graft.lake.VersionedTable.publish(store2, store)
+    Streaming.morUpsertStep(d2.out, Seq("doc_id"), sink, 0L, 10)
+    graft.lake.VersionedTable.publish(d2.folded, store)
     val out = graft.lake.VersionedTable
       .readCurrentMerged(spark, sink, Seq("doc_id"))
       .select("doc_id").as[Long].collect().sorted
@@ -1144,8 +1118,8 @@ class StreamingSpec extends SparkSpec {
     // attempt 3 (re-delivery AFTER state publish): doc 1 scores zero
     // novelty against its own shingles and drops; shingle-less doc 2
     // re-admits (null novelty) and lands on its existing key
-    val (adm3, _, _, _) = Streaming.noveltyGateBatchCompute(batch, "doc_id",
-      "text", "ts", store, 0.5, "10 days", 3)
+    val adm3 = Streaming.noveltyGateBatchCompute(batch, "doc_id",
+      "text", "ts", store, 0.5, "10 days", 3).out
     Streaming.morUpsertStep(adm3, Seq("doc_id"), sink, 0L, 10)
     assert(adm3.select("doc_id").as[Long].collect().toSeq === Seq(2L))
     val out3 = graft.lake.VersionedTable

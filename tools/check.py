@@ -40,11 +40,9 @@ def main(sf_dir, out_dir):
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))
-    # The stateful store-step twins (eager vs amortized vs segmented)
-    # deliberately share oracle SQL — the MODES differ, the semantics
-    # don't — so byte-identical SQL is executed once and the arrow
-    # result reused. The twins are the gate's most expensive queries
-    # (multi-batch store folds), so this halves their replay cost
+    # Twin entries may deliberately share oracle SQL (two plans, one
+    # semantics — e.g. q_t_jaccard_prefix / q_t_jaccard_pairs), so
+    # byte-identical SQL is executed once and the arrow result reused,
     # with zero semantic surface: same engine, same SQL, same result.
     # cache maps sql -> (elapsed_of_the_one_real_execution, arrow result);
     # cache hits record that SAME elapsed (marked shared below) so the
@@ -107,6 +105,11 @@ def main(sf_dir, out_dir):
         else:
             print(f"PASS {name} ({len(gr)} rows)")
             n_pass += 1
+    # Verify logs a query that throws and writes no directory for it:
+    # an oracle entry without output is a failure, never a skip.
+    for name in sorted(set(oracle) - set(names)):
+        print(f"FAIL {name}: no spark output")
+        n_fail += 1
     slow = sorted(timings.items(), key=lambda kv: -kv[1])[:8]
     # wall cost counts each distinct SQL once (shared twins execute once)
     wall = sum(e for e, _ in sql_cache.values())

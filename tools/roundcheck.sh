@@ -6,10 +6,11 @@
 #      sources with the harness, so an engine signature change that
 #      breaks perfbench fails here
 #   2. sf0.01 oracle pack: Verify dump + DuckDB compare (the driver's
-#      own gate; full pack — 199 queries as of r18)
+#      own gate; every oracle entry, 197 of them, is compared — one
+#      without output fails)
 #   3. the same pack at 7 cores / 7 shuffle partitions — the full-pack
 #      partitioning-invariance proof (awkward prime vs the usual 32)
-# Green = "N pass, 0 fail" twice (N = full pack, 199 as of r18) and a
+# Green = "N pass, 0 fail" twice (N = 197, the full pack) and a
 # green sbt test. Timing is NOT
 # checked here — bench runs need a quiet box and the min-of-N protocol
 # (SCALING.md "Benchmark protocol").
@@ -20,6 +21,9 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 sbt -batch test
 (cd perfbench && sbt -batch test)
 
+# empty the dump dirs first: a query that now throws writes nothing,
+# and an earlier run's parquet must not stand in for it
+rm -rf /tmp/roundcheck_out /tmp/roundcheck_p7
 sbt -batch "runMain graft.Verify $SF_DIR /tmp/roundcheck_out"
 python3 tools/check.py "$SF_DIR" /tmp/roundcheck_out
 

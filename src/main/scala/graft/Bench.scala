@@ -1,34 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.Harness.fmt
+import graft.core.GraftSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // calibration (SCALING.md "Benchmark protocol"): a loaded box
     // inflates every cell ~uniformly, so the run stamps enough context
     // to self-describe — /proc/loadavg at start/end and, after the
     // run, the median per-entry ratio vs the committed quiet-min map.
     // A median far above ~1.3 means the box was busy and the run's
     // absolute numbers are environmental, not code.
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    val loadStart = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up the JVM/codegen/parquet-reader/string/sort paths once so
-    // per-query timings measure the plans, not first-job initialization.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    try {
-      spark.read.parquet(s"$sfDir/region.parquet")
-        .selectExpr("upper(trim(r_name)) AS n", "r_regionkey")
-        .where("n LIKE '%A%'").orderBy("n").count()
-    } catch { case _: Throwable => () }
+    val loadStart = Harness.loadavg()
+    val spark = GraftSession.getOrCreate("graft-bench")
+    Harness.warmup(spark, Some(sfDir))
     // Optional name filter (exact or substring) for local iteration on
     // one query's plan; the driver passes no args and benches the lot.
     val picked =
@@ -39,27 +24,16 @@ object Bench {
     // printing every rep. The quiet-A/B tool for a single noisy cell
     // (SCALING.md protocol): 10 reps of a 0.3 s query cost 3 s and
     // separate scheduling noise from plan cost without 10 JVM launches.
-    val reps = sys.env.get("SPARK_GRAFT_REPEAT").flatMap(_.toIntOption)
-      .filter(_ > 1).filter(_ => args.nonEmpty).getOrElse(1)
+    val reps = if (args.isEmpty) 1 else Harness.repeat
     // A cell that throws is FAILED, not timed: its time-to-failure is
     // no query time, and folding it would plant a bogus floor. Failed
     // cells leave `queries` and are listed under "failed" instead.
     val results: Seq[(String, Option[Double])] =
       picked.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, sfDir).count()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"bench: $name failed: $e")
-              None
-          }
-        }
+        val times = Harness.timeReps(s"bench: $name", reps)(_ => fn(spark, sfDir).count())
         if (reps > 1)
-          println(s"""{"metric":"repeat","query":"$name","reps":[${times.map(_.fold("null")(t => "%.3f".formatLocal(java.util.Locale.ROOT, t))).mkString(",")}]}""")
-        name -> (if (times.contains(None)) None else Some(times.flatten.min))
+          println(s"""{"metric":"repeat","query":"$name","reps":[${times.map(_.fold("null")(fmt(_))).mkString(",")}]}""")
+        name -> Harness.best(times)
       }
     val timed = results.collect { case (n, Some(t)) => n -> t }
     val failed = results.collect { case (n, None) => n }
@@ -69,7 +43,6 @@ object Bench {
     // per-query detail first, sharded into short lines, and end with one
     // short summary line carrying the total plus only the slowest queries
     // — the final line is always intact within any reasonable tail.
-    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def toJson(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     def names(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -95,7 +68,7 @@ object Bench {
       try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("BENCH_QUERIES.json")),
         java.nio.charset.StandardCharsets.UTF_8)
-      catch { case _: Throwable => "" }
+      catch { case NonFatal(_) => "" }
     val committedQueriesObj: String =
       """"queries"\s*:\s*\{""".r.findFirstMatchIn(committedTxt).map { m =>
         val close = committedTxt.indexOf('}', m.end) // flat object, no nesting
@@ -126,7 +99,7 @@ object Bench {
       else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2
     val calib = s""""calibration":{"median_ratio_vs_quiet_map":${fmt(medianRatio)},""" +
       s""""entries_compared":${ratios.size},"reps":$reps,"sf_mismatch":$sfMismatch,""" +
-      s""""loadavg_start":${fmt(loadStart)},"loadavg_end":${fmt(loadavg())}}"""
+      s""""loadavg_start":${fmt(loadStart)},"loadavg_end":${fmt(Harness.loadavg())}}"""
     // Early queries_part lines can scroll out of the driver's bounded tail
     // capture, so the complete map is also written to a file — the one
     // durable record of every per-query timing.

@@ -1,33 +1,24 @@
 package graft
+import graft.Harness.fmt
+import graft.core.GraftSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (guide §1: measure first): run ONE bench entry and print a
   * per-JOB timing breakdown — job id, wall seconds, stage/task counts,
   * and the callsite/description Spark recorded — so a multi-job cell
   * (the store-step folds, the iterative graph queries, the sampled
   * choosers) shows WHERE its seconds go instead of one opaque total.
-  * Usage: runMain graft.Profile <queryName> [sfDir] [reps]
+  * Usage: runMain graft.Profile <queryName>, with the sf directory in
+  * `SPARK_GRAFT_SF_DIR` and the rep count in `SPARK_GRAFT_REPEAT`, as
+  * for `Bench`.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.getOrCreate("graft-profile")
     // same warmup as Bench so first-job init lands outside the timing
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    try {
-      spark.read.parquet(s"$sfDir/region.parquet")
-        .selectExpr("upper(trim(r_name)) AS n", "r_regionkey")
-        .where("n LIKE '%A%'").orderBy("n").count()
-    } catch { case _: Throwable => () }
+    Harness.warmup(spark, Some(sfDir))
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     @volatile var lastEnd = 0L
     @volatile var taskTimeMs = 0L
@@ -55,15 +46,15 @@ object Profile {
         taskTimeMs += s.stageInfo.taskMetrics.executorRunTime
     })
     val fn = SparkEntry.benchQueries(name)
-    (1 to reps).foreach { r =>
+    (1 to Harness.repeat).foreach { r =>
       lines.clear(); taskTimeMs = 0L
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
+      var n = 0L
+      val sec = Harness.timeMin(s"[profile] $name", 1)(_ => n = fn(spark, sfDir).count())
       Thread.sleep(300) // let the listener bus drain the final job-end
       lines.forEach(println(_))
-      println(f"[profile] $name rep=$r rows=$n time=$sec%.3fs " +
-        f"jobs=${lines.size} executorRunTime=${taskTimeMs / 1e3}%.1fs")
+      println(s"[profile] $name rep=$r rows=$n " +
+        s"time=${sec.fold("failed")(fmt(_) + "s")} jobs=${lines.size} " +
+        s"executorRunTime=${fmt(taskTimeMs / 1e3, 1)}s")
     }
     spark.stop()
   }

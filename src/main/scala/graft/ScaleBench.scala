@@ -1,5 +1,7 @@
 package graft
 
+import graft.Harness.fmt
+import graft.core.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -175,17 +177,28 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JVM warmup
+    val spark = GraftSession.getOrCreate("graft-scalebench")
+    Harness.warmup(spark, None)
+
+    val results = scala.collection.mutable.Map.empty[(String, String), Double]
+    // One growth cell: min of two runs (`run(rep)`, rep 0 and 1) after
+    // isolate(). A cell with a failed run records NO time — feeding its
+    // elapsed seconds into the growth summary would let a crash at L
+    // masquerade as a fast, sublinear curve — and a fatal error such as
+    // a driver OOM ends the run: an under-provisioned run must fail
+    // loudly, not publish partial growth rows.
+    def record(size: String, q: String)(run: Int => Any): Unit = {
+      isolate(spark)
+      Harness.timeMin(s"[scale] $size/$q", 2)(run) match {
+        case Some(best) =>
+          results((size, q)) = best
+          println(s"""{"size":"$size","query":"$q","sec":${fmt(best)}}""")
+        case None =>
+          println(s"""{"size":"$size","query":"$q","sec":null,"failed":true}""")
+      }
+    }
 
     val wanted = if (args.isEmpty) sizes else sizes.filter(s => args.contains(s._1))
-    val results = scala.collection.mutable.Map.empty[(String, String), Double]
     for ((name, nDoc, nEmb, nOrd) <- wanted) {
       val dir = s"/tmp/graft_scale/$name"
       // regenerate when absent OR when a cached corpus predates a
@@ -209,33 +222,8 @@ object ScaleBench {
         customer(spark, nOrd).write.mode("overwrite").parquet(s"$dir/customer.parquet")
       for (q <- heavy) {
         // the full-pairs oracle is small-n by design — skip at L
-        if (!(q == "q_t_jaccard_pairs" && name == "L")) {
-          // a failed attempt records NO time — feeding its elapsed
-          // seconds into the growth summary would let a crash at L
-          // masquerade as a fast, sublinear curve. Only NonFatal is
-          // caught (here and in every timing loop below): after a
-          // fatal error like a driver OOM the JVM is undefined, so
-          // subsequent timings would be garbage — an under-provisioned
-          // run must fail loudly, not publish partial growth rows.
-          isolate(spark)
-          val times = (1 to 2).flatMap { _ =>
-            val t0 = System.nanoTime()
-            try {
-              SparkEntry.queries(q)(spark, dir).count()
-              Some((System.nanoTime() - t0) / 1e9)
-            } catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[scale] $name/$q failed: ${e.getMessage}")
-              None
-            }
-          }
-          if (times.nonEmpty) {
-            val best = times.min
-            results((name, q)) = best
-            println(f"""{"size":"$name","query":"$q","sec":$best%.3f}""")
-          } else {
-            println(s"""{"size":"$name","query":"$q","sec":null,"failed":true}""")
-          }
-        }
+        if (!(q == "q_t_jaccard_pairs" && name == "L"))
+          record(name, q)(_ => SparkEntry.queries(q)(spark, dir).count())
       }
     }
     // Adversarial chain topology for connected components: diameter = n,
@@ -256,24 +244,8 @@ object ScaleBench {
     for ((name, n) <- chainSizes) {
       val chain = spark.range(n - 1)
         .select(col("id").as("a"), (col("id") + 1).as("b"))
-      isolate(spark)
-      val times = (1 to 2).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
-          graft.textops.Dedup.connectedComponents(chain, "a", "b", maxIter = 40)
-            .count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[scale] $name/q_chain_cc failed: ${e.getMessage}")
-          None
-        }
-      }
-      if (times.nonEmpty) {
-        results((name, "q_chain_cc")) = times.min
-        println(f"""{"size":"$name","query":"q_chain_cc","sec":${times.min}%.3f}""")
-      } else {
-        println(s"""{"size":"$name","query":"q_chain_cc","sec":null,"failed":true}""")
-      }
+      record(name, "q_chain_cc")(_ =>
+        graft.textops.Dedup.connectedComponents(chain, "a", "b", maxIter = 40).count())
     }
 
     // Merged-read isolation: a FIXED overlay (1000 upserts + 500
@@ -298,24 +270,9 @@ object ScaleBench {
         graft.lake.VersionedTable.appendDeleteDelta(
           spark.range(500).select((col("id") * 13 + 2).as("k")), root)
       }
-      isolate(spark)
-      val times = (1 to 2).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
-          graft.lake.VersionedTable.readCurrentMerged(spark, root, Seq("k"))
-            .agg(count(lit(1)), sum(col("p"))).collect()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[scale] $name/q_mor_read failed: ${e.getMessage}")
-          None
-        }
-      }
-      if (times.nonEmpty) {
-        results((name, "q_mor_read")) = times.min
-        println(f"""{"size":"$name","query":"q_mor_read","sec":${times.min}%.3f}""")
-      } else {
-        println(s"""{"size":"$name","query":"q_mor_read","sec":null,"failed":true}""")
-      }
+      record(name, "q_mor_read")(_ =>
+        graft.lake.VersionedTable.readCurrentMerged(spark, root, Seq("k"))
+          .agg(count(lit(1)), sum(col("p"))).collect())
     }
 
     // Hard negatives under the operator's contract: a FIXED 32-anchor
@@ -330,25 +287,9 @@ object ScaleBench {
       val dir = s"/tmp/graft_scale/$name"
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val anchors = emb.filter(col("vec_id") < 32)
-      isolate(spark)
-      val times = (1 to 2).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
-          graft.textops.Similarity
-            .hardNegatives(emb, "vec_id", "embedding", "label", anchors, k = 5)
-            .count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[scale] $name/q_hardneg_batch failed: ${e.getMessage}")
-          None
-        }
-      }
-      if (times.nonEmpty) {
-        results((name, "q_hardneg_batch")) = times.min
-        println(f"""{"size":"$name","query":"q_hardneg_batch","sec":${times.min}%.3f}""")
-      } else {
-        println(s"""{"size":"$name","query":"q_hardneg_batch","sec":null,"failed":true}""")
-      }
+      record(name, "q_hardneg_batch")(_ =>
+        graft.textops.Similarity
+          .hardNegatives(emb, "vec_id", "embedding", "label", anchors, k = 5).count())
     }
 
     // XL corpus (10× L): a 15M-order graph source for the O(m^1.5)
@@ -376,25 +317,8 @@ object ScaleBench {
         docs(spark, 500000L).write.mode("overwrite")
           .parquet(s"$dir/documents.parquet")
       for (q <- Seq("q_g3_triangles", "q_g1_pagerank", "q_g2_label_prop",
-          "q_t_exact_dedup", "q_t_minhash_lsh", "q_t_near_dedup")) {
-        isolate(spark)
-        val times = (1 to 2).flatMap { _ =>
-          val t0 = System.nanoTime()
-          try {
-            SparkEntry.queries(q)(spark, dir).count()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[scale] XL/$q failed: ${e.getMessage}")
-            None
-          }
-        }
-        if (times.nonEmpty) {
-          results(("XL", q)) = times.min
-          println(f"""{"size":"XL","query":"$q","sec":${times.min}%.3f}""")
-        } else {
-          println(s"""{"size":"XL","query":"$q","sec":null,"failed":true}""")
-        }
-      }
+          "q_t_exact_dedup", "q_t_minhash_lsh", "q_t_near_dedup"))
+        record("XL", q)(_ => SparkEntry.queries(q)(spark, dir).count())
     }
     // Vocab-scaled twin of the dedup XL (selectable alone as "XLV"):
     // same 500k docs, vocabulary grown 10× with the corpus (15000),
@@ -412,25 +336,8 @@ object ScaleBench {
       // which the fixed-vocab fixture deliberately destroys at XL —
       // the densification regime is LSH's test, not AllPairs'.
       for (q <- Seq("q_t_minhash_lsh", "q_t_near_dedup",
-          "q_t_jaccard_prefix", "q_t_cluster_split")) {
-        isolate(spark)
-        val times = (1 to 2).flatMap { _ =>
-          val t0 = System.nanoTime()
-          try {
-            SparkEntry.queries(q)(spark, dirV).count()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[scale] XLV/$q failed: ${e.getMessage}")
-            None
-          }
-        }
-        if (times.nonEmpty) {
-          results(("XLV", q)) = times.min
-          println(f"""{"size":"XLV","query":"$q","sec":${times.min}%.3f}""")
-        } else {
-          println(s"""{"size":"XLV","query":"$q","sec":null,"failed":true}""")
-        }
-      }
+          "q_t_jaccard_prefix", "q_t_cluster_split"))
+        record("XLV", q)(_ => SparkEntry.queries(q)(spark, dirV).count())
     }
 
     // Streaming state-STORE growth (opt-in: `runMain graft.ScaleBench
@@ -476,23 +383,6 @@ object ScaleBench {
           false, spark.sparkContext.hadoopConfiguration)
         dst
       }
-      def timed(name: String, q: String)(runs: Seq[() => Unit]): Unit = {
-        isolate(spark)
-        val times = runs.flatMap { r =>
-          val t0 = System.nanoTime()
-          try { r(); Some((System.nanoTime() - t0) / 1e9) }
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[scale] $name/$q failed: ${e.getMessage}")
-            None
-          }
-        }
-        if (times.nonEmpty) {
-          results((name, q)) = times.min
-          println(f"""{"size":"$name","query":"$q","sec":${times.min}%.3f}""")
-        } else {
-          println(s"""{"size":"$name","query":"$q","sec":null,"failed":true}""")
-        }
-      }
       val probeN = 2000L
       // Fixture cache carries its generation parameters in a _PARAMS
       // sidecar (the ordersStale pattern above): a later edit to
@@ -534,19 +424,19 @@ object ScaleBench {
         val ndRoot = copyStore(ndSeed, s"/tmp/graft_scale/store/$name/nd")
         val ndRows = graft.lake.VersionedTable.readCurrent(spark, ndRoot).count()
         println(s"""{"size":"$name","query":"q_store_neardedup_rows","rows":$ndRows}""")
-        timed(name, "q_store_neardedup_batch")(Seq(0L, 1L).map(i => () => {
+        record(name, "q_store_neardedup_batch") { i =>
           Streaming.nearDedupBatchStep(probe(i), "doc_id", "text", "ts",
-            ndRoot, retention = "3650 days").count(): Unit
-        }))
+            ndRoot, retention = "3650 days").count()
+        }
         // segment-mode variant (r17 row — the band-store twin of
         // q_store_novelty_segmented_batch): probe batches append one
         // STAMPED segment; no republish ever after bootstrap
         val ndsRoot = copyStore(ndSeed, s"/tmp/graft_scale/store/$name/nds")
-        timed(name, "q_store_neardedup_segmented_batch")(Seq(0L, 1L).map(i => () => {
+        record(name, "q_store_neardedup_segmented_batch") { i =>
           Streaming.nearDedupBatchStep(probe(i), "doc_id", "text", "ts",
             ndsRoot, retention = "3650 days",
-            maxSegments = Streaming.SegmentMergeBound).count(): Unit
-        }))
+            maxSegments = Streaming.SegmentMergeBound).count()
+        }
         // novelty shingle store: minNovelty 0 admits the whole seed
         val nvSeed = fresh(s"/tmp/graft_scale/store/$name/nv_seed")
         Streaming.noveltyGateBatchStep(c.where(col("doc_id") < seedN),
@@ -555,21 +445,21 @@ object ScaleBench {
         val nvRoot = copyStore(nvSeed, s"/tmp/graft_scale/store/$name/nv")
         val nvRows = graft.lake.VersionedTable.readCurrent(spark, nvRoot).count()
         println(s"""{"size":"$name","query":"q_store_novelty_rows","rows":$nvRows}""")
-        timed(name, "q_store_novelty_batch")(Seq(0L, 1L).map(i => () => {
+        record(name, "q_store_novelty_batch") { i =>
           Streaming.noveltyGateBatchStep(probe(i), "doc_id", "text", "ts",
-            nvRoot, minNovelty = 0.5, retention = "3650 days").count(): Unit
-        }))
+            nvRoot, minNovelty = 0.5, retention = "3650 days").count()
+        }
         // segment-mode variant (r16): same seed, but the probe batches
         // append one STAMPED segment and vacuum expired ones instead of
         // rewriting the store — the row quantifies how much of the
         // eager per-batch cost was the republish (the O(store) scan for
         // scoring remains)
         val nvsRoot = copyStore(nvSeed, s"/tmp/graft_scale/store/$name/nvs")
-        timed(name, "q_store_novelty_segmented_batch")(Seq(0L, 1L).map(i => () => {
+        record(name, "q_store_novelty_segmented_batch") { i =>
           Streaming.noveltyGateBatchStep(probe(i), "doc_id", "text", "ts",
             nvsRoot, minNovelty = 0.5, retention = "3650 days",
-            maxSegments = Streaming.SegmentMergeBound).count(): Unit
-        }))
+            maxSegments = Streaming.SegmentMergeBound).count()
+        }
         // KMV global: axis = batches already folded (state O(k) always)
         val folds = name match { case "S" => 1; case "M" => 10; case _ => 100 }
         val kvRoot = fresh(s"/tmp/graft_scale/store/$name/kmv")
@@ -578,11 +468,11 @@ object ScaleBench {
             .select((col("id") + i * 10000L).as("v")), "v", kvRoot).collect()
         val kvRows = graft.lake.VersionedTable.readCurrent(spark, kvRoot).count()
         println(s"""{"size":"$name","query":"q_store_kmv_rows","rows":$kvRows}""")
-        timed(name, "q_store_kmv_batch")(Seq(0L, 1L).map(i => () => {
+        record(name, "q_store_kmv_batch") { i =>
           Streaming.kmvDistinctBatchStep(spark.range(10000L)
             .select((col("id") + (folds + i) * 10000L).as("v")), "v", kvRoot)
-            .collect(): Unit
-        }))
+            .collect()
+        }
         // KMV per-key: 50 fixed groups (state O(groups·k) always)
         val kgRoot = fresh(s"/tmp/graft_scale/store/$name/kmvg")
         for (i <- 0 until folds)
@@ -591,12 +481,12 @@ object ScaleBench {
               (col("id") + i * 10000L).as("v")), "g", "v", kgRoot).collect()
         val kgRows = graft.lake.VersionedTable.readCurrent(spark, kgRoot).count()
         println(s"""{"size":"$name","query":"q_store_kmv_group_rows","rows":$kgRows}""")
-        timed(name, "q_store_kmv_group_batch")(Seq(0L, 1L).map(i => () => {
+        record(name, "q_store_kmv_group_batch") { i =>
           Streaming.kmvDistinctByKeyBatchStep(spark.range(10000L)
             .select(pmod(col("id"), lit(50)).as("g"),
               (col("id") + (folds + i) * 10000L).as("v")), "g", "v", kgRoot)
-            .collect(): Unit
-        }))
+            .collect()
+        }
         // drift vocab histogram: state is O(vocab) by construction
         // (15000-token space), so the axis is batches folded — the
         // fold walks corpus prefix slices so every batch carries fresh
@@ -609,20 +499,20 @@ object ScaleBench {
         val drRoot = copyStore(drSeed, s"/tmp/graft_scale/store/$name/drift")
         val drRows = graft.lake.VersionedTable.readCurrent(spark, drRoot).count()
         println(s"""{"size":"$name","query":"q_store_drift_rows","rows":$drRows}""")
-        timed(name, "q_store_drift_batch")(Seq(0L, 1L).map(i => () => {
+        record(name, "q_store_drift_batch") { i =>
           Streaming.driftMonitorBatchStep(probe(i), "text", drRoot)
-            .collect(): Unit
-        }))
+            .collect()
+        }
         // amortized-republish variant (pruneEvery > 1, r16): probe
         // batches append O(batch-vocab) count deltas instead of
         // rewriting the vocabulary histogram; the JSD alignment READ
         // stays vocabulary-sized in both modes, so this row isolates
         // the write term the amortization removes
         val draRoot = copyStore(drSeed, s"/tmp/graft_scale/store/$name/drifta")
-        timed(name, "q_store_drift_amortized_batch")(Seq(0L, 1L).map(i => () => {
+        record(name, "q_store_drift_amortized_batch") { i =>
           Streaming.driftMonitorBatchStep(probe(i), "text", draRoot,
-            pruneEvery = 10).collect(): Unit
-        }))
+            pruneEvery = 10).collect()
+        }
         // semantic-dedup embedding store: state = admitted vectors, so
         // this is the one monitor whose per-batch pair work is
         // O(batch·store/k) with a FIXED k-bucket quantizer — the
@@ -659,25 +549,25 @@ object ScaleBench {
         val sdRoot = copyStore(sdSeed, s"/tmp/graft_scale/store/$name/semdedup")
         val sdRows = graft.lake.VersionedTable.readCurrent(spark, sdRoot).count()
         println(s"""{"size":"$name","query":"q_store_semdedup_rows","rows":$sdRows}""")
-        timed(name, "q_store_semdedup_batch")(Seq(0L, 1L).map(i => () => {
+        record(name, "q_store_semdedup_batch") { i =>
           Streaming.semanticDedupBatchStep(
             e.where(col("vec_id") >= 200000L + i * probeN &&
               col("vec_id") < 200000L + (i + 1) * probeN),
             "vec_id", "embedding", "ts", cent, "b", "cv",
             threshold = 0.9999, sdRoot, retention = "3650 days")
-            .count(): Unit
-        }))
+            .count()
+        }
         // segment-mode variant (r17 row — the vector-store twin): probe batches append one STAMPED survivor
         // segment; the quantizer is unchanged, so no republish fires
         val sdsRoot = copyStore(sdSeed, s"/tmp/graft_scale/store/$name/semdedups")
-        timed(name, "q_store_semdedup_segmented_batch")(Seq(0L, 1L).map(i => () => {
+        record(name, "q_store_semdedup_segmented_batch") { i =>
           Streaming.semanticDedupBatchStep(
             e.where(col("vec_id") >= 200000L + i * probeN &&
               col("vec_id") < 200000L + (i + 1) * probeN),
             "vec_id", "embedding", "ts", cent, "b", "cv",
             threshold = 0.9999, sdsRoot, retention = "3650 days",
-            maxSegments = Streaming.SegmentMergeBound).count(): Unit
-        }))
+            maxSegments = Streaming.SegmentMergeBound).count()
+        }
       }
     }
 
@@ -696,13 +586,13 @@ object ScaleBench {
     for (q <- heavy ++ Seq("q_chain_cc", "q_mor_read", "q_hardneg_batch")
         ++ storeQs) {
       def g(sz: String) = results.get((sz, q))
-      def fmt(v: Option[Double]) = v.map(x => f"$x%.2f").getOrElse("-")
+      def sec(sz: String) = g(sz).fold("-")(fmt(_, 2))
       def ratio(a: Option[Double], b: Option[Double]) = (a, b) match {
-        case (Some(x), Some(y)) if x > 0 => f"${y / x}%.1f"
+        case (Some(x), Some(y)) if x > 0 => fmt(y / x, 1)
         case _ => "-"
       }
-      println(s"$q,${fmt(g("S"))},${fmt(g("M"))},${fmt(g("L"))},${fmt(g("XL"))}," +
-        s"${fmt(g("XLV"))},${ratio(g("S"), g("M"))},${ratio(g("M"), g("L"))}," +
+      println(s"$q,${sec("S")},${sec("M")},${sec("L")},${sec("XL")}," +
+        s"${sec("XLV")},${ratio(g("S"), g("M"))},${ratio(g("M"), g("L"))}," +
         s"${ratio(g("L"), g("XL"))},${ratio(g("L"), g("XLV"))}")
     }
     spark.stop()

@@ -273,8 +273,8 @@ object Dedup {
     // per-doc shingle relation, and without materialization each would
     // re-run the tokenize + shingle + sort pass (plus the upstream
     // lineage of `df` — e.g. a quality-score pass when called on a
-    // scored frame) — measured at ~2× the chooser's cost (r19
-    // CurateProbe A/B, SCALING.md). The sample is `sampleFraction` of
+    // scored frame) — measured at ~2× the chooser's cost (the r19
+    // chooser A/B, SCALING.md). The sample is `sampleFraction` of
     // the corpus, so the blocks are small; the decision is unchanged
     // (same sample, same statistics — only computed once).
     val pd = perDocShingles(df.sample(sampleFraction, seed), idCol, textCol, n)

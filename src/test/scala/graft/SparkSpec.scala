@@ -1,19 +1,15 @@
 package graft
 
+import graft.core.GraftSession
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared Spark session for specs — one JVM-wide session (getOrCreate),
-  * small core count for test latency.
+/** Shared Spark session for specs — one JVM-wide session (getOrCreate)
+  * from the engine's own factory, so specs run the mains' SQL config,
+  * at a small core count for test latency.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder("graft-test", 4).getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
 }

@@ -399,9 +399,9 @@ class TextOpsSpec extends SparkSpec {
     // CLUSTERED duplication (template corpus: whole documents are
     // near-variants, duplicate pairs share ~all their shingles) is the
     // opposite pole: candidates dedup far below Σ bucket² and the
-    // chooser must flip to the prefix filter — the committed
-    // CrossoverBench measurement at 12k docs, asserted here at spec
-    // scale on the same generator.
+    // chooser must flip to the prefix filter — the crossover measured
+    // at 12k docs (SCALING.md "Measured crossover"), asserted here at
+    // spec scale on the same generator.
     val dense = SyntheticCorpus.templateCorpus(spark,
       nTemplates = 40, variants = 8, docLen = 60)
     assert(Dedup.preferPrefixFilter(dense, "doc_id", "text", 3, 0.5,

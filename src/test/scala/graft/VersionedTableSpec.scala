@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.lake.{LakeStorage, VersionedTable}
 
 /** Manifest-pointer publish: the concurrent-reader contract (old or new
   * data, never an error, NO retry anywhere), version retention, orphan
   * vacuum, and the routing of compact/upsert through the manifest.
   */
-class VersionedTableSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-versioned-table-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VersionedTableSpec extends SparkSpec {
 
   import spark.implicits._
 

@@ -5,13 +5,16 @@
 #      benchmark harness's own tests — its build compiles the engine
 #      sources with the harness, so an engine signature change that
 #      breaks perfbench fails here
+#   1b. the timing mains smoke: one Bench cell must time without a
+#      failure and PlanDump must write its plan file (nothing else runs
+#      the mains before a round)
 #   2. sf0.01 oracle pack: Verify dump + DuckDB compare (the driver's
 #      own gate; every oracle entry, 197 of them, is compared — one
 #      without output fails)
 #   3. the same pack at 7 cores / 7 shuffle partitions — the full-pack
 #      partitioning-invariance proof (awkward prime vs the usual 32)
-# Green = "N pass, 0 fail" twice (N = 197, the full pack) and a
-# green sbt test. Timing is NOT
+# Green = "N pass, 0 fail" twice (N = 197, the full pack), a green
+# sbt test and a mains smoke with no failed cell. Timing is NOT
 # checked here — bench runs need a quiet box and the min-of-N protocol
 # (SCALING.md "Benchmark protocol").
 set -euo pipefail
@@ -20,6 +23,13 @@ SF_DIR="${1:-/root/testdata/sf0.01}"
 
 sbt -batch test
 (cd perfbench && sbt -batch test)
+
+rm -rf /tmp/roundcheck_plans
+SPARK_GRAFT_SF_DIR="$SF_DIR" sbt -batch "runMain graft.Bench q1_agg" \
+  "runMain graft.PlanDump /tmp/roundcheck_plans smoke q1_agg" \
+  | tee /tmp/roundcheck_mains.log
+grep -q '^{"metric":"total",.*"failed":0,' /tmp/roundcheck_mains.log
+test -s /tmp/roundcheck_plans/q1_agg_smoke.txt
 
 # empty the dump dirs first: a query that now throws writes nothing,
 # and an earlier run's parquet must not stand in for it

@@ -437,6 +437,16 @@ object ScaleBench {
             ndsRoot, retention = "3650 days",
             maxSegments = Streaming.SegmentMergeBound).count()
         }
+        // bounded segment-mode variant (maxSegments = 1): an untimed
+        // all-duplicate batch leaves one pending segment, so every timed
+        // probe's append makes two and runs the L1 merge
+        val ndbRoot = copyStore(ndSeed, s"/tmp/graft_scale/store/$name/ndb")
+        Streaming.nearDedupBatchStep(c.where(col("doc_id") < 100L), "doc_id", "text",
+          "ts", ndbRoot, retention = "3650 days", maxSegments = 1).count()
+        record(name, "q_store_neardedup_segmented_bounded_batch") { i =>
+          Streaming.nearDedupBatchStep(probe(i), "doc_id", "text", "ts",
+            ndbRoot, retention = "3650 days", maxSegments = 1).count()
+        }
         // novelty shingle store: minNovelty 0 admits the whole seed
         val nvSeed = fresh(s"/tmp/graft_scale/store/$name/nv_seed")
         Streaming.noveltyGateBatchStep(c.where(col("doc_id") < seedN),
@@ -578,6 +588,7 @@ object ScaleBench {
     val storeQs =
       if (args.contains("STORE"))
         Seq("q_store_neardedup_batch", "q_store_neardedup_segmented_batch",
+          "q_store_neardedup_segmented_bounded_batch",
           "q_store_novelty_batch", "q_store_novelty_segmented_batch",
           "q_store_kmv_batch", "q_store_kmv_group_batch",
           "q_store_drift_batch", "q_store_drift_amortized_batch",

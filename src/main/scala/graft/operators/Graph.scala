@@ -14,30 +14,6 @@ import graft.functions.StableMath.gridSnap
   */
 object Graph {
 
-  /** Bounded-await collection of a checkpoint-delivered observation
-    * metric — the [[graft.textops.Dedup]] localCheckpoint-observation
-    * seam (see its awaitObserved scaladoc for why the wait is bounded
-    * and loud). Null metric (zero observed rows) reads as 0.
-    */
-  private def observedLong(obs: org.apache.spark.sql.Observation,
-                           name: String, caller: String): Long = {
-    val metrics = try {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      scala.concurrent.Await.result(
-        scala.concurrent.Future(obs.get),
-        scala.concurrent.duration.Duration(60, "s"))
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        throw new IllegalStateException(
-          s"$caller: observe metric never arrived after checkpoint " +
-            "materialization — this Spark no longer runs localCheckpoint " +
-            "under a tracked execution; count with an explicit action " +
-            "instead")
-    }
-    metrics.get(name).flatMap(Option(_)).map(_.asInstanceOf[Long])
-      .getOrElse(0L)
-  }
-
   /** PageRank with a fixed iteration count over the SYMMETRIZED graph
     * (both directions of every edge; guarantees no dangling nodes, so
     * no rank mass leaks and no redistribution pass is needed).
@@ -107,7 +83,7 @@ object Graph {
     val deg = und.groupBy("src").agg(count(lit(1)).as("_deg"))
       .observe(obsN, count(lit(1)).as("n"))
       .localCheckpoint()
-    val n = observedLong(obsN, "n", "pageRank")
+    val n = graft.core.Observed.long(obsN, "n", "pageRank").getOrElse(0L)
     // The degree rides the SMALL rank relation, not the edge relation:
     // rank/deg is per-NODE constant within an iteration, so computing
     // it on the k-row side before the broadcast does the division n
@@ -181,7 +157,7 @@ object Graph {
       .select(col(seedCol).as("node")).distinct()
       .observe(obsS, count(lit(1)).as("n"))
       .localCheckpoint()
-    val nSeeds = observedLong(obsS, "n", "personalizedPageRank")
+    val nSeeds = graft.core.Observed.long(obsS, "n", "personalizedPageRank").getOrElse(0L)
     require(nSeeds > 0, "personalization needs at least one non-null seed")
     // teleport base: (1−d)/|seeds| on seeds, 0 elsewhere (absent)
     val base = seedNodes

@@ -2,6 +2,7 @@ package graft.stream
 
 import graft.operators.Joins
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
@@ -89,14 +90,17 @@ object Streaming {
     * PlanSpec); past the cap the classic shuffled join takes over.
     * Both shapes return the same matched multiset up to the duplicate
     * store keys a delta overlay can carry — every caller absorbs
-    * those with a distinct or a countDistinct.
+    * those with a distinct, a countDistinct or a flag. A `left_semi`
+    * probe returns the matched keys only: store rows in the broadcast
+    * shape, batch rows in the shuffled one.
     */
   private[graft] def storeProbe(storeSide: DataFrame, keys: Seq[String],
                                 batchSide: DataFrame, batchRows: Long,
-                                maxRows: Long): DataFrame =
+                                maxRows: Long,
+                                joinType: String = "inner"): DataFrame =
     if (batchRows <= maxRows)
-      storeSide.join(broadcast(batchSide), keys)
-    else batchSide.join(storeSide, keys)
+      storeSide.join(broadcast(batchSide), keys, joinType)
+    else batchSide.join(storeSide, keys, joinType)
 
   /** Per-batch expiry coordinates, observed for FREE on the batch's own
     * key-relation materialization: the batch's max event time (in
@@ -125,9 +129,7 @@ object Streaming {
     * vectors), so the step's own `localCheckpoint` materialization
     * delivers the values — one fewer batch scan and one fewer Spark job
     * per batch, with the aggregate arithmetic unchanged. The bounded
-    * await + loud failure discipline is
-    * [[graft.textops.Dedup.awaitObserved]]'s (the repo's one
-    * established localCheckpoint-observation seam).
+    * await + loud failure discipline is [[graft.core.Observed]]'s.
     */
   private def observeBounds(batch: DataFrame, tsCol: String,
                             retention: String)
@@ -143,43 +145,19 @@ object Streaming {
   private def observedBounds(obs: org.apache.spark.sql.Observation,
                              caller: String)
       : (Option[Timestamp], Option[Timestamp]) = {
-    val m = awaitMetrics(obs, caller)
+    val m = graft.core.Observed.await(obs, caller)
     (m.get("_mx").flatMap(Option(_)).map(_.asInstanceOf[Timestamp]),
       m.get("_h").flatMap(Option(_)).map(_.asInstanceOf[Timestamp]))
   }
 
-  /** Collect an observed `count(1)` row count the same way — the
+  /** Collect an observed `count` row count the same way — the
     * [[storeProbe]] batch-side bound, which pre-r19 was a separate
     * count() job over the already-checkpointed key relation.
     */
   private def observedCount(obs: org.apache.spark.sql.Observation,
-                            caller: String): Long = {
-    val m = awaitMetrics(obs, caller)
-    m.get("_n").flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L)
-  }
-
-  /** Bounded-await collection of an Observation's metrics after the
-    * observed plan has materialized — `obs.get` blocks indefinitely,
-    * and its delivery relies on `localCheckpoint` materializing under a
-    * tracked SQL execution (undocumented; see
-    * [[graft.textops.Dedup.awaitObserved]], the same seam). Bound the
-    * wait and fail loudly instead of hanging the driver.
-    */
-  private def awaitMetrics(obs: org.apache.spark.sql.Observation,
-                           caller: String): Map[String, Any] =
-    try {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      scala.concurrent.Await.result(
-        scala.concurrent.Future(obs.get),
-        scala.concurrent.duration.Duration(60, "s"))
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        throw new IllegalStateException(
-          s"$caller: observe metrics never arrived after checkpoint " +
-            "materialization — this Spark no longer runs localCheckpoint " +
-            "under a tracked execution; collect the statistics with an " +
-            "explicit aggregation job instead")
-    }
+                            caller: String): Long =
+    graft.core.Observed.await(obs, caller).get("_n")
+      .flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L)
 
   /** splitmix64 finalizer — driver-side avalanche for combining the
     * quantizer-fingerprint aggregate's three longs into one stamped
@@ -400,21 +378,33 @@ object Streaming {
   /** One micro-batch step of incremental NEAR-duplicate dedup — the
     * MinHash-LSH analogue of [[dedupeByContent]]'s exact-fingerprint
     * dedup. State is the persisted (band, key, ts) LSH banding relation
-    * of previously-admitted documents at `storePath`; each batch:
+    * of previously-admitted documents at `storePath`. Each batch:
     *
-    *   1. computes its documents' band signatures
-    *      ([[graft.textops.Dedup.bandSignatures]]);
+    *   1. is read ONCE: every row gets its `bands` band keys map-side
+    *      ([[graft.textops.MinhashBandKeys]], bit-identical to
+    *      [[graft.textops.Dedup.bandSignatures]], no shuffle) and the
+    *      rows are materialized with them in one `localCheckpoint`.
+    *      The same pass observes the batch's max event time and
+    *      retention horizon ([[observeBounds]]) and its band-row count
+    *      (the broadcast bound below), with no job of its own;
     *   2. expires store entries older than `retention` behind the
-    *      batch's max event time, then drops any document whose bands
-    *      collide with the live store (a near-duplicate of
-    *      earlier-admitted content) or with a smaller-id document in
-    *      the same batch;
-    *   3. appends the SURVIVORS' bands to the pruned store — the same
-    *      horizon trade `dropDuplicatesWithinWatermark` makes, so state
-    *      is bounded by construction: `bands` rows per admitted
-    *      document within the retention window, regardless of stream
-    *      lifetime. Near-duplicates farther apart than the retention
-    *      both survive — batch re-dedup at rest catches those.
+    *      batch's max event time (a literal predicate the store scan
+    *      pushes down), then decides in one pass: the batch's band rows
+    *      and its store hits (a flag per matched key, from a broadcast
+    *      probe — the store is scanned, never shuffled) meet in one
+    *      window over (band, key), and a document drops when any of
+    *      its keys has a store hit or a smaller batch id — a
+    *      near-duplicate of earlier-admitted content or of a batch-mate;
+    *   3. takes the survivors from the materialized batch (an anti-join
+    *      against the dropped ids, broadcast below
+    *      `probeBroadcastMaxRows`), and their bands from the same rows'
+    *      band arrays, and appends those bands to the pruned store —
+    *      the same horizon trade `dropDuplicatesWithinWatermark` makes,
+    *      so state is bounded by construction: `bands` rows per
+    *      admitted document within the retention window, regardless of
+    *      stream lifetime. Near-duplicates farther apart than the
+    *      retention both survive — batch re-dedup at rest catches
+    *      those.
     *
     * Band collision is the drop criterion (no exact-Jaccard verify):
     * for unrelated documents a full band of `numHashes/bands` minhashes
@@ -423,6 +413,12 @@ object Streaming {
     * operating point. Verification would need stored shingle sets
     * (state ∝ corpus text size, unbounded) — the precision trade is
     * deliberate and documented in SCALING.md.
+    *
+    * Ids are compared, never made up: a store hit is a flag, not a
+    * sentinel id, so string ids and ids at `Long.MinValue` decide the
+    * same way. Rows are keyed by `idCol`; each row is banded on its
+    * own, so a batch should carry one row per id (the survivors sink
+    * upserts by id).
     *
     * Store-growth shape, MEASURED (SCALING.md "streaming state-STORE
     * growth", `ScaleBench STORE`): per-batch cost of a fixed probe
@@ -436,15 +432,9 @@ object Streaming {
     * republishes the pruned band store every batch, N > 0 appends one
     * stamped survivor-band segment per batch.
     *
-    * Every stage is an equi-join or aggregation on hashed keys; the
-    * 1-row horizon aggregate rides a broadcast join, nothing collects
-    * to the driver. Below `probeBroadcastMaxRows` batch band rows the
-    * store-collision probe broadcasts the BATCH side
-    * ([[ProbeBroadcastMaxRows]]): the store streams through the join
-    * unshuffled, so a non-republish batch's only store-wide work is
-    * one scan. Survivors are `localCheckpoint`ed before the new
-    * store version publishes so the returned frame does not depend on
-    * store files that may age out under it.
+    * Survivors are `localCheckpoint`ed before the new store version
+    * publishes so the returned frame does not depend on store files
+    * that may age out under it.
     *
     * SINGLE WRITER: this step must be its store's only concurrent
     * writer — the [[graft.lake.VersionedTable]] contract it inherits
@@ -492,26 +482,25 @@ object Streaming {
     // sidecar check; see requireParams)
     graft.lake.VersionedTable.requireParams(spark, storePath,
       s"neardedup;shingleN=$shingleN;numHashes=$numHashes;bands=$bands;family=$family")
+    require(numHashes % bands == 0, "bands must divide numHashes")
     val storeSchema = StructType(Seq(StructField("band", IntegerType),
       StructField("key", LongType), StructField("_ts", TimestampType)))
     // cross-layer (band, key) duplicates only arise from re-admission
-    // after expiry and are harmless to the collision probe (dropped
-    // ids are distinct-ed)
+    // after expiry and are harmless to the decision (a hit is a flag)
     val store = readLayers(spark, storePath, storeSchema, deltaPaths)
-    // batch-sized; computed ONCE — four consumers below (store probe,
-    // both sides of the in-batch self-join, survivor band extraction)
-    // would otherwise each recompute the minhash banding. The same
-    // materialization delivers the batch bounds and the probe's
-    // row-count bound as observations — zero extra jobs.
+    // the batch, read once and banded map-side; band rows, survivors
+    // and survivor bands all come from this materialization, which
+    // also delivers the batch bounds and the probe's row-count bound
+    // as observations — zero extra jobs
     val (observed, obsB) = observeBounds(batch, tsCol, retention)
     val obsN = org.apache.spark.sql.Observation()
-    val bandsDf = graft.textops.Dedup.bandSignatures(
-      observed.select(col(idCol), col(textCol)), idCol, textCol,
-      shingleN, numHashes, bands, family)
-      .observe(obsN, count(lit(1)).as("_n"))
+    val banded = observed
+      .withColumn("_nd_bands", graft.textops.MinhashBandKeys.column(
+        col(textCol), shingleN, numHashes, bands, family))
+      .observe(obsN, count(col("_nd_bands")).as("_n"))
       .localCheckpoint()
     val bounds = observedBounds(obsB, "nearDedupBatchCompute")
-    val nBandRows = observedCount(obsN, "nearDedupBatchCompute")
+    val nBandRows = observedCount(obsN, "nearDedupBatchCompute") * bands
     // Expire state BEFORE the collision decision, against the batch's
     // own max event time: content older than the retention horizon must
     // not suppress admission (the exact-path analogue finalizes state at
@@ -523,23 +512,30 @@ object Streaming {
     val hzNd = bounds._2
     val liveStore = hzNd.fold(store)(h => store.filter(col("_ts") >= lit(h)))
       .select("band", "key", "_ts")
-    // store-shuffle-free probe (see [[storeProbe]]); `dropped`'s
-    // distinct absorbs the duplicate (band, key) matches a delta
-    // overlay can carry in either join shape
-    val vsStore = storeProbe(liveStore.select("band", "key"),
-        Seq("band", "key"), bandsDf, nBandRows, probeBroadcastMaxRows)
+    val bandRows = banded.select(col(idCol),
+      posexplode(col("_nd_bands")).as(Seq("band", "key")))
+    // store-shuffle-free probe (see [[storeProbe]]): the matched keys
+    // only, each carried into the decision window as a hit flag
+    val hits = storeProbe(liveStore.select("band", "key"), Seq("band", "key"),
+      bandRows.select("band", "key"), nBandRows, probeBroadcastMaxRows,
+      "left_semi")
+    val idType = bandRows.schema(idCol).dataType
+    val w = Window.partitionBy("band", "key")
+    val dropped = bandRows.withColumn("_hit", lit(false))
+      .unionByName(hits.select(lit(null).cast(idType).as(idCol), col("band"),
+        col("key"), lit(true).as("_hit")))
+      .withColumn("_drop",
+        max(col("_hit")).over(w) || min(col(idCol)).over(w) < col(idCol))
+      .where(!col("_hit") && col("_drop"))
       .select(col(idCol))
-    val vsBatch = bandsDf.select(col("band"), col("key"), col(idCol).as("_a"))
-      .join(bandsDf.select(col("band"), col("key"), col(idCol).as("_b")),
-        Seq("band", "key"))
-      .filter(col("_a") < col("_b"))
-      .select(col("_b").as(idCol))
-    val dropped = vsStore.unionByName(vsBatch).distinct()
-    val survivors = batch.join(dropped, Seq(idCol), "left_anti")
+    val survivorsBanded = banded.join(
+        if (nBandRows <= probeBroadcastMaxRows) broadcast(dropped) else dropped,
+        Seq(idCol), "left_anti")
       .localCheckpoint()
-    val survBands = bandsDf
-      .join(survivors.select(col(idCol), col(tsCol).as("_ts")), Seq(idCol))
-      .select("band", "key", "_ts")
+    val survivors = survivorsBanded.drop("_nd_bands")
+    val survBands = survivorsBanded
+      .select(posexplode(col("_nd_bands")).as(Seq("band", "key")),
+        col(tsCol).as("_ts"))
     // the republish fold collapses re-admitted twins keep-newest; a
     // store with no pending segments is duplicate-free by construction
     // and skips the extra shuffle

@@ -579,7 +579,7 @@ object Dedup {
       .distinct()
       .observe(obs0, count(lit(1)).as("n"))
       .localCheckpoint()
-    var eCount = awaitObserved(obs0, "n", "connectedComponents").getOrElse(0L)
+    var eCount = graft.core.Observed.long(obs0, "n", "connectedComponents").getOrElse(0L)
     var converged = eCount == 0L
     var i = 0
     while (!converged && i < maxIter) {
@@ -622,9 +622,9 @@ object Dedup {
       // exact set-equality check — candidate rounds are typically just
       // the final one, so the one extra job (except) runs once per
       // call, on a k-row-ish relation.
-      val nextCount = awaitObserved(obsN, "n",
+      val nextCount = graft.core.Observed.long(obsN, "n",
         "connectedComponents").getOrElse(0L)
-      converged = awaitObserved(obs, "nonstar",
+      converged = graft.core.Observed.long(obs, "nonstar",
         "connectedComponents").fold(true)(_ == 0L) &&
         nextCount == eCount && next.except(e).isEmpty
       e = next
@@ -637,35 +637,6 @@ object Dedup {
     nodes
       .join(e.select(col("hi").as("node"), col("lo").as("_lbl")), Seq("node"), "left")
       .select(col("node"), coalesce(col("_lbl"), col("node")).as("label"))
-  }
-
-  /** Collect an [[org.apache.spark.sql.Observation]] metric after the
-    * observed plan has materialized (via `localCheckpoint`). The
-    * checkpoint has already run the plan, so the metric should be
-    * present NOW — but `obs.get` blocks indefinitely, and its delivery
-    * relies on `localCheckpoint` materializing under a tracked SQL
-    * execution, which is undocumented behavior; if a future Spark
-    * changes it, an unbounded wait would hang the driver forever.
-    * Bound the wait and fail loudly instead (`getOrEmpty` is
-    * private[sql]). Returns None when the metric is SQL NULL (a `sum`
-    * that observed no matching row).
-    */
-  private def awaitObserved(obs: org.apache.spark.sql.Observation,
-                            name: String, caller: String): Option[Long] = {
-    val metrics = try {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      scala.concurrent.Await.result(
-        scala.concurrent.Future(obs.get),
-        scala.concurrent.duration.Duration(60, "s"))
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        throw new IllegalStateException(
-          s"$caller: observe metric never arrived after checkpoint " +
-            "materialization — this Spark no longer runs localCheckpoint " +
-            "under a tracked execution; count the observed rows with an " +
-            "explicit action instead")
-    }
-    metrics.get(name).flatMap(Option(_)).map(_.asInstanceOf[Long])
   }
 
   /** Connected components by iterative min-label propagation — the
@@ -727,7 +698,7 @@ object Dedup {
         .select("node", "label")
         .localCheckpoint() // materializes AND collects the observe metric
       // Null sum ⟺ zero rows observed (empty graph) ⟺ converged.
-      converged = awaitObserved(obs, "changed",
+      converged = graft.core.Observed.long(obs, "changed",
         "connectedComponentsPropagate").getOrElse(0L) == 0L
       labels = updated
       i += 1

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.GraftSession
 import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -11,7 +12,9 @@ import scala.jdk.CollectionConverters._
   *    under the SQL config `Verify` checks against the oracle — and
   *    exactly the five known mains;
   *  - one failure rule for every timed cell: a cell with any failed rep
-  *    is failed, never timed, and a fatal error ends the run.
+  *    is failed, never timed, and a fatal error ends the run;
+  *  - the session's `file:` scheme is the graft local filesystem, for
+  *    both `FileSystem.get` and `FileContext`.
   */
 class HarnessSpec extends AnyFunSuite {
 
@@ -35,6 +38,18 @@ class HarnessSpec extends AnyFunSuite {
     mains.foreach { case (p, src) =>
       assert(src.contains("GraftSession.getOrCreate("), s"$p builds its own session")
     }
+  }
+
+  test("GraftSession registers the graft local filesystem for file: under both Hadoop client APIs") {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    GraftSession.localFs.foreach { case (k, v) => conf.set(k, v) }
+    val file = java.net.URI.create("file:///")
+    assert(org.apache.hadoop.fs.FileSystem.getFileSystemClass("file", conf) ===
+      classOf[graft.lake.GraftLocalFileSystem])
+    assert(org.apache.hadoop.fs.FileSystem.get(file, conf)
+      .isInstanceOf[graft.lake.GraftLocalFileSystem])
+    assert(org.apache.hadoop.fs.FileContext.getFileContext(file, conf).getDefaultFileSystem
+      .isInstanceOf[graft.lake.GraftLocalFs])
   }
 
   test("a cell whose last rep throws is failed, not timed") {

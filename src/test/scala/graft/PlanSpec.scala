@@ -400,22 +400,25 @@ class PlanSpec extends SparkSpec {
         Some(List(p))
       case _ => expand(p).view.flatMap(chainToScan).headOption.map(p :: _)
     }
-    val chain = chainToScan(probed.queryExecution.executedPlan)
-    assert(chain.isDefined, "store parquet scan not found in executed plan:\n" +
-      probed.queryExecution.executedPlan)
-    val up = chain.get.reverse // scan first, root last
-    val bhjIdx = up.indexWhere(
-      _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec])
-    val shufIdx = up.indexWhere(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
-    assert(bhjIdx >= 0, "store probe must plan a BroadcastHashJoin:\n" +
-      probed.queryExecution.executedPlan)
-    assert(shufIdx < 0 || bhjIdx < shufIdx,
-      s"store rows shuffled BELOW the probe join:\n${probed.queryExecution.executedPlan}")
-    assert(!up.slice(0, bhjIdx).exists(
-        _.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeLike]),
-      "the store must be the STREAMED side of the probe join:\n" +
+    def assertStoreStreamed(probed: org.apache.spark.sql.DataFrame): Unit = {
+      val chain = chainToScan(probed.queryExecution.executedPlan)
+      assert(chain.isDefined, "store parquet scan not found in executed plan:\n" +
         probed.queryExecution.executedPlan)
+      val up = chain.get.reverse // scan first, root last
+      val bhjIdx = up.indexWhere(
+        _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec])
+      val shufIdx = up.indexWhere(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
+      assert(bhjIdx >= 0, "store probe must plan a BroadcastHashJoin:\n" +
+        probed.queryExecution.executedPlan)
+      assert(shufIdx < 0 || bhjIdx < shufIdx,
+        s"store rows shuffled BELOW the probe join:\n${probed.queryExecution.executedPlan}")
+      assert(!up.slice(0, bhjIdx).exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeLike]),
+        "the store must be the STREAMED side of the probe join:\n" +
+          probed.queryExecution.executedPlan)
+    }
+    assertStoreStreamed(probed)
     // decision parity: the shuffled fallback (maxRows = 0) returns the
     // same matched multiset
     val viaShuffle = Streaming.storeProbe(store, Seq("shingle"), batchSide,
@@ -423,6 +426,15 @@ class PlanSpec extends SparkSpec {
       .groupBy("doc_id").count().collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(viaBroadcast === viaShuffle)
+    // the left_semi probe (near-dedup's store-hit flags) keeps the
+    // shape, and both shapes match the same keys
+    val keys = batchSide.select("shingle")
+    def semi(maxRows: Long) = Streaming.storeProbe(store, Seq("shingle"), keys,
+      batchSide.count(), maxRows, "left_semi")
+    val semiBroadcast = semi(Streaming.ProbeBroadcastMaxRows)
+    val matched = semiBroadcast.collect().map(_.getLong(0)).sorted.toSeq
+    assertStoreStreamed(semiBroadcast)
+    assert(matched.nonEmpty && matched === semi(0L).collect().map(_.getLong(0)).sorted.toSeq)
   }
 
   test("stateful store expiry: the retention horizon pushes into the store's parquet scan as a literal filter") {

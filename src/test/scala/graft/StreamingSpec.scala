@@ -2,6 +2,7 @@ package graft
 
 import graft.stream.Streaming
 import graft.stream.Streaming.DataEvent
+import graft.textops.Dedup
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -1026,6 +1027,102 @@ class StreamingSpec extends SparkSpec {
     }
     crashed("before_append", appended = false)
     crashed("before_merge", appended = true)
+  }
+
+  test("near-dedup fused decision equals the probe-union-self-join rule on hostile batches, at maxSegments 0 and 2, for long and string ids") {
+    import graft.lake.VersionedTable
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    // 20-word texts over disjoint vocabularies: a one-word edit
+    // band-collides with its original under the default geometry
+    def text(tag: String) = (0 until 20).map(j => s"$tag$j").mkString(" ")
+    def edit(t: String, at: Int, w: String) = t.split(" ").updated(at, w).mkString(" ")
+    val (a, b, c, d, s) = (text("a"), text("b"), text("c"), text("d"), text("s"))
+    val chain = Seq(text("k"), edit(text("k"), 19, "omega"), edit(edit(text("k"), 19, "omega"), 0, "alpha"))
+    // (id rank, text, event time); the rank maps to a long or string id
+    // with the same order, rank 0 and 9 to the extremes
+    val batches: Seq[Seq[(Int, String, String)]] = Seq(
+      // in-batch twins at the extreme ids: the min id drops its twin 2
+      Seq((1, a, "10:00"), (2, b, "10:01"), (9, edit(a, 19, "z"), "10:02"),
+        (0, edit(b, 19, "z"), "10:03")),
+      Seq(), // empty
+      // all duplicates: three copies of c, two of stored a; null and
+      // one-shingle-short text have no bands and pass
+      Seq((3, c, "10:10"), (4, c, "10:10"), (5, c, "10:11"), (6, a, "10:12"),
+        (7, a, "10:12"), (8, null, "10:12"), (15, "x y", "10:12")),
+      // an A~B~C chain with the smallest id in the middle, a store hit
+      // (c is stored) with an in-batch twin on the same key, and a
+      // store hit on the smallest possible id
+      Seq((12, chain(0), "10:20"), (10, chain(1), "10:20"), (11, chain(2), "10:21"),
+        (13, edit(c, 5, "q"), "10:22"), (14, edit(c, 5, "q"), "10:22"),
+        (0, edit(a, 10, "m"), "10:22")),
+      // one skewed key: 40 copies of one text, and a fresh doc
+      (20 until 60).map(i => (i, s, "10:30")) :+ ((60, d, "10:31")),
+      // past the first batches' retention: re-admissions (at maxSegments
+      // 2 their keys sit twice across layers), and late rows behind this
+      // batch's own horizon
+      Seq((61, a, "11:40"), (62, edit(c, 3, "r"), "11:41"), (63, text("e"), "11:42"),
+        (64, b, "10:05"), (65, edit(a, 7, "late"), "10:05")),
+      // a late batch: its horizon makes expired rows live again
+      Seq((66, edit(d, 2, "w"), "10:40"), (67, text("f"), "10:41"), (68, chain(2), "10:41")))
+    val idOf: Map[String, Int => Any] = Map(
+      "long" -> {
+        case 0 => Long.MinValue
+        case 9 => Long.MaxValue
+        case r => r.toLong
+      },
+      "string" -> {
+        case 0 => ""
+        case 9 => "~"
+        case r => f"doc-$r%03d"
+      })
+    def layers(store: String): Option[DataFrame] =
+      if (!VersionedTable.isVersioned(spark, store)) None
+      else Some(VersionedTable.pendingDeltas(spark, store)
+        .foldLeft(VersionedTable.readCurrent(spark, store)) { (df, seg) =>
+          df.unionByName(spark.read.parquet(s"$store/$seg")) })
+    // the rule before the fused decision: bandSignatures, the store
+    // probe ∪ the in-batch self-join → distinct ids → anti-join
+    def oldRule(batch: DataFrame, store: String): Seq[String] = {
+      val bands = Dedup.bandSignatures(batch, "doc_id", "text")
+      val hz = batch.agg(max(col("ts")) - expr("INTERVAL 1 hour")).head.get(0)
+      val vsBatch = bands.select(col("band"), col("key"), col("doc_id").as("_a"))
+        .join(bands.select(col("band"), col("key"), col("doc_id").as("_b")), Seq("band", "key"))
+        .filter(col("_a") < col("_b"))
+        .select(col("_b").as("doc_id"))
+      val vsStore = layers(store).map { l =>
+        (if (hz == null) l else l.where(col("_ts") >= lit(hz)))
+          .select("band", "key").join(bands, Seq("band", "key")).select("doc_id")
+      }
+      val dropped = vsStore.fold(vsBatch)(_.unionByName(vsBatch)).distinct()
+      batch.join(dropped, Seq("doc_id"), "left_anti")
+        .select(col("doc_id").cast("string")).as[String].collect().sorted.toSeq
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_nndfused").toString
+    for ((kind, id) <- idOf.toSeq; ms <- Seq(0, 2)) {
+      val store = s"$dir/$kind$ms"
+      val schema = StructType(Seq(
+        StructField("doc_id", if (kind == "long") LongType else StringType),
+        StructField("text", StringType), StructField("ts", TimestampType)))
+      val admitted = batches.zipWithIndex.map { case (rows, i) =>
+        val batch = spark.createDataFrame(rows.map { case (r, t, hm) =>
+          Row(id(r), t, Timestamp.valueOf(s"2024-01-01 $hm:00")) }.asJava, schema)
+        val want = oldRule(batch, store)
+        val got = Streaming.nearDedupBatchStep(batch, "doc_id", "text", "ts", store,
+            retention = "1 hour", maxSegments = ms)
+          .select(col("doc_id").cast("string")).as[String].collect().sorted.toSeq
+        assert(got === want, s"$kind ids, maxSegments = $ms, batch ${i + 1}")
+        got
+      }
+      // the batches are not vacuous: twins drop, the min id wins
+      assert(admitted.head === Seq(id(0), id(1)).map(_.toString).sorted, s"$kind ids")
+      assert(admitted(4).size === 2, s"$kind ids: one of 40 skewed copies and d")
+      if (ms == 2) {
+        val dup = layers(store).get.groupBy("band", "key").count().where(col("count") > 1)
+        assert(dup.count() > 0, "re-admission must leave duplicate keys across layers")
+      }
+    }
   }
 
   test("retention writers and steps reject a negative maxSegments when built, before any query starts") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.textops.{Curation, Dedup, HashFamily, Similarity, SyntheticCorpus, TextAnalysis, TextFunctions}
+import graft.textops.{Curation, Dedup, HashFamily, MinhashBandKeys, Similarity, SyntheticCorpus, TextAnalysis, TextFunctions}
 import graft.core.Tables
 import org.apache.spark.sql.functions._
 
@@ -327,6 +327,54 @@ class TextOpsSpec extends SparkSpec {
     val kept = Curation.dropNearDuplicates(docs, "doc_id", "text", 3, 0.9)
       .select("doc_id").as[Long].collect().sorted
     assert(kept === Array(1L, 2L, 3L))
+  }
+
+  test("MinhashBandKeys equals the bandSignatures formula bit for bit, for both hash families") {
+    // hostile token arrays: fewer than shingleN tokens, leading,
+    // trailing and double spaces (empty tokens), repeated shingles,
+    // multi-byte UTF-8, empty and null text
+    val rnd = new scala.util.Random(11)
+    val vocab = Seq("the", "a", "of", "fox", "dog", "barn", "café", "東京", "naïve",
+      "x", "y", "z", "1", "2", "-")
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    val texts: Seq[String] = (0 until 600).map { i =>
+      i % 7 match {
+        case 0 => words(rnd.nextInt(3)).mkString(" ")
+        case 1 => "  " + words(3 + rnd.nextInt(20)).mkString("  ") + " "
+        case 2 => Seq.fill(2 + rnd.nextInt(4))(words(3).mkString(" ")).mkString(" ")
+        case 3 => if (i % 2 == 0) "" else "   "
+        case 4 => null
+        case 5 => words(3).mkString(" ")
+        case _ => words(3 + rnd.nextInt(40)).mkString(" ")
+      }
+    }
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    def kernelRows(n: Int, h: Int, b: Int, family: HashFamily) =
+      docs.select(col("doc_id"), posexplode(
+          MinhashBandKeys.column(col("text"), n, h, b, family)).as(Seq("band", "key")))
+        .as[(Long, Int, Long)].collect().toSet
+    for ((family, n, h, b) <- Seq((HashFamily.Xx64, 3, 64, 16),
+        (HashFamily.Md5Portable, 3, 64, 16), (HashFamily.Xx64, 2, 32, 8))) {
+      val formula = Dedup.bandSignatures(docs, "doc_id", "text", n, h, b, family)
+        .as[(Long, Int, Long)].collect().toSet
+      assert(formula.size >= 300 * b, s"$family: the corpus must band most documents")
+      val codegen = kernelRows(n, h, b, family)
+      assert(codegen === formula, s"$family n=$n h=$h b=$b: " +
+        s"${(codegen -- formula).size} kernel-only rows, ${(formula -- codegen).size} formula-only rows")
+      // the interpreted path (no generated code) computes the same keys
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      try assert(kernelRows(n, h, b, family) === formula, s"$family: interpreted eval differs")
+      finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+    // a document shorter than one shingle, and null text, have no keys
+    val short = Seq((1L, "a b"), (2L, null: String), (3L, "a b c")).toDF("doc_id", "text")
+      .select(col("doc_id"), MinhashBandKeys.column(col("text"), 3, 64, 16, HashFamily.Xx64)
+        .as("k")).as[(Long, Option[Seq[Long]])].collect().toMap
+    assert(short(1L).isEmpty && short(2L).isEmpty && short(3L).map(_.size) === Some(16))
   }
 
   test("connected components handles string node ids and empty edge lists") {

@@ -381,9 +381,9 @@ object Streaming {
     * of previously-admitted documents at `storePath`. Each batch:
     *
     *   1. is read ONCE: every row gets its `bands` band keys map-side
-    *      ([[graft.textops.MinhashBandKeys]], bit-identical to
-    *      [[graft.textops.Dedup.bandSignatures]], no shuffle) and the
-    *      rows are materialized with them in one `localCheckpoint`.
+    *      ([[graft.textops.MinhashBandKeys]], the same kernel the
+    *      batch MinHash paths band with, no shuffle) and the rows are
+    *      materialized with them in one `localCheckpoint`.
     *      The same pass observes the batch's max event time and
     *      retention horizon ([[observeBounds]]) and its band-row count
     *      (the broadcast bound below), with no job of its own;
@@ -1131,12 +1131,6 @@ object Streaming {
     }
   }
 
-  /** One merge-on-read upsert step — the shared O(batch) sink body of
-    * [[morUpsertWriter]] and both dedup writers' survivors sinks:
-    * bootstrap-publish on an empty root (loud on a legacy layout),
-    * delta-append otherwise, fold the overlay every `compactEvery`
-    * batches.
-    */
   /** Canonical `_params` rendering of a MOR table's merge-key SET —
     * order-insensitive (the pin guards WHICH keys merge, not the order
     * a caller happened to list them) and injective: each key is
@@ -1155,6 +1149,12 @@ object Streaming {
   private[graft] def morKeyParamsLegacy(keys: Seq[String]): Seq[String] =
     Seq(s"morUpsert;keys=${keys.mkString(",")}")
 
+  /** One merge-on-read upsert step — the shared O(batch) sink body of
+    * [[morUpsertWriter]] and both dedup writers' survivors sinks:
+    * bootstrap-publish on an empty root (loud on a legacy layout),
+    * delta-append otherwise, fold the overlay every `compactEvery`
+    * batches.
+    */
   private[graft] def morUpsertStep(batch: DataFrame, keys: Seq[String],
                                    root: String, batchId: Long,
                                    compactEvery: Int,

@@ -36,27 +36,53 @@ object Curation {
     * whole chain onto one survivor. Compose BEFORE `curate` for the
     * full pipeline (near-dedup → exact dedup → gates).
     *
-    * Pair generation defaults to `"auto"`: [[Dedup.preferPrefixFilter]]
-    * picks the full shingle join or the AllPairs prefix-filtered join
-    * from sampled corpus statistics (the winner is a property of the
-    * corpus's sharing structure — boilerplate-heavy corpora want the
-    * prefix filter, short high-entropy ones want the full join;
-    * measured crossover in SCALING.md). `"full"` / `"prefix"` force a
-    * variant — identical results either way (property-tested).
+    * Pairs come from [[Dedup.jaccardPairsAuto]], which picks the full
+    * shingle join or the AllPairs prefix-filtered join from sampled
+    * corpus statistics (the winner is a property of the corpus's
+    * sharing structure — boilerplate-heavy corpora want the prefix
+    * filter, short high-entropy ones want the full join; measured
+    * crossover in SCALING.md). Both give the same pairs
+    * (property-tested), so the survivors do not depend on the choice.
     */
   def dropNearDuplicates(df: DataFrame, idCol: String, textCol: String,
-                         shingleN: Int = 3, threshold: Double = 0.5,
-                         pairStrategy: String = "auto"): DataFrame = {
-    val pairs = pairStrategy match {
-      case "auto" => Dedup.jaccardPairsAuto(df, idCol, textCol, shingleN, threshold)
-      case "prefix" => Dedup.jaccardPairsPrefix(df, idCol, textCol, shingleN, threshold)
-      case "full" => Dedup.jaccardPairs(df, idCol, textCol, shingleN, threshold)
-      case other => throw new IllegalArgumentException(
-        s"pairStrategy must be auto|full|prefix, got '$other'")
-    }
+                         shingleN: Int = 3, threshold: Double = 0.5): DataFrame = {
+    val pairs = Dedup.jaccardPairsAuto(df, idCol, textCol, shingleN, threshold)
     val losers = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
       .filter(col("node") =!= col("label"))
       .select(col("node").as(idCol))
+    df.join(losers, Seq(idCol), "left_anti")
+  }
+
+  /** Near-duplicate removal with a QUALITY-AWARE survivor rule: each
+    * transitive cluster keeps its highest-`priorityCol` member
+    * (ties → smallest id) instead of [[dropNearDuplicates]]'s
+    * smallest-id convention. This is what production curation
+    * actually wants — when a cleaned reprint and a boilerplate-ridden
+    * original are near-dups, the dedup pass should keep the BEST
+    * copy, not the earliest-crawled one.
+    *
+    * Same pair generation and O(log n)-round clustering as the
+    * id-rule form; survivor selection is one aggregation over the
+    * (cluster, member) relation — `min(struct(−priority, id))` picks
+    * (max priority, min id) per cluster in a single k-bounded pass,
+    * no window sort over members. Null priorities coalesce to −∞
+    * (a null-scored doc survives only alone). Rows outside any
+    * cluster pass through untouched.
+    */
+  def dropNearDuplicatesBy(df: DataFrame, idCol: String, textCol: String,
+                           priorityCol: String, shingleN: Int = 3,
+                           threshold: Double = 0.5): DataFrame = {
+    val pairs = Dedup.jaccardPairsAuto(df, idCol, textCol, shingleN, threshold)
+    val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+    val members = comp.join(
+      df.select(col(idCol).as("node"),
+        coalesce(col(priorityCol).cast("double"),
+          lit(Double.NegativeInfinity)).as("_pr")), "node")
+    val winners = members.groupBy("label")
+      .agg(min(struct((-col("_pr")).as("_np"), col("node").as("_n"))).as("_w"))
+      .select(col("_w._n").as(idCol))
+    val losers = comp.select(col("node").as(idCol))
+      .join(winners, Seq(idCol), "left_anti")
     df.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -76,46 +102,6 @@ object Curation {
     * invariant); the cluster pass adds the pair-generation + CC cost,
     * which a pipeline doing near-dedup anyway already paid.
     */
-  /** Near-duplicate removal with a QUALITY-AWARE survivor rule: each
-    * transitive cluster keeps its highest-`priorityCol` member
-    * (ties → smallest id) instead of [[dropNearDuplicates]]'s
-    * smallest-id convention. This is what production curation
-    * actually wants — when a cleaned reprint and a boilerplate-ridden
-    * original are near-dups, the dedup pass should keep the BEST
-    * copy, not the earliest-crawled one.
-    *
-    * Same pair generation and O(log n)-round clustering as the
-    * id-rule form; survivor selection is one aggregation over the
-    * (cluster, member) relation — `min(struct(−priority, id))` picks
-    * (max priority, min id) per cluster in a single k-bounded pass,
-    * no window sort over members. Null priorities coalesce to −∞
-    * (a null-scored doc survives only alone). Rows outside any
-    * cluster pass through untouched.
-    */
-  def dropNearDuplicatesBy(df: DataFrame, idCol: String, textCol: String,
-                           priorityCol: String, shingleN: Int = 3,
-                           threshold: Double = 0.5,
-                           pairStrategy: String = "auto"): DataFrame = {
-    val pairs = pairStrategy match {
-      case "auto" => Dedup.jaccardPairsAuto(df, idCol, textCol, shingleN, threshold)
-      case "prefix" => Dedup.jaccardPairsPrefix(df, idCol, textCol, shingleN, threshold)
-      case "full" => Dedup.jaccardPairs(df, idCol, textCol, shingleN, threshold)
-      case other => throw new IllegalArgumentException(
-        s"pairStrategy must be auto|full|prefix, got '$other'")
-    }
-    val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
-    val members = comp.join(
-      df.select(col(idCol).as("node"),
-        coalesce(col(priorityCol).cast("double"),
-          lit(Double.NegativeInfinity)).as("_pr")), "node")
-    val winners = members.groupBy("label")
-      .agg(min(struct((-col("_pr")).as("_np"), col("node").as("_n"))).as("_w"))
-      .select(col("_w._n").as(idCol))
-    val losers = comp.select(col("node").as(idCol))
-      .join(winners, Seq(idCol), "left_anti")
-    df.join(losers, Seq(idCol), "left_anti")
-  }
-
   def clusterSafeSplit(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3, threshold: Double = 0.5,
                        testPct: Int = 10): DataFrame = {

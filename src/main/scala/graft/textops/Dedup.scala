@@ -52,15 +52,25 @@ object Dedup {
                    n: Int, threshold: Double): DataFrame = {
     // shingleTable emits 64-bit shingle hashes: the self-join shuffle
     // carries 8-byte keys and compares longs (collision odds per the
-    // shingleTable scaladoc). Set sizes are aggregated once and
-    // broadcast-joined onto the surviving pairs.
+    // shingleTable scaladoc).
     val sh = TextFunctions.shingleTable(df, idCol, textCol, n)
-    val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     val inter = sh.toDF("doc_a", "shingle")
       .join(sh.toDF("doc_b", "shingle"), "shingle")
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("inter"))
+    jaccardAtLeast(inter, sh, idCol, threshold)
+  }
+
+  /** The verify tail shared by [[jaccardPairs]] and [[minhashLshPairs]]:
+    * per-pair intersection counts (doc_a, doc_b, inter) and the set
+    * sizes of the (id, shingle) relation `sh` → J = inter / (|A| + |B|
+    * − inter), kept when J ≥ `threshold`, snapped to 6 dp. Set sizes
+    * are aggregated once and joined onto the surviving pairs.
+    */
+  private def jaccardAtLeast(inter: DataFrame, sh: DataFrame, idCol: String,
+                             threshold: Double): DataFrame = {
+    val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     inter
       .join(sizes.toDF("doc_a", "n_a"), "doc_a")
       .join(sizes.toDF("doc_b", "n_b"), "doc_b")
@@ -70,27 +80,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), gridSnap(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** Exact n-gram Jaccard with PREFIX FILTERING (AllPairs, Bayardo et
-    * al., WWW'07) — same results as [[jaccardPairs]], far fewer
-    * candidates. Under any fixed global shingle order, two sets with
-    * J ≥ t must share an element within each one's first
-    * `n − ⌈t·n⌉ + 1` shingles: a pair sharing only suffix shingles
-    * cannot reach the required overlap (⌈t·n⌉ ≤ |A∩B|). So the
-    * candidate self-join runs on the PREFIX relation only — bucket
-    * sizes shrink by ~(1−t), and join cost drops quadratically in
-    * that factor — then exact Jaccard verifies candidates on the full
-    * shingle sets. The global order is the shingle hash itself
-    * (arbitrary but fixed — no frequency statistics needed).
-    *
-    * Scale shape: the prefix is computed MAP-SIDE — each doc's distinct
-    * shingle array is sorted and sliced per row (arrays are doc-sized,
-    * tiny), so the prefix relation costs no window and no extra
-    * shuffle — and verification is a per-row `array_intersect` of the
-    * two docs' arrays (joined back by id against the one-row-per-doc
-    * relation), not a re-aggregation of the exploded shingle table.
-    * Three hash joins total, every one keyed on doc ids or prefix
-    * shingles; intermediate width is one array per doc.
-    */
   /** One row per document: sorted distinct 64-bit shingle hashes as an
     * array (the sorted order IS the AllPairs global order) + set size.
     * Deliberately a lazy recomputed map-side plan even though consumers
@@ -119,6 +108,27 @@ object Dedup {
       explode(slice(col("sh_arr"), lit(1), greatest(prefixLen, lit(1)))).as("shingle"))
   }
 
+  /** Exact n-gram Jaccard with PREFIX FILTERING (AllPairs, Bayardo et
+    * al., WWW'07) — same results as [[jaccardPairs]], far fewer
+    * candidates. Under any fixed global shingle order, two sets with
+    * J ≥ t must share an element within each one's first
+    * `n − ⌈t·n⌉ + 1` shingles: a pair sharing only suffix shingles
+    * cannot reach the required overlap (⌈t·n⌉ ≤ |A∩B|). So the
+    * candidate self-join runs on the PREFIX relation only — bucket
+    * sizes shrink by ~(1−t), and join cost drops quadratically in
+    * that factor — then exact Jaccard verifies candidates on the full
+    * shingle sets. The global order is the shingle hash itself
+    * (arbitrary but fixed — no frequency statistics needed).
+    *
+    * Scale shape: the prefix is computed MAP-SIDE — each doc's distinct
+    * shingle array is sorted and sliced per row (arrays are doc-sized,
+    * tiny), so the prefix relation costs no window and no extra
+    * shuffle — and verification is a per-row `array_intersect` of the
+    * two docs' arrays (joined back by id against the one-row-per-doc
+    * relation), not a re-aggregation of the exploded shingle table.
+    * Three hash joins total, every one keyed on doc ids or prefix
+    * shingles; intermediate width is one array per doc.
+    */
   def jaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
                          n: Int, threshold: Double): DataFrame = {
     val perDoc = perDocShingles(df, idCol, textCol, n)
@@ -184,10 +194,6 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** The corpus with contaminated documents removed (left anti join on
-    * [[contaminatedDocs]]). Compose before near-dedup in a full
-    * curation pipeline: decontaminate → near-dedup → gates.
-    */
   /** Graded decontamination: per-document n-gram NOVELTY against a
     * reference corpus — the fraction of the document's distinct
     * n-gram shingles the reference has never seen. Where
@@ -228,6 +234,10 @@ object Dedup {
       .select(col(idCol), col("n_shingles"), col("n_novel"), col("novelty"))
   }
 
+  /** The corpus with contaminated documents removed (left anti join on
+    * [[contaminatedDocs]]). Compose before near-dedup in a full
+    * curation pipeline: decontaminate → near-dedup → gates.
+    */
   def decontaminate(corpus: DataFrame, idCol: String, textCol: String,
                     benchmark: DataFrame, benchTextCol: String,
                     n: Int, minShared: Long = 1L): DataFrame =
@@ -316,25 +326,10 @@ object Dedup {
       jaccardPairsPrefix(df, idCol, textCol, n, threshold)
     else jaccardPairs(df, idCol, textCol, n, threshold)
 
-  /** MinHash signatures: `numHashes` permutation hashes
-    * h_i(s) = a_i·x + b_i over a 64-bit base hash x = xxhash64(shingle),
-    * min-reduced per document. One shuffle (groupBy id) whose partial
-    * aggregation reduces map-side to one 64-column row per document;
-    * the per-row work is `numHashes` multiply-adds inside codegen. (A
-    * shuffle-free `array_min(transform(...))` variant evaluates its
-    * lambdas interpreted — measured slower despite saving the shuffle.)
-    * Coefficients come from a fixed seed so signatures are reproducible
-    * across runs and clusters.
-    */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3, numHashes: Int = 64,
-                        family: HashFamily = HashFamily.Xx64): DataFrame =
-    signaturesWithSize(df, idCol, textCol, shingleN, numHashes, family)
-      .select(col(idCol), col("sig"))
-
-  /** The fixed-seed permutation coefficients (a_i, b_i) — public so the
-    * DuckDB oracle SQL can embed the IDENTICAL constants and replay the
-    * signature arithmetic bit-for-bit.
+  /** The fixed-seed permutation coefficients (a_i, b_i) of the MinHash
+    * signature — public so the DuckDB oracle SQL can embed the
+    * IDENTICAL constants and replay the signature arithmetic
+    * bit-for-bit.
     */
   def minhashCoefficients(numHashes: Int): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(42)
@@ -345,69 +340,8 @@ object Dedup {
   /** The Mersenne-prime modulus of the permutation hashes. */
   val MinhashPrime: Long = 2147483647L // 2^31 − 1
 
-  /** Signatures + the per-document distinct-shingle count from ONE
-    * aggregation pass: the set size the Jaccard verifier needs is a
-    * free 65th aggregate on the signature groupBy, so the LSH pipeline
-    * never re-aggregates the shingle relation just for sizes (one less
-    * scan + shuffle; the single shared stage is also what AQE's
-    * stage-level reuse dedups between the banding and verification
-    * branches).
-    */
-  private def signaturesWithSize(df: DataFrame, idCol: String, textCol: String,
-                                 shingleN: Int, numHashes: Int,
-                                 family: HashFamily = HashFamily.Xx64): DataFrame = {
-    // Coefficients and the base hash are bounded to 31 bits so a·h + b
-    // stays below 2^62 — no overflow under ANSI mode (Spark 4 default),
-    // and the same arithmetic would be portable to engines that trap.
-    val p = MinhashPrime
-    val coef = minhashCoefficients(numHashes)
-    val sh = TextFunctions.shingleTable(df, idCol, textCol, shingleN, family)
-      .withColumn("h", pmod(col("shingle"), lit(p)))
-    val mins = coef.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h") * a + b, lit(p))).as(s"_m$i")
-    } :+ count(lit(1)).as("n_sh")
-    sh.groupBy(idCol)
-      .agg(mins.head, mins.tail: _*)
-      .select(col(idCol),
-        array((0 until numHashes).map(i => col(s"_m$i")): _*).as("sig"),
-        col("n_sh"))
-  }
-
-  /** Banding expression over a `sig` array column: band j's key is the
-    * family hash of its `r` consecutive signature entries (Xx64 hashes
-    * the slice directly; the portable family hashes the comma-joined
-    * decimal string an oracle can rebuild).
-    */
-  private def bandKeysExpr(r: Int, bands: Int,
-                           family: HashFamily = HashFamily.Xx64) = {
-    val key = family match {
-      case HashFamily.Xx64 => s"xxhash64(slice(sig, j * $r + 1, $r))"
-      case HashFamily.Md5Portable => TextFunctions.hashSql(
-        s"array_join(transform(slice(sig, j * $r + 1, $r), x -> CAST(x AS STRING)), ',')",
-        family)
-    }
-    expr(s"transform(sequence(0, ${bands - 1}), j -> $key)")
-  }
-
-  /** The (id, band, key) LSH banding relation on its own — the
-    * candidate-generation half of [[minhashLshPairs]], exposed for
-    * incremental consumers (the streaming near-dedup keeps exactly this
-    * relation as its persisted state and equi-joins each micro-batch's
-    * bands against it). Documents with fewer than `shingleN` tokens
-    * produce no rows — they have no signature to collide on.
-    */
-  def bandSignatures(df: DataFrame, idCol: String, textCol: String,
-                     shingleN: Int = 3, numHashes: Int = 64,
-                     bands: Int = 16,
-                     family: HashFamily = HashFamily.Xx64): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    signaturesWithSize(df, idCol, textCol, shingleN, numHashes, family)
-      .select(col(idCol), posexplode(bandKeysExpr(r, bands, family)).as(Seq("band", "key")))
-  }
-
-  /** MinHash-LSH near-duplicate pairs: band the signature (`bands` ×
-    * `rowsPerBand`), hash each band, bucket-join on (band, key) for
+  /** MinHash-LSH near-duplicate pairs: band each document's signature
+    * (`bands` × `numHashes / bands`), bucket-join on (band, key) for
     * candidates, then verify candidates with EXACT Jaccard — the sketch
     * only prunes, it never decides. Candidate join is equi (hash),
     * verification touches only candidate pairs: subquadratic end-to-end.
@@ -416,26 +350,29 @@ object Dedup {
                       shingleN: Int = 3, numHashes: Int = 64,
                       bands: Int = 16, threshold: Double = 0.5,
                       family: HashFamily = HashFamily.Xx64): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val sigSize = signaturesWithSize(df, idCol, textCol, shingleN, numHashes, family)
-    val candidates = bandedCandidates(sigSize, idCol, r, bands, family)
-    // Exact verification restricted to candidates — the sketch only
-    // prunes, it never decides. Set sizes ride along with the
-    // signatures (same aggregation pass — see signaturesWithSize).
     val sh = TextFunctions.shingleTable(df, idCol, textCol, shingleN, family)
-    val sizes = sigSize.select(col(idCol), col("n_sh"))
-    pairsJaccard(candidates, sh, sizes, idCol, threshold)
+    val inter = bandedCandidates(df, idCol, textCol, shingleN, numHashes, bands, family)
+      .join(sh.toDF("doc_a", "shingle"), "doc_a")
+      .join(sh.toDF("doc_b", "shingle"), Seq("doc_b", "shingle"))
+      .groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("inter"))
+    jaccardAtLeast(inter, sh, idCol, threshold)
   }
 
-  /** The LSH candidate generator shared by the verify tiers: band each
-    * signature, hash-join on (band, key), dedupe to (doc_a < doc_b)
-    * pairs. Subquadratic — pair work is Σ bucket², never n².
+  /** The LSH candidate generator shared by the verify tiers: each
+    * document's band keys come map-side from [[MinhashBandKeys]] (one
+    * codegen'd call per row, no shingle relation and no signature
+    * shuffle), then a hash join on (band, key) and a dedupe to
+    * (doc_a < doc_b) pairs. Subquadratic — pair work is Σ bucket²,
+    * never n². Documents with fewer than `shingleN` tokens have no keys
+    * and are never candidates.
     */
-  private def bandedCandidates(sigSize: DataFrame, idCol: String, r: Int,
-                               bands: Int, family: HashFamily): DataFrame = {
-    val banded = sigSize.select(col(idCol),
-      posexplode(bandKeysExpr(r, bands, family)).as(Seq("band", "key")))
+  private def bandedCandidates(df: DataFrame, idCol: String, textCol: String,
+                               shingleN: Int, numHashes: Int, bands: Int,
+                               family: HashFamily): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val banded = df.select(col(idCol), posexplode(MinhashBandKeys.column(
+      col(textCol), shingleN, numHashes, bands, family)).as(Seq("band", "key")))
     banded.toDF("doc_a", "band", "key")
       .join(banded.toDF("doc_b", "band", "key"), Seq("band", "key"))
       .filter(col("doc_a") < col("doc_b"))
@@ -451,8 +388,8 @@ object Dedup {
     * score Jaccard 1.0 but low edit similarity; small in-place edits
     * score high on both).
     *
-    * Scale shape: candidates come from the banded signature join
-    * (never all-pairs); the O(len_a · len_b) Levenshtein runs ONLY on
+    * Scale shape: candidates come from the (band, key) join of
+    * [[bandedCandidates]] (never all-pairs); the O(len_a · len_b) Levenshtein runs ONLY on
     * candidate pairs that survive a free length prefilter —
     * lev ≥ |len_a − len_b| implies sim ≤ 1 − |Δlen|/maxlen, so pairs
     * whose length gap already violates `threshold` drop before any
@@ -465,12 +402,9 @@ object Dedup {
                         shingleN: Int = 3, numHashes: Int = 64,
                         bands: Int = 16, threshold: Double = 0.5,
                         family: HashFamily = HashFamily.Xx64): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0,1], got $threshold")
-    val sigSize = signaturesWithSize(df, idCol, textCol, shingleN, numHashes, family)
-    val candidates = bandedCandidates(sigSize, idCol, r = numHashes / bands,
-      bands = bands, family = family)
+    val candidates = bandedCandidates(df, idCol, textCol, shingleN, numHashes, bands, family)
     val texts = df.select(col(idCol),
       TextFunctions.normalized(col(textCol)).as("_t"))
     val joined = candidates
@@ -487,23 +421,6 @@ object Dedup {
             - levenshtein(col("_ta"), col("_tb")).cast("double") / col("_max"), 6)))
       .filter(col("edit_sim") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("edit_sim"))
-  }
-
-  /** Exact Jaccard for a given candidate-pair set. */
-  private def pairsJaccard(candidates: DataFrame, sh: DataFrame, sizes: DataFrame,
-                           idCol: String, threshold: Double): DataFrame = {
-    val inter = candidates
-      .join(sh.toDF("doc_a", "shingle"), "doc_a")
-      .join(sh.toDF("doc_b", "shingle"), Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.toDF("doc_a", "n_a"), "doc_a")
-      .join(sizes.toDF("doc_b", "n_b"), "doc_b")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), gridSnap(col("jaccard"), 6).as("jaccard"))
   }
 
   /** Connected components over an undirected edge list by alternating
@@ -529,12 +446,12 @@ object Dedup {
     * 300-node chain converges within 12 here) — structurally
     * independent of component DIAMETER, which is what makes it the
     * 100 TB path: a chain-shaped near-dup graph (every doc similar to
-    * the next) forces the min-label propagation variant
-    * ([[connectedComponentsPropagate]], kept as the equivalence
-    * reference) into O(n) rounds, while this converges in a dozen.
-    * Equivalence of the two forms is spec-pinned (TextOpsSpec), as is
-    * the round-count bound. Size `maxIter` ≈ log₂(nodes) + slack for
-    * graphs that could be a single deep component.
+    * the next) forces the min-label propagation variant (the specs'
+    * equivalence reference) into O(n) rounds, while this converges in
+    * a dozen. Equivalence of the two forms is spec-pinned
+    * (TextOpsSpec), as is the round-count bound. Size `maxIter` ≈
+    * log₂(nodes) + slack for graphs that could be a single deep
+    * component.
     *
     * Convergence detection is two-tier. The cheap tier rides the
     * round for free: the large-star aggregation already groups the
@@ -637,81 +554,6 @@ object Dedup {
     nodes
       .join(e.select(col("hi").as("node"), col("lo").as("_lbl")), Seq("node"), "left")
       .select(col("node"), coalesce(col("_lbl"), col("node")).as("label"))
-  }
-
-  /** Connected components by iterative min-label propagation — the
-    * Pregel/GraphX pattern expressed in DataFrames. Kept as the
-    * equivalence reference for [[connectedComponents]]: simpler per
-    * round (one join + one aggregation vs two of each), but needs
-    * O(component diameter) rounds, which a chain-shaped dedup graph
-    * degrades to O(n) — use the star-contraction form for anything
-    * whose topology is not known to be shallow.
-    *
-    * Each iteration: neighbours' labels union own labels → min per
-    * node — one hash join + one hash aggregation, both keyed on node
-    * id; `localCheckpoint` truncates the growing lineage (the standard
-    * iterative-DataFrame discipline). Converges in graph-diameter
-    * iterations — near-dup clusters are shallow (2-4).
-    *
-    * Convergence costs NO extra job: the same aggregation that takes
-    * the min label also carries the node's previous label (its
-    * `own = true` row), and an `observe` counter on the changed rows is
-    * collected by the checkpoint's own materialization pass. Comparing
-    * old vs new label per row is also type-agnostic — it works for
-    * string node ids, where a numeric label-sum check would silently
-    * cast to null. An empty edge list converges on the first pass and
-    * returns the empty labelling (no-near-dups corpora are valid
-    * input, not an error).
-    *
-    * Returns (node, label) where label = min node id in the component.
-    */
-  private[graft] def connectedComponentsPropagate(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 20): DataFrame = {
-    // Materialize the (possibly expensive) edge derivation ONCE — the
-    // loop joins against `und` every iteration, and without the
-    // checkpoint each round would recompute the whole upstream plan
-    // (e.g. the Jaccard pair generation feeding this).
-    val und = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .distinct()
-      .localCheckpoint()
-    var labels = und.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val fromNbrs = und.join(labels, und("dst") === labels("node"))
-        .select(und("src").as("node"), col("label"), lit(false).as("own"))
-      // One aggregation produces both the new min label and the node's
-      // previous label (min over its single own=true row), so "did
-      // anything change" is a per-row comparison — no second pass.
-      val merged = labels.withColumn("own", lit(true)).unionByName(fromNbrs)
-        .groupBy("node")
-        .agg(min("label").as("label"),
-          min(when(col("own"), col("label"))).as("_old"))
-      val obs = org.apache.spark.sql.Observation()
-      val updated = merged
-        .observe(obs, sum(when(col("label") =!= col("_old"), 1L).otherwise(0L))
-          .as("changed"))
-        .select("node", "label")
-        .localCheckpoint() // materializes AND collects the observe metric
-      // Null sum ⟺ zero rows observed (empty graph) ⟺ converged.
-      converged = graft.core.Observed.long(obs, "changed",
-        "connectedComponentsPropagate").getOrElse(0L) == 0L
-      labels = updated
-      i += 1
-    }
-    // A silent partial propagation would yield WRONG clusters (several
-    // "survivors" in one logical component) — refuse instead. The check
-    // is conservative: a graph whose diameter equals maxIter exactly
-    // still needs one confirming iteration; raise maxIter.
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsPropagate did not converge within $maxIter " +
-        "iterations (component diameter too large) — raise maxIter or use " +
-        "the star-contraction connectedComponents")
-    labels
   }
 
   /** 64-bit SimHash per document: each token hash votes ±1 on each bit;

@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, NullType, Stri
 
 /** JVM kernel of [[MinhashBandKeys]]: a document's LSH band keys from
   * its token array in one pass, with no shingle relation and no
-  * shuffle. It replays [[Dedup.bandSignatures]] bit for bit:
+  * shuffle. It replays the DataFrame MinHash formula bit for bit (the
+  * specs keep that formula in the test tree's `graft.Reference` and
+  * compare the two for both hash families):
   *
   *  - shingle i is the family hash of tokens i..i+n−1 (Xx64: Spark's
   *    `xxhash64` of the token slice, seed 42 chained over the
@@ -129,7 +131,10 @@ object MinhashBands {
   * (array<bigint> of `bands` keys) from its token array — one codegen'd
   * call per row into [[MinhashBands.keys]] (the [[graft.functions.StringPolyHash]]
   * pattern). The DataFrame formula needs an exploded shingle relation,
-  * a `distinct` and a `groupBy(id)` shuffle to get the same keys.
+  * a `distinct` and a `groupBy(id)` shuffle to get the same keys. The
+  * batch MinHash tiers ([[Dedup.minhashLshPairs]],
+  * [[Dedup.editVerifiedPairs]]) and the stream near-dedup step all band
+  * through it.
   */
 case class MinhashBandKeys(child: Expression, shingleN: Int, numHashes: Int,
                            bands: Int, portable: Boolean) extends UnaryExpression {

@@ -135,13 +135,13 @@ object TextQueries extends QueryPack {
         .orderBy("source")
     }),
 
-    // MinHash + LSH near-dup pairs (candidates via banded signatures,
-    // verified with exact Jaccard). Runs the Md5Portable hash family so
+    // MinHash + LSH near-dup pairs (candidates via the MinhashBandKeys
+    // band keys, verified with exact Jaccard). Runs the Md5Portable hash family so
     // the DuckDB oracle replays the ENTIRE sketch pipeline — 64
     // permutation hashes, 16-band keys, candidate join, exact verify —
     // bit-for-bit (xxhash64, the production default, has no SQL
     // counterpart). Recall vs q_t_jaccard_pairs is asserted in
-    // DedupSpec for both families.
+    // TextOpsSpec for both families.
     "q_t_minhash_lsh" -> ((s, dir) =>
       Dedup.minhashLshPairs(Tables.documents(s, dir), "doc_id", "text",
           shingleN = 3, numHashes = 64, bands = 16, threshold = 0.4,
@@ -1059,7 +1059,7 @@ object TextQueries extends QueryPack {
     * (codegen'd xxhash64, ~2× cheaper than the md5-derived portable
     * family the oracles need). Bench-only — xxhash64 has no DuckDB
     * counterpart, so an oracle row would only be rows-only noise; the
-    * family-equivalence itself is spec-asserted in DedupSpec.
+    * family-equivalence itself is spec-asserted in TextOpsSpec.
     */
   override def benchOnly: Map[String, Q] = Map(
     "q_t_minhash_lsh_xx64" -> ((s, dir) =>

@@ -129,6 +129,26 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
   }
 
+  test("batch MinHash tiers band through the kernel — no per-document signature aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Min
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case o => o.children
+    }).flatMap(nodes)
+    for (name <- Seq("q_t_minhash_lsh", "q_t_minhash_lsh_xx64", "q_t_edit_verify")) {
+      val p = SparkEntry.benchQueries(name)(spark, sfDir).queryExecution.executedPlan
+      assert(p.toString.contains("minhash_band_keys"), s"$name bands without the kernel:\n$p")
+      // the DataFrame formula's signature is one min() per permutation hash
+      val mins = nodes(p).collect { case a: BaseAggregateExec =>
+        a.aggregateExpressions.count(_.aggregateFunction.isInstanceOf[Min]) }
+      assert(mins.forall(_ < 64), s"$name aggregates a 64-min signature:\n$p")
+    }
+  }
+
   test("hard negatives broadcast the anchor batch; corpus side never shuffles for candidates") {
     val p = plan("q_t_hard_negatives")
     // the anchor product is the ONE deliberate broadcast nested-loop

@@ -2,7 +2,6 @@ package graft
 
 import graft.stream.Streaming
 import graft.stream.Streaming.DataEvent
-import graft.textops.Dedup
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -1085,7 +1084,7 @@ class StreamingSpec extends SparkSpec {
     // the rule before the fused decision: bandSignatures, the store
     // probe ∪ the in-batch self-join → distinct ids → anti-join
     def oldRule(batch: DataFrame, store: String): Seq[String] = {
-      val bands = Dedup.bandSignatures(batch, "doc_id", "text")
+      val bands = Reference.bandSignatures(batch, "doc_id", "text")
       val hz = batch.agg(max(col("ts")) - expr("INTERVAL 1 hour")).head.get(0)
       val vsBatch = bands.select(col("band"), col("key"), col("doc_id").as("_a"))
         .join(bands.select(col("band"), col("key"), col("doc_id").as("_b")), Seq("band", "key"))

@@ -2,6 +2,7 @@ package graft
 
 import graft.textops.{Curation, Dedup, HashFamily, MinhashBandKeys, Similarity, SyntheticCorpus, TextAnalysis, TextFunctions}
 import graft.core.Tables
+import graft.functions.StableMath.gridSnap
 import org.apache.spark.sql.functions._
 
 class TextOpsSpec extends SparkSpec {
@@ -329,15 +330,15 @@ class TextOpsSpec extends SparkSpec {
     assert(kept === Array(1L, 2L, 3L))
   }
 
-  test("MinhashBandKeys equals the bandSignatures formula bit for bit, for both hash families") {
-    // hostile token arrays: fewer than shingleN tokens, leading,
-    // trailing and double spaces (empty tokens), repeated shingles,
-    // multi-byte UTF-8, empty and null text
+  // hostile token arrays for the MinHash specs: fewer than shingleN
+  // tokens, leading, trailing and double spaces (empty tokens),
+  // repeated shingles, multi-byte UTF-8, empty and null text
+  private def hostileTexts: Seq[String] = {
     val rnd = new scala.util.Random(11)
     val vocab = Seq("the", "a", "of", "fox", "dog", "barn", "café", "東京", "naïve",
       "x", "y", "z", "1", "2", "-")
     def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
-    val texts: Seq[String] = (0 until 600).map { i =>
+    (0 until 600).map { i =>
       i % 7 match {
         case 0 => words(rnd.nextInt(3)).mkString(" ")
         case 1 => "  " + words(3 + rnd.nextInt(20)).mkString("  ") + " "
@@ -348,14 +349,18 @@ class TextOpsSpec extends SparkSpec {
         case _ => words(3 + rnd.nextInt(40)).mkString(" ")
       }
     }
-    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+  }
+
+  test("MinhashBandKeys equals the bandSignatures formula bit for bit, for both hash families") {
+    val docs = hostileTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
     def kernelRows(n: Int, h: Int, b: Int, family: HashFamily) =
       docs.select(col("doc_id"), posexplode(
           MinhashBandKeys.column(col("text"), n, h, b, family)).as(Seq("band", "key")))
         .as[(Long, Int, Long)].collect().toSet
     for ((family, n, h, b) <- Seq((HashFamily.Xx64, 3, 64, 16),
         (HashFamily.Md5Portable, 3, 64, 16), (HashFamily.Xx64, 2, 32, 8))) {
-      val formula = Dedup.bandSignatures(docs, "doc_id", "text", n, h, b, family)
+      val formula = Reference.bandSignatures(docs, "doc_id", "text", n, h, b, family)
         .as[(Long, Int, Long)].collect().toSet
       assert(formula.size >= 300 * b, s"$family: the corpus must band most documents")
       val codegen = kernelRows(n, h, b, family)
@@ -375,6 +380,56 @@ class TextOpsSpec extends SparkSpec {
       .select(col("doc_id"), MinhashBandKeys.column(col("text"), 3, 64, 16, HashFamily.Xx64)
         .as("k")).as[(Long, Option[Seq[Long]])].collect().toMap
     assert(short(1L).isEmpty && short(2L).isEmpty && short(3L).map(_.size) === Some(16))
+  }
+
+  test("minhashLshPairs and editVerifiedPairs equal a pipeline on the reference bandSignatures, for both hash families") {
+    // the hostile corpus plus a twin of every 5th document with one
+    // token appended, so both verify tiers have pairs to find
+    val texts = hostileTexts
+    val twins = texts.zipWithIndex.collect {
+      case (t, i) if i % 5 == 0 && t != null => (10000L + i, t + " naïve")
+    }
+    val docs = (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++ twins)
+      .toDF("doc_id", "text")
+    val norm = docs.select(col("doc_id"), TextFunctions.normalized(col("text")).as("t"))
+    for ((family, n, h, b) <- Seq((HashFamily.Xx64, 3, 64, 16),
+        (HashFamily.Md5Portable, 3, 64, 16), (HashFamily.Xx64, 2, 32, 8))) {
+      val bands = Reference.bandSignatures(docs, "doc_id", "text", n, h, b, family)
+      val cands = bands.toDF("doc_a", "band", "key")
+        .join(bands.toDF("doc_b", "band", "key"), Seq("band", "key"))
+        .filter(col("doc_a") < col("doc_b"))
+        .select("doc_a", "doc_b").distinct()
+      // exact Jaccard of the candidates' shingle sets
+      val sets = TextFunctions.shingleTable(docs, "doc_id", "text", n, family)
+        .groupBy("doc_id").agg(collect_set("shingle").as("s"))
+      val refJaccard = cands
+        .join(sets.toDF("doc_a", "sa"), "doc_a").join(sets.toDF("doc_b", "sb"), "doc_b")
+        .select(col("doc_a"), col("doc_b"), (size(array_intersect(col("sa"), col("sb")))
+          .cast("double") / size(array_union(col("sa"), col("sb")))).as("j"))
+        .filter(col("j") >= 0.4)
+        .select(col("doc_a"), col("doc_b"), gridSnap(col("j"), 6))
+        .as[(Long, Long, Double)].collect().toSet
+      val lsh = Dedup.minhashLshPairs(docs, "doc_id", "text", n, h, b, 0.4, family)
+        .as[(Long, Long, Double)].collect().toSet
+      assert(refJaccard.size >= 50, s"$family n=$n: too few pairs to compare")
+      assert(lsh === refJaccard, s"$family n=$n: ${(lsh -- refJaccard).size} " +
+        s"production-only pairs, ${(refJaccard -- lsh).size} reference-only pairs")
+      // normalized edit similarity of the candidates, no length prefilter
+      val refEdit = cands
+        .join(norm.toDF("doc_a", "ta"), "doc_a").join(norm.toDF("doc_b", "tb"), "doc_b")
+        .select(col("doc_a"), col("doc_b"),
+          greatest(length(col("ta")), length(col("tb"))).as("m"),
+          levenshtein(col("ta"), col("tb")).as("lev"))
+        .select(col("doc_a"), col("doc_b"), when(col("m") === 0, lit(1.0))
+          .otherwise(gridSnap(lit(1.0) - col("lev").cast("double") / col("m"), 6)).as("sim"))
+        .filter(col("sim") >= 0.5)
+        .as[(Long, Long, Double)].collect().toSet
+      val edit = Dedup.editVerifiedPairs(docs, "doc_id", "text", n, h, b, 0.5, family)
+        .as[(Long, Long, Double)].collect().toSet
+      assert(refEdit.size >= 50, s"$family n=$n: too few edit pairs to compare")
+      assert(edit === refEdit, s"$family n=$n: ${(edit -- refEdit).size} " +
+        s"production-only pairs, ${(refEdit -- edit).size} reference-only pairs")
+    }
   }
 
   test("connected components handles string node ids and empty edge lists") {
@@ -416,8 +471,8 @@ class TextOpsSpec extends SparkSpec {
     // ~(10/45)^4 — buckets stay pair-sized, the property that keeps the
     // candidate join subquadratic at 100 TB even on template-heavy crawls
     val docs = zipfBoilerplateDocs(300)
-    val buckets = Dedup.bandSignatures(docs, "doc_id", "text",
-        shingleN = 3, numHashes = 64, bands = 16)
+    val buckets = docs.select(posexplode(MinhashBandKeys.column(col("text"),
+        shingleN = 3, numHashes = 64, bands = 16, HashFamily.Xx64)).as(Seq("band", "key")))
       .groupBy("band", "key").count()
     val maxBucket = buckets.agg(max("count")).as[Long].collect().head
     assert(maxBucket <= 10,
@@ -476,7 +531,7 @@ class TextOpsSpec extends SparkSpec {
       (30L, 31L)) ++ rnd).toDF("a", "b")
     val star = Dedup.connectedComponents(edges, "a", "b")
       .as[(Long, Long)].collect().toMap
-    val prop = Dedup.connectedComponentsPropagate(edges, "a", "b")
+    val prop = Reference.connectedComponentsPropagate(edges, "a", "b")
       .as[(Long, Long)].collect().toMap
     assert(star === prop)
   }
@@ -492,7 +547,7 @@ class TextOpsSpec extends SparkSpec {
     val cc = Dedup.connectedComponents(edges, "a", "b")
       .as[(Long, Long)].collect().toMap
     assert(cc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
-    val prop = Dedup.connectedComponentsPropagate(edges, "a", "b")
+    val prop = Reference.connectedComponentsPropagate(edges, "a", "b")
       .as[(Long, Long)].collect().toMap
     assert(cc === prop)
   }
@@ -504,7 +559,7 @@ class TextOpsSpec extends SparkSpec {
     // safe at scale.
     val chain = (0L until 299L).map(i => (i, i + 1)).toDF("a", "b")
     intercept[IllegalStateException] {
-      Dedup.connectedComponentsPropagate(chain, "a", "b", maxIter = 12)
+      Reference.connectedComponentsPropagate(chain, "a", "b", maxIter = 12)
     }
     val cc = Dedup.connectedComponents(chain, "a", "b", maxIter = 12)
       .as[(Long, Long)].collect()
@@ -516,13 +571,14 @@ class TextOpsSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id").as[Long].collect().toSet
-    val full = ids(Curation.dropNearDuplicates(docs, "doc_id", "text", 3, 0.5,
-      pairStrategy = "full"))
-    val pref = ids(Curation.dropNearDuplicates(docs, "doc_id", "text", 3, 0.5,
-      pairStrategy = "prefix"))
-    assert(full === pref)
-    // and the data-driven default returns the same survivors
-    assert(ids(Curation.dropNearDuplicates(docs, "doc_id", "text", 3, 0.5)) === full)
+    // the survivor rule: drop every clustered doc but its component's minimum
+    def survivors(pairs: org.apache.spark.sql.DataFrame) = ids(docs.join(
+      Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+        .filter(col("node") =!= col("label")).select(col("node").as("doc_id")),
+      Seq("doc_id"), "left_anti"))
+    val kept = ids(Curation.dropNearDuplicates(docs, "doc_id", "text", 3, 0.5))
+    assert(kept === survivors(Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5)))
+    assert(kept === survivors(Dedup.jaccardPairsPrefix(docs, "doc_id", "text", 3, 0.5)))
   }
 
   test("decontamination removes docs overlapping the benchmark, keeps the rest") {

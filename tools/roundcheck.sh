@@ -1,5 +1,6 @@
 #!/usr/bin/env bash
 # One-command round gate — the full local correctness protocol:
+#   0. (informational) the src/main and src/test non-comment LoC
 #   1. unit specs (incl. PartitionInvarianceSpec's 12-family
 #      bit-identical check at two awkward execution configs), then the
 #      benchmark harness's own tests — its build compiles the engine
@@ -20,6 +21,13 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
+
+# Non-comment Scala LoC of the engine and of its specs — the count a
+# change's LoC claim quotes. Informational: it never fails the gate.
+for d in src/main src/test; do
+  echo "roundcheck: $d non-comment LoC" \
+    "$(find "$d" -name '*.scala' -exec cat {} + | grep -cvE '^\s*($|//|\*|/\*\*)' || true)"
+done
 
 sbt -batch test
 (cd perfbench && sbt -batch test)

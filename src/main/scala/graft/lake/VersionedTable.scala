@@ -82,6 +82,21 @@ object VersionedTable {
       .sorted
   }
 
+  /** The `prefix` directories under `root` that `marked` does not name
+    * (data written, marker never created: a crashed or in-flight
+    * write), each with its name's timestamp. Callers pick the dead or
+    * in-flight ones by that timestamp.
+    */
+  private def unmarkedDirs(spark: SparkSession, root: String, prefix: String,
+                           marked: Set[String]): Seq[(String, Long)] = {
+    val rootP = new Path(root)
+    val fs = fsOf(spark, rootP)
+    if (!fs.exists(rootP)) Seq.empty
+    else fs.listStatus(rootP).toSeq.map(_.getPath.getName)
+      .filter(n => n.startsWith(prefix) && !marked.contains(n))
+      .flatMap(n => versionTsOpt(n).map(n -> _))
+  }
+
   def currentVersion(spark: SparkSession, root: String): Option[String] =
     listVersions(spark, root).lastOption
 
@@ -605,15 +620,8 @@ object VersionedTable {
     // immediately after its data write, so an in-flight publish is
     // always the newest timestamp in the root)
     val oldestKept = versions.drop(doomed.length).headOption.map(versionTs)
-    val orphans =
-      if (!fs.exists(rootP)) Seq.empty
-      else {
-        val marked = versions.toSet
-        fs.listStatus(rootP).toSeq.map(_.getPath.getName)
-          .filter(n => n.startsWith(VersionPrefix) && !marked.contains(n))
-          .filter(n => versionTsOpt(n)
-            .exists(ts => oldestKept.exists(ts < _)))
-      }
+    val orphans = unmarkedDirs(spark, root, VersionPrefix, versions.toSet)
+      .collect { case (n, ts) if oldestKept.exists(ts < _) => n }
     orphans.foreach(n => fs.delete(new Path(rootP, n), true))
     doomed ++ orphans
   }
@@ -944,11 +952,8 @@ object VersionedTable {
     val marked = listDeltas(spark, root).toSet
     val newestCommitted = (listVersions(spark, root) ++ marked.toSeq)
       .map(versionTs).foldLeft(Long.MinValue)(math.max)
-    val orphans =
-      if (!fs.exists(rootP)) Seq.empty[String]
-      else fs.listStatus(rootP).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith(DeltaPrefix) && !marked.contains(n))
-        .filter(n => versionTsOpt(n).exists(_ < newestCommitted))
+    val orphans = unmarkedDirs(spark, root, DeltaPrefix, marked)
+      .collect { case (n, ts) if ts < newestCommitted => n }
     orphans.foreach(n => fs.delete(new Path(rootP, n), true))
     dead ++ orphans
   }
@@ -1011,10 +1016,9 @@ object VersionedTable {
       listDeltas(spark, root))
     val newestCommitted =
       committedNames.map(versionTs).foldLeft(Long.MinValue)(math.max)
-    val markedSet = listDeltas(spark, root).toSet
-    val inFlight = fs.listStatus(rootP).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith(DeltaPrefix) && !markedSet.contains(n))
-      .filter(n => versionTsOpt(n).exists(_ >= newestCommitted))
+    val inFlight =
+      unmarkedDirs(spark, root, DeltaPrefix, listDeltas(spark, root).toSet)
+        .collect { case (n, ts) if ts >= newestCommitted => n }
     if (inFlight.nonEmpty) {
       System.err.println(
         s"[graft] REFUSING segment merge at $root: unmarked delta " +
@@ -1275,12 +1279,9 @@ object VersionedTable {
       fs.delete(new Path(rootP, s"$MarkerPrefix$d"), false)
       fs.delete(new Path(rootP, d), true)
     }
-    val marked = listDeltas(spark, root).toSet
     val orphans =
-      if (!fs.exists(rootP)) Seq.empty[String]
-      else fs.listStatus(rootP).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith(DeltaPrefix) && !marked.contains(n))
-        .filter(n => versionTsOpt(n).exists(_ <= horizon))
+      unmarkedDirs(spark, root, DeltaPrefix, listDeltas(spark, root).toSet)
+        .collect { case (n, ts) if ts <= horizon => n }
     orphans.foreach(n => fs.delete(new Path(rootP, n), true))
     dead ++ orphans
   }

@@ -52,7 +52,7 @@ object Streaming {
       .parquet(segments.map(d => s"$storePath/$d"): _*))
   }
 
-  /** Default batch-side row cap for the STORE-SHUFFLE-FREE probe the
+  /** Batch-side row cap for the STORE-SHUFFLE-FREE probe the
     * stateful dedup/novelty steps use (r16): when the batch's key
     * relation fits, the store probe runs as
     * store-scan ⋈ broadcast(batch) — the store streams through a
@@ -67,7 +67,7 @@ object Streaming {
 
   /** [[ProbeBroadcastMaxRows]] for the semantic-dedup probe, whose
     * batch rows carry a d-double embedding each — 8d bytes/row against
-    * the band probe's ~16, hence the smaller default.
+    * the band probe's ~16, hence the smaller cap.
     */
   val ProbeBroadcastMaxVecRows: Long = 250000L
 
@@ -397,8 +397,9 @@ object Streaming {
     *      near-duplicate of earlier-admitted content or of a batch-mate;
     *   3. takes the survivors from the materialized batch (an anti-join
     *      against the dropped ids, broadcast below
-    *      `probeBroadcastMaxRows`), and their bands from the same rows'
-    *      band arrays, and appends those bands to the pruned store —
+    *      [[ProbeBroadcastMaxRows]] band rows), and their bands from
+    *      the same rows' band arrays, and appends those bands to the
+    *      pruned store —
     *      the same horizon trade `dropDuplicatesWithinWatermark` makes,
     *      so state is bounded by construction: `bands` rows per
     *      admitted document within the retention window, regardless of
@@ -449,13 +450,10 @@ object Streaming {
                          numHashes: Int = 64, bands: Int = 16,
                          family: graft.textops.HashFamily =
                            graft.textops.HashFamily.Xx64,
-                         probeBroadcastMaxRows: Long =
-                           ProbeBroadcastMaxRows,
                          maxSegments: Int = 0): DataFrame =
     retentionStep(batch, storePath, maxSegments) { segments =>
       nearDedupBatchCompute(batch, idCol, textCol, tsCol, storePath,
-        retention, shingleN, numHashes, bands, family, segments,
-        probeBroadcastMaxRows)
+        retention, shingleN, numHashes, bands, family, segments)
     }
 
   /** The decision half of [[nearDedupBatchStep]] ([[StoreDecision]]
@@ -471,9 +469,7 @@ object Streaming {
                                     bands: Int,
                                     family: graft.textops.HashFamily =
                                       graft.textops.HashFamily.Xx64,
-                                    deltaPaths: Seq[String] = Nil,
-                                    probeBroadcastMaxRows: Long =
-                                      ProbeBroadcastMaxRows)
+                                    deltaPaths: Seq[String] = Nil)
       : StoreDecision = {
     import org.apache.spark.sql.types._
     val spark = batch.sparkSession
@@ -517,7 +513,7 @@ object Streaming {
     // store-shuffle-free probe (see [[storeProbe]]): the matched keys
     // only, each carried into the decision window as a hit flag
     val hits = storeProbe(liveStore.select("band", "key"), Seq("band", "key"),
-      bandRows.select("band", "key"), nBandRows, probeBroadcastMaxRows,
+      bandRows.select("band", "key"), nBandRows, ProbeBroadcastMaxRows,
       "left_semi")
     val idType = bandRows.schema(idCol).dataType
     val w = Window.partitionBy("band", "key")
@@ -529,7 +525,7 @@ object Streaming {
       .where(!col("_hit") && col("_drop"))
       .select(col(idCol))
     val survivorsBanded = banded.join(
-        if (nBandRows <= probeBroadcastMaxRows) broadcast(dropped) else dropped,
+        if (nBandRows <= ProbeBroadcastMaxRows) broadcast(dropped) else dropped,
         Seq(idCol), "left_anti")
       .localCheckpoint()
     val survivors = survivorsBanded.drop("_nd_bands")
@@ -897,8 +893,8 @@ object Streaming {
     * shingle's clock. Every stage is an equi-join or
     * aggregation on the 8-byte shingle hash; the 1-row horizon
     * aggregate rides a broadcast join, and below
-    * `probeBroadcastMaxRows` batch shingles the store probe broadcasts
-    * the BATCH side ([[ProbeBroadcastMaxRows]]) — the store streams
+    * [[ProbeBroadcastMaxRows]] batch shingles the store probe broadcasts
+    * the BATCH side — the store streams
     * through the join unshuffled, so a non-republish batch's only
     * store-wide work is one scan. Returns the admitted rows with
     * a `novelty` column; the new store version publishes via the same
@@ -917,13 +913,10 @@ object Streaming {
                            shingleN: Int = 3,
                            family: graft.textops.HashFamily =
                              graft.textops.HashFamily.Xx64,
-                           probeBroadcastMaxRows: Long =
-                             ProbeBroadcastMaxRows,
                            maxSegments: Int = 0): DataFrame =
     retentionStep(batch, storePath, maxSegments) { segments =>
       noveltyGateBatchCompute(batch, idCol, textCol, tsCol, storePath,
-        minNovelty, retention, shingleN, family, segments,
-        probeBroadcastMaxRows)
+        minNovelty, retention, shingleN, family, segments)
     }
 
   /** The decision half of [[noveltyGateBatchStep]] ([[StoreDecision]]
@@ -937,9 +930,7 @@ object Streaming {
                                       retention: String, shingleN: Int,
                                       family: graft.textops.HashFamily =
                                         graft.textops.HashFamily.Xx64,
-                                      deltaPaths: Seq[String] = Nil,
-                                      probeBroadcastMaxRows: Long =
-                                        ProbeBroadcastMaxRows)
+                                      deltaPaths: Seq[String] = Nil)
       : StoreDecision = {
     import org.apache.spark.sql.types._
     require(minNovelty >= 0 && minNovelty <= 1,
@@ -978,7 +969,7 @@ object Streaming {
     // per (id, shingle), and distinct-counting absorbs the duplicate
     // store shingles a delta overlay can carry in either join shape.
     val seen = storeProbe(liveStore.select("shingle"), Seq("shingle"),
-        sh, nShingleRows, probeBroadcastMaxRows)
+        sh, nShingleRows, ProbeBroadcastMaxRows)
       .groupBy(col(idCol)).agg(countDistinct(col("shingle")).as("_seen"))
     val scored = sh.groupBy(col(idCol)).agg(count(lit(1)).as("_nsh"))
       .join(seen, Seq(idCol), "left")
@@ -1014,7 +1005,9 @@ object Streaming {
     * state publish re-scores the batch against its OWN admitted
     * shingles — near-zero novelty drops everything re-scorable, and
     * the null-novelty shingle-less documents that re-admit land on
-    * their existing sink keys as no-op upserts. Read the sink with
+    * their existing sink keys as no-op upserts. The sink lands one
+    * delta per batch and folds its overlay once [[SinkCompactAt]] are
+    * pending ([[morUpsertStep]]). Read the sink with
     * `VersionedTable.readCurrentMerged(spark, admittedPath, Seq(idCol))`.
     *
     * SINGLE WRITER: one running query per (`storePath`, `admittedPath`)
@@ -1026,22 +1019,19 @@ object Streaming {
   def noveltyGateWriter(docs: DataFrame, idCol: String, textCol: String,
                         tsCol: String, storePath: String,
                         admittedPath: String, minNovelty: Double,
-                        retention: String = "1 hour",
-                        compactEvery: Int = 10, shingleN: Int = 3,
+                        retention: String = "1 hour", shingleN: Int = 3,
                         family: graft.textops.HashFamily =
                           graft.textops.HashFamily.Xx64,
-                        probeBroadcastMaxRows: Long = ProbeBroadcastMaxRows,
                         maxSegments: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     requireMaxSegments(maxSegments)
     docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
+      (batch: DataFrame, _: Long) =>
         retentionStep(batch, storePath, maxSegments,
-            morUpsertStep(_, Seq(idCol), admittedPath, batchId, compactEvery)) {
+            morUpsertStep(_, Seq(idCol), admittedPath)) {
           segments =>
             noveltyGateBatchCompute(batch, idCol, textCol, tsCol, storePath,
-              minNovelty, retention, shingleN, family, segments,
-              probeBroadcastMaxRows)
+              minNovelty, retention, shingleN, family, segments)
         }
         ()
     }
@@ -1072,7 +1062,9 @@ object Streaming {
     * keeps the per-batch sink cost O(batch): the previous copy-on-write
     * upsert re-read and re-wrote the whole survivors table every
     * micro-batch — quadratic total write amplification on a
-    * long-running stream. Read the sink with
+    * long-running stream. The sink lands one delta per batch and folds
+    * its overlay once [[SinkCompactAt]] are pending
+    * ([[morUpsertStep]]). Read the sink with
     * `VersionedTable.readCurrentMerged(spark, survivorsPath, Seq(idCol))`.
     *
     * SINGLE WRITER: one running query per (`storePath`,
@@ -1083,23 +1075,20 @@ object Streaming {
     */
   def nearDedupWriter(docs: DataFrame, idCol: String, textCol: String,
                       tsCol: String, storePath: String, survivorsPath: String,
-                      retention: String = "1 hour", compactEvery: Int = 10,
-                      shingleN: Int = 3,
+                      retention: String = "1 hour", shingleN: Int = 3,
                       numHashes: Int = 64, bands: Int = 16,
                       family: graft.textops.HashFamily =
                         graft.textops.HashFamily.Xx64,
-                      probeBroadcastMaxRows: Long = ProbeBroadcastMaxRows,
                       maxSegments: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     requireMaxSegments(maxSegments)
     docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
+      (batch: DataFrame, _: Long) =>
         retentionStep(batch, storePath, maxSegments,
-            morUpsertStep(_, Seq(idCol), survivorsPath, batchId, compactEvery)) {
+            morUpsertStep(_, Seq(idCol), survivorsPath)) {
           segments =>
             nearDedupBatchCompute(batch, idCol, textCol, tsCol, storePath,
-              retention, shingleN, numHashes, bands, family, segments,
-              probeBroadcastMaxRows)
+              retention, shingleN, numHashes, bands, family, segments)
         }
         ()
     }
@@ -1110,26 +1099,23 @@ object Streaming {
     * [[graft.lake.VersionedTable.upsertBatch]]'s copy-on-write rewrite
     * per micro-batch would dominate. First batch bootstraps the base
     * (with `statsColumns` if given); every later batch is an O(batch)
-    * [[graft.lake.VersionedTable.appendDelta]]; every `compactEvery`-th
-    * batch folds the overlay back into a base. Crash points converge
-    * under Spark's batch redelivery exactly like the delta contract:
-    * a re-delivered batch lands as an identical-content delta and the
-    * newest-wins merge is unchanged; a crash before/after compaction
-    * only moves WHEN the fold happens, never what the merged view
-    * reads. Read the sink with
-    * `VersionedTable.readCurrentMerged(spark, root, keys)`.
+    * [[graft.lake.VersionedTable.appendDelta]]; once [[SinkCompactAt]]
+    * deltas are pending the overlay folds back into a base
+    * ([[morUpsertStep]]). Crash points converge under Spark's batch
+    * redelivery exactly like the delta contract: a re-delivered batch
+    * lands as an identical-content delta and the newest-wins merge is
+    * unchanged; a crash before/after compaction only moves WHEN the
+    * fold happens, never what the merged view reads. Read the sink
+    * with `VersionedTable.readCurrentMerged(spark, root, keys)`.
     */
   def morUpsertWriter(df: DataFrame, keys: Seq[String], root: String,
-                      compactEvery: Int = 10,
                       statsColumns: Seq[String] = Nil)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(compactEvery != 0, "compactEvery must be positive (or negative to disable)")
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        morUpsertStep(batch, keys, root, batchId, compactEvery, statsColumns)
+      (batch: DataFrame, _: Long) =>
+        morUpsertStep(batch, keys, root, statsColumns)
         ()
     }
-  }
 
   /** Canonical `_params` rendering of a MOR table's merge-key SET —
     * order-insensitive (the pin guards WHICH keys merge, not the order
@@ -1149,37 +1135,46 @@ object Streaming {
   private[graft] def morKeyParamsLegacy(keys: Seq[String]): Seq[String] =
     Seq(s"morUpsert;keys=${keys.mkString(",")}")
 
-  /** One merge-on-read upsert step — the shared O(batch) sink body of
-    * [[morUpsertWriter]] and both dedup writers' survivors sinks:
-    * bootstrap-publish on an empty root (loud on a legacy layout),
-    * delta-append otherwise, fold the overlay every `compactEvery`
-    * batches.
+  /** Pending-delta count at which a merge-on-read sink folds its
+    * overlay ([[morUpsertStep]]). A sink that lands one delta per batch
+    * bootstraps at batch 0 and folds at batches 10, 20, …
     */
-  private[graft] def morUpsertStep(batch: DataFrame, keys: Seq[String],
-                                   root: String, batchId: Long,
-                                   compactEvery: Int,
-                                   statsColumns: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    val versioned = graft.lake.VersionedTable.isVersioned(spark, root)
-    // reject a legacy unversioned layout BEFORE the key pin stamps its
-    // sidecar: the guard's own contract is that refused data is never
-    // modified, and the stamp is a write into that directory
-    if (!versioned)
-      graft.lake.VersionedTable.requireVersionedOrEmpty(spark, root)
+  private val SinkCompactAt = 10
+
+  /** One merge-on-read sink step — the shared body of
+    * [[morUpsertWriter]], [[morCdcWriter]] and the retention writers'
+    * survivors/admitted sinks: pin the merge keys
+    * ([[graft.lake.VersionedTable.requireParams]], which refuses a
+    * legacy unversioned layout before it writes the pin), publish
+    * `ups` as the base on an empty root or append it as a delta
+    * otherwise (`upsertDelta = false` skips an empty CDC upsert half),
+    * append `deletes` as a tombstone delta AFTER it, then fold the
+    * overlay once [[SinkCompactAt]] deltas are pending. Counting
+    * deltas rather than batches sizes the fold by the overlay a merged
+    * read pays for: a redelivered batch adds its deltas again, and a
+    * CDC batch with both halves adds two.
+    */
+  private[graft] def morUpsertStep(ups: DataFrame, keys: Seq[String],
+                                   root: String,
+                                   statsColumns: Seq[String] = Nil,
+                                   deletes: Option[DataFrame] = None,
+                                   upsertDelta: Boolean = true): Unit = {
+    import graft.lake.VersionedTable
+    val spark = ups.sparkSession
     // the merge KEYS are state-shaping for a MOR table: a later writer
     // with a different key set silently changes which rows win the
     // newest-per-key merge and what compaction folds — pin them like
-    // the monitor stores' parameters (same string as morCdcWriter:
-    // CDC and plain upsert share one key contract per table)
-    graft.lake.VersionedTable.requireParams(spark, root,
+    // the monitor stores' parameters (CDC and plain upsert share one
+    // key contract per table)
+    VersionedTable.requireParams(spark, root,
       morKeyParams(keys), legacy = morKeyParamsLegacy(keys))
-    if (!versioned)
-      graft.lake.VersionedTable.publish(batch, root,
-        statsColumns = statsColumns)
-    else
-      graft.lake.VersionedTable.appendDelta(batch, root)
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      graft.lake.VersionedTable.compactDeltas(spark, root, keys)
+    if (!VersionedTable.isVersioned(spark, root))
+      VersionedTable.publish(ups, root, statsColumns = statsColumns)
+    else if (upsertDelta)
+      VersionedTable.appendDelta(ups, root)
+    deletes.foreach(VersionedTable.appendDeleteDelta(_, root))
+    if (VersionedTable.pendingDeltas(spark, root).size >= SinkCompactAt)
+      VersionedTable.compactDeltas(spark, root, keys)
   }
 
   /** `foreachBatch` CDC-apply sink: a change stream whose rows carry an
@@ -1191,56 +1186,38 @@ object Streaming {
     * batch ends deleted. Callers whose source can emit several changes
     * per key per batch should collapse to the last change upstream
     * (the per-delta unique-key contract); a monotonic change-sequence
-    * column plus a max_by pre-aggregation is the usual shape. Every
-    * `compactEvery`-th batch folds the overlay (tombstones become
-    * physical removals there). Redelivery converges: re-running a
-    * batch appends identical deltas in the same order. This is the
-    * streaming face of [[graft.lake.LakeStorage.applyChanges]] — the
-    * same upsert/delete semantics, landing incrementally instead of
-    * recomputing, with the delete cost O(changed) rather than
-    * O(table).
+    * column plus a max_by pre-aggregation is the usual shape. Once
+    * [[SinkCompactAt]] deltas are pending the overlay folds
+    * (tombstones become physical removals there; [[morUpsertStep]]).
+    * Redelivery converges: re-running a batch appends identical deltas
+    * in the same order. This is the streaming face of
+    * [[graft.lake.LakeStorage.applyChanges]] — the same upsert/delete
+    * semantics, landing incrementally instead of recomputing, with the
+    * delete cost O(changed) rather than O(table).
     */
   def morCdcWriter(df: DataFrame, keys: Seq[String], root: String,
                    opCol: String = "op", deleteOp: String = "D",
-                   compactEvery: Int = 10,
                    statsColumns: Seq[String] = Nil)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(compactEvery != 0, "compactEvery must be positive (or negative to disable)")
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val versioned = graft.lake.VersionedTable.isVersioned(spark, root)
-        // legacy-layout rejection BEFORE the key-pin write, as in
-        // morUpsertStep; same key pinning (one contract per table)
-        if (!versioned)
-          graft.lake.VersionedTable.requireVersionedOrEmpty(spark, root)
-        graft.lake.VersionedTable.requireParams(spark, root,
-          morKeyParams(keys), legacy = morKeyParamsLegacy(keys))
+      (batch: DataFrame, _: Long) =>
         // materialize the change batch ONCE: the op-split filters, the
         // emptiness decisions, and the delta writes all read the same
         // blocks instead of re-scanning the source up to four times
         val b = batch.localCheckpoint()
         // null op never equals deleteOp (null-safe) → treated as upsert
-        val ups = b.where(!(col(opCol) <=> lit(deleteOp))).drop(opCol)
-        val dels = b.where(col(opCol) <=> lit(deleteOp))
-          .select(keys.map(col): _*)
+        val isDel = col(opCol) <=> lit(deleteOp)
         // both emptiness decisions in ONE job over the cached blocks
-        val cnts = b.agg(
-          count(when(!(col(opCol) <=> lit(deleteOp)), 1)).as("nu"),
-          count(when(col(opCol) <=> lit(deleteOp), 1)).as("nd")).head()
+        val cnts = b.agg(count(when(!isDel, 1)).as("nu"),
+          count(when(isDel, 1)).as("nd")).head()
         val (nUps, nDels) = (cnts.getLong(0), cnts.getLong(1))
-        if (!versioned)
-          graft.lake.VersionedTable.publish(ups, root,
-            statsColumns = statsColumns)
-        else if (nUps > 0)
-          graft.lake.VersionedTable.appendDelta(ups, root)
-        if (nDels > 0)
-          graft.lake.VersionedTable.appendDeleteDelta(dels, root)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          graft.lake.VersionedTable.compactDeltas(spark, root, keys)
+        morUpsertStep(b.where(!isDel).drop(opCol), keys, root, statsColumns,
+          deletes =
+            if (nDels > 0) Some(b.where(isDel).select(keys.map(col): _*))
+            else None,
+          upsertDelta = nUps > 0)
         ()
     }
-  }
 
   /** Stream-stream interval join — the genuinely-streaming join the
     * reference's architecture cannot express (its "streams" are DB
@@ -1334,8 +1311,8 @@ object Streaming {
     * bucketed pair work, which the QUANTIZER bounds (grow the centroid
     * set with the corpus — free under `_qfp`).
     *
-    * Below `probeBroadcastMaxRows` batch vectors the store probe
-    * broadcasts the BATCH side ([[ProbeBroadcastMaxVecRows]]): the
+    * Below [[ProbeBroadcastMaxVecRows]] batch vectors the store probe
+    * broadcasts the BATCH side: the
     * store streams through the join unshuffled — the shuffled shape
     * would exchange the store on `bucket`, a k-value key whose
     * partitions carry whole buckets (skew by construction).
@@ -1352,13 +1329,11 @@ object Streaming {
                              bucketCol: String, centroidVecCol: String,
                              threshold: Double, storePath: String,
                              retention: String = "1 hour",
-                             probeBroadcastMaxRows: Long =
-                               ProbeBroadcastMaxVecRows,
                              maxSegments: Int = 0): DataFrame =
     retentionStep(batch, storePath, maxSegments) { segments =>
       semanticDedupBatchCompute(batch, idCol, vecCol, tsCol, centroids,
         bucketCol, centroidVecCol, threshold, storePath, retention,
-        segments, probeBroadcastMaxRows)
+        segments)
     }
 
   /** Decision half of [[semanticDedupBatchStep]] ([[StoreDecision]]
@@ -1373,9 +1348,7 @@ object Streaming {
                                         centroidVecCol: String,
                                         threshold: Double, storePath: String,
                                         retention: String,
-                                        deltaPaths: Seq[String] = Seq.empty,
-                                        probeBroadcastMaxRows: Long =
-                                          ProbeBroadcastMaxVecRows)
+                                        deltaPaths: Seq[String] = Seq.empty)
       : StoreDecision = {
     import org.apache.spark.sql.types._
     val spark = batch.sparkSession
@@ -1473,7 +1446,7 @@ object Streaming {
     // at all. The per-pair cosine is the identical expression either
     // way, and `dropped`'s distinct absorbs overlay duplicates.
     val vsStore = storeProbe(liveStore.select(col("bucket"), col("_svec")),
-        Seq("bucket"), vecs, nVecRows, probeBroadcastMaxRows)
+        Seq("bucket"), vecs, nVecRows, ProbeBroadcastMaxVecRows)
       .filter(cos(col("_v"), col("_svec")) >= threshold)
       .select(col(idCol))
     val vsBatch = vecs.select(col("bucket"), col(idCol).as("_a"), col("_v").as("_va"))
@@ -1513,8 +1486,10 @@ object Streaming {
 
   /** `foreachBatch` wrapper over the semantic batch step — same
     * crash-consistent sink-before-state ordering as [[nearDedupWriter]]
-    * (see its scaladoc for the three-case convergence argument). Read
-    * the sink with `VersionedTable.readCurrent(spark, survivorsPath)`.
+    * (see its scaladoc for the three-case convergence argument), and
+    * the same sink fold once [[SinkCompactAt]] deltas are pending. Read
+    * the sink with
+    * `VersionedTable.readCurrentMerged(spark, survivorsPath, Seq(idCol))`.
     *
     * SINGLE WRITER: one running query per (`storePath`,
     * `survivorsPath`) pair — the [[graft.lake.VersionedTable]] contract
@@ -1527,20 +1502,17 @@ object Streaming {
                           bucketCol: String, centroidVecCol: String,
                           threshold: Double, storePath: String,
                           survivorsPath: String, retention: String = "1 hour",
-                          compactEvery: Int = 10,
-                          probeBroadcastMaxRows: Long =
-                            ProbeBroadcastMaxVecRows,
                           maxSegments: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     requireMaxSegments(maxSegments)
     rows.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
+      (batch: DataFrame, _: Long) =>
         retentionStep(batch, storePath, maxSegments,
-            morUpsertStep(_, Seq(idCol), survivorsPath, batchId, compactEvery)) {
+            morUpsertStep(_, Seq(idCol), survivorsPath)) {
           segments =>
             semanticDedupBatchCompute(batch, idCol, vecCol, tsCol, centroids,
               bucketCol, centroidVecCol, threshold, storePath, retention,
-              segments, probeBroadcastMaxRows)
+              segments)
         }
         ()
     }
@@ -1622,17 +1594,4 @@ object Streaming {
           storePath, batchId = Some(batchId))
         ()
     }
-
-  /** Idempotent micro-batch sink (T5/T6): upsert each batch into a
-    * manifest-versioned parquet table by key — re-delivered batches
-    * converge to the same state. Persistence is
-    * [[graft.lake.VersionedTable.upsertBatch]]: each batch publishes a
-    * new immutable version committed by marker creation, so concurrent
-    * readers (`VersionedTable.readCurrent(spark, path)`) always resolve
-    * a complete version — the delete-then-rename swap window of the old
-    * implementation is gone structurally, not retried around.
-    */
-  def upsertBatchToParquet(spark: SparkSession, batch: DataFrame, keys: Seq[String],
-                           path: String): Unit =
-    graft.lake.VersionedTable.upsertBatch(spark, batch, keys, path)
 }

@@ -732,12 +732,12 @@ class StreamingSpec extends SparkSpec {
     // key set would silently change the newest-wins merge
     val mor = dir + "/mor"
     Streaming.morUpsertStep(Seq((1L, "a")).toDF("k", "v"), Seq("k"),
-      mor, batchId = 0L, compactEvery = 10)
+      mor)
     Streaming.morUpsertStep(Seq((1L, "b")).toDF("k", "v"), Seq("k"),
-      mor, batchId = 1L, compactEvery = 10)
+      mor)
     val e3 = intercept[IllegalStateException] {
       Streaming.morUpsertStep(Seq((1L, "c")).toDF("k", "v"), Seq("k", "v"),
-        mor, batchId = 2L, compactEvery = 10)
+        mor)
     }
     assert(e3.getMessage.contains("keys=1:k") &&
       e3.getMessage.contains("keys=1:k;1:v"))
@@ -751,15 +751,15 @@ class StreamingSpec extends SparkSpec {
     // different order are the same merge contract
     val ab = dir + "/ab"
     Streaming.morUpsertStep(Seq((1L, 2L, "a")).toDF("k1", "k2", "v"),
-      Seq("k1", "k2"), ab, batchId = 0L, compactEvery = 10)
+      Seq("k1", "k2"), ab)
     Streaming.morUpsertStep(Seq((1L, 2L, "b")).toDF("k1", "k2", "v"),
-      Seq("k2", "k1"), ab, batchId = 1L, compactEvery = 10)
+      Seq("k2", "k1"), ab)
     // (2) a single raw-header key literally named "k1,k2" is a
     // DIFFERENT contract than keys k1+k2 — the r15 comma-join
     // fingerprint collided exactly here
     val eComma = intercept[IllegalStateException] {
       Streaming.morUpsertStep(Seq((3L, "c")).toDF("k1,k2", "v"),
-        Seq("k1,k2"), ab, batchId = 2L, compactEvery = 10)
+        Seq("k1,k2"), ab)
     }
     assert(eComma.getMessage.contains("5:k1,k2"))
     // (3) a store stamped with the r15 comma format is refreshed in
@@ -767,7 +767,7 @@ class StreamingSpec extends SparkSpec {
     // store rebase — while a genuinely different key set still rejects
     val legacy = dir + "/legacy"
     Streaming.morUpsertStep(Seq((1L, 2L, "a")).toDF("k1", "k2", "v"),
-      Seq("k1", "k2"), legacy, batchId = 0L, compactEvery = 10)
+      Seq("k1", "k2"), legacy)
     val sidecar = java.nio.file.Paths.get(legacy, VersionedTable.ParamsFile)
     // overwrite through the Hadoop FS (not raw NIO) so the local
     // filesystem's .crc sidecar stays consistent with the new bytes
@@ -778,12 +778,12 @@ class StreamingSpec extends SparkSpec {
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
     Streaming.morUpsertStep(Seq((1L, 2L, "b")).toDF("k1", "k2", "v"),
-      Seq("k1", "k2"), legacy, batchId = 1L, compactEvery = 10)
+      Seq("k1", "k2"), legacy)
     assert(new String(java.nio.file.Files.readAllBytes(sidecar),
       java.nio.charset.StandardCharsets.UTF_8) === "morUpsert;keys=2:k1;2:k2")
     intercept[IllegalStateException] {
       Streaming.morUpsertStep(Seq((1L, "c")).toDF("k1", "v"),
-        Seq("k1"), legacy, batchId = 2L, compactEvery = 10)
+        Seq("k1"), legacy)
     }
   }
 
@@ -796,7 +796,7 @@ class StreamingSpec extends SparkSpec {
     Seq((1L, "x")).toDF("k", "v").write.parquet(root)
     intercept[IllegalArgumentException] {
       Streaming.morUpsertStep(Seq((2L, "y")).toDF("k", "v"), Seq("k"),
-        root, batchId = 0L, compactEvery = 10)
+        root)
     }
     // the refusal must leave the refused data untouched: no _params
     // sidecar may have landed before the layout check fired
@@ -929,12 +929,12 @@ class StreamingSpec extends SparkSpec {
     // attempt 1: sink commit succeeds, state publish never happens
     val surv1 = Streaming.nearDedupBatchCompute(batch, "doc_id", "text",
       "ts", store, "1 hour", 3, 64, 16).out
-    Streaming.morUpsertStep(surv1, Seq("doc_id"), sink, 0L, 10)
+    Streaming.morUpsertStep(surv1, Seq("doc_id"), sink)
     assert(!graft.lake.VersionedTable.isVersioned(spark, store)) // "crashed"
     // attempt 2 (re-delivery): the full writer step runs to completion
     val d2 = Streaming.nearDedupBatchCompute(batch, "doc_id",
       "text", "ts", store, "1 hour", 3, 64, 16)
-    Streaming.morUpsertStep(d2.out, Seq("doc_id"), sink, 0L, 10)
+    Streaming.morUpsertStep(d2.out, Seq("doc_id"), sink)
     graft.lake.VersionedTable.publish(d2.folded, store)
     val out = graft.lake.VersionedTable
       .readCurrentMerged(spark, sink, Seq("doc_id"))
@@ -945,7 +945,7 @@ class StreamingSpec extends SparkSpec {
     val surv3 = Streaming.nearDedupBatchCompute(batch, "doc_id", "text",
       "ts", store, "1 hour", 3, 64, 16).out
     assert(surv3.isEmpty)
-    Streaming.morUpsertStep(surv3, Seq("doc_id"), sink, 0L, 10)
+    Streaming.morUpsertStep(surv3, Seq("doc_id"), sink)
     val out3 = graft.lake.VersionedTable
       .readCurrentMerged(spark, sink, Seq("doc_id"))
       .select("doc_id").as[Long].collect().sorted
@@ -1003,13 +1003,13 @@ class StreamingSpec extends SparkSpec {
           "1 hour", 3, 64, 16, deltaPaths = segs)
       def step(id: Int) =
         Streaming.retentionStep(df(batches(id)), store, 2,
-            Streaming.morUpsertStep(_, Seq("doc_id"), sink, id.toLong, 10)) {
+            Streaming.morUpsertStep(_, Seq("doc_id"), sink)) {
           segs => compute(batches(id), segs)
         }.select("doc_id").as[Long].collect().toSet
       (0 to 2).foreach(step)
       // attempt 1 of batch 3: the sink commits, then the crash
       val d = compute(batches(3), VersionedTable.pendingDeltas(spark, store))
-      Streaming.morUpsertStep(d.out, Seq("doc_id"), sink, 3L, 10)
+      Streaming.morUpsertStep(d.out, Seq("doc_id"), sink)
       if (appended) {
         VersionedTable.appendDeltaStamped(d.segment, store, d.bounds._1)
         assert(VersionedTable.pendingDeltas(spark, store).size === 3,
@@ -1200,12 +1200,12 @@ class StreamingSpec extends SparkSpec {
     // attempt 1: sink commit succeeds, state publish never happens
     val adm1 = Streaming.noveltyGateBatchCompute(batch, "doc_id",
       "text", "ts", store, 0.5, "10 days", 3).out
-    Streaming.morUpsertStep(adm1, Seq("doc_id"), sink, 0L, 10)
+    Streaming.morUpsertStep(adm1, Seq("doc_id"), sink)
     assert(!graft.lake.VersionedTable.isVersioned(spark, store)) // "crashed"
     // attempt 2 (re-delivery): the full writer step runs to completion
     val d2 = Streaming.noveltyGateBatchCompute(batch, "doc_id",
       "text", "ts", store, 0.5, "10 days", 3)
-    Streaming.morUpsertStep(d2.out, Seq("doc_id"), sink, 0L, 10)
+    Streaming.morUpsertStep(d2.out, Seq("doc_id"), sink)
     graft.lake.VersionedTable.publish(d2.folded, store)
     val out = graft.lake.VersionedTable
       .readCurrentMerged(spark, sink, Seq("doc_id"))
@@ -1216,7 +1216,7 @@ class StreamingSpec extends SparkSpec {
     // re-admits (null novelty) and lands on its existing key
     val adm3 = Streaming.noveltyGateBatchCompute(batch, "doc_id",
       "text", "ts", store, 0.5, "10 days", 3).out
-    Streaming.morUpsertStep(adm3, Seq("doc_id"), sink, 0L, 10)
+    Streaming.morUpsertStep(adm3, Seq("doc_id"), sink)
     assert(adm3.select("doc_id").as[Long].collect().toSeq === Seq(2L))
     val out3 = graft.lake.VersionedTable
       .readCurrentMerged(spark, sink, Seq("doc_id"))
@@ -1332,9 +1332,9 @@ class StreamingSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/t"
     val b1 = Seq((1L, "a"), (2L, "b")).toDF("event_id", "v")
     val b2 = Seq((2L, "B"), (3L, "c")).toDF("event_id", "v")
-    Streaming.upsertBatchToParquet(spark, b1, Seq("event_id"), path)
-    Streaming.upsertBatchToParquet(spark, b2, Seq("event_id"), path)
-    Streaming.upsertBatchToParquet(spark, b2, Seq("event_id"), path) // redelivery
+    graft.lake.VersionedTable.upsertBatch(spark, b1, Seq("event_id"), path)
+    graft.lake.VersionedTable.upsertBatch(spark, b2, Seq("event_id"), path)
+    graft.lake.VersionedTable.upsertBatch(spark, b2, Seq("event_id"), path) // redelivery
     val out = graft.lake.VersionedTable.readCurrent(spark, path)
       .as[(Long, String)].collect().toMap
     assert(out === Map(1L -> "a", 2L -> "B", 3L -> "c"))
@@ -1380,7 +1380,7 @@ class StreamingSpec extends SparkSpec {
     val q = input.toDF()
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        Streaming.upsertBatchToParquet(spark, batch.toDF(), Seq("event_id"), path)
+        graft.lake.VersionedTable.upsertBatch(spark, batch.toDF(), Seq("event_id"), path)
       }
       .start()
     input.addData(ev(1, "2024-01-01 10:00:00", "click", 1.0))
@@ -1482,14 +1482,19 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_mor_sink").toString
     val root = dir + "/table"
     val q = Streaming.morUpsertWriter(
-        input.toDF().toDF("k", "v"), Seq("k"), root, compactEvery = 2)
+        input.toDF().toDF("k", "v"), Seq("k"), root)
       .option("checkpointLocation", dir + "/chk").start()
     input.addData((1L, "a"), (2L, "b"))          // batch 0: bootstrap base
     q.processAllAvailable()
     input.addData((2L, "B"), (3L, "c"))          // batch 1: delta
     q.processAllAvailable()
     assert(graft.lake.VersionedTable.pendingDeltas(spark, root).length === 1)
-    input.addData((3L, "C"), (4L, "d"))          // batch 2: delta + compaction
+    (2 to 9).foreach { _ =>                      // batches 2-9: deltas 2-9
+      input.addData((2L, "B"), (3L, "c"))
+      q.processAllAvailable()
+    }
+    assert(graft.lake.VersionedTable.pendingDeltas(spark, root).length === 9)
+    input.addData((3L, "C"), (4L, "d"))          // batch 10: delta 10 + compaction
     q.processAllAvailable()
     q.stop()
     // compaction folded the overlay: the BASE alone carries the fold
@@ -1506,7 +1511,7 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_morcdc").toString
     val root = dir + "/table"
     val q = Streaming.morCdcWriter(
-        input.toDF().toDF("k", "v", "op"), Seq("k"), root, compactEvery = 2)
+        input.toDF().toDF("k", "v", "op"), Seq("k"), root)
       .option("checkpointLocation", dir + "/chk").start()
     input.addData((1L, "a", "I"), (2L, "b", "I"))       // batch 0: bootstrap
     q.processAllAvailable()
@@ -1519,8 +1524,16 @@ class StreamingSpec extends SparkSpec {
       .readCurrentMerged(spark, root, Seq("k"))
       .as[(Long, String)].collect().toMap
     assert(merged === Map(2L -> "B", 3L -> "c"))
-    // batch 2: re-insert a deleted key, delete an inserted one; batchId
-    // 2 triggers compaction → tombstones become physical removals
+    // batches 2-4 restate both halves of batch 1: deltas 3-8
+    (2 to 4).foreach { _ =>
+      input.addData((2L, "B", "U"), (3L, "c", "I"), (1L, "", "D"))
+      q.processAllAvailable()
+    }
+    assert(graft.lake.VersionedTable.pendingDeltas(spark, root).length === 8)
+    assert(merged === Map(2L -> "B", 3L -> "c"))
+    // batch 5: re-insert a deleted key, delete an inserted one; its two
+    // deltas make 10 pending, which triggers compaction → tombstones
+    // become physical removals
     input.addData((1L, "A", "I"), (3L, "", "D"))
     q.processAllAvailable()
     q.stop()
@@ -1530,6 +1543,40 @@ class StreamingSpec extends SparkSpec {
     // the bare base never carries the reserved tombstone flag
     assert(!graft.lake.VersionedTable.readCurrent(spark, root)
       .columns.contains(graft.lake.VersionedTable.TombstoneCol))
+  }
+
+  test("MOR sink compaction rule: the 10th pending delta folds, a redelivery and each CDC half count") {
+    import graft.lake.VersionedTable
+    val root = java.nio.file.Files.createTempDirectory("graft_morrule").toString + "/t"
+    def pending = VersionedTable.pendingDeltas(spark, root).size
+    def upsert(k: Long, v: String) =
+      Streaming.morUpsertStep(Seq((k, v)).toDF("k", "v"), Seq("k"), root)
+    def cdc(k: Long, v: String, del: Option[Long], upsertDelta: Boolean = true) =
+      Streaming.morUpsertStep(Seq((k, v)).toDF("k", "v"), Seq("k"), root,
+        deletes = del.map(d => Seq(d).toDF("k")), upsertDelta = upsertDelta)
+    upsert(0L, "a")                              // bootstrap: no delta
+    assert(pending === 0)
+    (1 to 9).foreach { i => upsert(i.toLong, "a"); assert(pending === i) }
+    val before = VersionedTable.currentVersion(spark, root)
+    upsert(10L, "a")                             // the 10th delta folds
+    assert(pending === 0)
+    assert(VersionedTable.currentVersion(spark, root) !== before)
+    assert(VersionedTable.readCurrent(spark, root).count() === 11L)
+    // a redelivered batch lands again and counts again
+    upsert(1L, "b"); upsert(1L, "b")
+    assert(pending === 2)
+    // a CDC batch with both halves adds two, a delete-only one adds one
+    cdc(2L, "b", del = Some(3L))
+    assert(pending === 4)
+    cdc(4L, "unused", del = Some(5L), upsertDelta = false) // 4 keeps "a"
+    assert(pending === 5)
+    (6 to 8).foreach(i => upsert(i.toLong, "b"))
+    assert(pending === 8)
+    cdc(9L, "b", del = Some(10L))                // 8 + 2: folds
+    assert(pending === 0)
+    assert(VersionedTable.readCurrent(spark, root).as[(Long, String)].collect().toMap ===
+      Map(0L -> "a", 1L -> "b", 2L -> "b", 4L -> "a", 6L -> "b", 7L -> "b",
+        8L -> "b", 9L -> "b"))
   }
 
   test("real ImageIO decode produces luminance histograms from generated PNGs") {

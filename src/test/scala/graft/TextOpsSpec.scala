@@ -273,6 +273,11 @@ class TextOpsSpec extends SparkSpec {
     val fullS = key(Dedup.jaccardPairs(syn, "doc_id", "text", 3, 0.3))
     val prefS = key(Dedup.jaccardPairsPrefix(syn, "doc_id", "text", 3, 0.3))
     assert(prefS === fullS && fullS.nonEmpty)
+    // a pair at exactly J = 0.4 (3 vs 4 trigrams, 2 shared) is kept
+    val edge = Seq((1L, "a b c d e"), (2L, "a b c d x y")).toDF("doc_id", "text")
+    val fullE = key(Dedup.jaccardPairs(edge, "doc_id", "text", 3, 0.4))
+    assert(key(Dedup.jaccardPairsPrefix(edge, "doc_id", "text", 3, 0.4)) === fullE)
+    assert(fullE === Set((1L, 2L, 0.4)))
   }
 
   test("dropNearDuplicates keeps the min-id survivor of each near-dup cluster") {
@@ -389,7 +394,19 @@ class TextOpsSpec extends SparkSpec {
     val twins = texts.zipWithIndex.collect {
       case (t, i) if i % 5 == 0 && t != null => (10000L + i, t + " naïve")
     }
-    val docs = (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++ twins)
+    // pairs exactly at a verify threshold, which `>=` keeps and `>`
+    // drops; the token tags are chosen so that every pair is an LSH
+    // candidate in all three configs (asserted below)
+    def toks(tag: String, k: Int) = (0 until k).map(j => s"$tag$j").mkString(" ")
+    val atJ3 = (20001L, 20002L)  // 3 vs 4 trigrams, 2 shared: J = 2/5
+    val atJ2 = (20003L, 20004L)  // 4 vs 3 bigrams, 2 shared: J = 2/5
+    val atEdit = (20005L, 20006L) // b = a + |a| more chars: sim = 1/2
+    val edgeDocs = Seq(
+      atJ3._1 -> toks("j150w", 5), atJ3._2 -> s"${toks("j150w", 4)} ${toks("j150u", 2)}",
+      atJ2._1 -> toks("b3390v", 5), atJ2._2 -> s"${toks("b3390v", 3)} b3390x0",
+      atEdit._1 -> toks("e00001a", 8),
+      atEdit._2 -> s"${toks("e00001a", 8)} ${toks("e00001s", 7)} e00001t")
+    val docs = (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++ twins ++ edgeDocs)
       .toDF("doc_id", "text")
     val norm = docs.select(col("doc_id"), TextFunctions.normalized(col("text")).as("t"))
     for ((family, n, h, b) <- Seq((HashFamily.Xx64, 3, 64, 16),
@@ -399,6 +416,8 @@ class TextOpsSpec extends SparkSpec {
         .join(bands.toDF("doc_b", "band", "key"), Seq("band", "key"))
         .filter(col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b").distinct()
+      val candSet = cands.as[(Long, Long)].collect().toSet
+      assert(Seq(atJ3, atJ2, atEdit).forall(candSet), s"$family n=$n: a threshold pair is no candidate")
       // exact Jaccard of the candidates' shingle sets
       val sets = TextFunctions.shingleTable(docs, "doc_id", "text", n, family)
         .groupBy("doc_id").agg(collect_set("shingle").as("s"))
@@ -412,6 +431,8 @@ class TextOpsSpec extends SparkSpec {
       val lsh = Dedup.minhashLshPairs(docs, "doc_id", "text", n, h, b, 0.4, family)
         .as[(Long, Long, Double)].collect().toSet
       assert(refJaccard.size >= 50, s"$family n=$n: too few pairs to compare")
+      val atJ = if (n == 3) atJ3 else atJ2
+      assert(refJaccard((atJ._1, atJ._2, 0.4)), s"$family n=$n: the J = 0.4 pair is missing")
       assert(lsh === refJaccard, s"$family n=$n: ${(lsh -- refJaccard).size} " +
         s"production-only pairs, ${(refJaccard -- lsh).size} reference-only pairs")
       // normalized edit similarity of the candidates, no length prefilter
@@ -427,6 +448,7 @@ class TextOpsSpec extends SparkSpec {
       val edit = Dedup.editVerifiedPairs(docs, "doc_id", "text", n, h, b, 0.5, family)
         .as[(Long, Long, Double)].collect().toSet
       assert(refEdit.size >= 50, s"$family n=$n: too few edit pairs to compare")
+      assert(refEdit((atEdit._1, atEdit._2, 0.5)), s"$family n=$n: the sim = 0.5 pair is missing")
       assert(edit === refEdit, s"$family n=$n: ${(edit -- refEdit).size} " +
         s"production-only pairs, ${(refEdit -- edit).size} reference-only pairs")
     }

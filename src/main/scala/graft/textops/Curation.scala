@@ -99,8 +99,11 @@ object Curation {
     *
     * Same determinism contract as [[graft.operators.Sampling.withSplit]]
     * (pure function of content-derived keys — layout/engine/run
-    * invariant); the cluster pass adds the pair-generation + CC cost,
-    * which a pipeline doing near-dedup anyway already paid.
+    * invariant). The cluster pass costs the pair generation at
+    * `threshold` plus the components: a pair graph of at most 2^17
+    * edges is finished on the driver in one collect, so on a curation
+    * corpus the pair join is nearly the whole cost; larger graphs pay
+    * the star rounds ([[Dedup.connectedComponents]]).
     */
   def clusterSafeSplit(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3, threshold: Double = 0.5,

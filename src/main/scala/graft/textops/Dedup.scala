@@ -1,8 +1,13 @@
 package graft.textops
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.core.Observed
 import graft.functions.StableMath.gridSnap
 
 /** Deduplication operators for large-scale training-data pipelines.
@@ -15,9 +20,58 @@ import graft.functions.StableMath.gridSnap
   *
   * All are pure DataFrame plans: every stage is a hash shuffle on a
   * well-distributed key (fingerprint / shingle / band key / chunk), so
-  * they scale horizontally; nothing is ever collected to the driver.
+  * they scale horizontally. One bounded driver finish decides from a
+  * count the plan has already observed: [[connectedComponents]]
+  * collects an edge relation of at most `LocalFinishMaxEdges` rows,
+  * and nothing above that bound is ever collected.
   */
 object Dedup {
+
+  /** Edge count at or below which [[connectedComponents]] finishes on
+    * the driver: 2^17, the largest graph whose driver finish was
+    * measured (a 2^17-edge chain, SCALING.md), not a guess at what a
+    * driver could hold.
+    */
+  private val LocalFinishMaxEdges: Long = 1L << 17
+
+  /** The driver order of a node type, equal to Spark's `<` on it:
+    * ints and longs by value, binary-collated strings by their UTF-8
+    * bytes. Other types have none and stay on the Spark path.
+    */
+  private def driverOrdering(dt: DataType): Option[Ordering[Any]] = dt match {
+    case LongType => Some(Ordering.by[Any, Long](_.asInstanceOf[Long]))
+    case IntegerType => Some(Ordering.by[Any, Int](_.asInstanceOf[Int]))
+    case st: StringType if st == StringType =>
+      Some(Ordering.by[Any, UTF8String](v => UTF8String.fromString(v.asInstanceOf[String])))
+    case _ => None
+  }
+
+  /** Union-find on the driver over collected (a, b) rows, the smaller
+    * node always the root: (node, component minimum) for every non-null
+    * endpoint. A row with a null end links nothing — the canonical edge
+    * filter of [[connectedComponents]] drops it too.
+    */
+  private def componentMinima(rows: Array[Row], ord: Ordering[Any]): Iterator[(Any, Any)] = {
+    val index = mutable.HashMap.empty[Any, Int]
+    val value = mutable.ArrayBuffer.empty[Any]
+    val parent = mutable.ArrayBuffer.empty[Int]
+    def add(v: Any): Int = index.getOrElseUpdate(v, {
+      parent += value.length; value += v; value.length - 1 })
+    def find(i: Int): Int = {
+      var j = i
+      while (parent(j) != j) { parent(j) = parent(parent(j)); j = parent(j) }
+      j
+    }
+    rows.foreach { r =>
+      val ends = Seq(r.get(0), r.get(1)).filter(_ != null).map(add)
+      if (ends.length == 2) {
+        val (ra, rb) = (find(ends(0)), find(ends(1)))
+        if (ord.lt(value(ra), value(rb))) parent(rb) = ra
+        else if (ra != rb) parent(ra) = rb
+      }
+    }
+    value.indices.iterator.map(i => (value(i), value(find(i))))
+  }
 
   /** Exact duplicate groups by canonical content hash: one map-side
     * partial count + one shuffle keyed on the 128-bit fingerprint.
@@ -470,33 +524,72 @@ object Dedup {
     * (string ids included); self-loop-only nodes label themselves via
     * the final node-relation join.
     *
+    * Small graphs finish on the driver instead (Shark's partial DAG
+    * execution: the plan follows a statistic observed at run time).
+    * The edge checkpoint observes its row count for free; when it is
+    * at or below `LocalFinishMaxEdges` (2^17) and the node type has a
+    * driver order (ints, longs, binary-collated strings), the edges
+    * are collected in one job, finished by union-find with the smaller
+    * id as root, and returned as a local relation — a curation chain's
+    * few hundred near-duplicate pairs cost one collect instead of the
+    * rounds' jobs. A larger graph runs the star rounds to convergence;
+    * nothing above the bound is ever collected. The driver result
+    * equals the rounds' labels and schema (spec-pinned at bound 0 and
+    * the default).
+    *
     * Returns (node, label) where label = min node id in the component.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 20): DataFrame = {
+                          maxIter: Int = 20): DataFrame =
+    connectedComponents(edges, srcCol, dstCol, maxIter, LocalFinishMaxEdges)
+
+  /** [[connectedComponents]] with the driver-finish bound as a
+    * parameter: `localMaxEdges = 0` runs the star rounds on every
+    * non-empty graph.
+    */
+  private[graft] def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
+                                         maxIter: Int, localMaxEdges: Long): DataFrame = {
     // Materialize the (possibly expensive) edge derivation exactly
     // ONCE — `nodes` and `e` both consume it, and a Jaccard/LSH pair
-    // generation feeding this must not run twice.
+    // generation feeding this must not run twice. Its row count rides
+    // the checkpoint as an observation and decides the driver finish.
+    val obsEnds = Observation()
     val ends = edges
       .select(col(srcCol).as("a"), col(dstCol).as("b"))
+      .observe(obsEnds, count(lit(1)).as("n"))
       .localCheckpoint()
     val nodes = ends.select(col("a").as("node"))
       .unionByName(ends.select(col("b").as("node")))
       .distinct()
     // canonical (hi > lo) edge set; self-loops carry no connectivity.
-    // Edge-set size rides the checkpoint as an observation (r19): the
-    // fixpoint test next == e needs |next| == |e| every candidate
-    // round, and the initial isEmpty is the same metric — zero
-    // standalone count jobs.
-    val obs0 = org.apache.spark.sql.Observation()
-    var e = ends
+    val canonical = ends
       .where(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("hi"),
         least(col("a"), col("b")).as("lo"))
       .distinct()
+    def labelled(e: DataFrame): DataFrame = nodes
+      .join(e.select(col("hi").as("node"), col("lo").as("_lbl")), Seq("node"), "left")
+      .select(col("node"), coalesce(col("_lbl"), col("node")).as("label"))
+    val nodeType = nodes.schema.head.dataType
+    val ord = driverOrdering(nodeType)
+    if (ord.isDefined &&
+        Observed.long(obsEnds, "n", "connectedComponents").getOrElse(0L) <= localMaxEdges) {
+      // every node, self-loop-only and null ones included, comes out of
+      // the collected ends; the null node, as in the rounds, labels itself
+      val collected = ends.select(col("a").cast(nodeType), col("b").cast(nodeType)).collect()
+      val rows = componentMinima(collected, ord.get).map { case (v, root) => Row(v, root) } ++
+        (if (collected.exists(_.anyNull)) Iterator(Row(null, null)) else Iterator.empty)
+      return edges.sparkSession.createDataFrame(rows.toSeq.asJava, labelled(canonical).schema)
+    }
+    // Edge-set size rides the checkpoint as an observation (r19): the
+    // fixpoint test next == e needs |next| == |e| every candidate
+    // round, and the initial isEmpty is the same metric — zero
+    // standalone count jobs.
+    val obs0 = Observation()
+    var e = canonical
       .observe(obs0, count(lit(1)).as("n"))
       .localCheckpoint()
-    var eCount = graft.core.Observed.long(obs0, "n", "connectedComponents").getOrElse(0L)
+    var eCount = Observed.long(obs0, "n", "connectedComponents").getOrElse(0L)
     var converged = eCount == 0L
     var i = 0
     while (!converged && i < maxIter) {
@@ -551,9 +644,7 @@ object Dedup {
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge within $maxIter rounds " +
         "(pathological topology) — raise maxIter")
-    nodes
-      .join(e.select(col("hi").as("node"), col("lo").as("_lbl")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("_lbl"), col("node")).as("label"))
+    labelled(e)
   }
 
   /** 64-bit SimHash per document: each token hash votes ±1 on each bit;

@@ -291,9 +291,11 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("connected components refuses to return partially-propagated labels") {
+    // bound 0: a graph this small would otherwise finish on the driver
+    // before any round runs
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b")
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, "a", "b", maxIter = 1)
+      Dedup.connectedComponents(chain, "a", "b", maxIter = 1, localMaxEdges = 0L)
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -578,15 +580,53 @@ class TextOpsSpec extends SparkSpec {
     // a 300-node chain: diameter 299. The propagation form cannot finish
     // in 12 rounds; star contraction converges comfortably within them —
     // the structural guarantee that makes chain-shaped near-dup graphs
-    // safe at scale.
+    // safe at scale. Bound 0 keeps the chain off the driver finish.
     val chain = (0L until 299L).map(i => (i, i + 1)).toDF("a", "b")
     intercept[IllegalStateException] {
       Reference.connectedComponentsPropagate(chain, "a", "b", maxIter = 12)
     }
-    val cc = Dedup.connectedComponents(chain, "a", "b", maxIter = 12)
+    val cc = Dedup.connectedComponents(chain, "a", "b", maxIter = 12, localMaxEdges = 0L)
       .as[(Long, Long)].collect()
     assert(cc.length === 300)
     assert(cc.forall(_._2 === 0L)) // one component, min label 0
+  }
+
+  test("connected components' driver finish equals the rounds") {
+    val rnd = (0 until 60).map { i =>
+      (100L + (i * 2654435761L) % 40, 100L + (i * 40503L + 7) % 40)
+    }
+    val mixed = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L), (10L, 12L),
+      (11L, 12L), (20L, 21L), (20L, 22L), (20L, 23L), (30L, 31L)) ++ rnd
+    val forest = Seq((1L, 4L), (2L, 4L), (2L, 3L))
+    val loops = Seq((1L, 1L), (2L, 3L), (3L, 3L), (4L, 4L), (3L, 2L))
+    // U+FFFD sorts below U+1F600 in UTF-8 bytes (Spark's order) but
+    // above its UTF-16 surrogates (java.lang.String's)
+    val strings = Seq(("a", "b"), ("b", "c"), ("x", "y"), ("é", "b"), ("q", "q"),
+      ("\uD83D\uDE00", "\uFFFD"))
+    val withNull = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (null, 3L), (3L, null), (4L, 4L), (2L, 5L))
+    val graphs = Seq(
+      ("mixed", mixed.toDF("a", "b")),
+      ("star forest", forest.toDF("a", "b")),
+      ("self-loops", loops.toDF("a", "b")),
+      ("string ids", strings.toDF("a", "b")),
+      ("empty", Seq.empty[(Long, Long)].toDF("a", "b")),
+      ("null id", withNull.toDF("a", "b")))
+    for ((name, edges) <- graphs) {
+      // the propagation reference lets a null node take a neighbour's
+      // label; the rounds never link a null endpoint, so it labels itself
+      val expected = Reference.connectedComponentsPropagate(edges, "a", "b").collect()
+        .map(r => if (r.isNullAt(0)) org.apache.spark.sql.Row(null, null) else r).toSet
+      val rounds = Dedup.connectedComponents(edges, "a", "b", maxIter = 20, localMaxEdges = 0L)
+      assert(rounds.collect().toSet === expected, s"$name: rounds")
+      // the default bound finishes every graph here on the driver: its
+      // labels are a local relation, never the rounds' join plan
+      val cc = Dedup.connectedComponents(edges, "a", "b")
+      assert(cc.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation], name)
+      assert(cc.schema === rounds.schema, s"$name: schema")
+      assert(cc.collect().toSet === expected, s"$name: driver finish")
+    }
   }
 
   test("dropNearDuplicates yields the same survivors with either pair generator") {

@@ -1,6 +1,7 @@
 package graft
 import graft.Harness.fmt
 import graft.core.GraftSession
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Dev tool (guide §1: measure first): run ONE bench entry and print a
@@ -48,12 +49,14 @@ object Profile {
     val fn = SparkEntry.benchQueries(name)
     (1 to Harness.repeat).foreach { r =>
       lines.clear(); taskTimeMs = 0L
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       var n = 0L
       val sec = Harness.timeMin(s"[profile] $name", 1)(_ => n = fn(spark, sfDir).count())
       Thread.sleep(300) // let the listener bus drain the final job-end
       lines.forEach(println(_))
       println(s"[profile] $name rep=$r rows=$n " +
         s"time=${sec.fold("failed")(fmt(_) + "s")} jobs=${lines.size} " +
+        s"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0} " +
         s"executorRunTime=${fmt(taskTimeMs / 1e3, 1)}s")
     }
     spark.stop()

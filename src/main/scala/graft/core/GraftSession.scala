@@ -16,6 +16,9 @@ import org.apache.spark.sql.SparkSession
   * [[graft.lake.GraftRawLocalFileSystem]] through both Hadoop client
   * APIs, so local writes and streaming checkpoint commits start no
   * `chmod` or `readlink` process (`HarnessSpec` pins the resolution).
+  * Every session carries [[graft.functions.GraftExtensions]]: the
+  * engine's SQL functions, and filter literals held in codegen
+  * reference slots so a new key compiles no new class.
   */
 object GraftSession {
   def builder(appName: String = "graft", cores: Int = defaultCores): SparkSession.Builder =
@@ -29,6 +32,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(localFs.map { case (k, v) => s"spark.hadoop.$k" -> v })
+      .withExtensions(new graft.functions.GraftExtensions)
 
   /** The Hadoop settings that resolve `file:` to the graft local
     * filesystem, for `FileSystem.get` and for `FileContext`.

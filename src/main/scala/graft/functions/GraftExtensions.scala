@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graftbridge.RegistryBridge
 
 /** The engine's native Catalyst expressions as SQL functions.
   *
@@ -50,23 +49,17 @@ object GraftSqlFunctions {
         require(k >= 0 && k <= 12, s"grid_snap scale $k outside [0,12]")
         k
       }))))
-
-  /** Register into a live session (tests, notebooks). Sessions built
-    * from scratch should use [[GraftExtensions]] via the
-    * `spark.sql.extensions` conf instead.
-    */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (id, info, b) =>
-      RegistryBridge.registerFunction(spark, id, info, b)
-    }
 }
 
-/** `SparkSessionExtensions` hook: build sessions with
+/** `SparkSessionExtensions` hook: the engine's SQL functions and the
+  * [[StableFilterLiterals]] physical rule. `GraftSession.builder`
+  * installs it; other sessions build with
   * `.withExtensions(new GraftExtensions)` or set
-  * `spark.sql.extensions=graft.functions.GraftExtensions` to get the
-  * engine's SQL functions in every session of the application.
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftSqlFunctions.all.foreach(ext.injectFunction)
+    ext.injectColumnar(_ => StableFilterLiteralsRule)
+  }
 }

@@ -14,16 +14,3 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
-
-/** Bridge to the session's `private[sql]` function registry, so the
-  * engine's native expressions can be registered as SQL functions in an
-  * ALREADY-BUILT session (tests, notebooks). New sessions should prefer
-  * the public path: `spark.sql.extensions=graft.functions.GraftExtensions`.
-  */
-object RegistryBridge {
-  def registerFunction(spark: org.apache.spark.sql.SparkSession,
-                       id: org.apache.spark.sql.catalyst.FunctionIdentifier,
-                       info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-}

@@ -1,14 +1,15 @@
 package graft
 
-import graft.functions.{GraftExtensions, GraftSqlFunctions}
+import graft.functions.GraftExtensions
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** The custom expressions exposed as SQL functions. */
+/** The custom expressions exposed as SQL functions, in every session
+  * `GraftSession` builds.
+  */
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("registered SQL functions evaluate the native expressions") {
-    GraftSqlFunctions.register(spark)
     val dot = spark.sql(
       "SELECT float_vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
@@ -30,7 +31,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("grid_snap SQL form: ties, non-finite passthrough, numeric implicit cast") {
-    GraftSqlFunctions.register(spark)
     // the canonical 6-dp tie (see StableMathSpec): binary value sits
     // BELOW its rendered tie, so the snap rounds down where round()
     // rounds up
@@ -64,7 +64,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("SQL form matches the Column API form on real data") {
-    GraftSqlFunctions.register(spark)
     val df = Seq("hello world", "Hello  World", "").toDF("t")
     df.createOrReplaceTempView("_ext_t")
     val viaSql = spark.sql("SELECT string_poly_hash(t) AS h FROM _ext_t")

@@ -2,11 +2,10 @@ package graft
 
 import graft.core.GraftSession
 import java.nio.file.{Files, Path, Paths}
-import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Pins the timing mains' shared contract without starting Spark (the
-  * mains call `spark.stop()`, so no spec may run one):
+/** Pins the timing mains' shared contract (the mains call
+  * `spark.stop()`, so no spec may run one):
   *
   *  - the engine has one session factory — the plan a bench times runs
   *    under the SQL config `Verify` checks against the oracle — and
@@ -14,9 +13,10 @@ import scala.jdk.CollectionConverters._
   *  - one failure rule for every timed cell: a cell with any failed rep
   *    is failed, never timed, and a fatal error ends the run;
   *  - the session's `file:` scheme is the graft local filesystem, for
-  *    both `FileSystem.get` and `FileContext`.
+  *    both `FileSystem.get` and `FileContext`;
+  *  - every session the factory builds carries `GraftExtensions`.
   */
-class HarnessSpec extends AnyFunSuite {
+class HarnessSpec extends SparkSpec {
 
   private val mainSources: Seq[(Path, String)] = {
     val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
@@ -50,6 +50,16 @@ class HarnessSpec extends AnyFunSuite {
       .isInstanceOf[graft.lake.GraftLocalFileSystem])
     assert(org.apache.hadoop.fs.FileContext.getFileContext(file, conf).getDefaultFileSystem
       .isInstanceOf[graft.lake.GraftLocalFs])
+  }
+
+  test("GraftSession.builder installs GraftExtensions: SQL functions and the filter-literal rule") {
+    // a new session takes its functions and rules from the extensions
+    // its factory installed, not from a register call on an older one
+    val fresh = spark.newSession()
+    assert(fresh.sql("SELECT grid_snap(7, 2)").head().getDouble(0) === 7.0)
+    val rules = fresh.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.columnarRules
+    assert(rules.contains(graft.functions.StableFilterLiteralsRule))
   }
 
   test("a cell whose last rep throws is failed, not timed") {

@@ -96,6 +96,39 @@ class StreamingSpec extends SparkSpec {
     q.stop()
   }
 
+  test("nearDedupWriter compiles no class per steady batch while event time advances") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, Timestamp, String)]
+    val dir = java.nio.file.Files.createTempDirectory("graft_neardedup_codegen").toString
+    val q = Streaming.nearDedupWriter(input.toDF().toDF("doc_id", "ts", "text"),
+        "doc_id", "text", "ts", dir + "/store", dir + "/survivors", retention = "30 minutes")
+      .option("checkpointLocation", dir + "/chk").start()
+    def text(tag: String) = (0 until 20).map(j => s"$tag$j").mkString(" ")
+    def near(tag: String) = text(tag).replaceFirst("\\w+$", "omega")
+    val t0 = Timestamp.valueOf("2024-01-01 10:00:00").getTime
+    // every batch: two fresh documents, a near copy of the last batch's
+    // first one and an in-batch near copy of its second; event time
+    // advances 10 minutes a batch, so the horizon moves and old bands
+    // expire from the fourth batch on
+    def batch(b: Int) = Seq((1, text(s"x$b")), (2, text(s"y$b")),
+        (3, near(s"x${b - 1}")), (4, near(s"y$b")))
+      .map { case (k, txt) => (b * 10L + k, new Timestamp(t0 + b * 600000L + k * 1000L), txt) }
+    val perBatch = try (0 until 8).map { b =>
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      input.addData(batch(b): _*)
+      q.processAllAvailable()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    } finally q.stop()
+    assert(perBatch.drop(2).forall(_ == 0), s"classes compiled per batch: $perBatch")
+    // the writer still decides: batch 0 keeps all but the twin, later
+    // batches keep their two fresh documents
+    val kept = graft.lake.VersionedTable
+      .readCurrentMerged(spark, dir + "/survivors", Seq("doc_id"))
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(kept === Seq(1L, 2L, 3L) ++ (1 until 8).flatMap(b => Seq(b * 10L + 1, b * 10L + 2)))
+  }
+
   test("streaming near-dedup drops cross-batch near-duplicates and expires old state") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp, String)]

@@ -238,7 +238,6 @@ class TrainPrepSpec extends SparkSpec {
   }
 
   test("nfc_normalize is callable from SQL via GraftExtensions") {
-    graft.functions.GraftSqlFunctions.register(spark)
     val out = spark.sql("SELECT nfc_normalize('cafe\u0301') AS n")
       .as[String].head()
     assert(out == "caf\u00e9")

@@ -142,12 +142,12 @@ object Pipeline {
 
       // 4. warehouse: publish the star's core once — both dimensions,
       //    then the ownership fact built from the PUBLISHED dims, each
-      //    read back with its known schema — and serve the views, the
-      //    gate and the derived tables from it
+      //    read back with the schema its marker records — and serve the
+      //    views, the gate and the derived tables from it
       def published(df: DataFrame, table: String): DataFrame = {
         val root = s"$lakeRoot/warehouse/$table"
         VersionedTable.publish(df, root)
-        VersionedTable.readCurrent(spark, root, df.schema)
+        VersionedTable.readCurrent(spark, root)
       }
       val dims = StarSchema.dimensions(cleaned)
       val dimBusiness = async(published(dims("dim_business"), "dim_business"))

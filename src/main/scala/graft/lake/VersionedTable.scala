@@ -3,6 +3,8 @@ package graft.lake
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SchemaBridge
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Manifest-pointer publish for plain-parquet datasets — the engine's
   * substitute for a transactional table format's snapshot swap, closing
@@ -13,8 +15,19 @@ import org.apache.spark.sql.functions._
   * Layout (all under one table root):
   * {{{
   *   <root>/v-<ts>-<token>/part-*.parquet   immutable version directory
-  *   <root>/_ready-v-<ts>-<token>           zero-byte publish marker
+  *   <root>/_ready-v-<ts>-<token>           publish marker = manifest
+  *   <root>/d-<ts>-<token>/part-*.parquet   delta (merge-on-read layer)
+  *   <root>/_ready-d-<ts>-<token>           its marker
   * }}}
+  *
+  * A marker holds one JSON object: the layer's schema as written
+  * (`{"schema": <StructType JSON>}`, nullable — what parquet inference
+  * returns), plus `"maxTs": <ms>` on a stamped segment
+  * ([[appendDeltaStamped]]). Every read takes its schema from the
+  * marker, so no read runs a footer-inference job; an empty or
+  * unparsable marker (a table written before markers carried a
+  * manifest, a reader racing the commit's write, a damaged file) falls
+  * back to inference, loudly, and is never read as an empty schema.
   *
   * The commit primitive is FILE CREATION, not pointer overwrite: a
   * version becomes visible the instant its `_ready-` marker appears in
@@ -226,32 +239,90 @@ object VersionedTable {
     }
   }
 
-  /** Read the current version. Fails (like any read of an absent
-    * dataset) when nothing has been published.
+  /** Read the current version with the schema its marker records —
+    * no schema-inference job, so building the read runs no Spark job.
+    * Fails (like any read of an absent dataset) when nothing has been
+    * published.
     */
   def readCurrent(spark: SparkSession, root: String): DataFrame =
     currentVersion(spark, root) match {
-      case Some(v) => spark.read.parquet(new Path(root, v).toString)
+      case Some(v) => scanLayers(spark, root, Seq(v))
       case None => throw new IllegalStateException(
         s"no published version at $root")
     }
 
-  /** [[readCurrent]] with the caller's KNOWN schema enforced on the
-    * scan (r19, guide §1.2/§6): the schema-less form runs a
-    * footer-sampling schema-inference job per read — pure driver
-    * latency on a hot per-batch path (and a round trip per store read
-    * on object stores). Columns absent from a file read as null, the
-    * standard Spark contract the semantic store's pre-`_qfp` fallback
-    * already leaned on.
+  /** What a commit marker records (see the layout above). */
+  private final case class Marker(schema: StructType, maxTs: Option[Long])
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Create layer `name`'s marker with its manifest — the one
+    * `fs.create` that commits the layer (atomic visibility; an object
+    * store's single PUT carries the content with it).
     */
-  def readCurrent(spark: SparkSession, root: String,
-                  schema: org.apache.spark.sql.types.StructType): DataFrame =
-    currentVersion(spark, root) match {
-      case Some(v) =>
-        spark.read.schema(schema).parquet(new Path(root, v).toString)
-      case None => throw new IllegalStateException(
-        s"no published version at $root")
-    }
+  private def commitMarker(fs: FileSystem, rootP: Path, name: String,
+                           schema: StructType,
+                           maxTs: Option[Long] = None): Unit = {
+    val stamp = maxTs.fold("")(ms => s""""maxTs":$ms,""")
+    val json = SchemaBridge.asNullable(schema).json
+    val out = fs.create(new Path(rootP, s"$MarkerPrefix$name"), false)
+    try out.write(s"""{$stamp"schema":$json}"""
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** Layer `name`'s marker, or None when it is empty or unreadable or
+    * does not parse: reads then infer the schema from the files and
+    * segment expiry skips the layer, both LOUDLY rather than throwing —
+    * one bad marker must not permanently fail every later read or
+    * maintenance call against the store.
+    */
+  private def readMarker(fs: FileSystem, rootP: Path,
+                         name: String): Option[Marker] = {
+    val p = new Path(rootP, s"$MarkerPrefix$name")
+    val parsed = scala.util.Try {
+      val in = fs.open(p)
+      val node = try Json.readTree(in) finally in.close()
+      Marker(DataType.fromJson(node.get("schema").toString)
+        .asInstanceOf[StructType], Option(node.get("maxTs")).map(_.asText.toLong))
+    }.toOption
+    if (parsed.isEmpty)
+      System.err.println(s"[graft] empty or unparsable commit marker $p — " +
+        "reads infer the schema from its files and segment expiry skips " +
+        "it; republish, or delete the segment dir, to clear this warning")
+    parsed
+  }
+
+  /** One parquet scan over `files` (default: every file of the layers
+    * `names`) with the union of those layers' marker schemas. A layer
+    * whose marker is unusable sends the scan to inference — merging
+    * footers when it spans several layers, since deltas may widen the
+    * schema and one file's footer would drop a column.
+    */
+  private[graft] def scanLayers(spark: SparkSession, root: String,
+                                names: Seq[String],
+                                files: Seq[String] = Nil): DataFrame = {
+    val rootP = new Path(root)
+    val fs = fsOf(spark, rootP)
+    val paths =
+      if (files.nonEmpty) files else names.map(n => new Path(rootP, n).toString)
+    val schemas = names.map(n => readMarker(fs, rootP, n).map(_.schema))
+    if (schemas.forall(_.isDefined))
+      spark.read.schema(schemas.flatten.reduce { (a, b) =>
+        StructType(a ++ b.filterNot(f => a.fieldNames.contains(f.name)))
+      }).parquet(paths: _*)
+    else spark.read.option("mergeSchema", names.size > 1).parquet(paths: _*)
+  }
+
+  /** A delta's segment-expiry stamp ([[appendDeltaStamped]]) from its
+    * marker: None for an un-stamped delta and, loudly, for an unusable
+    * marker.
+    */
+  private[graft] def segmentStamp(spark: SparkSession, root: String,
+                                  delta: String): Option[Long] = {
+    val rootP = new Path(root)
+    readMarker(fsOf(spark, rootP), rootP, delta).flatMap(_.maxTs)
+  }
 
   /** Constraint-gated publish: evaluate declarative
     * [[graft.ingest.Expectations]] constraints over the batch and
@@ -294,7 +365,7 @@ object VersionedTable {
   def readVersion(spark: SparkSession, root: String, version: String): DataFrame = {
     require(listVersions(spark, root).contains(version),
       s"$version is not a published version of $root (vacuumed, mid-publish, or never existed)")
-    spark.read.parquet(new Path(root, version).toString)
+    scanLayers(spark, root, Seq(version))
   }
 
   /** Millisecond timestamp embedded in a version or delta name; None
@@ -379,10 +450,9 @@ object VersionedTable {
       else inheritedStatsSpec(spark, root)
     df.write.mode("errorifexists").parquet(versionPath)
     if (statsCols.nonEmpty || bloomCols.nonEmpty)
-      writeFileStats(spark, versionPath, statsCols, bloomCols,
+      writeFileStats(spark, versionPath, df.schema, statsCols, bloomCols,
         bloomExpectedItems, bloomFpp)
-    val marker = new Path(rootP, s"$MarkerPrefix$version")
-    fs.create(marker, false).close() // atomic visibility = the commit
+    commitMarker(fs, rootP, version, df.schema)
     vacuum(spark, root, keepVersions)
     version
   }
@@ -512,11 +582,12 @@ object VersionedTable {
     * never a full-row read.
     */
   private def writeFileStats(spark: SparkSession, versionPath: String,
+                             schema: StructType,
                              statsColumns: Seq[String],
-                             bloomColumns: Seq[String] = Nil,
-                             bloomExpectedItems: Long = 100000L,
-                             bloomFpp: Double = 0.01): Unit = {
-    val written = spark.read.parquet(versionPath)
+                             bloomColumns: Seq[String],
+                             bloomExpectedItems: Long,
+                             bloomFpp: Double): Unit = {
+    val written = spark.read.schema(schema).parquet(versionPath)
     val missing = (statsColumns ++ bloomColumns).filterNot(written.columns.contains)
     require(missing.isEmpty, s"stats columns absent from data: $missing")
     bloomColumns.foreach { c =>
@@ -589,16 +660,35 @@ object VersionedTable {
   def readCurrentWhere(spark: SparkSession, root: String,
                        preds: Seq[SkipPred]): DataFrame = {
     require(preds.nonEmpty, "readCurrentWhere needs at least one predicate")
-    val pred = preds.map(_.rowPredicate).reduce(_ && _)
+    prunedCurrent(spark, root, preds)
+      .where(preds.map(_.rowPredicate).reduce(_ && _))
+  }
+
+  /** The current version's files that `preds` may match ([[pruneFiles]]),
+    * read with the version's marker schema; every file when the stats
+    * cannot decide, none (a `lit(false)` filter) when they rule out all.
+    */
+  private def prunedCurrent(spark: SparkSession, root: String,
+                            preds: Seq[SkipPred]): DataFrame =
     pruneFiles(spark, root, preds) match {
       case Some((kept, _)) if kept.isEmpty =>
-        readCurrent(spark, root).where(pred && lit(false))
+        readCurrent(spark, root).where(lit(false))
       case Some((kept, _)) =>
-        spark.read.parquet(kept: _*).where(pred)
-      case None =>
-        readCurrent(spark, root).where(pred)
+        // the kept files' directory is the version the stats belong to
+        scanLayers(spark, root, Seq(new Path(kept.head).getParent.getName),
+          kept)
+      case None => readCurrent(spark, root)
     }
-  }
+
+  /** Drop published layers: marker first (a reader can only resolve
+    * marked layers), then data.
+    */
+  private def dropLayers(fs: FileSystem, rootP: Path,
+                         names: Seq[String]): Unit =
+    names.foreach { n =>
+      fs.delete(new Path(rootP, s"$MarkerPrefix$n"), false)
+      fs.delete(new Path(rootP, n), true)
+    }
 
   /** Drop all but the newest `keep` published versions (marker first,
     * then data — a reader can only resolve marked versions), plus any
@@ -611,10 +701,7 @@ object VersionedTable {
     val fs = fsOf(spark, rootP)
     val versions = listVersions(spark, root)
     val doomed = versions.dropRight(keep)
-    doomed.foreach { v =>
-      fs.delete(new Path(rootP, s"$MarkerPrefix$v"), false)
-      fs.delete(new Path(rootP, v), true)
-    }
+    dropLayers(fs, rootP, doomed)
     // orphans: data dirs with no marker, provably dead — strictly older
     // than a version that IS published (a writer creates its marker
     // immediately after its data write, so an in-flight publish is
@@ -730,7 +817,7 @@ object VersionedTable {
     requireNoPendingDeltas(spark, root, "compact")
     val v = publish(readCurrent(spark, root).repartition(targetFiles),
       root, keepVersions)
-    spark.read.parquet(new Path(root, v).toString).count()
+    scanLayers(spark, root, Seq(v)).count()
   }
 
   /** Key-wise upsert of `batch` into the table (J5 semantics via
@@ -851,45 +938,10 @@ object VersionedTable {
     writeDelta(batch, root)
   }
 
-  /** Name of the segment-expiry stamp a delta directory may carry
-    * ([[appendDeltaStamped]]); underscore-prefixed so parquet readers
-    * ignore it.
-    */
-  val MaxTsFile = "_maxts"
-
-  /** Read a delta directory's [[MaxTsFile]] expiry stamp. None when
-    * absent (an un-stamped delta, e.g. the drift store's pruneEvery
-    * backlog — silent, that's the republish path's property) and ALSO when present but unreadable
-    * or unparsable (a torn write on a store without atomic create, or
-    * a checksum error on the re-read): the segment is skipped LOUDLY
-    * rather than throwing, because one bad sidecar must not
-    * permanently fail every later maintenance call against the store —
-    * delete the named file or the segment dir to reclaim it.
-    */
-  private def readStamp(fs: org.apache.hadoop.fs.FileSystem, rootP: Path,
-                        d: String): Option[Long] = {
-    val mf = new Path(rootP, s"$d/$MaxTsFile")
-    if (!fs.exists(mf)) None
-    else {
-      val parsed = scala.util.Try {
-        val in = fs.open(mf)
-        val s = try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-        s.trim.toLong
-      }.toOption
-      if (parsed.isEmpty)
-        System.err.println(s"[graft] unreadable/unparsable $MaxTsFile " +
-          s"stamp at $mf — segment skipped; delete the file or the " +
-          "segment dir to reclaim it")
-      parsed
-    }
-  }
-
   /** [[appendDelta]] with a segment-expiry stamp (segment mode, r16):
-    * `maxTs` — the writing batch's max event time — lands as a
-    * [[MaxTsFile]] file inside the delta directory BEFORE the commit
-    * marker (atomic with the append), so [[vacuumExpiredDeltas]] can
+    * `maxTs` — the writing batch's max event time — rides in the
+    * delta's commit marker (atomic with the append: a segment is never
+    * visible without its stamp), so [[vacuumExpiredDeltas]] can
     * later drop the whole segment from metadata alone, without reading
     * a row. `None` (an empty batch) stamps `Long.MinValue`: the empty
     * segment is vacuumable at the first opportunity.
@@ -908,15 +960,13 @@ object VersionedTable {
     * append one stamped segment and drop the segments that fell fully
     * behind the batch's retention horizon, so state maintenance never
     * rewrites live rows. Un-stamped MARKED deltas (the drift store's
-    * pruneEvery backlog, or pre-seam appends) are never touched by this path —
-    * only a republish's [[vacuumDeltas]] subsumes those. A stamp that
-    * exists but does not parse (a torn write on a filesystem without
-    * atomic create — the marker-commit discipline makes this a
-    * should-not-happen, but an object store can tear it) is treated as
-    * unstamped: the segment is SKIPPED, loudly, instead of throwing —
-    * an unparsable stamp must not permanently fail every later batch
-    * against the store (delete the named file or the segment dir to
-    * clear the warning).
+    * pruneEvery backlog) are never touched by this path — only a
+    * republish's [[vacuumDeltas]] subsumes those. A marker that is
+    * empty or does not parse (written before markers carried a
+    * manifest, or damaged) is treated as unstamped: the segment is
+    * SKIPPED, loudly, instead of throwing — it must not permanently
+    * fail every later batch against the store (delete the segment dir
+    * to clear the warning).
     *
     * UNMARKED delta-prefixed dirs (parquet written, marker never
     * created — a crashed append) are swept too, mirroring
@@ -942,11 +992,8 @@ object VersionedTable {
     val fs = fsOf(spark, rootP)
     val h = horizon.getTime
     val dead = pendingDeltas(spark, root)
-      .filter(d => readStamp(fs, rootP, d).exists(_ < h))
-    dead.foreach { d =>
-      fs.delete(new Path(rootP, s"$MarkerPrefix$d"), false)
-      fs.delete(new Path(rootP, d), true)
-    }
+      .filter(d => segmentStamp(spark, root, d).exists(_ < h))
+    dropLayers(fs, rootP, dead)
     // orphan pass (see scaladoc): unmarked delta dirs strictly older
     // than the newest committed write are crashed appends
     val marked = listDeltas(spark, root).toSet
@@ -975,7 +1022,7 @@ object VersionedTable {
     * commutatively (distinct / keep-newest / count-sum). A keyed
     * merge-on-read overlay ([[readCurrentMerged]]) resolves newest-wins
     * by DELTA ORDER, which this fold collapses — use [[compactDeltas]]
-    * there instead. Un-stamped and unparsable-stamp segments are left
+    * there instead. Un-stamped segments and unusable markers are left
     * alone (they belong to the republish path). Expiry granularity
     * coarsens for merged rows — they now leave the store only when the
     * merged stamp expires — which is decision-invisible because the
@@ -1002,7 +1049,7 @@ object VersionedTable {
     val fs = fsOf(spark, rootP)
     // pendingDeltas is ascending by construction → oldest first
     val stamped = pendingDeltas(spark, root)
-      .flatMap(d => readStamp(fs, rootP, d).map(d -> _))
+      .flatMap(d => segmentStamp(spark, root, d).map(d -> _))
     if (stamped.size <= maxSegments) return Seq.empty
     // single-writer tripwire (r19): an UNMARKED delta dir at least as
     // new as the newest committed write is an append in flight — and
@@ -1030,17 +1077,11 @@ object VersionedTable {
       return Seq.empty
     }
     val fold = stamped.take(stamped.size - maxSegments + 1)
-    // mergeSchema: deltas are documented to allow widened schemas, and a
-    // plain multi-path read takes its schema from an arbitrary file —
-    // a constituent's extra columns would silently vanish from the merge
-    val mergedRows = spark.read.option("mergeSchema", "true").parquet(
-      fold.map { case (d, _) => new Path(rootP, d).toString }: _*)
+    // the union of the constituents' schemas: deltas may widen
+    val mergedRows = scanLayers(spark, root, fold.map(_._1))
     val mergedStamp = fold.map(_._2).max
     writeDelta(mergedRows, root, Some(mergedStamp))
-    fold.map(_._1).foreach { d =>
-      fs.delete(new Path(rootP, s"$MarkerPrefix$d"), false)
-      fs.delete(new Path(rootP, d), true)
-    }
+    dropLayers(fs, rootP, fold.map(_._1))
     fold.map(_._1)
   }
 
@@ -1076,15 +1117,7 @@ object VersionedTable {
     val token = java.util.UUID.randomUUID().toString.take(8)
     val delta = f"$DeltaPrefix$ts%013d-$token"
     batch.write.mode("errorifexists").parquet(new Path(rootP, delta).toString)
-    // the expiry stamp rides INSIDE the directory, before the marker —
-    // a segment is never visible without its stamp
-    maxTsMs.foreach { ms =>
-      val out = fs.create(new Path(rootP, s"$delta/$MaxTsFile"), true)
-      try out.write(ms.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    fs.create(new Path(rootP, s"$MarkerPrefix$delta"), false).close()
+    commitMarker(fs, rootP, delta, batch.schema, maxTsMs)
     delta
   }
 
@@ -1125,17 +1158,8 @@ object VersionedTable {
                              preds: Seq[SkipPred]): DataFrame = {
     require(preds.nonEmpty, "readCurrentMergedWhere needs at least one predicate")
     val deltas = pendingDeltas(spark, root)
-    if (deltas.isEmpty) readCurrentWhere(spark, root, preds)
-    else {
-      val pred = preds.map(_.rowPredicate).reduce(_ && _)
-      val baseDf = pruneFiles(spark, root, preds) match {
-        case Some((kept, _)) if kept.isEmpty =>
-          readCurrent(spark, root).where(lit(false))
-        case Some((kept, _)) => spark.read.parquet(kept: _*)
-        case None => readCurrent(spark, root)
-      }
-      mergedDf(spark, root, baseDf, deltas, keys).where(pred)
-    }
+    mergedDf(spark, root, prunedCurrent(spark, root, preds), deltas, keys)
+      .where(preds.map(_.rowPredicate).reduce(_ && _))
   }
 
   /** The newest-wins view of one base version under an explicit delta
@@ -1162,8 +1186,7 @@ object VersionedTable {
     */
   private def mergedOver(spark: SparkSession, root: String, base: String,
                          deltas: Seq[String], keys: Seq[String]): DataFrame =
-    mergedDf(spark, root,
-      spark.read.parquet(new Path(root, base).toString), deltas, keys)
+    mergedDf(spark, root, scanLayers(spark, root, Seq(base)), deltas, keys)
 
   /** [[mergedOver]] with the base relation supplied by the caller —
     * the seam [[readCurrentMergedWhere]] uses to substitute a
@@ -1177,8 +1200,7 @@ object VersionedTable {
     require(keys.nonEmpty, "merge needs at least one key column")
     if (deltas.isEmpty) baseDf
     else {
-      val rawDeltas = deltas.map(d =>
-        spark.read.parquet(new Path(root, d).toString))
+      val rawDeltas = deltas.map(d => scanLayers(spark, root, Seq(d)))
       (baseDf +: rawDeltas).foreach { l =>
         Seq("_gen", "_rn").foreach(w => require(!l.columns.contains(w),
           s"working column $w clashes with a table column"))
@@ -1275,10 +1297,7 @@ object VersionedTable {
     val rootP = new Path(root)
     val fs = fsOf(spark, rootP)
     val dead = listDeltas(spark, root).filter(versionTs(_) <= horizon)
-    dead.foreach { d =>
-      fs.delete(new Path(rootP, s"$MarkerPrefix$d"), false)
-      fs.delete(new Path(rootP, d), true)
-    }
+    dropLayers(fs, rootP, dead)
     val orphans =
       unmarkedDirs(spark, root, DeltaPrefix, listDeltas(spark, root).toSet)
         .collect { case (n, ts) if ts <= horizon => n }

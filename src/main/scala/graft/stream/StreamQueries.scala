@@ -13,6 +13,22 @@ import graft.functions.StableMath.gridSnap
   */
 object StreamQueries extends QueryPack {
 
+  /** A state-store root for one step query: deterministic per input
+    * (the [[graft.lake.LakeQueries]] discipline — a fresh
+    * createTempDirectory per run accumulates orphan state dirs across
+    * bench/correctness repetitions) and wiped first, because a
+    * multi-batch fold is only deterministic from an EMPTY store.
+    */
+  private def scratchStore(s: org.apache.spark.sql.SparkSession, tag: String,
+                           dir: String): String = {
+    val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
+      s"$tag${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
+    val storeP = new org.apache.hadoop.fs.Path(store)
+    storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .delete(storeP, true)
+    store
+  }
+
   override def queries: Map[String, Q] = Map(
     // T4: stateless per-event enrichment, rolled up per category.
     "q_s_enrich" -> ((s, dir) =>
@@ -80,16 +96,7 @@ object StreamQueries extends QueryPack {
           transform(col("embedding"), x => x.cast("double")).as("cv"))
       val withTs = emb.withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      // deterministic per-input scratch root (the LakeQueries
-      // discipline — a fresh createTempDirectory per run accumulates
-      // orphan state dirs across bench/correctness repetitions), wiped
-      // before the fold: the two-batch result is only deterministic
-      // from an EMPTY store
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"semstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "semstep", dir)
       // batch 1 (even ids) materializes eagerly — survivors checkpoint,
       // state publishes to the store
       Streaming.semanticDedupBatchStep(
@@ -118,11 +125,7 @@ object StreamQueries extends QueryPack {
           transform(col("embedding"), x => x.cast("double")).as("cv"))
       val withTs = emb.withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"semsegstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "semsegstep", dir)
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.semanticDedupBatchStep(b, "vec_id", "embedding", "ts",
           cent, "b", "cv", threshold = 0.35, store, retention = "10 days",
@@ -147,11 +150,7 @@ object StreamQueries extends QueryPack {
           transform(col("embedding"), x => x.cast("double")).as("cv"))
       val withTs = emb.withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"semsegbstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "semsegbstep", dir)
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.semanticDedupBatchStep(b, "vec_id", "embedding", "ts",
           cent, "b", "cv", threshold = 0.35, store, retention = "10 days",
@@ -177,11 +176,7 @@ object StreamQueries extends QueryPack {
     "q_s_novelty_step" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"novstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "novstep", dir)
       Streaming.noveltyGateBatchStep(
         docs.where(col("doc_id") % 2 === 0), "doc_id", "text", "ts",
         store, minNovelty = 0.5, retention = "10 days", shingleN = 5,
@@ -199,11 +194,7 @@ object StreamQueries extends QueryPack {
     "q_s_novelty_segmented_step" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"novsegstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "novsegstep", dir)
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.noveltyGateBatchStep(b, "doc_id", "text", "ts",
           store, minNovelty = 0.5, retention = "10 days", shingleN = 5,
@@ -227,11 +218,7 @@ object StreamQueries extends QueryPack {
     "q_s_novelty_segmented_bounded_step" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"novsegbstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "novsegbstep", dir)
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.noveltyGateBatchStep(b, "doc_id", "text", "ts",
           store, minNovelty = 0.5, retention = "10 days", shingleN = 5,
@@ -254,11 +241,7 @@ object StreamQueries extends QueryPack {
     "q_s_neardedup_step" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"nndstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "nndstep", dir)
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.nearDedupBatchStep(b, "doc_id", "text", "ts", store,
           retention = "10 days",
@@ -275,11 +258,7 @@ object StreamQueries extends QueryPack {
     "q_s_neardedup_segmented_step" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"nndsegstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "nndsegstep", dir)
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.nearDedupBatchStep(b, "doc_id", "text", "ts", store,
           retention = "10 days",
@@ -302,11 +281,7 @@ object StreamQueries extends QueryPack {
     "q_s_neardedup_segmented_bounded_step" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"nndsegbstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "nndsegbstep", dir)
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.nearDedupBatchStep(b, "doc_id", "text", "ts", store,
           retention = "10 days",
@@ -333,11 +308,7 @@ object StreamQueries extends QueryPack {
     "q_s_neardedup_segmented_bounded_skew_step" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).withColumn("ts",
         lit(java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"nndsegbskstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "nndsegbskstep", dir)
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.nearDedupBatchStep(b, "doc_id", "text", "ts", store,
           retention = "10 days",
@@ -356,11 +327,7 @@ object StreamQueries extends QueryPack {
     // batch, here produced through the persisted reference store.
     "q_s_drift_step" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"driftstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "driftstep", dir)
       Streaming.driftMonitorBatchStep(
         docs.where(col("lang") === "en"), "text", store)
       Streaming.driftMonitorBatchStep(
@@ -376,11 +343,7 @@ object StreamQueries extends QueryPack {
     // en+de reference, which IS the eager store's content.
     "q_s_drift_amortized_step" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"driftastep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "driftastep", dir)
       def step(b: org.apache.spark.sql.DataFrame) =
         Streaming.driftMonitorBatchStep(b, "text", store, pruneEvery = 3)
       step(docs.where(col("lang") === "en"))
@@ -394,11 +357,7 @@ object StreamQueries extends QueryPack {
     // the union — which is what DuckDB replays.
     "q_s_kmv_step" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"kmvstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "kmvstep", dir)
       Streaming.kmvDistinctBatchStep(
         ev.where(col("event_id") % 2 === 0), "event_id", store, k = 256)
       Streaming.kmvDistinctBatchStep(
@@ -410,11 +369,7 @@ object StreamQueries extends QueryPack {
     // users at sf0.01). Same exact-merge argument as q_s_kmv_step.
     "q_s_kmv_group_step" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
-      val store = s"${System.getProperty("java.io.tmpdir")}/graft_streamq/" +
-        s"kmvgstep${dir.replaceAll("[^A-Za-z0-9]", "_")}/store"
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      storeP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(storeP, true)
+      val store = scratchStore(s, "kmvgstep", dir)
       Streaming.kmvDistinctByKeyBatchStep(
         ev.where(col("event_id") % 2 === 0), "event_type", "user_id",
         store, k = 16)

@@ -23,33 +23,35 @@ import graft.functions.StableMath.gridSnap
   */
 object Streaming {
 
-  /** Read a monitor/dedup state store, or an empty relation of `schema`
-    * on first use. LOUD (`requireVersionedOrEmpty`) on a legacy
-    * plain-parquet store: silently treating one as empty would reset
-    * the state — re-admitting seen content, restarting a reference
-    * distribution or sketch from zero.
+  /** Read a monitor/dedup state store (its schema comes from the
+    * version's marker), or an empty relation of `schema` on first use.
+    * LOUD (`requireVersionedOrEmpty`) on a legacy plain-parquet store:
+    * silently treating one as empty would reset the state — re-admitting
+    * seen content, restarting a reference distribution or sketch from
+    * zero.
     */
   private def readStoreOrEmpty(spark: SparkSession, storePath: String,
                                schema: org.apache.spark.sql.types.StructType)
       : DataFrame =
     if (graft.lake.VersionedTable.isVersioned(spark, storePath))
-      graft.lake.VersionedTable.readCurrent(spark, storePath, schema)
+      graft.lake.VersionedTable.readCurrent(spark, storePath)
     else {
       graft.lake.VersionedTable.requireVersionedOrEmpty(spark, storePath)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
 
-  /** A retention store's base ∪ its pending segments
-    * (version names under the root), both read with the known schema.
+  /** A store's base ∪ its pending segments (delta names under the
+    * root), the segments in one scan; `schema` only shapes the empty
+    * first-batch store.
     */
   private def readLayers(spark: SparkSession, storePath: String,
                          schema: org.apache.spark.sql.types.StructType,
                          segments: Seq[String]): DataFrame = {
     val base = readStoreOrEmpty(spark, storePath, schema)
     if (segments.isEmpty) base
-    else base.unionByName(spark.read.schema(schema)
-      .parquet(segments.map(d => s"$storePath/$d"): _*))
+    else base.unionByName(
+      graft.lake.VersionedTable.scanLayers(spark, storePath, segments))
   }
 
   /** Batch-side row cap for the STORE-SHUFFLE-FREE probe the
@@ -673,17 +675,13 @@ object Streaming {
       else Seq.empty[String]
     val driftSchema = StructType(Seq(StructField("_tok", StringType),
       StructField("_c", LongType)))
-    val base = readStoreOrEmpty(spark, storePath, driftSchema)
+    val layers = readLayers(spark, storePath, driftSchema, deltaPaths)
     // base ∪ pending deltas re-summed (amortized mode): the long-count
     // fold is exact and commutative, so this merged view equals the
     // store eager mode would have published, bit for bit
     val store =
-      if (deltaPaths.isEmpty) base
-      else base.unionByName(
-          spark.read.schema(driftSchema)
-            .parquet(deltaPaths.map(d => s"$storePath/$d"): _*)
-            .select("_tok", "_c"))
-        .groupBy("_tok").agg(sum(col("_c")).as("_c"))
+      if (deltaPaths.isEmpty) layers
+      else layers.groupBy("_tok").agg(sum(col("_c")).as("_c"))
     val counts = batch
       .select(explode(graft.textops.TextFunctions.tokens(
         graft.textops.TextFunctions.normalized(col(textCol)))).as("_tok"))
@@ -1372,12 +1370,14 @@ object Streaming {
       StructField("_svec", ArrayType(DoubleType)),
       StructField("_ts", TimestampType),
       StructField("_qfp", LongType)))
-    // schema-enforced read: pre-seam stores lack the fingerprint column
-    // physically and read it as null — the stale-quantizer fallback
     // segments always carry _qfp and — by the forced-republish-on-
     // change invariant — the SAME one as the base under them, so the
-    // union stays fingerprint-uniform
-    val store = readLayers(spark, storePath, storeSchema, deltaPaths)
+    // union stays fingerprint-uniform. A pre-seam store lacks the
+    // column and reads it as null: the stale-quantizer fallback
+    val layers = readLayers(spark, storePath, storeSchema, deltaPaths)
+    val store =
+      if (layers.columns.contains("_qfp")) layers
+      else layers.withColumn("_qfp", lit(null).cast(LongType))
     // every published version stamps ONE uniform fingerprint (the
     // whole new store gets `lit(qfp)` below), so the FIRST row decides
     // the fast path — a limit(1) that short-circuits after one row

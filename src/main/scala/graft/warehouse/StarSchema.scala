@@ -259,9 +259,8 @@ object StarSchema {
     * table against a 1-row-per-date update side — Catalyst broadcasts
     * the update relation, so accumulating N days over an M-row table
     * never shuffles the table. Callers persisting between runs get
-    * the same fold via `Streaming.upsertBatchToParquet` (manifest-
-    * versioned publish through `VersionedTable.upsertBatch`, same
-    * keys — readers never see a swap window).
+    * the same fold via `VersionedTable.upsertBatch` (manifest-versioned
+    * publish, same keys — readers never see a swap window).
     */
   def accumulateDaily(runs: Seq[DataFrame],
                       keys: Seq[String] = Seq("date_id")): DataFrame = {

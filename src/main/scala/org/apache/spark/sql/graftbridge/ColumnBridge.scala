@@ -14,3 +14,11 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
+
+/** The same bridge for `StructType.asNullable` (`private[spark]`): the
+  * schema a parquet read returns for what a DataFrame wrote.
+  */
+object SchemaBridge {
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+}

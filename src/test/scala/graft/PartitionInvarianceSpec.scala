@@ -207,7 +207,7 @@ class PartitionInvarianceSpec extends SparkSpec {
 
   /** SEGMENT mode (`maxSegments > 0`, the r16 LSM layout) has different
     * PHYSICAL state than the republishing layout the test above pins —
-    * stamped segment files plus `_maxts` expiry metadata, vacuumed per
+    * stamped segment files plus their markers' expiry stamps, vacuumed per
     * batch — so its invariance needs its own pin: per-batch decisions,
     * the MERGED state (base ∪ pending segments — the relation every
     * future decision reads), and the vacuum's outcome (how many
@@ -247,10 +247,8 @@ class PartitionInvarianceSpec extends SparkSpec {
     // merged state + vacuum outcome, event-time-keyed (never names)
     def stateOf(root: String): String = {
       val pending = VersionedTable.pendingDeltas(spark, root)
-      val stamps = pending.map { d =>
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(root, d, "_maxts"))).trim
-      }.sorted
+      val stamps = pending.flatMap(VersionedTable.segmentStamp(spark, root, _))
+        .sorted
       val merged =
         if (pending.isEmpty) VersionedTable.readCurrent(spark, root)
         else VersionedTable.readCurrent(spark, root).unionByName(

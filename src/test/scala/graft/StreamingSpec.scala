@@ -661,6 +661,30 @@ class StreamingSpec extends SparkSpec {
       .select("_qfp").distinct().count() === 1L)
   }
 
+  test("semantic dedup: a store written before the quantizer fingerprint re-buckets on read") {
+    import graft.lake.VersionedTable
+    val store = java.nio.file.Files.createTempDirectory("graft_semprefp")
+      .toString + "/store"
+    // a pre-seam store: no _qfp column, its one row filed under a bucket
+    // id the current quantizer does not have
+    VersionedTable.publish(Seq((7L, 1L, Seq(1.0, 0.05),
+        java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
+      .toDF("bucket", "_sid", "_svec", "_ts"), store)
+    val c4 = Seq(0L -> Seq(0.0, 1.0), 1L -> Seq(1.0, 0.0),
+      2L -> Seq(-1.0, 0.0), 3L -> Seq(0.0, -1.0)).toDF("b", "cv")
+    val out = Streaming.semanticDedupBatchStep(
+      Seq((2L, Seq(0.99, 0.06), "2024-01-01 10:10:00"))
+        .toDF("vec_id", "embedding", "tss")
+        .withColumn("ts", col("tss").cast("timestamp")).drop("tss"),
+      "vec_id", "embedding", "ts", c4, "b", "cv", threshold = 0.9, store,
+      retention = "10 days")
+    // the stored twin was re-bucketed onto the probe's bucket: it drops
+    assert(out.count() === 0L)
+    val republished = VersionedTable.readCurrent(spark, store)
+    assert(republished.where(col("_qfp").isNull).count() === 0L)
+    assert(republished.select("bucket").as[Long].collect().toSeq === Seq(1L))
+  }
+
   test("semantic dedup refuses an empty quantizer") {
     import graft.stream.Streaming
     val store = java.nio.file.Files.createTempDirectory("graft_semq0")

@@ -24,6 +24,118 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.listVersions(spark, root).length === 2)
   }
 
+  /** Spark jobs started while `body` runs, counted by a listener. A
+    * sentinel job in its own group runs after `body`: listener events
+    * arrive in order, so every job `body` started is counted once the
+    * sentinel's start is seen.
+    */
+  private def jobsWhile[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobGroup("jobs-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val n = Iterator.continually(
+          groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { g => assert(g != null, "sentinel job never seen"); g != "jobs-sentinel" }
+        .size
+      (out, n)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("readCurrent keeps the schema and rows parquet inference gives, over every column type") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val types: Seq[(String, Boolean => DataType, Any)] = Seq(
+      ("byte", _ => ByteType, 1.toByte),
+      ("short", _ => ShortType, 2.toShort),
+      ("int", _ => IntegerType, 3),
+      ("long", _ => LongType, 4L),
+      ("float", _ => FloatType, 5.5f),
+      ("double", _ => DoubleType, -0.0),
+      ("decimal", _ => DecimalType(12, 3), new java.math.BigDecimal("123456789.125")),
+      ("string", _ => StringType, "s\u00e9"),
+      ("binary", _ => BinaryType, Array[Byte](0, -1, 7)),
+      ("boolean", _ => BooleanType, true),
+      ("date", _ => DateType, java.sql.Date.valueOf("1969-12-31")),
+      ("timestamp", _ => TimestampType, java.sql.Timestamp.valueOf("2024-02-29 23:59:59.123456")),
+      ("timestamp_ntz", _ => TimestampNTZType, java.time.LocalDateTime.of(1900, 1, 1, 0, 0)),
+      ("array", n => ArrayType(IntegerType, n), Seq(1, 2)),
+      ("map", n => MapType(StringType, LongType, n), Map("a" -> 1L)),
+      ("struct", n => StructType(Seq(StructField("a", IntegerType, n),
+        StructField("b", StringType, n))), Row(1, "x")))
+    val schema = StructType(StructField("id", IntegerType, false) +:
+      types.flatMap { case (name, t, _) =>
+        Seq(StructField(s"${name}_null", t(true), true),
+          StructField(s"${name}_nonnull", t(false), false))
+      })
+    val full = Row.fromSeq(1 +: types.flatMap { case (_, _, v) => Seq(v, v) })
+    val sparse = Row.fromSeq(2 +: types.flatMap { case (_, _, v) => Seq(null, v) })
+    import scala.jdk.CollectionConverters._
+    val df = spark.createDataFrame(Seq(full, sparse).asJava, schema)
+    val root = tmpRoot("types")
+    val v = VersionedTable.publish(df, root)
+    val inferred = spark.read.parquet(s"$root/$v")
+    val read = VersionedTable.readCurrent(spark, root)
+    assert(read.schema === inferred.schema)
+    assert(read.orderBy("id").collect() === inferred.orderBy("id").collect())
+    assert(read.where(col("id") === 2).select("binary_null", "struct_null")
+      .head() === Row(null, null))
+  }
+
+  test("versioned reads take their schema from the marker: building them runs no Spark job") {
+    val root = tmpRoot("nojobs")
+    val v = VersionedTable.publish(
+      (0L until 10L).map(k => (k, s"b$k")).toDF("k", "v"), root)
+    val pred = Seq(VersionedTable.ColRange("k", Some(2L), Some(4L)))
+    val (cur, jCur) = jobsWhile(VersionedTable.readCurrent(spark, root))
+    val (ver, jVer) = jobsWhile(VersionedTable.readVersion(spark, root, v))
+    val (where, jWhere) =
+      jobsWhile(VersionedTable.readCurrentWhere(spark, root, pred))
+    assert((jCur, jVer, jWhere) === ((0, 0, 0)))
+    val inferred = spark.read.parquet(s"$root/$v")
+    assert(cur.collect().toSet === inferred.collect().toSet)
+    assert(ver.collect().toSet === inferred.collect().toSet)
+    assert(where.collect().toSet ===
+      inferred.where(pred.head.rowPredicate).collect().toSet)
+    // a stats-backed pruned read: the stats relation's own collect is
+    // the only work — the kept-file scan adds no job
+    val sroot = tmpRoot("nojobsstats")
+    VersionedTable.publish((0L until 40L).map(k => (k, s"b$k")).toDF("k", "v")
+      .repartition(4, col("k")).sortWithinPartitions("k"), sroot,
+      statsColumns = Seq("k"))
+    val (_, jPrune) = jobsWhile(VersionedTable.pruneFiles(spark, sroot, pred))
+    val (pruned, jPruned) =
+      jobsWhile(VersionedTable.readCurrentWhere(spark, sroot, pred))
+    assert(jPruned === jPrune)
+    assert(pruned.as[(Long, String)].collect().toMap ===
+      Map(2L -> "b2", 3L -> "b3", 4L -> "b4"))
+    // a base and 10 deltas, one widened and one a tombstone
+    (1L to 8L).foreach(k =>
+      VersionedTable.appendDelta(Seq((k, s"u$k")).toDF("k", "v"), root))
+    VersionedTable.appendDelta(Seq((3L, "w3", "e")).toDF("k", "v", "extra"), root)
+    VersionedTable.appendDeleteDelta(Seq(5L).toDF("k"), root)
+    assert(VersionedTable.pendingDeltas(spark, root).size === 10)
+    val (merged, jMerged) =
+      jobsWhile(VersionedTable.readCurrentMerged(spark, root, Seq("k")))
+    assert(jMerged === 0)
+    assert(merged.columns.toSeq === Seq("k", "v", "extra"))
+    val expected = (0L until 10L).filter(_ != 5L).map { k =>
+      if (k == 3L) (k, "w3", "e")
+      else (k, if (k >= 1 && k <= 8) s"u$k" else s"b$k", null)
+    }
+    assert(merged.as[(Long, String, String)].collect().sortBy(_._1).toSeq ===
+      expected)
+  }
+
   test("publishChecked commits only clean batches; a bad batch leaves the table untouched") {
     import graft.ingest.Expectations._
     val root = tmpRoot("checked")
@@ -740,33 +852,64 @@ class VersionedTableSpec extends SparkSpec {
       ts("2024-01-01 11:00:00")).isEmpty)
   }
 
-  test("a corrupt _maxts stamp skips its segment loudly instead of failing every later vacuum") {
+  test("an empty or unparsable commit marker: vacuum and merge skip the segment loudly, reads fall back to inference") {
     val root = tmpRoot("segcorrupt")
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    def stamped(k: Long, v: String, at: String) =
+      VersionedTable.appendDeltaStamped(Seq((k, v)).toDF("k", "v"), root,
+        Some(ts(at)))
+    def marker(d: String) = java.nio.file.Paths.get(root, s"_ready-$d")
+    def crc(d: String) = java.nio.file.Paths.get(root, s"._ready-$d.crc")
     VersionedTable.publish(Seq((0L, "base")).toDF("k", "v"), root)
-    val dCorrupt = VersionedTable.appendDeltaStamped(
-      Seq((1L, "x")).toDF("k", "v"), root, Some(ts("2024-01-01 10:00:00")))
-    val dGood = VersionedTable.appendDeltaStamped(
-      Seq((2L, "y")).toDF("k", "v"), root, Some(ts("2024-01-01 10:05:00")))
-    // tear the first stamp: a partial write on a non-atomic store.
-    // The stale .crc sidecar makes the READ itself throw (checksum
-    // mismatch) — the unreadable-stamp flavor of the failure
-    val p = java.nio.file.Paths.get(root, dCorrupt, "_maxts")
-    java.nio.file.Files.write(p, "17040junk".getBytes())
-    // horizon past BOTH stamps: the good segment drops, the corrupt
-    // one is treated as unstamped (skipped), and no exception escapes
-    val dead = VersionedTable.vacuumExpiredDeltas(spark, root,
-      ts("2024-01-01 12:00:00"))
+    val dTorn = stamped(1L, "x", "2024-01-01 10:00:00")
+    val dEmpty = stamped(2L, "y", "2024-01-01 10:02:00")
+    val dGood = stamped(3L, "z", "2024-01-01 10:05:00")
+    // a torn marker: the stale .crc sidecar makes the READ itself throw
+    // (checksum mismatch) — the unreadable flavor of the failure
+    java.nio.file.Files.write(marker(dTorn), "{\"maxTs\":17040".getBytes)
+    // an empty one, as a table written before markers carried a
+    // manifest has, or a reader racing the commit sees
+    java.nio.file.Files.write(marker(dEmpty), Array.emptyByteArray)
+    java.nio.file.Files.deleteIfExists(crc(dEmpty))
+    val buf = new java.io.ByteArrayOutputStream()
+    val prevErr = System.err
+    def loudly[T](body: => T): T =
+      try {
+        System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+        body
+      } finally System.setErr(prevErr)
+    // horizon past every stamp: the good segment drops, the two bad
+    // ones are treated as unstamped (skipped), and no exception escapes
+    val dead = loudly(VersionedTable.vacuumExpiredDeltas(spark, root,
+      ts("2024-01-01 12:00:00")))
     assert(dead === Seq(dGood))
-    assert(VersionedTable.pendingDeltas(spark, root) === Seq(dCorrupt))
-    // now make the bytes READABLE garbage (drop the checksum sidecar):
-    // the parse-failure flavor must skip just as non-fatally
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(root, dCorrupt, "._maxts.crc"))
-    assert(VersionedTable.vacuumExpiredDeltas(spark, root,
-      ts("2024-01-01 12:00:00")).isEmpty)
-    // and the segment's rows are still readable meanwhile
-    assert(spark.read.parquet(s"$root/$dCorrupt").count() === 1)
+    assert(VersionedTable.pendingDeltas(spark, root) === Seq(dTorn, dEmpty))
+    Seq(dTorn, dEmpty).foreach { d =>
+      assert(buf.toString("UTF-8").contains(s"commit marker") &&
+        buf.toString("UTF-8").contains(s"_ready-$d"))
+    }
+    // the L1 merge folds the stamped segments and leaves the bad ones
+    val g1 = stamped(4L, "g1", "2024-01-01 13:00:00")
+    val g2 = stamped(5L, "g2", "2024-01-01 13:05:00")
+    assert(loudly(VersionedTable.compactSegments(spark, root, 1)) === Seq(g1, g2))
+    assert(VersionedTable.pendingDeltas(spark, root).take(2) === Seq(dTorn, dEmpty))
+    // readable garbage (checksum sidecar dropped): the parse-failure
+    // flavor skips just as non-fatally
+    java.nio.file.Files.deleteIfExists(crc(dTorn))
+    assert(loudly(VersionedTable.vacuumExpiredDeltas(spark, root,
+      ts("2024-01-01 12:00:00"))).isEmpty)
+    // reads infer the bad layers' schemas: every row stays readable,
+    // through the overlay and from a base whose marker is empty too
+    val base = VersionedTable.currentVersion(spark, root).get
+    java.nio.file.Files.write(marker(base), Array.emptyByteArray)
+    java.nio.file.Files.deleteIfExists(crc(base))
+    val merged = loudly(VersionedTable.readCurrentMerged(spark, root, Seq("k")))
+    assert(merged.as[(Long, String)].collect().toMap ===
+      Map(0L -> "base", 1L -> "x", 2L -> "y", 4L -> "g1", 5L -> "g2"))
+    val inferred = spark.read.parquet(s"$root/$base")
+    val read = loudly(VersionedTable.readCurrent(spark, root))
+    assert(read.schema === inferred.schema && read.collect() === inferred.collect())
+    assert(buf.toString("UTF-8").contains(s"_ready-$base"))
   }
 
   test("segment-mode vacuum sweeps crashed-append orphans once a later write commits") {
@@ -900,7 +1043,7 @@ class VersionedTableSpec extends SparkSpec {
     val inFlight = f"d-${newestTs + 999}%013d-race0"
     Seq((9L, "race")).toDF("k", "v").write.parquet(s"$root/$inFlight")
     // capture the warning via System.err (the refusal prints there,
-    // like readStamp's torn-stamp warning)
+    // like an unusable marker's warning)
     val buf = new java.io.ByteArrayOutputStream()
     val prevErr = System.err
     val folded =

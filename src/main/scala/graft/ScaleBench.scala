@@ -518,16 +518,6 @@ object ScaleBench {
           Streaming.driftMonitorBatchStep(probe(i), "text", drRoot)
             .collect()
         }
-        // amortized-republish variant (pruneEvery > 1, r16): probe
-        // batches append O(batch-vocab) count deltas instead of
-        // rewriting the vocabulary histogram; the JSD alignment READ
-        // stays vocabulary-sized in both modes, so this row isolates
-        // the write term the amortization removes
-        val draRoot = copyStore(drSeed, s"/tmp/graft_scale/store/$name/drifta")
-        record(name, "q_store_drift_amortized_batch") { i =>
-          Streaming.driftMonitorBatchStep(probe(i), "text", draRoot,
-            pruneEvery = 10).collect()
-        }
         // semantic-dedup embedding store: state = admitted vectors, so
         // this is the one monitor whose per-batch pair work is
         // O(batch·store/k) with a FIXED k-bucket quantizer — the
@@ -595,8 +585,7 @@ object ScaleBench {
         Seq("q_store_neardedup_batch", "q_store_neardedup_segmented_batch",
           "q_store_neardedup_segmented_bounded_batch",
           "q_store_novelty_batch", "q_store_novelty_segmented_batch",
-          "q_store_kmv_batch", "q_store_kmv_group_batch",
-          "q_store_drift_batch", "q_store_drift_amortized_batch",
+          "q_store_kmv_batch", "q_store_kmv_group_batch", "q_store_drift_batch",
           "q_store_semdedup_batch", "q_store_semdedup_segmented_batch")
       else Nil
     for (q <- heavy ++ Seq("q_chain_cc", "q_mor_read", "q_hardneg_batch")

@@ -78,22 +78,7 @@ object SnapshotGroup {
       name -> VersionedTable.publish(df, s"$groupRoot/$name",
         keepVersions = keepVersions)
     }
-    // strictly increasing vs existing manifests (same clock-skew guard
-    // as VersionedTable.publish)
-    val ts = math.max(System.currentTimeMillis(),
-      listSnapshots(spark, groupRoot).map(manifestTs)
-        .maxOption.map(_ + 1).getOrElse(0L))
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val snapshot = f"$ManifestPrefix$ts%013d-$token"
-    val tmp = new Path(rootP, s".$snapshot.tmp")
-    val out = fs.create(tmp, false)
-    out.write(pinned.map { case (n, v) => s"$n\t$v" }
-      .mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    if (!fs.rename(tmp, new Path(rootP, snapshot)))
-      throw new IllegalStateException(
-        s"could not commit snapshot manifest $snapshot under $groupRoot")
+    val snapshot = commitManifest(spark, groupRoot, pinned, "snapshot")
     // prune old manifests beyond retention (their member versions age
     // out through the members' own vacuum), plus dot-temps of CRASHED
     // writers only — judged by an age horizon, not by name: a
@@ -174,6 +159,19 @@ object SnapshotGroup {
         s"cannot roll back to $snapshot: member '$t' version $v has been " +
           "vacuumed (snapshot expired)")
     }
+    commitManifest(spark, groupRoot, pins.toSeq.sortBy(_._1), "rollback")
+  }
+
+  /** Commit a manifest pinning `pins`, in the caller's order, as the
+    * newest snapshot: its name carries a timestamp strictly above every
+    * existing manifest's (the clock-skew guard of
+    * [[VersionedTable.publish]]) and a random token, and its dot-temp
+    * file is renamed into place — the atomic visibility point. A
+    * failed rename throws. Returns the manifest name.
+    */
+  private def commitManifest(spark: SparkSession, groupRoot: String,
+                             pins: Seq[(String, String)],
+                             kind: String): String = {
     val rootP = new Path(groupRoot)
     val fs = fsOf(spark, rootP)
     val ts = math.max(System.currentTimeMillis(),
@@ -183,13 +181,13 @@ object SnapshotGroup {
     val name = f"$ManifestPrefix$ts%013d-$token"
     val tmp = new Path(rootP, s".$name.tmp")
     val out = fs.create(tmp, false)
-    out.write(pins.toSeq.sortBy(_._1).map { case (n, v) => s"$n\t$v" }
+    try out.write(pins.map { case (n, v) => s"$n\t$v" }
       .mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    finally out.close()
     if (!fs.rename(tmp, new Path(rootP, name)))
       throw new IllegalStateException(
-        s"could not commit rollback manifest $name under $groupRoot")
+        s"could not commit $kind manifest $name under $groupRoot")
     name
   }
 

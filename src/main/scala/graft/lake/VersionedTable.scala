@@ -113,6 +113,33 @@ object VersionedTable {
   def currentVersion(spark: SparkSession, root: String): Option[String] =
     listVersions(spark, root).lastOption
 
+  /** A root's committed layers: its current base, the deltas pending
+    * over it (ascending), and whether any marked delta, folded ones
+    * included, is still on disk.
+    */
+  private[graft] final case class Layers(base: String, pending: Seq[String],
+                                         anyDelta: Boolean)
+
+  /** [[Layers]] from ONE listing of `root`; None when nothing is
+    * published.
+    */
+  private[graft] def currentLayers(spark: SparkSession,
+                                   root: String): Option[Layers] = {
+    val marked = listMarked(spark, root, "")
+    val deltas = marked.filter(_.startsWith(DeltaPrefix))
+    marked.filter(_.startsWith(VersionPrefix)).lastOption.map(base =>
+      Layers(base, deltas.filter(versionTs(_) > versionTs(base)),
+        deltas.nonEmpty))
+  }
+
+  /** Timestamp of the newest committed layer, version or delta, from
+    * ONE listing of `root`; `Long.MinValue` when nothing is committed.
+    */
+  private def newestCommittedTs(spark: SparkSession, root: String): Long =
+    listMarked(spark, root, "")
+      .filter(n => n.startsWith(VersionPrefix) || n.startsWith(DeltaPrefix))
+      .map(versionTs).foldLeft(Long.MinValue)(math.max)
+
   /** True when `root` holds at least one published version. */
   def isVersioned(spark: SparkSession, root: String): Boolean =
     currentVersion(spark, root).isDefined
@@ -193,8 +220,8 @@ object VersionedTable {
     // sidecar into data the caller's own contract says it must not
     // touch — the MOR sinks gained this ordering individually earlier
     // in r16; doing it here covers every pinned store (the monitor
-    // steps stamped before their readStoreOrEmpty rejection) and every
-    // future caller.
+    // steps once stamped before their store read rejected the root)
+    // and every future caller.
     requireVersionedOrEmpty(spark, root)
     val rootP = new Path(root)
     val fs = fsOf(spark, rootP)
@@ -439,8 +466,7 @@ object VersionedTable {
     // strictly dominate every delta it folded, or a merged read would
     // re-apply them
     val ts = math.max(System.currentTimeMillis(),
-      (listVersions(spark, root) ++ listDeltas(spark, root))
-        .map(versionTs).maxOption.map(_ + 1).getOrElse(0L))
+      newestCommittedTs(spark, root) + 1)
     val token = java.util.UUID.randomUUID().toString.take(8)
     val version = f"$VersionPrefix$ts%013d-$token"
     val versionPath = new Path(rootP, version).toString
@@ -901,11 +927,9 @@ object VersionedTable {
     * read applies. Deltas at or below the base timestamp are already
     * folded in (publish timestamps strictly dominate, see [[publish]]).
     */
-  def pendingDeltas(spark: SparkSession, root: String): Seq[String] = {
-    val baseTs = currentVersion(spark, root).map(versionTs)
-      .getOrElse(throw new IllegalStateException(s"no published version at $root"))
-    listDeltas(spark, root).filter(d => versionTs(d) > baseTs)
-  }
+  def pendingDeltas(spark: SparkSession, root: String): Seq[String] =
+    currentLayers(spark, root).map(_.pending).getOrElse(
+      throw new IllegalStateException(s"no published version at $root"))
 
   /** Reserved flag column marking a delta row as a DELETE of its key.
     * Never appears in a published base (publish rejects it, and the
@@ -959,14 +983,13 @@ object VersionedTable {
     * (`maxSegments > 0`) expiry path: per batch the stateful steps
     * append one stamped segment and drop the segments that fell fully
     * behind the batch's retention horizon, so state maintenance never
-    * rewrites live rows. Un-stamped MARKED deltas (the drift store's
-    * pruneEvery backlog) are never touched by this path — only a
-    * republish's [[vacuumDeltas]] subsumes those. A marker that is
-    * empty or does not parse (written before markers carried a
-    * manifest, or damaged) is treated as unstamped: the segment is
-    * SKIPPED, loudly, instead of throwing — it must not permanently
-    * fail every later batch against the store (delete the segment dir
-    * to clear the warning).
+    * rewrites live rows. Un-stamped MARKED deltas are never touched
+    * by this path — only a republish's [[vacuumDeltas]] subsumes
+    * those. A marker that is empty or does not parse (written before
+    * markers carried a manifest, or damaged) is treated as unstamped:
+    * the segment is SKIPPED, loudly, instead of throwing — it must not
+    * permanently fail every later batch against the store (delete the
+    * segment dir to clear the warning).
     *
     * UNMARKED delta-prefixed dirs (parquet written, marker never
     * created — a crashed append) are swept too, mirroring
@@ -996,11 +1019,10 @@ object VersionedTable {
     dropLayers(fs, rootP, dead)
     // orphan pass (see scaladoc): unmarked delta dirs strictly older
     // than the newest committed write are crashed appends
-    val marked = listDeltas(spark, root).toSet
-    val newestCommitted = (listVersions(spark, root) ++ marked.toSeq)
-      .map(versionTs).foldLeft(Long.MinValue)(math.max)
-    val orphans = unmarkedDirs(spark, root, DeltaPrefix, marked)
-      .collect { case (n, ts) if ts < newestCommitted => n }
+    val newestCommitted = newestCommittedTs(spark, root)
+    val orphans =
+      unmarkedDirs(spark, root, DeltaPrefix, listDeltas(spark, root).toSet)
+        .collect { case (n, ts) if ts < newestCommitted => n }
     orphans.foreach(n => fs.delete(new Path(rootP, n), true))
     dead ++ orphans
   }
@@ -1059,10 +1081,7 @@ object VersionedTable {
     // merge this batch (self-healing — the backlog merges next batch
     // once the writers stop racing). Only merge batches pay the extra
     // listing; the common non-merge path returned above.
-    val committedNames = (listVersions(spark, root) ++
-      listDeltas(spark, root))
-    val newestCommitted =
-      committedNames.map(versionTs).foldLeft(Long.MinValue)(math.max)
+    val newestCommitted = newestCommittedTs(spark, root)
     val inFlight =
       unmarkedDirs(spark, root, DeltaPrefix, listDeltas(spark, root).toSet)
         .collect { case (n, ts) if ts >= newestCommitted => n }
@@ -1112,8 +1131,7 @@ object VersionedTable {
     val rootP = new Path(root)
     val fs = fsOf(spark, rootP)
     val ts = math.max(System.currentTimeMillis(),
-      (listVersions(spark, root) ++ listDeltas(spark, root))
-        .map(versionTs).max + 1)
+      newestCommittedTs(spark, root) + 1)
     val token = java.util.UUID.randomUUID().toString.take(8)
     val delta = f"$DeltaPrefix$ts%013d-$token"
     batch.write.mode("errorifexists").parquet(new Path(rootP, delta).toString)

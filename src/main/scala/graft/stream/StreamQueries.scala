@@ -334,23 +334,6 @@ object StreamQueries extends QueryPack {
         docs.where(col("lang") === "de"), "text", store)
     }),
 
-    // The AMORTIZED (pruneEvery = 3) twin of q_s_drift_step on a
-    // three-language fold: en seeds the base, de's counts land as a
-    // pending delta, fr is then judged against the re-summed
-    // base ∪ delta view. Unlike the retention stores the drift fold is
-    // exact (long counts, decimal-sum JSD), so the amortized verdict
-    // owes eager BIT equality — the oracle replays it as one summed
-    // en+de reference, which IS the eager store's content.
-    "q_s_drift_amortized_step" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val store = scratchStore(s, "driftastep", dir)
-      def step(b: org.apache.spark.sql.DataFrame) =
-        Streaming.driftMonitorBatchStep(b, "text", store, pruneEvery = 3)
-      step(docs.where(col("lang") === "en"))
-      step(docs.where(col("lang") === "de"))
-      step(docs.where(col("lang") === "fr"))
-    }),
-
     // Streaming KMV distinct, two-batch fold over the unique event ids
     // (estimate regime at k=256): the k-min merge is exact, so the
     // fold through the persisted store equals the one-shot sketch over
@@ -836,30 +819,6 @@ object StreamQueries extends QueryPack {
         |b AS (SELECT tok, c AS cb FROM c WHERE s = 'en'),
         |nn AS (SELECT SUM(CASE WHEN s = 'de' THEN c END) AS na,
         |    SUM(CASE WHEN s = 'en' THEN c END) AS nb FROM c),
-        |al AS (SELECT COALESCE(a.ca, 0) AS ca, COALESCE(b.cb, 0) AS cb
-        |  FROM a FULL OUTER JOIN b ON a.tok = b.tok),
-        |tm AS (SELECT ca, cb,
-        |    CAST(ca AS DOUBLE) / nn.na AS p, CAST(cb AS DOUBLE) / nn.nb AS q
-        |  FROM al CROSS JOIN nn)
-        |SELECT FLOOR((CAST(SUM(CAST(
-        |    (CASE WHEN ca > 0 THEN p / 2.0 * LOG2(p / ((p + q) / 2.0)) ELSE 0.0 END)
-        |  + (CASE WHEN cb > 0 THEN q / 2.0 * LOG2(q / ((p + q) / 2.0)) ELSE 0.0 END)
-        |    AS DECIMAL(38,16))) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS jsd_bits,
-        |  (SELECT CAST(na AS BIGINT) FROM nn) AS n_a,
-        |  (SELECT CAST(nb AS BIGINT) FROM nn) AS n_b
-        |FROM tm""".stripMargin,
-
-    // The amortized twin: batch = fr, reference = the SUMMED en+de
-    // distribution (base + the de delta the Spark side reads through).
-    "q_s_drift_amortized_step" ->
-      """WITH t AS (SELECT lang AS s, UNNEST(string_split(
-        |      lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ')) AS tok
-        |  FROM documents WHERE lang IN ('en', 'de', 'fr')),
-        |c AS (SELECT s, tok, COUNT(*) AS c FROM t WHERE tok <> '' GROUP BY 1, 2),
-        |a AS (SELECT tok, SUM(c) AS ca FROM c WHERE s = 'fr' GROUP BY tok),
-        |b AS (SELECT tok, SUM(c) AS cb FROM c WHERE s IN ('en', 'de') GROUP BY tok),
-        |nn AS (SELECT SUM(CASE WHEN s = 'fr' THEN c END) AS na,
-        |    SUM(CASE WHEN s IN ('en', 'de') THEN c END) AS nb FROM c),
         |al AS (SELECT COALESCE(a.ca, 0) AS ca, COALESCE(b.cb, 0) AS cb
         |  FROM a FULL OUTER JOIN b ON a.tok = b.tok),
         |tm AS (SELECT ca, cb,

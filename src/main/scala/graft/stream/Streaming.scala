@@ -1,9 +1,10 @@
 package graft.stream
 
 import graft.operators.Joins
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 import graft.functions.StableMath.gridSnap
@@ -22,37 +23,6 @@ import graft.functions.StableMath.gridSnap
   * (tested in batch via the oracle, in streaming via MemoryStream).
   */
 object Streaming {
-
-  /** Read a monitor/dedup state store (its schema comes from the
-    * version's marker), or an empty relation of `schema` on first use.
-    * LOUD (`requireVersionedOrEmpty`) on a legacy plain-parquet store:
-    * silently treating one as empty would reset the state — re-admitting
-    * seen content, restarting a reference distribution or sketch from
-    * zero.
-    */
-  private def readStoreOrEmpty(spark: SparkSession, storePath: String,
-                               schema: org.apache.spark.sql.types.StructType)
-      : DataFrame =
-    if (graft.lake.VersionedTable.isVersioned(spark, storePath))
-      graft.lake.VersionedTable.readCurrent(spark, storePath)
-    else {
-      graft.lake.VersionedTable.requireVersionedOrEmpty(spark, storePath)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-
-  /** A store's base ∪ its pending segments (delta names under the
-    * root), the segments in one scan; `schema` only shapes the empty
-    * first-batch store.
-    */
-  private def readLayers(spark: SparkSession, storePath: String,
-                         schema: org.apache.spark.sql.types.StructType,
-                         segments: Seq[String]): DataFrame = {
-    val base = readStoreOrEmpty(spark, storePath, schema)
-    if (segments.isEmpty) base
-    else base.unionByName(
-      graft.lake.VersionedTable.scanLayers(spark, storePath, segments))
-  }
 
   /** Batch-side row cap for the STORE-SHUFFLE-FREE probe the
     * stateful dedup/novelty steps use (r16): when the batch's key
@@ -453,10 +423,26 @@ object Streaming {
                          family: graft.textops.HashFamily =
                            graft.textops.HashFamily.Xx64,
                          maxSegments: Int = 0): DataFrame =
-    retentionStep(batch, storePath, maxSegments) { segments =>
-      nearDedupBatchCompute(batch, idCol, textCol, tsCol, storePath,
-        retention, shingleN, numHashes, bands, family, segments)
+    retentionStep(batch, storePath,
+        nearDedupStore(shingleN, numHashes, bands, family), maxSegments) {
+      nearDedupBatchCompute(batch, idCol, textCol, tsCol, _, retention,
+        shingleN, numHashes, bands, family)
     }
+
+  /** The near-dedup band store. Band keys are a one-way function of
+    * the LSH geometry — a changed parameter would silently stop old
+    * rows from colliding, so the seam pins it.
+    */
+  private[graft] def nearDedupStore(shingleN: Int, numHashes: Int, bands: Int,
+                                    family: graft.textops.HashFamily =
+                                      graft.textops.HashFamily.Xx64)
+      : StoreSpec = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    StoreSpec(
+      s"neardedup;shingleN=$shingleN;numHashes=$numHashes;bands=$bands;family=$family",
+      StructType(Seq(StructField("band", IntegerType),
+        StructField("key", LongType), StructField("_ts", TimestampType))))
+  }
 
   /** The decision half of [[nearDedupBatchStep]] ([[StoreDecision]]
     * with the survivors as `out` and their bands as the segment) — the
@@ -466,26 +452,15 @@ object Streaming {
     */
   private[graft] def nearDedupBatchCompute(batch: DataFrame, idCol: String,
                                     textCol: String, tsCol: String,
-                                    storePath: String, retention: String,
+                                    read: StoreRead, retention: String,
                                     shingleN: Int, numHashes: Int,
                                     bands: Int,
                                     family: graft.textops.HashFamily =
-                                      graft.textops.HashFamily.Xx64,
-                                    deltaPaths: Seq[String] = Nil)
+                                      graft.textops.HashFamily.Xx64)
       : StoreDecision = {
-    import org.apache.spark.sql.types._
-    val spark = batch.sparkSession
-    // band keys are a one-way function of the LSH geometry — a changed
-    // parameter would silently stop old rows from colliding (O(1)
-    // sidecar check; see requireParams)
-    graft.lake.VersionedTable.requireParams(spark, storePath,
-      s"neardedup;shingleN=$shingleN;numHashes=$numHashes;bands=$bands;family=$family")
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val storeSchema = StructType(Seq(StructField("band", IntegerType),
-      StructField("key", LongType), StructField("_ts", TimestampType)))
     // cross-layer (band, key) duplicates only arise from re-admission
     // after expiry and are harmless to the decision (a hit is a flag)
-    val store = readLayers(spark, storePath, storeSchema, deltaPaths)
+    val store = read.store
     // the batch, read once and banded map-side; band rows, survivors
     // and survivor bands all come from this materialization, which
     // also delivers the batch bounds and the probe's row-count bound
@@ -539,69 +514,106 @@ object Streaming {
     // and skips the extra shuffle
     val merged = liveStore.unionByName(survBands)
     val folded =
-      if (deltaPaths.isEmpty) merged
+      if (read.segments.isEmpty) merged
       else merged.groupBy("band", "key").agg(max(col("_ts")).as("_ts"))
     StoreDecision(survivors, folded, survBands, bounds)
   }
 
-  /** One retention step's decision, with the state write left to
-    * [[commitState]]: `out` (materialized), the LAZY horizon-pruned
-    * fold of every live layer plus the batch (`folded`, the next
-    * base), the batch-only `segment`, the batch's [[observeBounds]]
-    * (max event time, horizon), and whether this batch must republish
-    * whatever the layout (semdedup's quantizer change).
+  /** One store step's decision, with the state write left to
+    * [[commitState]]: `out` (materialized), the LAZY fold of every
+    * live layer plus the batch (`folded`, the next base; the retention
+    * stores prune it to their horizon), the batch-only `segment`, the
+    * batch's [[observeBounds]] (max event time, horizon; none for the
+    * horizon-free drift and KMV stores), and whether this batch must
+    * republish whatever the layout (semdedup's quantizer change).
     */
   private[graft] final case class StoreDecision(
       out: DataFrame, folded: DataFrame, segment: DataFrame,
-      bounds: (Option[Timestamp], Option[Timestamp]),
+      bounds: (Option[Timestamp], Option[Timestamp]) = (None, None),
       forceRepublish: Boolean = false)
+
+  /** A stream store's contract with [[retentionStep]]: the parameter
+    * string the seam pins ([[graft.lake.VersionedTable.requireParams]])
+    * and the schema of its empty first-use relation.
+    */
+  private[graft] final case class StoreSpec(params: String, schema: StructType)
+
+  /** What the seam hands a decision: the `store` — its base ∪ pending
+    * segments in one scan, or on first use an empty relation of the
+    * declared schema — and the layers one listing of the root found
+    * (None on first use).
+    */
+  private[graft] final case class StoreRead(
+      store: DataFrame, layers: Option[graft.lake.VersionedTable.Layers]) {
+    /** The pending segments `store` reads over the base. */
+    def segments: Seq[String] = layers.fold(Seq.empty[String])(_.pending)
+  }
+
+  /** The seam's pin and read: pin `spec.params`, which refuses a legacy
+    * plain-parquet root LOUDLY before it writes anything (reading one
+    * as empty would reset the state — re-admitting seen content,
+    * restarting a distribution or sketch from zero), then list the
+    * root ONCE and read what that listing names.
+    */
+  private[graft] def readStore(spark: SparkSession, storePath: String,
+                               spec: StoreSpec): StoreRead = {
+    graft.lake.VersionedTable.requireParams(spark, storePath, spec.params)
+    val layers = graft.lake.VersionedTable.currentLayers(spark, storePath)
+    StoreRead(layers.fold(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], spec.schema))(
+        l => graft.lake.VersionedTable.scanLayers(spark, storePath,
+          l.base +: l.pending)),
+      layers)
+  }
 
   private def requireMaxSegments(maxSegments: Int): Unit =
     require(maxSegments >= 0,
       s"maxSegments must be >= 0 (0 = republish every batch), got $maxSegments")
 
-  /** The shared body of the three retention steps and their writers:
-    * list the store layers once (so the decision read and the state
-    * write agree on them), decide, hand `out` to `sink` — the writers'
-    * merge-on-read upsert, which commits BEFORE the state so a crash
-    * between the two converges on redelivery — then [[commitState]].
+  /** The one seam of every stream store that republishes its fold —
+    * the three retention steps and their writers, the drift monitor
+    * and both KMV monitors: [[readStore]] pins `spec.params` and lists
+    * the root once (so the decision read and the state write agree on
+    * the layers), `decide` runs on that read, `sink` gets `out` — the
+    * writers' merge-on-read upsert, which commits BEFORE the state so
+    * a crash between the two converges on redelivery — then
+    * [[commitState]].
     */
   private[graft] def retentionStep(batch: DataFrame, storePath: String,
-                                   maxSegments: Int,
+                                   spec: StoreSpec, maxSegments: Int,
                                    sink: DataFrame => Unit = _ => ())(
-                                   decide: Seq[String] => StoreDecision)
+                                   decide: StoreRead => StoreDecision)
       : DataFrame = {
     requireMaxSegments(maxSegments)
     val spark = batch.sparkSession
-    val hasBase = graft.lake.VersionedTable.isVersioned(spark, storePath)
-    val segments =
-      if (hasBase) graft.lake.VersionedTable.pendingDeltas(spark, storePath)
-      else Seq.empty[String]
-    val d = decide(segments)
+    val read = readStore(spark, storePath, spec)
+    val d = decide(read)
     sink(d.out)
-    commitState(spark, storePath, hasBase, segments, maxSegments, d)
+    commitState(spark, storePath, read.layers, maxSegments, d)
     d.out
   }
 
-  /** The one publish rule of the retention stores (see
+  /** The one publish rule of the stream stores (see
     * [[noveltyGateBatchStep]]'s state-layout paragraph): with no base
     * yet, at `maxSegments = 0`, or on a forced republish, publish the
-    * pruned fold as the new base and vacuum the segments it subsumed;
-    * otherwise append the batch's stamped segment, drop the segments
-    * that fell fully behind this batch's horizon, and L1-merge the
-    * oldest once more than `maxSegments` are pending. Vacuum runs
-    * before the merge so expired segments drop from metadata alone
-    * instead of being rewritten into the merged one.
+    * fold as the new base and vacuum the deltas no retained base needs
+    * any more (while any delta is listed, so the segments it subsumed
+    * leave once the reader horizon passes them); otherwise append the
+    * batch's stamped segment, drop the segments that fell fully behind
+    * this batch's horizon, and L1-merge the oldest once more than
+    * `maxSegments` are pending. Vacuum runs before the merge so expired
+    * segments drop from metadata alone instead of being rewritten into
+    * the merged one.
     */
   private def commitState(spark: SparkSession, storePath: String,
-                          hasBase: Boolean, segments: Seq[String],
+                          layers: Option[graft.lake.VersionedTable.Layers],
                           maxSegments: Int, d: StoreDecision): Unit =
-    if (!hasBase || maxSegments == 0 || d.forceRepublish) {
+    if (layers.isEmpty || maxSegments == 0 || d.forceRepublish) {
       // manifest-versioned publish: the new version becomes visible
       // atomically via its marker; a crash mid-write leaves the old
       // version current
       graft.lake.VersionedTable.publish(d.folded, storePath)
-      if (segments.nonEmpty)
+      if (layers.exists(_.anyDelta))
         graft.lake.VersionedTable.vacuumDeltas(spark, storePath)
     } else {
       graft.lake.VersionedTable.appendDeltaStamped(d.segment, storePath,
@@ -641,67 +653,41 @@ object Streaming {
     * Returns 1 row: (jsd_bits, n_a = batch tokens, n_b = reference
     * tokens).
     *
-    * AMORTIZED REPUBLISH (`pruneEvery = N > 1`, r16 — closing the
-    * last vocabulary-proportional per-batch write term among the
-    * stateful stores): non-republish batches `appendDelta` only THIS
-    * batch's (token, count) rows (an O(batch-vocabulary) write); every Nth
-    * batch the re-summed merged view (base ∪ pending deltas)
-    * republishes as a fresh base and vacuums the subsumed delta dirs.
-    * This store has no horizon, so there is no expiry corner: the
-    * reference is an exact long-count fold, so the merged read is bit-identical to what eager mode would have
-    * published, and every verdict — on-time OR late — is bit-identical
-    * across modes (the per-token JSD terms reduce through the
-    * decimal-exact order-invariant sum, spec-pinned). The per-batch
-    * READ stays vocabulary-sized in both modes (the JSD alignment is
-    * a full-outer join against the whole reference); pruneEvery only
-    * removes the vocabulary-sized WRITE.
+    * The step is a decision on [[retentionStep]] at `maxSegments = 0`:
+    * every batch republishes the re-summed reference. A store that
+    * still holds pending (token, count) deltas — the layout of the
+    * removed amortized mode — is read as base ∪ deltas re-summed (the
+    * long-count fold is exact and commutative, so that view equals the
+    * store an every-batch republish would hold, bit for bit); its next
+    * batch folds the deltas into the new base, and the seam's vacuum
+    * drops them once no retained base needs them.
     */
   def driftMonitorBatchStep(batch: DataFrame, textCol: String,
-                            storePath: String,
-                            pruneEvery: Int = 1): DataFrame = {
-    import org.apache.spark.sql.types._
-    require(pruneEvery >= 1, s"pruneEvery must be >= 1, got $pruneEvery")
-    val spark = batch.sparkSession
+                            storePath: String): DataFrame =
     // the tokenizer is fixed today (NFC-normalize + whitespace split),
-    // but the reference distribution is a function OF it — stamping
-    // the version means a future tokenizer change refuses to fold new
-    // tokens into a distribution counted under the old one, instead
-    // of silently reporting phantom drift
-    graft.lake.VersionedTable.requireParams(spark, storePath,
-      "drift;tokenizer=nfc-ws-v1")
-    val hasBase = graft.lake.VersionedTable.isVersioned(spark, storePath)
-    val deltaPaths =
-      if (hasBase) graft.lake.VersionedTable.pendingDeltas(spark, storePath)
-      else Seq.empty[String]
-    val driftSchema = StructType(Seq(StructField("_tok", StringType),
-      StructField("_c", LongType)))
-    val layers = readLayers(spark, storePath, driftSchema, deltaPaths)
-    // base ∪ pending deltas re-summed (amortized mode): the long-count
-    // fold is exact and commutative, so this merged view equals the
-    // store eager mode would have published, bit for bit
-    val store =
-      if (deltaPaths.isEmpty) layers
-      else layers.groupBy("_tok").agg(sum(col("_c")).as("_c"))
-    val counts = batch
-      .select(explode(graft.textops.TextFunctions.tokens(
-        graft.textops.TextFunctions.normalized(col(textCol)))).as("_tok"))
-      .where(length(col("_tok")) > 0)
-      .groupBy("_tok").agg(count(lit(1)).as("_c"))
-      .localCheckpoint()
-    val verdict = graft.textops.TextAnalysis.jsdFromCounts(
-        counts.select(col("_tok"), col("_c").as("_ca")),
-        store.select(col("_tok"), col("_c").as("_cb")))
-      .localCheckpoint() // decided against the store version read above
-    val newStore = store.unionByName(counts)
-      .groupBy("_tok").agg(sum(col("_c")).as("_c"))
-    if (!hasBase || pruneEvery <= 1 || deltaPaths.size + 1 >= pruneEvery) {
-      graft.lake.VersionedTable.publish(newStore, storePath)
-      if (deltaPaths.nonEmpty)
-        graft.lake.VersionedTable.vacuumDeltas(spark, storePath)
-    } else
-      graft.lake.VersionedTable.appendDelta(counts, storePath)
-    verdict
-  }
+    // but the reference distribution is a function OF it — pinning it
+    // means a future tokenizer change refuses to fold new tokens into
+    // a distribution counted under the old one, instead of silently
+    // reporting phantom drift
+    retentionStep(batch, storePath, StoreSpec("drift;tokenizer=nfc-ws-v1",
+        StructType(Seq(StructField("_tok", StringType),
+          StructField("_c", LongType)))), maxSegments = 0) { read =>
+      val store =
+        if (read.segments.isEmpty) read.store
+        else read.store.groupBy("_tok").agg(sum(col("_c")).as("_c"))
+      val counts = batch
+        .select(explode(graft.textops.TextFunctions.tokens(
+          graft.textops.TextFunctions.normalized(col(textCol)))).as("_tok"))
+        .where(length(col("_tok")) > 0)
+        .groupBy("_tok").agg(count(lit(1)).as("_c"))
+        .localCheckpoint()
+      val verdict = graft.textops.TextAnalysis.jsdFromCounts(
+          counts.select(col("_tok"), col("_c").as("_ca")),
+          store.select(col("_tok"), col("_c").as("_cb")))
+        .localCheckpoint() // decided against the store version read above
+      StoreDecision(verdict, store.unionByName(counts)
+        .groupBy("_tok").agg(sum(col("_c")).as("_c")), counts)
+    }
 
   /** One micro-batch step of streaming DISTINCT-COUNT monitoring — the
     * incremental form of
@@ -737,27 +723,24 @@ object Streaming {
     */
   def kmvDistinctBatchStep(batch: DataFrame, valueCol: String,
                            storePath: String, k: Int = 256): DataFrame = {
-    import org.apache.spark.sql.types._
     require(k >= 2, s"sketch size must be at least 2, got $k")
-    val spark = batch.sparkSession
     // a k-truncated min-sketch cannot be widened later (the discarded
     // mins are gone) nor narrowed safely — pin k to the store
-    graft.lake.VersionedTable.requireParams(spark, storePath,
-      s"kmv;hash=md5uniform;k=$k")
-    val store = readStoreOrEmpty(spark, storePath,
-      StructType(Seq(StructField("_u", DoubleType))))
-    val batchMins = batch.where(col(valueCol).isNotNull)
-      .agg(graft.functions.KmvAggregator
-        .kmv(k, graft.analytics.Sketches.md5Uniform(col(valueCol))).as("_kmv"))
-      .select(explode(col("_kmv")).as("_u"))
-    val newStore = store.unionByName(batchMins)
-      .distinct().orderBy(col("_u")).limit(k)
-      .localCheckpoint() // ≤ 2k rows in, ≤ k out — tiny, computed once
-    graft.lake.VersionedTable.publish(newStore, storePath)
-    newStore.agg(sort_array(collect_list(col("_u"))).as("_kmv"))
-      .select(
-        graft.analytics.Sketches.kmvEstimate(col("_kmv"), k).as("est_distinct"),
-        size(col("_kmv")).as("n_mins"))
+    retentionStep(batch, storePath, StoreSpec(s"kmv;hash=md5uniform;k=$k",
+        StructType(Seq(StructField("_u", DoubleType)))),
+        maxSegments = 0) { read =>
+      val batchMins = batch.where(col(valueCol).isNotNull)
+        .agg(graft.functions.KmvAggregator
+          .kmv(k, graft.analytics.Sketches.md5Uniform(col(valueCol))).as("_kmv"))
+        .select(explode(col("_kmv")).as("_u"))
+      val newStore = read.store.unionByName(batchMins)
+        .distinct().orderBy(col("_u")).limit(k)
+        .localCheckpoint() // ≤ 2k rows in, ≤ k out — tiny, computed once
+      StoreDecision(newStore.agg(sort_array(collect_list(col("_u"))).as("_kmv"))
+        .select(
+          graft.analytics.Sketches.kmvEstimate(col("_kmv"), k).as("est_distinct"),
+          size(col("_kmv")).as("n_mins")), newStore, batchMins)
+    }
   }
 
   /** Per-key form of [[kmvDistinctBatchStep]]: one KMV sketch per
@@ -780,31 +763,27 @@ object Streaming {
   def kmvDistinctByKeyBatchStep(batch: DataFrame, keyCol: String,
                                 valueCol: String, storePath: String,
                                 k: Int = 256): DataFrame = {
-    import org.apache.spark.sql.types._
     require(k >= 2, s"sketch size must be at least 2, got $k")
-    val spark = batch.sparkSession
     // same k-pinning rationale as the global sketch above
-    graft.lake.VersionedTable.requireParams(spark, storePath,
-      s"kmvgroup;hash=md5uniform;k=$k")
-    val store = readStoreOrEmpty(spark, storePath,
-      StructType(Seq(StructField("_k", batch.schema(keyCol).dataType),
-        StructField("_u", DoubleType))))
-    val batchMins = batch.where(col(valueCol).isNotNull)
-      .groupBy(col(keyCol).as("_k"))
-      .agg(graft.functions.KmvAggregator
-        .kmv(k, graft.analytics.Sketches.md5Uniform(col(valueCol))).as("_kmv"))
-      .select(col("_k"), explode(col("_kmv")).as("_u"))
-    val newStore = store.unionByName(batchMins)
-      .groupBy("_k")
-      .agg(graft.functions.KmvAggregator.kmv(k, col("_u")).as("_kmv"))
-      .select(col("_k"), explode(col("_kmv")).as("_u"))
-      .localCheckpoint()
-    graft.lake.VersionedTable.publish(newStore, storePath)
-    newStore.groupBy("_k")
-      .agg(sort_array(collect_list(col("_u"))).as("_kmv"))
-      .select(col("_k").as(keyCol),
-        graft.analytics.Sketches.kmvEstimate(col("_kmv"), k).as("est_distinct"),
-        size(col("_kmv")).as("n_mins"))
+    retentionStep(batch, storePath, StoreSpec(s"kmvgroup;hash=md5uniform;k=$k",
+        StructType(Seq(StructField("_k", batch.schema(keyCol).dataType),
+          StructField("_u", DoubleType)))), maxSegments = 0) { read =>
+      val batchMins = batch.where(col(valueCol).isNotNull)
+        .groupBy(col(keyCol).as("_k"))
+        .agg(graft.functions.KmvAggregator
+          .kmv(k, graft.analytics.Sketches.md5Uniform(col(valueCol))).as("_kmv"))
+        .select(col("_k"), explode(col("_kmv")).as("_u"))
+      val newStore = read.store.unionByName(batchMins)
+        .groupBy("_k")
+        .agg(graft.functions.KmvAggregator.kmv(k, col("_u")).as("_kmv"))
+        .select(col("_k"), explode(col("_kmv")).as("_u"))
+        .localCheckpoint()
+      StoreDecision(newStore.groupBy("_k")
+        .agg(sort_array(collect_list(col("_u"))).as("_kmv"))
+        .select(col("_k").as(keyCol),
+          graft.analytics.Sketches.kmvEstimate(col("_kmv"), k).as("est_distinct"),
+          size(col("_kmv")).as("n_mins")), newStore, batchMins)
+    }
   }
 
   /** One micro-batch step of incremental NOVELTY GATING — the streaming
@@ -889,8 +868,7 @@ object Streaming {
     * at the next fresh batch's prune; and because the fold keeps each
     * shingle's NEWEST timestamp, a late duplicate never rewinds a live
     * shingle's clock. Every stage is an equi-join or
-    * aggregation on the 8-byte shingle hash; the 1-row horizon
-    * aggregate rides a broadcast join, and below
+    * aggregation on the 8-byte shingle hash, and below
     * [[ProbeBroadcastMaxRows]] batch shingles the store probe broadcasts
     * the BATCH side — the store streams
     * through the join unshuffled, so a non-republish batch's only
@@ -912,10 +890,23 @@ object Streaming {
                            family: graft.textops.HashFamily =
                              graft.textops.HashFamily.Xx64,
                            maxSegments: Int = 0): DataFrame =
-    retentionStep(batch, storePath, maxSegments) { segments =>
-      noveltyGateBatchCompute(batch, idCol, textCol, tsCol, storePath,
-        minNovelty, retention, shingleN, family, segments)
+    retentionStep(batch, storePath, noveltyStore(shingleN, family),
+        maxSegments) {
+      noveltyGateBatchCompute(batch, idCol, textCol, tsCol, _, minNovelty,
+        retention, shingleN, family)
     }
+
+  /** The novelty gate's shingle store. Stored shingle hashes are a
+    * one-way function of (width, family) — a changed parameter would
+    * silently score against incompatible rows, so the seam pins them.
+    */
+  private[graft] def noveltyStore(shingleN: Int,
+                                  family: graft.textops.HashFamily =
+                                    graft.textops.HashFamily.Xx64)
+      : StoreSpec =
+    StoreSpec(s"novelty;shingleN=$shingleN;family=$family",
+      StructType(Seq(StructField("shingle", LongType),
+        StructField("_ts", TimestampType))))
 
   /** The decision half of [[noveltyGateBatchStep]] ([[StoreDecision]]
     * with the admitted rows as `out` and their shingles as the
@@ -924,25 +915,16 @@ object Streaming {
     */
   private[graft] def noveltyGateBatchCompute(batch: DataFrame, idCol: String,
                                       textCol: String, tsCol: String,
-                                      storePath: String, minNovelty: Double,
+                                      read: StoreRead, minNovelty: Double,
                                       retention: String, shingleN: Int,
                                       family: graft.textops.HashFamily =
-                                        graft.textops.HashFamily.Xx64,
-                                      deltaPaths: Seq[String] = Nil)
+                                        graft.textops.HashFamily.Xx64)
       : StoreDecision = {
-    import org.apache.spark.sql.types._
     require(minNovelty >= 0 && minNovelty <= 1,
       s"minNovelty must be in [0,1], got $minNovelty")
-    val spark = batch.sparkSession
-    // stored shingle hashes are a one-way function of (width, family) —
-    // a changed parameter would silently score against incompatible rows
-    graft.lake.VersionedTable.requireParams(spark, storePath,
-      s"novelty;shingleN=$shingleN;family=$family")
-    val storeSchema = StructType(Seq(StructField("shingle", LongType),
-      StructField("_ts", TimestampType)))
     // duplicates across layers are harmless to the probe, and the
     // republish fold takes max(_ts)
-    val store = readLayers(spark, storePath, storeSchema, deltaPaths)
+    val store = read.store
     // batch-sized; computed ONCE — three consumers (store probe,
     // per-doc totals, admitted-shingle extraction). The same
     // materialization delivers the batch bounds and the probe's
@@ -1025,11 +1007,10 @@ object Streaming {
     requireMaxSegments(maxSegments)
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, _: Long) =>
-        retentionStep(batch, storePath, maxSegments,
-            morUpsertStep(_, Seq(idCol), admittedPath)) {
-          segments =>
-            noveltyGateBatchCompute(batch, idCol, textCol, tsCol, storePath,
-              minNovelty, retention, shingleN, family, segments)
+        retentionStep(batch, storePath, noveltyStore(shingleN, family),
+            maxSegments, morUpsertStep(_, Seq(idCol), admittedPath)) {
+          noveltyGateBatchCompute(batch, idCol, textCol, tsCol, _, minNovelty,
+            retention, shingleN, family)
         }
         ()
     }
@@ -1082,11 +1063,11 @@ object Streaming {
     requireMaxSegments(maxSegments)
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, _: Long) =>
-        retentionStep(batch, storePath, maxSegments,
+        retentionStep(batch, storePath,
+            nearDedupStore(shingleN, numHashes, bands, family), maxSegments,
             morUpsertStep(_, Seq(idCol), survivorsPath)) {
-          segments =>
-            nearDedupBatchCompute(batch, idCol, textCol, tsCol, storePath,
-              retention, shingleN, numHashes, bands, family, segments)
+          nearDedupBatchCompute(batch, idCol, textCol, tsCol, _, retention,
+            shingleN, numHashes, bands, family)
         }
         ()
     }
@@ -1264,9 +1245,9 @@ object Streaming {
     * the embedding itself IS the bounded choice here: d doubles per
     * admitted vector within the retention horizon, and the decision
     * stays exact-cosine — no precision trade. Pair work per batch is
-    * Σ (batch-bucket × store-bucket), bounded by the quantizer; the
-    * 1-row horizon aggregate rides a broadcast join, nothing collects
-    * to the driver except the k-row quantizer fingerprint below.
+    * Σ (batch-bucket × store-bucket), bounded by the quantizer; nothing
+    * collects to the driver except the k-row quantizer fingerprint
+    * below.
     * Duplicates farther apart than the retention both survive; the
     * at-rest [[graft.textops.Similarity.semanticDedup]] pass catches
     * those.
@@ -1328,11 +1309,22 @@ object Streaming {
                              threshold: Double, storePath: String,
                              retention: String = "1 hour",
                              maxSegments: Int = 0): DataFrame =
-    retentionStep(batch, storePath, maxSegments) { segments =>
+    retentionStep(batch, storePath, SemanticDedupStore, maxSegments) {
       semanticDedupBatchCompute(batch, idCol, vecCol, tsCol, centroids,
-        bucketCol, centroidVecCol, threshold, storePath, retention,
-        segments)
+        bucketCol, centroidVecCol, threshold, _, retention)
     }
+
+  /** The semantic-dedup vector store. Its rows are raw vectors, so a
+    * quantizer change migrates them on read (`_qfp`) and the pin only
+    * names the layout.
+    */
+  private val SemanticDedupStore = StoreSpec(
+    "semdedup;layout=bucket-sid-svec-ts-qfp",
+    StructType(Seq(StructField("bucket", LongType),
+      StructField("_sid", LongType),
+      StructField("_svec", ArrayType(DoubleType)),
+      StructField("_ts", TimestampType),
+      StructField("_qfp", LongType))))
 
   /** Decision half of [[semanticDedupBatchStep]] ([[StoreDecision]]
     * with the survivors as `out` and their vectors as the segment) —
@@ -1344,12 +1336,9 @@ object Streaming {
                                         vecCol: String, tsCol: String,
                                         centroids: DataFrame, bucketCol: String,
                                         centroidVecCol: String,
-                                        threshold: Double, storePath: String,
-                                        retention: String,
-                                        deltaPaths: Seq[String] = Seq.empty)
+                                        threshold: Double, read: StoreRead,
+                                        retention: String)
       : StoreDecision = {
-    import org.apache.spark.sql.types._
-    val spark = batch.sparkSession
     // quantizer fingerprint: order-independent combine of per-centroid
     // hashes — a k-row aggregate (planning-relation class). bit_xor
     // alone is NOT duplicate-safe (duplicate centroid rows cancel
@@ -1365,19 +1354,13 @@ object Streaming {
       .agg(expr("bit_xor(_h)").as("x"),
         sum(col("_h").cast("decimal(38,0)")).as("s"),
         count(lit(1)).as("n"))
-    val storeSchema = StructType(Seq(StructField("bucket", LongType),
-      StructField("_sid", LongType),
-      StructField("_svec", ArrayType(DoubleType)),
-      StructField("_ts", TimestampType),
-      StructField("_qfp", LongType)))
     // segments always carry _qfp and — by the forced-republish-on-
     // change invariant — the SAME one as the base under them, so the
     // union stays fingerprint-uniform. A pre-seam store lacks the
     // column and reads it as null: the stale-quantizer fallback
-    val layers = readLayers(spark, storePath, storeSchema, deltaPaths)
     val store =
-      if (layers.columns.contains("_qfp")) layers
-      else layers.withColumn("_qfp", lit(null).cast(LongType))
+      if (read.store.columns.contains("_qfp")) read.store
+      else read.store.withColumn("_qfp", lit(null).cast(LongType))
     // every published version stamps ONE uniform fingerprint (the
     // whole new store gets `lit(qfp)` below), so the FIRST row decides
     // the fast path — a limit(1) that short-circuits after one row
@@ -1474,7 +1457,7 @@ object Streaming {
     // exactly the twin class and nothing else. A store with no pending
     // segments skips the extra shuffle.
     val folded =
-      if (deltaPaths.isEmpty) merged
+      if (read.segments.isEmpty) merged
       else merged.groupBy(col("_sid"), col("_svec"))
         .agg(max(struct(col("_ts"), col("bucket"))).as("_m"))
         .select(col("_m.bucket").as("bucket"), col("_sid"),
@@ -1507,12 +1490,10 @@ object Streaming {
     requireMaxSegments(maxSegments)
     rows.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, _: Long) =>
-        retentionStep(batch, storePath, maxSegments,
+        retentionStep(batch, storePath, SemanticDedupStore, maxSegments,
             morUpsertStep(_, Seq(idCol), survivorsPath)) {
-          segments =>
-            semanticDedupBatchCompute(batch, idCol, vecCol, tsCol, centroids,
-              bucketCol, centroidVecCol, threshold, storePath, retention,
-              segments)
+          semanticDedupBatchCompute(batch, idCol, vecCol, tsCol, centroids,
+            bucketCol, centroidVecCol, threshold, _, retention)
         }
         ()
     }
@@ -1536,22 +1517,16 @@ object Streaming {
                               textCol: String, labelCol: String, dim: Int,
                               lr: Double, storePath: String,
                               batchId: Option[Long] = None): DataFrame = {
-    val spark = batch.sparkSession
     // weight rows are keyed by md5-hashed feature index mod dim — a
     // changed dim remaps every index, so the prior weights would be
     // silently applied to the wrong features (lr is step size only —
-    // deliberately not stamped, tuning it mid-stream is legitimate)
-    graft.lake.VersionedTable.requireParams(spark, storePath,
-      s"logistic;features=md5-token-share;dim=$dim")
-    val prior =
-      if (graft.lake.VersionedTable.isVersioned(spark, storePath))
-        Some(graft.lake.VersionedTable.readCurrent(spark, storePath))
-      else {
-        // loud on a legacy plain-parquet store: treating it as absent
-        // would restart the model from zero
-        graft.lake.VersionedTable.requireVersionedOrEmpty(spark, storePath)
-        None
-      }
+    // deliberately not stamped, tuning it mid-stream is legitimate).
+    // The store is never segmented, so its read is the current base.
+    val read = readStore(batch.sparkSession, storePath,
+      StoreSpec(s"logistic;features=md5-token-share;dim=$dim",
+        StructType(Seq(StructField("feat", LongType),
+          StructField("w", DoubleType)))))
+    val prior = read.layers.map(_ => read.store)
     // At-least-once redelivery guard: foreachBatch commits its offsets
     // AFTER this function returns, so a crash between our publish and
     // the checkpoint commit re-runs the same micro-batch. The store

@@ -110,11 +110,10 @@ class PartitionInvarianceSpec extends SparkSpec {
     * state, so the comparison runs each step sequence into a FRESH
     * store per config and compares both the per-batch results and the
     * final published store contents — this pins the per-batch
-    * republish folds (and drift's amortized delta re-sum) against
-    * partition-order sensitivity too, which the read-only families
-    * above can't reach.
+    * republish folds against partition-order sensitivity too, which
+    * the read-only families above can't reach.
     */
-  test("stateful steps (novelty, near-dedup, semdedup, drift amortized, KMV) publish bit-identical state across partitionings") {
+  test("stateful steps (novelty, near-dedup, semdedup, drift, KMV) publish bit-identical state across partitionings") {
     import graft.stream.Streaming
     import graft.lake.VersionedTable
     import spark.implicits._
@@ -171,14 +170,13 @@ class PartitionInvarianceSpec extends SparkSpec {
             .select("vec_id").as[Long].collect().sorted.mkString(",")
         out += VersionedTable.readCurrent(spark, sd)
           .collect().map(canon).sorted.mkString("|")
-        // vocab-drift monitor, amortized (r16): the JSD verdict's
-        // decimal-sum reduction AND the delta-overlay re-sum both
-        // cross partition boundaries — the store fold must land
-        // bit-identically too
+        // vocab-drift monitor: the JSD verdict's decimal-sum reduction
+        // and the count re-sum both cross partition boundaries — the
+        // store fold must land bit-identically too
         val dr = s"$base/$tag/drift"
         for ((lo, hi) <- Seq((0, 60), (40, 120)))
           out += Streaming.driftMonitorBatchStep(docBatch(lo, hi), "text",
-              dr, pruneEvery = 2)
+              dr)
             .collect().map(canon).mkString("|")
         out += VersionedTable.readCurrent(spark, dr)
           .collect().map(canon).sorted.mkString("|")
@@ -218,7 +216,7 @@ class PartitionInvarianceSpec extends SparkSpec {
     * actually EXPIRES inside the sequence — the vacuum decision under
     * test is the physical drop, not just the logical filter.
     */
-  test("segment-mode steps (novelty, near-dedup, semdedup at pruneEvery = 0) publish bit-identical merged state and vacuum decisions across partitionings") {
+  test("segment-mode steps (novelty, near-dedup, semdedup at maxSegments > 0) publish bit-identical merged state and vacuum decisions across partitionings") {
     import graft.stream.Streaming
     import graft.lake.VersionedTable
     import spark.implicits._

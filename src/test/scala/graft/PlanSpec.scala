@@ -482,8 +482,9 @@ class PlanSpec extends SparkSpec {
       .count()
     val newStore = Streaming.noveltyGateBatchCompute(
       batch((2L, "one two three four five six seven eight", "2024-01-02 09:00:00")),
-      "doc_id", "text", "ts", root, minNovelty = 0.0, retention = "1 hour",
-      shingleN = 3).folded
+      "doc_id", "text", "ts",
+      Streaming.readStore(spark, root, Streaming.noveltyStore(3)),
+      minNovelty = 0.0, retention = "1 hour", shingleN = 3).folded
     // string-level assert (the AQE wrapper hides the scan from plan
     // collectors until finalization): the store's FileScan must carry
     // the horizon as a PUSHED filter, not only a post-scan Filter

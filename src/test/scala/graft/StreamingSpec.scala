@@ -313,7 +313,7 @@ class StreamingSpec extends SparkSpec {
       "the live segment-mode state must equal the eager store")
   }
 
-  test("novelty gate segment mode (pruneEvery = 0): decisions match eager, no republish after bootstrap, expired segments drop whole") {
+  test("novelty gate segment mode: decisions match eager, no republish after bootstrap, expired segments drop whole") {
     import graft.lake.VersionedTable
     val dir = java.nio.file.Files.createTempDirectory("graft_novseg").toString
     val eagerStore = dir + "/eager"
@@ -412,36 +412,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows(unb) === rows(bnd))
   }
 
-  test("amortized drift republish physically vacuums subsumed deltas past the reader horizon") {
-    import graft.stream.Streaming
-    import graft.lake.VersionedTable
-    val store = java.nio.file.Files.createTempDirectory("graft_driftvac")
-      .toString + "/dr"
-    def step(id: Long) =
-      Streaming.driftMonitorBatchStep(Seq(s"fresh words for batch $id")
-        .toDF("text"), "text", store, pruneEvery = 2).count()
-    def deltaDirsOnDisk = new java.io.File(store).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("d-"))
-      .map(_.getName).sorted.toSeq
-    step(1) // bootstrap publish R1
-    step(2) // delta D1
-    val d1 = VersionedTable.listDeltas(spark, store).head
-    step(3) // republish R2 — D1 subsumed but > oldest retained base: kept
-    assert(VersionedTable.pendingDeltas(spark, store).isEmpty)
-    assert(deltaDirsOnDisk.contains(d1),
-      "a delta a retained-base reader could still apply must survive")
-    step(4) // delta D2
-    step(5) // republish R3 — horizon still R1's ts: D1 kept
-    step(6) // delta D3
-    step(7) // republish R4 drops base R1; horizon advances to R2's ts,
-            // which dominates D1 → D1's directory is provably dead
-    assert(!deltaDirsOnDisk.contains(d1),
-      "republish must physically remove deltas past the reader horizon " +
-        "(without this every republish orphans pruneEvery-1 dirs forever)")
-    assert(deltaDirsOnDisk.size === 2, // D2, D3 still inside the horizon
-      s"expected exactly D2+D3 on disk, got $deltaDirsOnDisk")
-  }
-
   test("quantizer fingerprint is duplicate-safe: XOR-cancelling duplicate centroids still trigger the re-bucket pass") {
     import graft.stream.Streaming
     val dir = java.nio.file.Files.createTempDirectory("graft_semqdup").toString
@@ -471,53 +441,61 @@ class StreamingSpec extends SparkSpec {
       "duplicate-grown quantizer read as unchanged — near-dup admitted")
   }
 
-  test("drift monitor pruneEvery: amortized verdicts are BIT-identical to eager, republish folds on schedule and vacuums deltas") {
+  test("drift monitor: a store holding count deltas judges through them, then its next batch folds them and vacuums them past the reader horizon") {
     import graft.lake.VersionedTable
-    val dir = java.nio.file.Files.createTempDirectory("graft_driftprune").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_driftdeltas").toString
     val eagerStore = dir + "/eager"
-    val amortStore = dir + "/amort"
+    val deltaStore = dir + "/deltas"
     def batch(texts: String*) = texts.toDF("text")
-    def run(b: org.apache.spark.sql.DataFrame) = {
-      def verdict(store: String, pe: Int) =
-        Streaming.driftMonitorBatchStep(b, "text", store, pruneEvery = pe)
-          .collect().map { r =>
-            (if (r.isNullAt(0)) None
-             else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(0))),
-              r.getLong(1), r.getLong(2))
-          }.toSeq
-      // raw-double-bit compare: the drift fold is exact (long counts +
-      // decimal-sum JSD), so amortized mode owes eager BIT equality on
-      // EVERY batch — there is no logical-expiry corner to carve out
-      val (e, a) = (verdict(eagerStore, 1), verdict(amortStore, 3))
-      assert(e === a, "amortized drift verdict diverged from eager")
-      e
-    }
-    // b1 bootstraps BOTH stores with a published base (no deltas yet)
-    val v1 = run(batch("alpha beta beta gamma"))
-    assert(v1.head._1 === None && v1.head._3 === 0L)
-    assert(VersionedTable.pendingDeltas(spark, amortStore).isEmpty)
-    val baseV1 = VersionedTable.currentVersion(spark, amortStore)
-    // b2: judged against b1's distribution; the amortized store only
-    // appends the batch's (token, count) delta (base version untouched)
-    val v2 = run(batch("alpha delta delta epsilon"))
-    assert(v2.head._1.isDefined && v2.head._2 === 4L && v2.head._3 === 4L)
-    assert(VersionedTable.pendingDeltas(spark, amortStore).size === 1)
-    assert(VersionedTable.currentVersion(spark, amortStore) === baseV1)
-    // b3 judges through base ∪ pending delta: the reference must
-    // already include b2's delta-resident counts
-    val v3 = run(batch("beta delta zeta"))
+    def counts(texts: String*) = batch(texts: _*)
+      .select(explode(graft.textops.TextFunctions.tokens(
+        graft.textops.TextFunctions.normalized(col("text")))).as("_tok"))
+      .groupBy("_tok").agg(count(lit(1)).as("_c"))
+    def verdict(store: String, b: org.apache.spark.sql.DataFrame) =
+      Streaming.driftMonitorBatchStep(b, "text", store).collect().map { r =>
+        (if (r.isNullAt(0)) None
+         else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(0))),
+          r.getLong(1), r.getLong(2))
+      }.toSeq
+    val b1 = Seq("alpha beta beta gamma")
+    val b2 = Seq("alpha delta delta epsilon")
+    val b3 = Seq("beta delta zeta")
+    // the eager store folds b1 and b2 through the step; the other holds
+    // b1 as its base and b2's counts as a pending delta — the layout an
+    // amortized writer left behind
+    verdict(eagerStore, batch(b1: _*))
+    verdict(eagerStore, batch(b2: _*))
+    verdict(deltaStore, batch(b1: _*))
+    val baseV1 = VersionedTable.currentVersion(spark, deltaStore)
+    val d1 = VersionedTable.appendDelta(counts(b2: _*), deltaStore)
+    assert(VersionedTable.pendingDeltas(spark, deltaStore) === Seq(d1))
+    // b3 is judged through base ∪ delta: the reference counts b2's
+    // delta-resident tokens, and the verdict is BIT-identical to the
+    // eager store's (long counts, decimal-sum JSD)
+    val v3 = verdict(deltaStore, batch(b3: _*))
     assert(v3.head._3 === 8L,
       "reference must include the delta-resident b2 counts")
-    assert(VersionedTable.pendingDeltas(spark, amortStore).size === 2)
-    // b4 is the 3rd batch since republish → the amortized store folds:
-    // deltas subsumed + vacuumed, base identical to the eager store's
-    run(batch("alpha beta"))
-    assert(VersionedTable.pendingDeltas(spark, amortStore).isEmpty)
-    assert(VersionedTable.currentVersion(spark, amortStore) !== baseV1)
+    assert(v3 === verdict(eagerStore, batch(b3: _*)))
+    // ... and that batch folded the delta into a new base
+    assert(VersionedTable.pendingDeltas(spark, deltaStore).isEmpty)
+    assert(VersionedTable.currentVersion(spark, deltaStore) !== baseV1)
     def snapshot(store: String) = VersionedTable.readCurrent(spark, store)
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-    assert(snapshot(amortStore) === snapshot(eagerStore),
-      "the republished fold must equal the eager store")
+    assert(snapshot(deltaStore) === snapshot(eagerStore),
+      "the folded base must equal the eager store")
+    // the folded delta is newer than the oldest retained base, so a
+    // reader of that base may still apply it: it stays on disk until
+    // the base ages out of retention (keepVersions = 3), then goes
+    def deltaDirsOnDisk = new java.io.File(deltaStore).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("d-"))
+      .map(_.getName).toSeq
+    assert(deltaDirsOnDisk === Seq(d1))
+    verdict(deltaStore, batch("alpha beta"))
+    assert(deltaDirsOnDisk === Seq(d1))
+    verdict(deltaStore, batch("gamma zeta"))
+    assert(deltaDirsOnDisk.isEmpty,
+      "the republish must vacuum the folded delta once past the reader horizon")
+    assert(VersionedTable.listDeltas(spark, deltaStore).isEmpty)
   }
 
   test("semantic dedup segment mode: decisions match eager, no republish after bootstrap, expired segments drop whole") {
@@ -864,19 +842,38 @@ class StreamingSpec extends SparkSpec {
   test("monitor steps refuse a legacy unversioned layout WITHOUT stamping their parameter pin into it") {
     // the MOR-sink ordering, now enforced inside requireParams itself
     // (r16): every pinned store rejects a legacy plain-parquet root
-    // before any side effect — exercised through a monitor step, whose
-    // pre-r16 order stamped first and rejected second
+    // before any side effect — exercised through all six stream
+    // stores, whose pins the one seam now takes
     import graft.lake.VersionedTable
     import graft.stream.Streaming
-    val root = java.nio.file.Files.createTempDirectory("graft_monlegacy")
-      .toString + "/t"
-    Seq((1L, "x")).toDF("k", "v").write.parquet(root)
-    intercept[IllegalArgumentException] {
-      Streaming.kmvDistinctBatchStep(
-        Seq(1L).toDF("v"), "v", root, k = 16)
+    val dir = java.nio.file.Files.createTempDirectory("graft_monlegacy").toString
+    val docs = Seq((1L, "some words for a document", "2024-01-01 10:00:00"))
+      .toDF("doc_id", "text", "tss")
+      .withColumn("ts", col("tss").cast("timestamp")).drop("tss")
+    val vecs = Seq((1L, Seq(1.0, 0.0), "2024-01-01 10:00:00"))
+      .toDF("vec_id", "embedding", "tss")
+      .withColumn("ts", col("tss").cast("timestamp")).drop("tss")
+    val cents = Seq(0L -> Seq(1.0, 0.0)).toDF("b", "cv")
+    val stores: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
+      "neardedup" -> (Streaming.nearDedupBatchStep(docs, "doc_id", "text",
+        "ts", _)),
+      "novelty" -> (Streaming.noveltyGateBatchStep(docs, "doc_id", "text",
+        "ts", _, minNovelty = 0.5)),
+      "semdedup" -> (Streaming.semanticDedupBatchStep(vecs, "vec_id",
+        "embedding", "ts", cents, "b", "cv", threshold = 0.9, _)),
+      "drift" -> (Streaming.driftMonitorBatchStep(docs, "text", _)),
+      "kmv" -> (Streaming.kmvDistinctBatchStep(Seq(1L).toDF("v"), "v", _,
+        k = 16)),
+      "kmvgroup" -> (Streaming.kmvDistinctByKeyBatchStep(
+        Seq(("a", 1L)).toDF("g", "v"), "g", "v", _, k = 16)))
+    stores.foreach { case (name, step) =>
+      val root = s"$dir/$name"
+      Seq((1L, "x")).toDF("k", "v").write.parquet(root)
+      intercept[IllegalArgumentException](step(root))
+      assert(!new java.io.File(s"$root/${VersionedTable.ParamsFile}").exists(),
+        s"$name: parameter pin was stamped into a dataset the guard then " +
+          "refused to touch")
     }
-    assert(!new java.io.File(s"$root/${VersionedTable.ParamsFile}").exists(),
-      "parameter pin was stamped into a dataset the guard then refused to touch")
   }
 
   test("drift monitor: reference fold is arrival-order-invariant; only verdicts follow arrival order") {
@@ -983,14 +980,16 @@ class StreamingSpec extends SparkSpec {
       (3L, Timestamp.valueOf("2024-01-01 10:02:00"),
         "completely different words about stars planets moons comets asteroids orbits"))
       .toDF("doc_id", "ts", "text")
+    def read() = Streaming.readStore(spark, store,
+      Streaming.nearDedupStore(3, 64, 16))
     // attempt 1: sink commit succeeds, state publish never happens
     val surv1 = Streaming.nearDedupBatchCompute(batch, "doc_id", "text",
-      "ts", store, "1 hour", 3, 64, 16).out
+      "ts", read(), "1 hour", 3, 64, 16).out
     Streaming.morUpsertStep(surv1, Seq("doc_id"), sink)
     assert(!graft.lake.VersionedTable.isVersioned(spark, store)) // "crashed"
     // attempt 2 (re-delivery): the full writer step runs to completion
     val d2 = Streaming.nearDedupBatchCompute(batch, "doc_id",
-      "text", "ts", store, "1 hour", 3, 64, 16)
+      "text", "ts", read(), "1 hour", 3, 64, 16)
     Streaming.morUpsertStep(d2.out, Seq("doc_id"), sink)
     graft.lake.VersionedTable.publish(d2.folded, store)
     val out = graft.lake.VersionedTable
@@ -1000,7 +999,7 @@ class StreamingSpec extends SparkSpec {
     // attempt 3 (re-delivery AFTER state publish): everything collides
     // with its own bands — survivors empty, sink unchanged
     val surv3 = Streaming.nearDedupBatchCompute(batch, "doc_id", "text",
-      "ts", store, "1 hour", 3, 64, 16).out
+      "ts", read(), "1 hour", 3, 64, 16).out
     assert(surv3.isEmpty)
     Streaming.morUpsertStep(surv3, Seq("doc_id"), sink)
     val out3 = graft.lake.VersionedTable
@@ -1055,17 +1054,18 @@ class StreamingSpec extends SparkSpec {
     def crashed(tag: String, appended: Boolean): Unit = {
       val dir = java.nio.file.Files.createTempDirectory(s"graft_segcrash_$tag").toString
       val (store, sink) = (dir + "/store", dir + "/sink")
-      def compute(b: Seq[(Long, Timestamp, String)], segs: Seq[String]) =
-        Streaming.nearDedupBatchCompute(df(b), "doc_id", "text", "ts", store,
-          "1 hour", 3, 64, 16, deltaPaths = segs)
+      val spec = Streaming.nearDedupStore(3, 64, 16)
+      def compute(b: Seq[(Long, Timestamp, String)], read: Streaming.StoreRead) =
+        Streaming.nearDedupBatchCompute(df(b), "doc_id", "text", "ts", read,
+          "1 hour", 3, 64, 16)
       def step(id: Int) =
-        Streaming.retentionStep(df(batches(id)), store, 2,
+        Streaming.retentionStep(df(batches(id)), store, spec, 2,
             Streaming.morUpsertStep(_, Seq("doc_id"), sink)) {
-          segs => compute(batches(id), segs)
+          read => compute(batches(id), read)
         }.select("doc_id").as[Long].collect().toSet
       (0 to 2).foreach(step)
       // attempt 1 of batch 3: the sink commits, then the crash
-      val d = compute(batches(3), VersionedTable.pendingDeltas(spark, store))
+      val d = compute(batches(3), Streaming.readStore(spark, store, spec))
       Streaming.morUpsertStep(d.out, Seq("doc_id"), sink)
       if (appended) {
         VersionedTable.appendDeltaStamped(d.segment, store, d.bounds._1)
@@ -1254,14 +1254,15 @@ class StreamingSpec extends SparkSpec {
         "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, Timestamp.valueOf("2024-01-01 10:01:00"), "tiny doc"))
       .toDF("doc_id", "ts", "text")
+    def read() = Streaming.readStore(spark, store, Streaming.noveltyStore(3))
     // attempt 1: sink commit succeeds, state publish never happens
     val adm1 = Streaming.noveltyGateBatchCompute(batch, "doc_id",
-      "text", "ts", store, 0.5, "10 days", 3).out
+      "text", "ts", read(), 0.5, "10 days", 3).out
     Streaming.morUpsertStep(adm1, Seq("doc_id"), sink)
     assert(!graft.lake.VersionedTable.isVersioned(spark, store)) // "crashed"
     // attempt 2 (re-delivery): the full writer step runs to completion
     val d2 = Streaming.noveltyGateBatchCompute(batch, "doc_id",
-      "text", "ts", store, 0.5, "10 days", 3)
+      "text", "ts", read(), 0.5, "10 days", 3)
     Streaming.morUpsertStep(d2.out, Seq("doc_id"), sink)
     graft.lake.VersionedTable.publish(d2.folded, store)
     val out = graft.lake.VersionedTable
@@ -1272,7 +1273,7 @@ class StreamingSpec extends SparkSpec {
     // novelty against its own shingles and drops; shingle-less doc 2
     // re-admits (null novelty) and lands on its existing key
     val adm3 = Streaming.noveltyGateBatchCompute(batch, "doc_id",
-      "text", "ts", store, 0.5, "10 days", 3).out
+      "text", "ts", read(), 0.5, "10 days", 3).out
     Streaming.morUpsertStep(adm3, Seq("doc_id"), sink)
     assert(adm3.select("doc_id").as[Long].collect().toSeq === Seq(2L))
     val out3 = graft.lake.VersionedTable

@@ -841,8 +841,8 @@ class VersionedTableSpec extends SparkSpec {
     val dead = VersionedTable.vacuumExpiredDeltas(spark, root,
       ts("2024-01-01 10:30:00"))
     // dOld fully behind the horizon and dEmpty (MinValue stamp) drop;
-    // dLive survives (stamp >= horizon); the unstamped delta is a
-    // pruneEvery-backlog artifact this path must never touch
+    // dLive survives (stamp >= horizon); an unstamped delta belongs to
+    // the republish path, which this one must never touch
     assert(dead.toSet === Set(dOld, dEmpty))
     assert(VersionedTable.pendingDeltas(spark, root).toSet
       === Set(dLive, dUnstamped))

@@ -10,11 +10,11 @@
 #      failure and PlanDump must write its plan file (nothing else runs
 #      the mains before a round)
 #   2. sf0.01 oracle pack: Verify dump + DuckDB compare (the driver's
-#      own gate; every oracle entry, 197 of them, is compared — one
+#      own gate; every oracle entry, 196 of them, is compared — one
 #      without output fails)
 #   3. the same pack at 7 cores / 7 shuffle partitions — the full-pack
 #      partitioning-invariance proof (awkward prime vs the usual 32)
-# Green = "N pass, 0 fail" twice (N = 197, the full pack), a green
+# Green = "N pass, 0 fail" twice (N = 196, the full pack), a green
 # sbt test and a mains smoke with no failed cell. Timing is NOT
 # checked here — bench runs need a quiet box and the min-of-N protocol
 # (SCALING.md "Benchmark protocol").

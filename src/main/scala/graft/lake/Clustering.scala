@@ -157,7 +157,7 @@ object Clustering {
                 keepVersions: Int = 3, extraStats: Seq[String] = Nil): String = {
     // reads only the bare base — a pending MOR overlay would be
     // silently superseded by the republish; fold it first
-    VersionedTable.requireNoPendingDeltas(spark, root, "recluster")
+    VersionedTable.list(spark, root).requireNoPendingDeltas("recluster")
     publishClustered(VersionedTable.readCurrent(spark, root), root, cols,
       targetFiles, bits, keepVersions, extraStats)
   }

@@ -78,17 +78,22 @@ object SnapshotGroup {
       name -> VersionedTable.publish(df, s"$groupRoot/$name",
         keepVersions = keepVersions)
     }
-    val snapshot = commitManifest(spark, groupRoot, pinned, "snapshot")
+    // one listing of the group root serves the commit, the prune and
+    // the sweep
+    val listed = entries(spark, groupRoot)
+    val committed = snapshotsIn(listed)
+    val snapshot = commitManifest(spark, groupRoot, committed, pinned,
+      "snapshot")
     // prune old manifests beyond retention (their member versions age
     // out through the members' own vacuum), plus dot-temps of CRASHED
     // writers only — judged by an age horizon, not by name: a
     // concurrent writer's in-flight temp can carry ANY nearby
     // timestamp (it computed its ts before or after ours), so the only
     // safe "provably dead" test is an embedded ts a full hour stale.
-    listSnapshots(spark, groupRoot).dropRight(keepSnapshots)
+    (committed :+ snapshot).dropRight(keepSnapshots)
       .foreach(m => fs.delete(new Path(rootP, m), false))
     val deadHorizon = System.currentTimeMillis() - 3600 * 1000L
-    fs.listStatus(rootP).toSeq.map(_.getPath.getName)
+    listed
       .filter(n => n.startsWith(s".$ManifestPrefix") && n.endsWith(".tmp"))
       .filter(n => manifestTsOpt(n.stripPrefix(".").stripSuffix(".tmp"))
         .exists(_ < deadHorizon))
@@ -100,15 +105,21 @@ object SnapshotGroup {
     * could not have produced (a stray user-made `g-` file) are ignored,
     * not crashed on — the [[VersionedTable]] vacuum discipline.
     */
-  def listSnapshots(spark: SparkSession, groupRoot: String): Seq[String] = {
+  def listSnapshots(spark: SparkSession, groupRoot: String): Seq[String] =
+    snapshotsIn(entries(spark, groupRoot))
+
+  /** The group root's entry names from one listing; none when the root
+    * does not exist.
+    */
+  private def entries(spark: SparkSession, groupRoot: String): Seq[String] = {
     val rootP = new Path(groupRoot)
-    val fs = fsOf(spark, rootP)
-    if (!fs.exists(rootP)) Seq.empty
-    else fs.listStatus(rootP).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith(ManifestPrefix) && !n.endsWith(".tmp") &&
-        manifestTsOpt(n).isDefined)
-      .sorted
+    try fsOf(spark, rootP).listStatus(rootP).toSeq.map(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Nil }
   }
+
+  private def snapshotsIn(entries: Seq[String]): Seq[String] =
+    entries.filter(n => n.startsWith(ManifestPrefix) && !n.endsWith(".tmp") &&
+      manifestTsOpt(n).isDefined).sorted
 
   private def manifestTsOpt(m: String): Option[Long] =
     VersionedTable.digitsTs(m.stripPrefix(ManifestPrefix))
@@ -155,28 +166,29 @@ object SnapshotGroup {
     val pins = snapshotTables(spark, groupRoot, Some(snapshot))
     // fail loudly NOW if any pin has aged out, not at first read
     pins.foreach { case (t, v) =>
-      require(VersionedTable.listVersions(spark, s"$groupRoot/$t").contains(v),
+      require(VersionedTable.list(spark, s"$groupRoot/$t").versions.contains(v),
         s"cannot roll back to $snapshot: member '$t' version $v has been " +
           "vacuumed (snapshot expired)")
     }
-    commitManifest(spark, groupRoot, pins.toSeq.sortBy(_._1), "rollback")
+    commitManifest(spark, groupRoot, listSnapshots(spark, groupRoot),
+      pins.toSeq.sortBy(_._1), "rollback")
   }
 
   /** Commit a manifest pinning `pins`, in the caller's order, as the
     * newest snapshot: its name carries a timestamp strictly above every
-    * existing manifest's (the clock-skew guard of
+    * `committed` manifest's (the clock-skew guard of
     * [[VersionedTable.publish]]) and a random token, and its dot-temp
     * file is renamed into place — the atomic visibility point. A
     * failed rename throws. Returns the manifest name.
     */
   private def commitManifest(spark: SparkSession, groupRoot: String,
+                             committed: Seq[String],
                              pins: Seq[(String, String)],
                              kind: String): String = {
     val rootP = new Path(groupRoot)
     val fs = fsOf(spark, rootP)
     val ts = math.max(System.currentTimeMillis(),
-      listSnapshots(spark, groupRoot).map(manifestTs)
-        .maxOption.map(_ + 1).getOrElse(0L))
+      committed.map(manifestTs).maxOption.map(_ + 1).getOrElse(0L))
     val token = java.util.UUID.randomUUID().toString.take(8)
     val name = f"$ManifestPrefix$ts%013d-$token"
     val tmp = new Path(rootP, s".$name.tmp")
@@ -206,7 +218,7 @@ object SnapshotGroup {
       snapshotTables(spark, groupRoot, Some(s)).toSeq.sortBy(_._1)
         .map { case (t, v) =>
           Row(s, t, v, newest.contains(s),
-            VersionedTable.listVersions(spark, s"$groupRoot/$t").contains(v))
+            VersionedTable.list(spark, s"$groupRoot/$t").versions.contains(v))
         }
     }
     spark.createDataFrame(

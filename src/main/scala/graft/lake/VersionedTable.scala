@@ -28,6 +28,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * unparsable marker (a table written before markers carried a
   * manifest, a reader racing the commit's write, a damaged file) falls
   * back to inference, loudly, and is never read as an empty schema.
+  * Every operation lists the root once ([[VersionedTable.Listing]]),
+  * and a listing never outlives the operation that took it.
   *
   * The commit primitive is FILE CREATION, not pointer overwrite: a
   * version becomes visible the instant its `_ready-` marker appears in
@@ -74,75 +76,110 @@ object VersionedTable {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** One listing of a table root and what the name grammar above says
+    * about it — the one place that parses that grammar. Every
+    * operation lists its root once and works from that value; a write
+    * continues from its pre-write listing plus its own commit
+    * ([[committed]]) and drops ([[without]]). That view can only miss
+    * a racing writer's layer, which keeps an extra version and never
+    * drops one. A listing never outlives one operation or one stream
+    * batch. Only two loops re-list, because seeing a racing writer is
+    * their job: [[compactDeltasImpl]]'s stranded-delta recovery and
+    * [[compactSegments]]' in-flight tripwire.
+    */
+  private[graft] final case class Listing(spark: SparkSession, root: String,
+                                          names: Seq[String]) {
+    val rootP = new Path(root)
+    lazy val fs: FileSystem = fsOf(spark, rootP)
+    private def isLayer(n: String) =
+      n.startsWith(VersionPrefix) || n.startsWith(DeltaPrefix)
+    private lazy val marked = names.filter(_.startsWith(MarkerPrefix))
+      .map(_.stripPrefix(MarkerPrefix)).filter(isLayer).sorted
+    private lazy val markedSet = marked.toSet
+    /** Published base versions, ascending. */
+    lazy val versions: Seq[String] = marked.filter(_.startsWith(VersionPrefix))
+    /** Published deltas, ascending, folded ones included. */
+    lazy val deltas: Seq[String] = marked.filter(_.startsWith(DeltaPrefix))
+    def base: Option[String] = versions.lastOption
+    def current: String = base.getOrElse(
+      throw new IllegalStateException(s"no published version at $root"))
+    /** The deltas strictly newer than the current base, ascending. */
+    lazy val pending: Seq[String] =
+      deltas.filter(versionTs(_) > versionTs(current))
+    def anyDelta: Boolean = deltas.nonEmpty
+    /** Timestamp of the newest committed layer, version or delta;
+      * `Long.MinValue` when nothing is committed.
+      */
+    lazy val newestTs: Long =
+      marked.map(versionTs).foldLeft(Long.MinValue)(math.max)
+    /** The `prefix` directories no marker names (data written, marker
+      * never created: a crashed or in-flight write), each with its
+      * name's timestamp. Callers pick the dead or in-flight ones by it.
+      */
+    def unmarked(prefix: String): Seq[(String, Long)] =
+      names.filter(n => n.startsWith(prefix) && !markedSet(n))
+        .flatMap(n => versionTsOpt(n).map(n -> _))
+    /** Entries outside the versioned layout: loose, unversioned data. */
+    lazy val foreign: Seq[String] = names.filterNot(n => isLayer(n) ||
+      n.startsWith(MarkerPrefix) || n.startsWith(".") || n.startsWith("_"))
+    def committed(layer: String): Listing =
+      copy(names = names ++ Seq(layer, s"$MarkerPrefix$layer"))
+    def without(layers: Seq[String]): Listing = {
+      val gone = layers.toSet
+      copy(names = names.filterNot(n => gone(n.stripPrefix(MarkerPrefix))))
+    }
+
+    /** See [[VersionedTable.requireVersionedOrEmpty]]. */
+    def requireVersionedOrEmpty(): Unit =
+      require(base.isDefined || foreign.isEmpty,
+        s"$root holds unversioned data (${foreign.take(3).mkString(", ")}" +
+          s"${if (foreign.length > 3) ", …" else ""}): reading it as an " +
+          "empty table would silently discard it — migrate the legacy " +
+          "dataset explicitly (read the loose parquet files, publish " +
+          "them as a version, remove the loose files)")
+
+    /** Maintenance ops that republish from the BARE base (compact,
+      * recluster) cannot fold a delta overlay — and their new base
+      * timestamp would mark every pending delta as folded, silently
+      * dropping those writes. Refuse loudly instead; callers run
+      * [[compactDeltas]] first. ([[publish]] itself stays callable with
+      * pending deltas: a wholesale state replacement — compactDeltas'
+      * own fold, or a caller republishing a merged/recomputed table —
+      * legitimately supersedes the overlay.)
+      */
+    def requireNoPendingDeltas(op: String): Unit = {
+      val n = if (base.isDefined) pending.size else 0
+      require(n == 0,
+        s"$op reads only the base version, but $root has $n " +
+          s"pending delta(s) whose rows it would silently drop — run " +
+          s"compactDeltas first")
+    }
+  }
+
+  /** One `listStatus` of `root` as a [[Listing]]; a missing root lists
+    * empty.
+    */
+  private[graft] def list(spark: SparkSession, root: String): Listing = {
+    val rootP = new Path(root)
+    Listing(spark, root,
+      try fsOf(spark, rootP).listStatus(rootP).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Nil })
+  }
+
   /** Published versions, ascending (oldest first). Marker-backed: a
     * version directory without its marker does not exist yet. Filters
     * to BASE versions (`v-`) — delta versions (`d-`, see
     * [[appendDelta]]) have their own listing.
     */
   def listVersions(spark: SparkSession, root: String): Seq[String] =
-    listMarked(spark, root, VersionPrefix)
-
-  private def listMarked(spark: SparkSession, root: String,
-                         prefix: String): Seq[String] = {
-    val rootP = new Path(root)
-    val fs = fsOf(spark, rootP)
-    if (!fs.exists(rootP)) Seq.empty
-    else fs.listStatus(rootP).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(MarkerPrefix))
-      .map(_.stripPrefix(MarkerPrefix))
-      .filter(_.startsWith(prefix))
-      .sorted
-  }
-
-  /** The `prefix` directories under `root` that `marked` does not name
-    * (data written, marker never created: a crashed or in-flight
-    * write), each with its name's timestamp. Callers pick the dead or
-    * in-flight ones by that timestamp.
-    */
-  private def unmarkedDirs(spark: SparkSession, root: String, prefix: String,
-                           marked: Set[String]): Seq[(String, Long)] = {
-    val rootP = new Path(root)
-    val fs = fsOf(spark, rootP)
-    if (!fs.exists(rootP)) Seq.empty
-    else fs.listStatus(rootP).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith(prefix) && !marked.contains(n))
-      .flatMap(n => versionTsOpt(n).map(n -> _))
-  }
+    list(spark, root).versions
 
   def currentVersion(spark: SparkSession, root: String): Option[String] =
-    listVersions(spark, root).lastOption
-
-  /** A root's committed layers: its current base, the deltas pending
-    * over it (ascending), and whether any marked delta, folded ones
-    * included, is still on disk.
-    */
-  private[graft] final case class Layers(base: String, pending: Seq[String],
-                                         anyDelta: Boolean)
-
-  /** [[Layers]] from ONE listing of `root`; None when nothing is
-    * published.
-    */
-  private[graft] def currentLayers(spark: SparkSession,
-                                   root: String): Option[Layers] = {
-    val marked = listMarked(spark, root, "")
-    val deltas = marked.filter(_.startsWith(DeltaPrefix))
-    marked.filter(_.startsWith(VersionPrefix)).lastOption.map(base =>
-      Layers(base, deltas.filter(versionTs(_) > versionTs(base)),
-        deltas.nonEmpty))
-  }
-
-  /** Timestamp of the newest committed layer, version or delta, from
-    * ONE listing of `root`; `Long.MinValue` when nothing is committed.
-    */
-  private def newestCommittedTs(spark: SparkSession, root: String): Long =
-    listMarked(spark, root, "")
-      .filter(n => n.startsWith(VersionPrefix) || n.startsWith(DeltaPrefix))
-      .map(versionTs).foldLeft(Long.MinValue)(math.max)
+    list(spark, root).base
 
   /** True when `root` holds at least one published version. */
   def isVersioned(spark: SparkSession, root: String): Boolean =
-    currentVersion(spark, root).isDefined
+    list(spark, root).base.isDefined
 
   /** Guard for "absent means empty" code paths (streaming state
     * stores, upsert sinks): a root that holds DATA but no version —
@@ -156,22 +193,7 @@ object VersionedTable {
     * bytes to delete), and re-point the sink.
     */
   def requireVersionedOrEmpty(spark: SparkSession, root: String): Unit =
-    if (!isVersioned(spark, root)) {
-      val rootP = new Path(root)
-      val fs = fsOf(spark, rootP)
-      if (fs.exists(rootP)) {
-        val foreign = fs.listStatus(rootP).toSeq.map(_.getPath.getName)
-          .filterNot(n => n.startsWith(MarkerPrefix) ||
-            n.startsWith(VersionPrefix) || n.startsWith(DeltaPrefix) ||
-            n.startsWith(".") || n.startsWith("_"))
-        require(foreign.isEmpty,
-          s"$root holds unversioned data (${foreign.take(3).mkString(", ")}" +
-            s"${if (foreign.length > 3) ", …" else ""}): reading it as an " +
-            "empty table would silently discard it — migrate the legacy " +
-            "dataset explicitly (read the loose parquet files, publish " +
-            "them as a version, remove the loose files)")
-      }
-    }
+    list(spark, root).requireVersionedOrEmpty()
 
   /** Name of the parameter-fingerprint sidecar ([[requireParams]]).
     * Underscore-prefixed so every listing path (markers, versions,
@@ -213,19 +235,17 @@ object VersionedTable {
     * store rebase.
     */
   def requireParams(spark: SparkSession, root: String, params: String,
-                    legacy: Seq[String] = Nil): Unit = {
-    // layout guard BEFORE the stamp (r16): every pinned root is a
-    // versioned store by contract, and a call against a legacy
-    // plain-parquet directory must reject WITHOUT writing a `_params`
-    // sidecar into data the caller's own contract says it must not
-    // touch — the MOR sinks gained this ordering individually earlier
-    // in r16; doing it here covers every pinned store (the monitor
-    // steps once stamped before their store read rejected the root)
-    // and every future caller.
-    requireVersionedOrEmpty(spark, root)
-    val rootP = new Path(root)
-    val fs = fsOf(spark, rootP)
-    val pf = new Path(rootP, ParamsFile)
+                    legacy: Seq[String] = Nil): Unit =
+    requireParamsOn(list(spark, root), params, legacy)
+
+  /** [[requireParams]] against the listing `l`. */
+  private[graft] def requireParamsOn(l: Listing, params: String,
+                                     legacy: Seq[String] = Nil): Unit = {
+    // the layout guard runs before the stamp, so a legacy plain-parquet
+    // root is never written to
+    l.requireVersionedOrEmpty()
+    val fs = l.fs
+    val pf = new Path(l.rootP, ParamsFile)
     val existing: Option[String] =
       if (fs.exists(pf)) {
         val in = fs.open(pf)
@@ -239,7 +259,7 @@ object VersionedTable {
     // whatever parameters it was called with. Treat both like publish
     // treats its marker: result-checked, loud on failure.
     def stamp(): Unit = {
-      val tmp = new Path(rootP,
+      val tmp = new Path(l.rootP,
         s".${ParamsFile}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
       val out = fs.create(tmp, true)
       try out.write(params.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -253,9 +273,9 @@ object VersionedTable {
     existing match {
       case Some(p) if p == params => ()
       case Some(p) if legacy.contains(p) => stamp() // format-only refresh
-      case Some(p) if isVersioned(spark, root) =>
+      case Some(p) if l.base.isDefined =>
         throw new IllegalStateException(
-          s"store at $root was built with parameters [$p] but this step " +
+          s"store at ${l.root} was built with parameters [$p] but this step " +
             s"was called with [$params] — its rows are not comparable " +
             "under the new parameters and cannot be migrated (one-way " +
             "hashes/sketches). Rebase on a fresh store path, or revert " +
@@ -272,11 +292,7 @@ object VersionedTable {
     * published.
     */
   def readCurrent(spark: SparkSession, root: String): DataFrame =
-    currentVersion(spark, root) match {
-      case Some(v) => scanLayers(spark, root, Seq(v))
-      case None => throw new IllegalStateException(
-        s"no published version at $root")
-    }
+    scanLayers(spark, root, Seq(list(spark, root).current))
 
   /** What a commit marker records (see the layout above). */
   private final case class Marker(schema: StructType, maxTs: Option[Long])
@@ -450,37 +466,45 @@ object VersionedTable {
               statsColumns: Seq[String] = Nil,
               bloomColumns: Seq[String] = Nil,
               bloomExpectedItems: Long = 100000L,
-              bloomFpp: Double = 0.01): String = {
+              bloomFpp: Double = 0.01): String =
+    publishOn(list(df.sparkSession, root), df, keepVersions, statsColumns,
+      bloomColumns, bloomExpectedItems, bloomFpp).current
+
+  /** [[publish]] over the listing `l`: returns `l` with the new version
+    * committed and what its vacuum removed dropped.
+    */
+  private[graft] def publishOn(l: Listing, df: DataFrame,
+                               keepVersions: Int = 3,
+                               statsColumns: Seq[String] = Nil,
+                               bloomColumns: Seq[String] = Nil,
+                               bloomExpectedItems: Long = 100000L,
+                               bloomFpp: Double = 0.01): Listing = {
     require(keepVersions >= 2,
       s"keepVersions must be >= 2 so in-flight readers of the previous " +
         s"version survive a publish, got $keepVersions")
     require(!df.columns.contains(TombstoneCol),
       s"$TombstoneCol is reserved for delete deltas and never appears " +
         s"in a base version")
-    val spark = df.sparkSession
-    val rootP = new Path(root)
-    val fs = fsOf(spark, rootP)
-    fs.mkdirs(rootP)
+    l.fs.mkdirs(l.rootP)
     // strictly increasing even under clock skew: never at or below any
     // published version OR delta timestamp — a compaction's base must
     // strictly dominate every delta it folded, or a merged read would
     // re-apply them
-    val ts = math.max(System.currentTimeMillis(),
-      newestCommittedTs(spark, root) + 1)
+    val ts = math.max(System.currentTimeMillis(), l.newestTs + 1)
     val token = java.util.UUID.randomUUID().toString.take(8)
     val version = f"$VersionPrefix$ts%013d-$token"
-    val versionPath = new Path(rootP, version).toString
+    val versionPath = new Path(l.rootP, version).toString
     val (statsCols, bloomCols) =
       if (statsColumns.nonEmpty || bloomColumns.nonEmpty)
         (statsColumns, bloomColumns)
-      else inheritedStatsSpec(spark, root)
+      else inheritedStatsSpec(l)
     df.write.mode("errorifexists").parquet(versionPath)
     if (statsCols.nonEmpty || bloomCols.nonEmpty)
-      writeFileStats(spark, versionPath, df.schema, statsCols, bloomCols,
+      writeFileStats(l.spark, versionPath, df.schema, statsCols, bloomCols,
         bloomExpectedItems, bloomFpp)
-    commitMarker(fs, rootP, version, df.schema)
-    vacuum(spark, root, keepVersions)
-    version
+    commitMarker(l.fs, l.rootP, version, df.schema)
+    val published = l.committed(version)
+    published.without(vacuumOn(published, keepVersions))
   }
 
   // ---------------------------------------------------------------------
@@ -592,9 +616,8 @@ object VersionedTable {
     * filters; inherited blooms use the publish defaults (sizing only
     * moves fpp, never correctness).
     */
-  private def inheritedStatsSpec(spark: SparkSession,
-                                 root: String): (Seq[String], Seq[String]) =
-    currentStats(spark, root) match {
+  private def inheritedStatsSpec(l: Listing): (Seq[String], Seq[String]) =
+    statsOf(l) match {
       case Some(st) =>
         (st.columns.toSeq.filter(_.startsWith("min_")).map(_.stripPrefix("min_")),
           st.columns.toSeq.filter(_.startsWith("bloom_")).map(_.stripPrefix("bloom_")))
@@ -641,11 +664,12 @@ object VersionedTable {
   /** The stats relation of the current version, if that version was
     * published with `statsColumns`. */
   def currentStats(spark: SparkSession, root: String): Option[DataFrame] =
-    currentVersion(spark, root).flatMap { v =>
-      val p = new Path(new Path(root, v), StatsDir)
-      if (fsOf(spark, p).exists(p)) Some(spark.read.parquet(p.toString))
-      else None
-    }
+    statsOf(list(spark, root))
+
+  private def statsOf(l: Listing): Option[DataFrame] = l.base.flatMap { v =>
+    val p = new Path(new Path(l.rootP, v), StatsDir)
+    if (l.fs.exists(p)) Some(l.spark.read.parquet(p.toString)) else None
+  }
 
   /** Driver-side file pruning for `preds` against the current
     * version's stats: Some((kept, total)) when the stats can evaluate
@@ -657,7 +681,11 @@ object VersionedTable {
     */
   def pruneFiles(spark: SparkSession, root: String,
                  preds: Seq[SkipPred]): Option[(Seq[String], Long)] =
-    currentStats(spark, root).flatMap { stats =>
+    pruneFilesOn(list(spark, root), preds)
+
+  private def pruneFilesOn(l: Listing,
+                           preds: Seq[SkipPred]): Option[(Seq[String], Long)] =
+    statsOf(l).flatMap { stats =>
       val keeps = preds.map(_.fileKeep(stats.columns.toSeq))
       if (keeps.exists(_.isEmpty)) None
       else {
@@ -686,7 +714,7 @@ object VersionedTable {
   def readCurrentWhere(spark: SparkSession, root: String,
                        preds: Seq[SkipPred]): DataFrame = {
     require(preds.nonEmpty, "readCurrentWhere needs at least one predicate")
-    prunedCurrent(spark, root, preds)
+    prunedCurrent(list(spark, root), preds)
       .where(preds.map(_.rowPredicate).reduce(_ && _))
   }
 
@@ -694,26 +722,23 @@ object VersionedTable {
     * read with the version's marker schema; every file when the stats
     * cannot decide, none (a `lit(false)` filter) when they rule out all.
     */
-  private def prunedCurrent(spark: SparkSession, root: String,
-                            preds: Seq[SkipPred]): DataFrame =
-    pruneFiles(spark, root, preds) match {
+  private def prunedCurrent(l: Listing, preds: Seq[SkipPred]): DataFrame = {
+    val base = Seq(l.current)
+    pruneFilesOn(l, preds) match {
       case Some((kept, _)) if kept.isEmpty =>
-        readCurrent(spark, root).where(lit(false))
-      case Some((kept, _)) =>
-        // the kept files' directory is the version the stats belong to
-        scanLayers(spark, root, Seq(new Path(kept.head).getParent.getName),
-          kept)
-      case None => readCurrent(spark, root)
+        scanLayers(l.spark, l.root, base).where(lit(false))
+      case Some((kept, _)) => scanLayers(l.spark, l.root, base, kept)
+      case None => scanLayers(l.spark, l.root, base)
     }
+  }
 
-  /** Drop published layers: marker first (a reader can only resolve
-    * marked layers), then data.
+  /** Drop published layers, marker first (a reader can only resolve
+    * marked layers), then data; for an unmarked orphan only the data.
     */
-  private def dropLayers(fs: FileSystem, rootP: Path,
-                         names: Seq[String]): Unit =
+  private def dropLayers(l: Listing, names: Seq[String]): Unit =
     names.foreach { n =>
-      fs.delete(new Path(rootP, s"$MarkerPrefix$n"), false)
-      fs.delete(new Path(rootP, n), true)
+      l.fs.delete(new Path(l.rootP, s"$MarkerPrefix$n"), false)
+      l.fs.delete(new Path(l.rootP, n), true)
     }
 
   /** Drop all but the newest `keep` published versions (marker first,
@@ -721,21 +746,20 @@ object VersionedTable {
     * orphan (marker-less) version directory older than the oldest
     * retained version. Returns the removed version names.
     */
-  def vacuum(spark: SparkSession, root: String, keep: Int): Seq[String] = {
+  def vacuum(spark: SparkSession, root: String, keep: Int): Seq[String] =
+    vacuumOn(list(spark, root), keep)
+
+  private def vacuumOn(l: Listing, keep: Int): Seq[String] = {
     require(keep >= 1, s"must keep at least one version, got $keep")
-    val rootP = new Path(root)
-    val fs = fsOf(spark, rootP)
-    val versions = listVersions(spark, root)
-    val doomed = versions.dropRight(keep)
-    dropLayers(fs, rootP, doomed)
+    val doomed = l.versions.dropRight(keep)
     // orphans: data dirs with no marker, provably dead — strictly older
     // than a version that IS published (a writer creates its marker
     // immediately after its data write, so an in-flight publish is
     // always the newest timestamp in the root)
-    val oldestKept = versions.drop(doomed.length).headOption.map(versionTs)
-    val orphans = unmarkedDirs(spark, root, VersionPrefix, versions.toSet)
+    val oldestKept = l.versions.drop(doomed.length).headOption.map(versionTs)
+    val orphans = l.unmarked(VersionPrefix)
       .collect { case (n, ts) if oldestKept.exists(ts < _) => n }
-    orphans.foreach(n => fs.delete(new Path(rootP, n), true))
+    dropLayers(l, doomed ++ orphans)
     doomed ++ orphans
   }
 
@@ -780,11 +804,10 @@ object VersionedTable {
       s"must keep at least 2 versions so in-flight readers of the " +
         s"previous version survive a publish, got $minKeep")
     require(maxAgeMs >= 0, s"retention age must be >= 0, got $maxAgeMs")
-    val versions = listVersions(spark, root)
+    val l = list(spark, root)
     val cutoff = System.currentTimeMillis() - maxAgeMs
-    val aged = versions.dropRight(minKeep).filter(versionTs(_) < cutoff)
-    val keep = versions.length - aged.length
-    if (aged.isEmpty) Seq.empty else vacuum(spark, root, keep)
+    val aged = l.versions.dropRight(minKeep).filter(versionTs(_) < cutoff)
+    if (aged.isEmpty) Seq.empty else vacuumOn(l, l.versions.length - aged.length)
   }
 
   /** Operator introspection: one row per published version and pending
@@ -796,23 +819,20 @@ object VersionedTable {
   def describe(spark: SparkSession, root: String): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val rootP = new Path(root)
-    val fs = fsOf(spark, rootP)
-    val current = currentVersion(spark, root)
+    val l = list(spark, root)
     def rowsFor(names: Seq[String], kind: String) = names.map { v =>
-      val p = new Path(rootP, v)
-      val files = fs.listStatus(p).toSeq.filterNot(s =>
+      val p = new Path(l.rootP, v)
+      val files = l.fs.listStatus(p).toSeq.filterNot(s =>
         s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
-      val hasStats = fs.exists(new Path(p, StatsDir))
+      val hasStats = l.fs.exists(new Path(p, StatsDir))
       Row(kind, v, new java.sql.Timestamp(versionTs(v)),
         files.count(_.isFile), files.filter(_.isFile).map(_.getLen).sum,
-        hasStats, current.contains(v))
+        hasStats, l.base.contains(v))
     }
-    val pendingSet = if (current.isDefined) pendingDeltas(spark, root).toSet
-      else Set.empty[String]
-    val rows = rowsFor(listVersions(spark, root), "base") ++
-      rowsFor(listDeltas(spark, root).filter(pendingSet), "delta") ++
-      rowsFor(listDeltas(spark, root).filterNot(pendingSet), "delta-folded")
+    val pending = if (l.base.isDefined) l.pending.toSet else Set.empty[String]
+    val rows = rowsFor(l.versions, "base") ++
+      rowsFor(l.deltas.filter(pending), "delta") ++
+      rowsFor(l.deltas.filterNot(pending), "delta-folded")
     val schema = StructType(Seq(
       StructField("kind", StringType), StructField("name", StringType),
       StructField("published_at", TimestampType),
@@ -840,9 +860,10 @@ object VersionedTable {
               keepVersions: Int = 3): Long = {
     require(targetFiles > 0,
       s"target file count must be positive, got $targetFiles")
-    requireNoPendingDeltas(spark, root, "compact")
-    val v = publish(readCurrent(spark, root).repartition(targetFiles),
-      root, keepVersions)
+    val l = list(spark, root)
+    l.requireNoPendingDeltas("compact")
+    val v = publishOn(l, scanLayers(spark, root, Seq(l.current))
+      .repartition(targetFiles), keepVersions).current
     scanLayers(spark, root, Seq(v)).count()
   }
 
@@ -857,7 +878,7 @@ object VersionedTable {
                   root: String, keepVersions: Int = 3,
                   statsColumns: Seq[String] = Nil,
                   bloomColumns: Seq[String] = Nil): Unit = {
-    // readCurrent pins a concrete version path at plan time, and
+    // the base scan pins a concrete version path at plan time, and
     // publish's vacuum (keepVersions >= 2) retains that version through
     // the write — the merge can stream from old to new version without
     // materializing. Stats params matter only on the FIRST publish of a
@@ -865,40 +886,18 @@ object VersionedTable {
     // A MOR overlay must fold into the merge base: the new base's
     // timestamp will dominate every pending delta, so reading only the
     // bare base here would silently supersede (lose) the overlay.
+    val l = list(spark, root)
     val merged =
-      if (isVersioned(spark, root)) {
-        val cur =
-          if (pendingDeltas(spark, root).nonEmpty)
-            readCurrentMerged(spark, root, keys)
-          else readCurrent(spark, root)
-        graft.operators.Joins.upsert(cur, batch, keys)
-      } else {
+      if (l.base.isDefined) graft.operators.Joins.upsert(
+        mergedOver(spark, root, l.current, l.pending, keys), batch, keys)
+      else {
         // loud, not silent: a legacy plain-parquet dataset here would
         // otherwise be discarded by the bootstrap publish
-        requireVersionedOrEmpty(spark, root)
+        l.requireVersionedOrEmpty()
         batch
       }
-    publish(merged, root, keepVersions, statsColumns, bloomColumns)
+    publishOn(l, merged, keepVersions, statsColumns, bloomColumns)
     ()
-  }
-
-  /** Maintenance ops that republish from the BARE base (compact,
-    * recluster) cannot fold a delta overlay — and their new base
-    * timestamp would mark every pending delta as folded, silently
-    * dropping those writes. Refuse loudly instead; callers run
-    * [[compactDeltas]] first. ([[publish]] itself stays callable with
-    * pending deltas: a wholesale state replacement — compactDeltas'
-    * own fold, or a caller republishing a merged/recomputed table —
-    * legitimately supersedes the overlay.)
-    */
-  private[lake] def requireNoPendingDeltas(spark: SparkSession, root: String,
-                                           op: String): Unit = {
-    val pending =
-      if (isVersioned(spark, root)) pendingDeltas(spark, root) else Nil
-    require(pending.isEmpty,
-      s"$op reads only the base version, but $root has ${pending.size} " +
-        s"pending delta(s) whose rows it would silently drop — run " +
-        s"compactDeltas first")
   }
 
   // ---------------------------------------------------------------------
@@ -921,15 +920,14 @@ object VersionedTable {
   /** Published delta versions, ascending. Same marker-commit visibility
     * rules as base versions. */
   def listDeltas(spark: SparkSession, root: String): Seq[String] =
-    listMarked(spark, root, DeltaPrefix)
+    list(spark, root).deltas
 
   /** Deltas strictly newer than the current base — the overlay a merged
     * read applies. Deltas at or below the base timestamp are already
     * folded in (publish timestamps strictly dominate, see [[publish]]).
     */
   def pendingDeltas(spark: SparkSession, root: String): Seq[String] =
-    currentLayers(spark, root).map(_.pending).getOrElse(
-      throw new IllegalStateException(s"no published version at $root"))
+    list(spark, root).pending
 
   /** Reserved flag column marking a delta row as a DELETE of its key.
     * Never appears in a published base (publish rejects it, and the
@@ -956,10 +954,18 @@ object VersionedTable {
     * full row (its nulls are real nulls); keys-only deltas are the
     * delete form ([[appendDeleteDelta]]).
     */
-  def appendDelta(batch: DataFrame, root: String): String = {
+  def appendDelta(batch: DataFrame, root: String): String =
+    appendDeltaOn(list(batch.sparkSession, root), batch).deltas.last
+
+  /** [[appendDelta]] over the listing `l`, stamped with `maxTsMs` when
+    * given ([[appendDeltaStamped]]); returns `l` with the delta
+    * committed.
+    */
+  private[graft] def appendDeltaOn(l: Listing, batch: DataFrame,
+                                   maxTsMs: Option[Long] = None): Listing = {
     require(!batch.columns.contains(TombstoneCol),
       s"$TombstoneCol is reserved for delete deltas — use appendDeleteDelta")
-    writeDelta(batch, root)
+    writeDelta(l, batch, maxTsMs)
   }
 
   /** [[appendDelta]] with a segment-expiry stamp (segment mode, r16):
@@ -971,12 +977,9 @@ object VersionedTable {
     * segment is vacuumable at the first opportunity.
     */
   def appendDeltaStamped(batch: DataFrame, root: String,
-                         maxTs: Option[java.sql.Timestamp]): String = {
-    require(!batch.columns.contains(TombstoneCol),
-      s"$TombstoneCol is reserved for delete deltas — use appendDeleteDelta")
-    writeDelta(batch, root,
-      Some(maxTs.map(_.getTime).getOrElse(Long.MinValue)))
-  }
+                         maxTs: Option[java.sql.Timestamp]): String =
+    appendDeltaOn(list(batch.sparkSession, root), batch,
+      Some(maxTs.map(_.getTime).getOrElse(Long.MinValue))).deltas.last
 
   /** Physically drop the PENDING delta segments whose stamped max
     * event time falls STRICTLY before `horizon` — the segment-mode
@@ -1010,20 +1013,19 @@ object VersionedTable {
     * segment vanishes from under any other reader's plan.
     */
   def vacuumExpiredDeltas(spark: SparkSession, root: String,
-                          horizon: java.sql.Timestamp): Seq[String] = {
-    val rootP = new Path(root)
-    val fs = fsOf(spark, rootP)
-    val h = horizon.getTime
-    val dead = pendingDeltas(spark, root)
-      .filter(d => segmentStamp(spark, root, d).exists(_ < h))
-    dropLayers(fs, rootP, dead)
+                          horizon: java.sql.Timestamp): Seq[String] =
+    vacuumExpiredDeltasOn(list(spark, root), horizon)
+
+  private[graft] def vacuumExpiredDeltasOn(l: Listing,
+                                           horizon: java.sql.Timestamp)
+      : Seq[String] = {
+    val dead = l.pending
+      .filter(d => segmentStamp(l.spark, l.root, d).exists(_ < horizon.getTime))
     // orphan pass (see scaladoc): unmarked delta dirs strictly older
     // than the newest committed write are crashed appends
-    val newestCommitted = newestCommittedTs(spark, root)
-    val orphans =
-      unmarkedDirs(spark, root, DeltaPrefix, listDeltas(spark, root).toSet)
-        .collect { case (n, ts) if ts < newestCommitted => n }
-    orphans.foreach(n => fs.delete(new Path(rootP, n), true))
+    val orphans = l.unmarked(DeltaPrefix)
+      .collect { case (n, ts) if ts < l.newestTs => n }
+    dropLayers(l, dead ++ orphans)
     dead ++ orphans
   }
 
@@ -1057,34 +1059,30 @@ object VersionedTable {
     * next merge converges. Returns the names of the folded segments
     * (empty when the backlog is within bound).
     *
-    * Single-writer tripwire (r19): when a merge is due and an UNMARKED
+    * Single-writer tripwire: when a merge is due and an UNMARKED
     * delta directory at least as new as the newest committed write
     * exists — a second writer's append in flight, which under the
     * single-writer contract cannot happen — the merge is REFUSED with a
     * loud stderr message and retried next batch, rather than deleting
-    * committed segments out from under a racing writer's readers.
+    * committed segments out from under a racing writer's readers. The
+    * tripwire lists the root afresh — after the caller's own append —
+    * and only when a merge is due.
     */
   def compactSegments(spark: SparkSession, root: String,
-                      maxSegments: Int): Seq[String] = {
+                      maxSegments: Int): Seq[String] =
+    compactSegmentsOn(list(spark, root), maxSegments)
+
+  private[graft] def compactSegmentsOn(l: Listing,
+                                       maxSegments: Int): Seq[String] = {
     require(maxSegments >= 1, s"maxSegments must be >= 1, got $maxSegments")
-    val rootP = new Path(root)
-    val fs = fsOf(spark, rootP)
-    // pendingDeltas is ascending by construction → oldest first
-    val stamped = pendingDeltas(spark, root)
+    val (spark, root) = (l.spark, l.root)
+    // pending is ascending by construction → oldest first
+    val stamped = l.pending
       .flatMap(d => segmentStamp(spark, root, d).map(d -> _))
     if (stamped.size <= maxSegments) return Seq.empty
-    // single-writer tripwire (r19): an UNMARKED delta dir at least as
-    // new as the newest committed write is an append in flight — and
-    // since the caller (the step) just committed its own append, it
-    // cannot be ours. Merging under a live second writer is a contract
-    // violation worth refusing loudly rather than compounding: skip the
-    // merge this batch (self-healing — the backlog merges next batch
-    // once the writers stop racing). Only merge batches pay the extra
-    // listing; the common non-merge path returned above.
-    val newestCommitted = newestCommittedTs(spark, root)
-    val inFlight =
-      unmarkedDirs(spark, root, DeltaPrefix, listDeltas(spark, root).toSet)
-        .collect { case (n, ts) if ts >= newestCommitted => n }
+    val now = list(spark, root)
+    val inFlight = now.unmarked(DeltaPrefix)
+      .collect { case (n, ts) if ts >= now.newestTs => n }
     if (inFlight.nonEmpty) {
       System.err.println(
         s"[graft] REFUSING segment merge at $root: unmarked delta " +
@@ -1097,10 +1095,9 @@ object VersionedTable {
     }
     val fold = stamped.take(stamped.size - maxSegments + 1)
     // the union of the constituents' schemas: deltas may widen
-    val mergedRows = scanLayers(spark, root, fold.map(_._1))
-    val mergedStamp = fold.map(_._2).max
-    writeDelta(mergedRows, root, Some(mergedStamp))
-    dropLayers(fs, rootP, fold.map(_._1))
+    writeDelta(now, scanLayers(spark, root, fold.map(_._1)),
+      Some(fold.map(_._2).max))
+    dropLayers(l, fold.map(_._1))
     fold.map(_._1)
   }
 
@@ -1116,27 +1113,31 @@ object VersionedTable {
     * wins its own key window, then the merged view filters it), so
     * redelivery converges like every other delta.
     */
-  def appendDeleteDelta(keysBatch: DataFrame, root: String): String = {
+  def appendDeleteDelta(keysBatch: DataFrame, root: String): String =
+    appendDeleteDeltaOn(list(keysBatch.sparkSession, root), keysBatch)
+      .deltas.last
+
+  private[graft] def appendDeleteDeltaOn(l: Listing,
+                                         keysBatch: DataFrame): Listing = {
     require(!keysBatch.columns.contains(TombstoneCol),
       s"$TombstoneCol is reserved — pass bare key columns")
-    writeDelta(keysBatch.dropDuplicates().withColumn(TombstoneCol, lit(true)),
-      root)
+    writeDelta(l,
+      keysBatch.dropDuplicates().withColumn(TombstoneCol, lit(true)), None)
   }
 
-  private def writeDelta(batch: DataFrame, root: String,
-                         maxTsMs: Option[Long] = None): String = {
-    val spark = batch.sparkSession
-    require(isVersioned(spark, root),
-      s"appendDelta needs a published base at $root — publish() the first snapshot")
-    val rootP = new Path(root)
-    val fs = fsOf(spark, rootP)
-    val ts = math.max(System.currentTimeMillis(),
-      newestCommittedTs(spark, root) + 1)
+  /** Write and commit `batch` as a delta named above every layer `l`
+    * lists; returns `l` with it committed.
+    */
+  private def writeDelta(l: Listing, batch: DataFrame,
+                         maxTsMs: Option[Long]): Listing = {
+    require(l.base.isDefined,
+      s"appendDelta needs a published base at ${l.root} — publish() the first snapshot")
+    val ts = math.max(System.currentTimeMillis(), l.newestTs + 1)
     val token = java.util.UUID.randomUUID().toString.take(8)
     val delta = f"$DeltaPrefix$ts%013d-$token"
-    batch.write.mode("errorifexists").parquet(new Path(rootP, delta).toString)
-    commitMarker(fs, rootP, delta, batch.schema, maxTsMs)
-    delta
+    batch.write.mode("errorifexists").parquet(new Path(l.rootP, delta).toString)
+    commitMarker(l.fs, l.rootP, delta, batch.schema, maxTsMs)
+    l.committed(delta)
   }
 
   /** The merged view: current base plus pending deltas, newest write
@@ -1152,9 +1153,8 @@ object VersionedTable {
     */
   def readCurrentMerged(spark: SparkSession, root: String,
                         keys: Seq[String]): DataFrame = {
-    val base = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no published version at $root"))
-    mergedOver(spark, root, base, pendingDeltas(spark, root), keys)
+    val l = list(spark, root)
+    mergedOver(spark, root, l.current, l.pending, keys)
   }
 
   /** [[readCurrentWhere]] through the delta overlay: file-stats
@@ -1175,13 +1175,13 @@ object VersionedTable {
                              keys: Seq[String],
                              preds: Seq[SkipPred]): DataFrame = {
     require(preds.nonEmpty, "readCurrentMergedWhere needs at least one predicate")
-    val deltas = pendingDeltas(spark, root)
-    mergedDf(spark, root, prunedCurrent(spark, root, preds), deltas, keys)
+    val l = list(spark, root)
+    mergedDf(spark, root, prunedCurrent(l, preds), l.pending, keys)
       .where(preds.map(_.rowPredicate).reduce(_ && _))
   }
 
   /** The newest-wins view of one base version under an explicit delta
-    * list (callers pass [[pendingDeltas]]; [[compactDeltas]] passes the
+    * list (callers pass their listing's pending deltas; [[compactDeltas]] passes the
     * exact set it is folding, which is what makes its stranded-delta
     * recovery sound). Delete deltas drop their keys; schema-evolved
     * deltas widen the output to the union schema (missing columns read
@@ -1277,12 +1277,11 @@ object VersionedTable {
   private[graft] def compactDeltasImpl(spark: SparkSession, root: String,
                                       keys: Seq[String], keepVersions: Int,
                                       beforePublish: () => Unit): String = {
-    val base0 = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no published version at $root"))
-    val preFoldedTs = versionTs(base0)
-    var base = base0
+    val l = list(spark, root)
+    val preFoldedTs = versionTs(l.current)
+    var base = l.current
     var folded = Set.empty[String]
-    var pending = pendingDeltas(spark, root)
+    var pending = l.pending
     while (pending.nonEmpty) {
       beforePublish()
       base = publish(mergedOver(spark, root, base, pending, keys),
@@ -1292,9 +1291,8 @@ object VersionedTable {
         versionTs(d) > preFoldedTs && versionTs(d) <= versionTs(base) &&
           !folded.contains(d))
     }
-    val v = base
     vacuumDeltas(spark, root)
-    v
+    base
   }
 
   /** Remove delta dirs no retained-base reader can still need: a
@@ -1308,18 +1306,15 @@ object VersionedTable {
     * orphan every subsumed delta directory forever. Returns the
     * removed names; no-op when the root has no published version.
     */
-  def vacuumDeltas(spark: SparkSession, root: String): Seq[String] = {
-    val versions = listVersions(spark, root)
-    if (versions.isEmpty) return Seq.empty
-    val horizon = versionTs(versions.head)
-    val rootP = new Path(root)
-    val fs = fsOf(spark, rootP)
-    val dead = listDeltas(spark, root).filter(versionTs(_) <= horizon)
-    dropLayers(fs, rootP, dead)
-    val orphans =
-      unmarkedDirs(spark, root, DeltaPrefix, listDeltas(spark, root).toSet)
-        .collect { case (n, ts) if ts <= horizon => n }
-    orphans.foreach(n => fs.delete(new Path(rootP, n), true))
-    dead ++ orphans
-  }
+  def vacuumDeltas(spark: SparkSession, root: String): Seq[String] =
+    vacuumDeltasOn(list(spark, root))
+
+  private[graft] def vacuumDeltasOn(l: Listing): Seq[String] =
+    l.versions.headOption.fold(Seq.empty[String]) { oldest =>
+      val horizon = versionTs(oldest)
+      val dead = l.deltas.filter(versionTs(_) <= horizon) ++
+        l.unmarked(DeltaPrefix).collect { case (n, ts) if ts <= horizon => n }
+      dropLayers(l, dead)
+      dead
+    }
 }

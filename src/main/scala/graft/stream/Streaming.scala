@@ -1,6 +1,7 @@
 package graft.stream
 
 import graft.operators.Joins
+import graft.lake.VersionedTable
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -540,30 +541,30 @@ object Streaming {
 
   /** What the seam hands a decision: the `store` — its base ∪ pending
     * segments in one scan, or on first use an empty relation of the
-    * declared schema — and the layers one listing of the root found
-    * (None on first use).
+    * declared schema — and the one listing of the root it read, which
+    * the batch's state write continues from.
     */
   private[graft] final case class StoreRead(
-      store: DataFrame, layers: Option[graft.lake.VersionedTable.Layers]) {
+      store: DataFrame, listing: VersionedTable.Listing) {
     /** The pending segments `store` reads over the base. */
-    def segments: Seq[String] = layers.fold(Seq.empty[String])(_.pending)
+    def segments: Seq[String] =
+      if (listing.base.isDefined) listing.pending else Nil
   }
 
-  /** The seam's pin and read: pin `spec.params`, which refuses a legacy
-    * plain-parquet root LOUDLY before it writes anything (reading one
-    * as empty would reset the state — re-admitting seen content,
-    * restarting a distribution or sketch from zero), then list the
-    * root ONCE and read what that listing names.
+  /** The seam's pin and read: list the root ONCE, pin `spec.params`
+    * against that listing — which refuses a legacy plain-parquet root
+    * LOUDLY before it writes anything (reading one as empty would reset
+    * the state — re-admitting seen content, restarting a distribution
+    * or sketch from zero) — and read what the listing names.
     */
   private[graft] def readStore(spark: SparkSession, storePath: String,
                                spec: StoreSpec): StoreRead = {
-    graft.lake.VersionedTable.requireParams(spark, storePath, spec.params)
-    val layers = graft.lake.VersionedTable.currentLayers(spark, storePath)
-    StoreRead(layers.fold(
+    val l = VersionedTable.list(spark, storePath)
+    VersionedTable.requireParamsOn(l, spec.params)
+    StoreRead(l.base.fold(
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], spec.schema))(
-        l => graft.lake.VersionedTable.scanLayers(spark, storePath,
-          l.base +: l.pending)),
-      layers)
+        base => VersionedTable.scanLayers(spark, storePath, base +: l.pending)),
+      l)
   }
 
   private def requireMaxSegments(maxSegments: Int): Unit =
@@ -572,9 +573,9 @@ object Streaming {
 
   /** The one seam of every stream store that republishes its fold —
     * the three retention steps and their writers, the drift monitor
-    * and both KMV monitors: [[readStore]] pins `spec.params` and lists
-    * the root once (so the decision read and the state write agree on
-    * the layers), `decide` runs on that read, `sink` gets `out` — the
+    * and both KMV monitors: [[readStore]] lists the root once and pins
+    * `spec.params` (the decision read and the state write work from
+    * that one listing), `decide` runs on that read, `sink` gets `out` — the
     * writers' merge-on-read upsert, which commits BEFORE the state so
     * a crash between the two converges on redelivery — then
     * [[commitState]].
@@ -585,11 +586,10 @@ object Streaming {
                                    decide: StoreRead => StoreDecision)
       : DataFrame = {
     requireMaxSegments(maxSegments)
-    val spark = batch.sparkSession
-    val read = readStore(spark, storePath, spec)
+    val read = readStore(batch.sparkSession, storePath, spec)
     val d = decide(read)
     sink(d.out)
-    commitState(spark, storePath, read.layers, maxSegments, d)
+    commitState(read.listing, maxSegments, d)
     d.out
   }
 
@@ -603,24 +603,24 @@ object Streaming {
     * this batch's horizon, and L1-merge the oldest once more than
     * `maxSegments` are pending. Vacuum runs before the merge so expired
     * segments drop from metadata alone instead of being rewritten into
-    * the merged one.
+    * the merged one. Every write continues from the batch's listing `l`
+    * plus the writes before it; only a due merge lists again.
     */
-  private def commitState(spark: SparkSession, storePath: String,
-                          layers: Option[graft.lake.VersionedTable.Layers],
-                          maxSegments: Int, d: StoreDecision): Unit =
-    if (layers.isEmpty || maxSegments == 0 || d.forceRepublish) {
+  private def commitState(l: VersionedTable.Listing, maxSegments: Int,
+                          d: StoreDecision): Unit =
+    if (l.base.isEmpty || maxSegments == 0 || d.forceRepublish) {
       // manifest-versioned publish: the new version becomes visible
       // atomically via its marker; a crash mid-write leaves the old
       // version current
-      graft.lake.VersionedTable.publish(d.folded, storePath)
-      if (layers.exists(_.anyDelta))
-        graft.lake.VersionedTable.vacuumDeltas(spark, storePath)
+      val published = VersionedTable.publishOn(l, d.folded)
+      if (l.anyDelta) VersionedTable.vacuumDeltasOn(published)
     } else {
-      graft.lake.VersionedTable.appendDeltaStamped(d.segment, storePath,
-        d.bounds._1)
-      d.bounds._2.foreach(h =>
-        graft.lake.VersionedTable.vacuumExpiredDeltas(spark, storePath, h))
-      graft.lake.VersionedTable.compactSegments(spark, storePath, maxSegments)
+      // an empty batch stamps Long.MinValue (appendDeltaStamped)
+      val appended = VersionedTable.appendDeltaOn(l, d.segment,
+        Some(d.bounds._1.fold(Long.MinValue)(_.getTime)))
+      val live = d.bounds._2.fold(appended)(h =>
+        appended.without(VersionedTable.vacuumExpiredDeltasOn(appended, h)))
+      VersionedTable.compactSegmentsOn(live, maxSegments)
     }
 
   /** One micro-batch step of VOCABULARY-DRIFT MONITORING — the
@@ -1138,22 +1138,22 @@ object Streaming {
                                    statsColumns: Seq[String] = Nil,
                                    deletes: Option[DataFrame] = None,
                                    upsertDelta: Boolean = true): Unit = {
-    import graft.lake.VersionedTable
-    val spark = ups.sparkSession
+    val l = VersionedTable.list(ups.sparkSession, root)
     // the merge KEYS are state-shaping for a MOR table: a later writer
     // with a different key set silently changes which rows win the
     // newest-per-key merge and what compaction folds — pin them like
     // the monitor stores' parameters (CDC and plain upsert share one
     // key contract per table)
-    VersionedTable.requireParams(spark, root,
-      morKeyParams(keys), legacy = morKeyParamsLegacy(keys))
-    if (!VersionedTable.isVersioned(spark, root))
-      VersionedTable.publish(ups, root, statsColumns = statsColumns)
-    else if (upsertDelta)
-      VersionedTable.appendDelta(ups, root)
-    deletes.foreach(VersionedTable.appendDeleteDelta(_, root))
-    if (VersionedTable.pendingDeltas(spark, root).size >= SinkCompactAt)
-      VersionedTable.compactDeltas(spark, root, keys)
+    VersionedTable.requireParamsOn(l, morKeyParams(keys),
+      legacy = morKeyParamsLegacy(keys))
+    val upserted =
+      if (l.base.isEmpty)
+        VersionedTable.publishOn(l, ups, statsColumns = statsColumns)
+      else if (upsertDelta) VersionedTable.appendDeltaOn(l, ups)
+      else l
+    val written = deletes.foldLeft(upserted)(VersionedTable.appendDeleteDeltaOn)
+    if (written.pending.size >= SinkCompactAt)
+      VersionedTable.compactDeltas(ups.sparkSession, root, keys)
   }
 
   /** `foreachBatch` CDC-apply sink: a change stream whose rows carry an
@@ -1526,7 +1526,7 @@ object Streaming {
       StoreSpec(s"logistic;features=md5-token-share;dim=$dim",
         StructType(Seq(StructField("feat", LongType),
           StructField("w", DoubleType)))))
-    val prior = read.layers.map(_ => read.store)
+    val prior = read.listing.base.map(_ => read.store)
     // At-least-once redelivery guard: foreachBatch commits its offsets
     // AFTER this function returns, so a crash between our publish and
     // the checkpoint commit re-runs the same micro-batch. The store
@@ -1551,7 +1551,7 @@ object Streaming {
         case Some(bid) => w.withColumn("_batch", lit(bid))
         case None => w
       }
-      graft.lake.VersionedTable.publish(stamped, storePath)
+      VersionedTable.publishOn(read.listing, stamped)
       w
     }
   }

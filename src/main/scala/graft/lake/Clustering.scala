@@ -150,15 +150,18 @@ object Clustering {
     * layout-preserving counterpart of [[VersionedTable.compact]],
     * whose hash repartition would destroy the Z-order. Run after
     * enough upserts have interleaved unclustered rows that file
-    * min/max ranges drift wide. Same no-window manifest publish.
+    * min/max ranges drift wide. Same no-window manifest publish; the
+    * guard, the base read and the publish share one root listing.
     */
   def recluster(spark: org.apache.spark.sql.SparkSession, root: String,
                 cols: Seq[String], targetFiles: Int, bits: Int = 8,
                 keepVersions: Int = 3, extraStats: Seq[String] = Nil): String = {
     // reads only the bare base — a pending MOR overlay would be
     // silently superseded by the republish; fold it first
-    VersionedTable.list(spark, root).requireNoPendingDeltas("recluster")
-    publishClustered(VersionedTable.readCurrent(spark, root), root, cols,
-      targetFiles, bits, keepVersions, extraStats)
+    val l = VersionedTable.list(spark, root)
+    l.requireNoPendingDeltas("recluster")
+    val base = VersionedTable.scanLayers(spark, root, Seq(l.current))
+    VersionedTable.publishOn(l, cluster(base, cols, targetFiles, bits),
+      keepVersions, statsColumns = (cols ++ extraStats).distinct).current
   }
 }

@@ -44,17 +44,17 @@ object LakeStorage {
                  table: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(tablePath(root, layer, table))
 
-  /** Partition listing via the filesystem (no full scan). */
+  /** Partition listing via the filesystem (no full scan); a missing
+    * table lists empty.
+    */
   def listPartitions(spark: SparkSession, root: String, layer: String,
                      table: String): Seq[String] = {
     val p = new Path(tablePath(root, layer, table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("date="))
-      .map(_.stripPrefix("date="))
-      .sorted
+    val names =
+      try fs.listStatus(p).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    names.filter(_.startsWith("date=")).map(_.stripPrefix("date=")).sorted
   }
 
   def latestPartition(spark: SparkSession, root: String, layer: String,

@@ -80,7 +80,7 @@ object SnapshotGroup {
     }
     // one listing of the group root serves the commit, the prune and
     // the sweep
-    val listed = entries(spark, groupRoot)
+    val listed = VersionedTable.list(spark, groupRoot).names
     val committed = snapshotsIn(listed)
     val snapshot = commitManifest(spark, groupRoot, committed, pinned,
       "snapshot")
@@ -106,16 +106,7 @@ object SnapshotGroup {
     * not crashed on — the [[VersionedTable]] vacuum discipline.
     */
   def listSnapshots(spark: SparkSession, groupRoot: String): Seq[String] =
-    snapshotsIn(entries(spark, groupRoot))
-
-  /** The group root's entry names from one listing; none when the root
-    * does not exist.
-    */
-  private def entries(spark: SparkSession, groupRoot: String): Seq[String] = {
-    val rootP = new Path(groupRoot)
-    try fsOf(spark, rootP).listStatus(rootP).toSeq.map(_.getPath.getName)
-    catch { case _: java.io.FileNotFoundException => Nil }
-  }
+    snapshotsIn(VersionedTable.list(spark, groupRoot).names)
 
   private def snapshotsIn(entries: Seq[String]): Seq[String] =
     entries.filter(n => n.startsWith(ManifestPrefix) && !n.endsWith(".tmp") &&
@@ -131,8 +122,15 @@ object SnapshotGroup {
     * `snapshot` is None).
     */
   def snapshotTables(spark: SparkSession, groupRoot: String,
-                     snapshot: Option[String] = None): Map[String, String] = {
-    val committed = listSnapshots(spark, groupRoot)
+                     snapshot: Option[String] = None): Map[String, String] =
+    pinsIn(spark, groupRoot, listSnapshots(spark, groupRoot), snapshot)
+
+  /** [[snapshotTables]] against the `committed` snapshots of one
+    * listing: reads the manifest, lists nothing.
+    */
+  private def pinsIn(spark: SparkSession, groupRoot: String,
+                     committed: Seq[String],
+                     snapshot: Option[String]): Map[String, String] = {
     val name = snapshot.orElse(committed.lastOption)
       .getOrElse(throw new IllegalStateException(
         s"no committed snapshot under $groupRoot"))
@@ -163,15 +161,16 @@ object SnapshotGroup {
     */
   def rollbackToSnapshot(spark: SparkSession, groupRoot: String,
                          snapshot: String): String = {
-    val pins = snapshotTables(spark, groupRoot, Some(snapshot))
+    val committed = listSnapshots(spark, groupRoot)
+    val pins = pinsIn(spark, groupRoot, committed, Some(snapshot))
     // fail loudly NOW if any pin has aged out, not at first read
     pins.foreach { case (t, v) =>
       require(VersionedTable.list(spark, s"$groupRoot/$t").versions.contains(v),
         s"cannot roll back to $snapshot: member '$t' version $v has been " +
           "vacuumed (snapshot expired)")
     }
-    commitManifest(spark, groupRoot, listSnapshots(spark, groupRoot),
-      pins.toSeq.sortBy(_._1), "rollback")
+    commitManifest(spark, groupRoot, committed, pins.toSeq.sortBy(_._1),
+      "rollback")
   }
 
   /** Commit a manifest pinning `pins`, in the caller's order, as the
@@ -205,21 +204,23 @@ object SnapshotGroup {
 
   /** Operator introspection: one row per (snapshot, member) with the
     * pinned version, whether the snapshot is current, and whether the
-    * pin is still readable (not vacuumed). O(manifests × tables)
-    * driver-side FS work, the [[VersionedTable.describe]] discipline.
+    * pin is still readable (not vacuumed). One listing of the group
+    * root, one read per manifest and one listing per member root,
+    * however many snapshots pin it — driver-side FS work, the
+    * [[VersionedTable.describe]] discipline.
     */
   def describe(spark: SparkSession, groupRoot: String)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val snaps = listSnapshots(spark, groupRoot)
-    val newest = snaps.lastOption
-    val rows = snaps.flatMap { s =>
-      snapshotTables(spark, groupRoot, Some(s)).toSeq.sortBy(_._1)
-        .map { case (t, v) =>
-          Row(s, t, v, newest.contains(s),
-            VersionedTable.list(spark, s"$groupRoot/$t").versions.contains(v))
-        }
+    val pins = snaps.map(s => s -> pinsIn(spark, groupRoot, snaps, Some(s)))
+    val retained = pins.flatMap(_._2.keys).distinct.map(t =>
+      t -> VersionedTable.list(spark, s"$groupRoot/$t").versions.toSet).toMap
+    val rows = pins.flatMap { case (s, tables) =>
+      tables.toSeq.sortBy(_._1).map { case (t, v) =>
+        Row(s, t, v, snaps.lastOption.contains(s), retained(t)(v))
+      }
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1),

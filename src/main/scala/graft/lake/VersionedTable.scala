@@ -84,8 +84,8 @@ object VersionedTable {
     * a racing writer's layer, which keeps an extra version and never
     * drops one. A listing never outlives one operation or one stream
     * batch. Only two loops re-list, because seeing a racing writer is
-    * their job: [[compactDeltasImpl]]'s stranded-delta recovery and
-    * [[compactSegments]]' in-flight tripwire.
+    * their job: [[compactDeltasOn]]'s stranded-delta re-list (once per
+    * fold round) and [[compactSegments]]' in-flight tripwire.
     */
   private[graft] final case class Listing(spark: SparkSession, root: String,
                                           names: Seq[String]) {
@@ -246,8 +246,10 @@ object VersionedTable {
     l.requireVersionedOrEmpty()
     val fs = l.fs
     val pf = new Path(l.rootP, ParamsFile)
+    // the listing already says whether the sidecar exists: no probe
+    val listed = l.names.contains(ParamsFile)
     val existing: Option[String] =
-      if (fs.exists(pf)) {
+      if (listed) {
         val in = fs.open(pf)
         try Some(new String(in.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8))
@@ -264,7 +266,7 @@ object VersionedTable {
       val out = fs.create(tmp, true)
       try out.write(params.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
-      if (fs.exists(pf))
+      if (listed)
         require(fs.delete(pf, false),
           s"failed to delete stale parameter sidecar $pf")
       require(fs.rename(tmp, pf),
@@ -341,15 +343,28 @@ object VersionedTable {
     * whose marker is unusable sends the scan to inference — merging
     * footers when it spans several layers, since deltas may widen the
     * schema and one file's footer would drop a column.
+    *
+    * Every layer must carry the columns `keys` (a merge's keys): one
+    * that misses any fails loudly, judged by its marker schema, or by
+    * its own inferred schema when its marker is unusable — never by the
+    * union, which another layer's columns would fill.
     */
   private[graft] def scanLayers(spark: SparkSession, root: String,
                                 names: Seq[String],
-                                files: Seq[String] = Nil): DataFrame = {
+                                files: Seq[String] = Nil,
+                                keys: Seq[String] = Nil): DataFrame = {
     val rootP = new Path(root)
     val fs = fsOf(spark, rootP)
-    val paths =
-      if (files.nonEmpty) files else names.map(n => new Path(rootP, n).toString)
+    val layers = names.map(n => new Path(rootP, n).toString)
+    val paths = if (files.nonEmpty) files else layers
     val schemas = names.map(n => readMarker(fs, rootP, n).map(_.schema))
+    layers.zip(schemas).foreach { case (layer, schema) =>
+      lazy val cols =
+        schema.getOrElse(spark.read.parquet(layer).schema).fieldNames
+      val missing = keys.filterNot(k => cols.contains(k))
+      require(missing.isEmpty,
+        s"every layer must carry the merge keys; $layer misses $missing")
+    }
     if (schemas.forall(_.isDefined))
       spark.read.schema(schemas.flatten.reduce { (a, b) =>
         StructType(a ++ b.filterNot(f => a.fieldNames.contains(f.name)))
@@ -888,8 +903,8 @@ object VersionedTable {
     // bare base here would silently supersede (lose) the overlay.
     val l = list(spark, root)
     val merged =
-      if (l.base.isDefined) graft.operators.Joins.upsert(
-        mergedOver(spark, root, l.current, l.pending, keys), batch, keys)
+      if (l.base.isDefined) graft.operators.Joins.upsert(mergedDf(spark, root,
+        scanLayers(spark, root, Seq(l.current)), l.pending, keys), batch, keys)
       else {
         // loud, not silent: a legacy plain-parquet dataset here would
         // otherwise be discarded by the bootstrap publish
@@ -1144,17 +1159,21 @@ object VersionedTable {
     * per key winning (delta over base, later delta over earlier).
     * Delete deltas ([[appendDeleteDelta]]) drop their keys; a delta
     * that added columns widens the view to the union schema (rows from
-    * layers without a column read null). Only the OVERLAY is ever
-    * shuffled (its newest-wins window) — the base streams through a
-    * left-anti join that AQE broadcasts while the overlay is small, so
-    * the merged read's extra cost over a bare scan tracks overlay
-    * size, never table size. File skipping does not apply through the
-    * overlay; compact to restore stats-backed pruned reads.
+    * layers without a column read null). The plan scans two relations
+    * however many deltas are pending: the base, and the whole overlay
+    * as one scan whose rows rank by their layer's name ([[mergedDf]]).
+    * Only the OVERLAY is ever shuffled (its newest-wins window) — the
+    * base streams through a left-anti join that AQE broadcasts while
+    * the overlay is small, so the merged read's extra cost over a bare
+    * scan tracks overlay size, never table size. File skipping does
+    * not apply through the overlay; compact to restore stats-backed
+    * pruned reads.
     */
   def readCurrentMerged(spark: SparkSession, root: String,
                         keys: Seq[String]): DataFrame = {
     val l = list(spark, root)
-    mergedOver(spark, root, l.current, l.pending, keys)
+    mergedDf(spark, root, scanLayers(spark, root, Seq(l.current)), l.pending,
+      keys)
   }
 
   /** [[readCurrentWhere]] through the delta overlay: file-stats
@@ -1180,61 +1199,57 @@ object VersionedTable {
       .where(preds.map(_.rowPredicate).reduce(_ && _))
   }
 
-  /** The newest-wins view of one base version under an explicit delta
-    * list (callers pass their listing's pending deltas; [[compactDeltas]] passes the
+  /** The newest-wins view of `baseDf` (a scan of one base version,
+    * possibly file-pruned) under an explicit delta list: callers pass
+    * their listing's pending deltas, and [[compactDeltasOn]] passes the
     * exact set it is folding, which is what makes its stranded-delta
-    * recovery sound). Delete deltas drop their keys; schema-evolved
+    * recovery sound. Delete deltas drop their keys; schema-evolved
     * deltas widen the output to the union schema (missing columns read
-    * null).
+    * null). A caller that pruned the base must only have removed rows
+    * its final predicate rejects: such a row is either filtered
+    * post-merge anyway or superseded by an overlay row that alone
+    * determines its key's output.
+    *
+    * The deltas are ONE scan ([[scanLayers]], which refuses a layer
+    * missing a key). A row's newest-wins rank is the name of the layer
+    * it was read from — the directory of its `_metadata.file_path`,
+    * resolved as a metadata column so a table column of that name
+    * cannot shadow it. Delta names are `d-<13-digit ts>-<token>` and a
+    * [[Listing]] sorts them by name, so the greatest name is the newest
+    * delta, and racing writers tie-break exactly as the listing orders
+    * them.
     *
     * The plan never shuffles the BASE: newest-wins is resolved inside
-    * the overlay alone (a key-partitioned window over the unioned
-    * deltas — overlay-sized state), and the base enters through a
-    * left-anti join against the overlay's key set, which AQE
-    * broadcasts while the overlay is small — the common regime, since
-    * compaction keeps it so. A key-partitioned window over
-    * base ∪ overlay would instead exchange the full table on every
-    * merged read — at 100 TB that is the difference between a
-    * broadcast probe and a table-wide shuffle. Superseded-base
-    * suppression uses ALL overlay keys (tombstoned included); the
-    * tombstone filter then applies only to overlay winners, so a
-    * deleted key vanishes and a re-inserted one survives. File
-    * skipping does not apply through the overlay; compact to restore
-    * stats-backed pruned reads.
-    */
-  private def mergedOver(spark: SparkSession, root: String, base: String,
-                         deltas: Seq[String], keys: Seq[String]): DataFrame =
-    mergedDf(spark, root, scanLayers(spark, root, Seq(base)), deltas, keys)
-
-  /** [[mergedOver]] with the base relation supplied by the caller —
-    * the seam [[readCurrentMergedWhere]] uses to substitute a
-    * file-pruned base scan. Only sound when every row the caller
-    * removed from the base is one the final predicate would reject:
-    * such a row is either filtered post-merge anyway or superseded by
-    * an overlay row that alone determines its key's output.
+    * the overlay alone (a key-partitioned window over the overlay scan
+    * — overlay-sized state), and the base enters through a left-anti
+    * join against the overlay's key set, which AQE broadcasts while
+    * the overlay is small — the common regime, since compaction keeps
+    * it so. A key-partitioned window over base ∪ overlay would instead
+    * exchange the full table on every merged read — at 100 TB that is
+    * the difference between a broadcast probe and a table-wide
+    * shuffle. Superseded-base suppression uses ALL overlay keys
+    * (tombstoned included); the tombstone filter then applies only to
+    * overlay winners, so a deleted key vanishes and a re-inserted one
+    * survives.
     */
   private def mergedDf(spark: SparkSession, root: String, baseDf: DataFrame,
                        deltas: Seq[String], keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "merge needs at least one key column")
     if (deltas.isEmpty) baseDf
     else {
-      val rawDeltas = deltas.map(d => scanLayers(spark, root, Seq(d)))
-      (baseDf +: rawDeltas).foreach { l =>
-        Seq("_gen", "_rn").foreach(w => require(!l.columns.contains(w),
-          s"working column $w clashes with a table column"))
-        val missing = keys.filterNot(l.columns.contains)
-        require(missing.isEmpty,
-          s"every layer must carry the merge keys; missing $missing")
-      }
-      val overlay = rawDeltas.zipWithIndex
-        .map { case (l, i) => l.withColumn("_gen", lit(i)) }
-        .reduce(_.unionByName(_, allowMissingColumns = true))
+      // a base missing a key fails the anti-join's analysis below, before
+      // any job; the overlay's union schema would hide a keyless delta
+      val overlay = scanLayers(spark, root, deltas, keys = keys)
+      require(!overlay.columns.contains("_rn"),
+        "working column _rn clashes with a table column")
+      val layer = element_at(
+        split(overlay.metadataColumn("_metadata")("file_path"), "/"), -2)
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col): _*).orderBy(col("_gen").desc)
+        .partitionBy(keys.map(col): _*).orderBy(layer.desc)
       val winners = overlay
         .withColumn("_rn", row_number().over(w))
         .where(col("_rn") === 1)
-        .drop("_gen", "_rn")
+        .drop("_rn")
       val live =
         if (winners.columns.contains(TombstoneCol))
           winners.where(!coalesce(col(TombstoneCol), lit(false)))
@@ -1253,45 +1268,46 @@ object VersionedTable {
     * below the OLDEST retained base's timestamp are provably dead —
     * the same retention horizon the base vacuum uses. Marker-less
     * (crashed-append) delta dirs older than that horizon are orphans
-    * and removed too. No-op when nothing is pending.
+    * and removed too. No-op when nothing is pending. Returns the
+    * current base.
     */
   def compactDeltas(spark: SparkSession, root: String, keys: Seq[String],
                     keepVersions: Int = 3): String =
-    compactDeltasImpl(spark, root, keys, keepVersions, () => ())
+    compactDeltasOn(list(spark, root), keys, keepVersions)
 
-  /** [[compactDeltas]] body with a test seam: `beforePublish` runs
-    * between computing the fold set and publishing it, the window in
-    * which a concurrent [[appendDelta]] can land a delta whose
-    * timestamp the new base will dominate. Without recovery such a
-    * delta would be STRANDED — `pendingDeltas` (ts > base) considers
-    * it folded when it never was, silently losing its rows. The loop
-    * closes that race: after each publish it re-lists deltas in
-    * `(previous base ts, new base ts]` not in the folded set and folds
-    * those onto the new base (they were appended later, so overlaying
-    * them last preserves newest-wins order), repeating until none
-    * appear. Each round folds every delta visible at its start, so the
-    * loop only continues while writers keep racing the publish —
-    * quiesced (or single-writer, e.g. the streaming sink) it runs at
-    * most one extra round.
+  /** [[compactDeltas]] from the listing `l`. A delta that a concurrent
+    * [[appendDelta]] lands after `l` was taken gets a timestamp the new
+    * base will dominate; without recovery it would be STRANDED —
+    * `pending` (ts > base) would consider it folded when it never was,
+    * silently losing its rows. The loop closes that race: after each
+    * publish it re-lists the root once and folds the deltas in
+    * `(previous base ts, new base ts]` not in the folded set onto the
+    * new base (they were appended later, so overlaying them last
+    * preserves newest-wins order), repeating until none appear; the
+    * vacuum runs on that last listing. Each round folds every delta
+    * visible at its start, so the loop only continues while writers
+    * keep racing the publish — quiesced (or single-writer, e.g. the
+    * streaming sink) it runs one round, and the fold lists the root
+    * once beyond `l`.
     */
-  private[graft] def compactDeltasImpl(spark: SparkSession, root: String,
-                                      keys: Seq[String], keepVersions: Int,
-                                      beforePublish: () => Unit): String = {
-    val l = list(spark, root)
+  private[graft] def compactDeltasOn(l: Listing, keys: Seq[String],
+                                     keepVersions: Int = 3): String = {
+    val (spark, root) = (l.spark, l.root)
     val preFoldedTs = versionTs(l.current)
+    var now = l
     var base = l.current
     var folded = Set.empty[String]
     var pending = l.pending
     while (pending.nonEmpty) {
-      beforePublish()
-      base = publish(mergedOver(spark, root, base, pending, keys),
-        root, keepVersions)
+      base = publishOn(now, mergedDf(spark, root,
+        scanLayers(spark, root, Seq(base)), pending, keys), keepVersions).current
       folded ++= pending
-      pending = listDeltas(spark, root).filter(d =>
+      now = list(spark, root)
+      pending = now.deltas.filter(d =>
         versionTs(d) > preFoldedTs && versionTs(d) <= versionTs(base) &&
           !folded.contains(d))
     }
-    vacuumDeltas(spark, root)
+    vacuumDeltasOn(now)
     base
   }
 

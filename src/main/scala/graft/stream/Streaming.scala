@@ -1,5 +1,6 @@
 package graft.stream
 
+import graft.core.Observed
 import graft.operators.Joins
 import graft.lake.VersionedTable
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -118,19 +119,10 @@ object Streaming {
   private def observedBounds(obs: org.apache.spark.sql.Observation,
                              caller: String)
       : (Option[Timestamp], Option[Timestamp]) = {
-    val m = graft.core.Observed.await(obs, caller)
+    val m = Observed.await(obs, caller)
     (m.get("_mx").flatMap(Option(_)).map(_.asInstanceOf[Timestamp]),
       m.get("_h").flatMap(Option(_)).map(_.asInstanceOf[Timestamp]))
   }
-
-  /** Collect an observed `count` row count the same way — the
-    * [[storeProbe]] batch-side bound, which pre-r19 was a separate
-    * count() job over the already-checkpointed key relation.
-    */
-  private def observedCount(obs: org.apache.spark.sql.Observation,
-                            caller: String): Long =
-    graft.core.Observed.await(obs, caller).get("_n")
-      .flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L)
 
   /** splitmix64 finalizer — driver-side avalanche for combining the
     * quantizer-fingerprint aggregate's three longs into one stamped
@@ -474,7 +466,7 @@ object Streaming {
       .observe(obsN, count(col("_nd_bands")).as("_n"))
       .localCheckpoint()
     val bounds = observedBounds(obsB, "nearDedupBatchCompute")
-    val nBandRows = observedCount(obsN, "nearDedupBatchCompute") * bands
+    val nBandRows = Observed.long(obsN, "_n", "nearDedupBatchCompute").getOrElse(0L) * bands
     // Expire state BEFORE the collision decision, against the batch's
     // own max event time: content older than the retention horizon must
     // not suppress admission (the exact-path analogue finalizes state at
@@ -937,7 +929,7 @@ object Streaming {
       .observe(obsN, count(lit(1)).as("_n"))
       .localCheckpoint()
     val bounds = observedBounds(obsB, "noveltyGateBatchCompute")
-    val nShingleRows = observedCount(obsN, "noveltyGateBatchCompute")
+    val nShingleRows = Observed.long(obsN, "_n", "noveltyGateBatchCompute").getOrElse(0L)
     // the step's ONCE-collected horizon ([[observeBounds]]) as a
     // literal, store-scan-pushable predicate; None (empty batch) keeps
     // the store untouched
@@ -1153,7 +1145,7 @@ object Streaming {
       else l
     val written = deletes.foldLeft(upserted)(VersionedTable.appendDeleteDeltaOn)
     if (written.pending.size >= SinkCompactAt)
-      VersionedTable.compactDeltas(ups.sparkSession, root, keys)
+      VersionedTable.compactDeltasOn(written, keys)
   }
 
   /** `foreachBatch` CDC-apply sink: a change stream whose rows carry an
@@ -1401,7 +1393,7 @@ object Streaming {
       .observe(obsN, count(lit(1)).as("_n"))
       .localCheckpoint()
     val bounds = observedBounds(obsB, "semanticDedupBatchCompute")
-    val nVecRows = observedCount(obsN, "semanticDedupBatchCompute")
+    val nVecRows = Observed.long(obsN, "_n", "semanticDedupBatchCompute").getOrElse(0L)
     // the step's ONCE-collected horizon ([[observeBounds]]) as a
     // literal, store-scan-pushable predicate; None (empty batch) keeps
     // the store untouched

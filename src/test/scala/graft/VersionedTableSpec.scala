@@ -683,24 +683,65 @@ class VersionedTableSpec extends SparkSpec {
     val root = tmpRoot("morrace")
     VersionedTable.publish(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)
     VersionedTable.appendDelta(Seq((2L, "B")).toDF("k", "v"), root)
-    // race: another writer lands a delta AFTER compaction computed its
-    // fold set but BEFORE it published — the new base's timestamp will
-    // dominate this delta, so without recovery it would be stranded
-    // (pendingDeltas would call it folded; its rows silently lost)
-    var raced = false
-    VersionedTable.compactDeltasImpl(spark, root, Seq("k"), 3, () => {
-      if (!raced) {
-        raced = true
-        VersionedTable.appendDelta(Seq((3L, "c"), (2L, "B9")).toDF("k", "v"), root)
-      }
-    })
-    assert(raced)
+    // race: another writer lands a delta AFTER compaction took the
+    // listing it folds from but BEFORE it published — the new base's
+    // timestamp will dominate this delta, so without recovery it would
+    // be stranded (pendingDeltas would call it folded; its rows
+    // silently lost)
+    val stale = VersionedTable.list(spark, root)
+    VersionedTable.appendDelta(Seq((3L, "c"), (2L, "B9")).toDF("k", "v"), root)
+    VersionedTable.compactDeltasOn(stale, Seq("k"))
     // the racing delta's rows survived, with its newer write winning,
     // and nothing is left pending
     assert(VersionedTable.pendingDeltas(spark, root).isEmpty)
     assert(VersionedTable.readCurrent(spark, root)
       .as[(Long, String)].collect().toMap ===
       Map(1L -> "a", 2L -> "B9", 3L -> "c"))
+  }
+
+  test("a merged read plans two scan relations however many deltas are pending: the base and one overlay") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    Seq(1, 4, 10).foreach { n =>
+      val root = tmpRoot(s"morscans$n")
+      val base = VersionedTable.publish(
+        (0L until 20L).map(k => (k, s"b$k")).toDF("k", "v"), root)
+      val deltas = (1 to n).map(i =>
+        VersionedTable.appendDelta(Seq((i.toLong, s"u$i"), (0L, s"w$i"))
+          .toDF("k", "v"), root))
+      val m = VersionedTable.readCurrentMerged(spark, root, Seq("k"))
+      val scans = m.queryExecution.optimizedPlan.collect {
+        case r: LogicalRelation => r.relation.asInstanceOf[HadoopFsRelation]
+          .location.rootPaths.map(_.getName).toSet
+      }.toSet
+      assert(scans === Set(Set(base), deltas.toSet), s"$n deltas")
+      // newest wins across the one overlay scan: key 0 is in every delta
+      assert(m.as[(Long, String)].collect().toMap ===
+        (0L until 20L).map(k => k -> (if (k == 0L) s"w$n"
+          else if (k <= n) s"u$k" else s"b$k")).toMap)
+    }
+  }
+
+  test("a delta missing a merge key fails the merged read loudly, with a usable marker and with an unusable one") {
+    Seq(false, true).foreach { unusable =>
+      val root = tmpRoot(s"morkeys$unusable")
+      VersionedTable.publish(Seq((1L, "a")).toDF("k", "v"), root)
+      VersionedTable.appendDelta(Seq((1L, "A")).toDF("k", "v"), root)
+      val keyless =
+        VersionedTable.appendDelta(Seq(("x", "y")).toDF("v", "lang"), root)
+      // a later delta that does carry the key: the overlay's union schema
+      // has it, the keyless layer still does not
+      VersionedTable.appendDelta(Seq((2L, "b")).toDF("k", "v"), root)
+      if (unusable) {
+        val marker = java.nio.file.Paths.get(root, s"_ready-$keyless")
+        java.nio.file.Files.write(marker, Array.emptyByteArray)
+        java.nio.file.Files.deleteIfExists(
+          java.nio.file.Paths.get(root, s"._ready-$keyless.crc"))
+      }
+      val e = intercept[IllegalArgumentException] {
+        VersionedTable.readCurrentMerged(spark, root, Seq("k"))
+      }
+      assert(e.getMessage.contains("merge keys"), s"unusable marker: $unusable")
+    }
   }
 
   test("vacuumOlderThan drops aged versions but never below minKeep") {

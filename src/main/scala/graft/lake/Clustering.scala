@@ -151,7 +151,8 @@ object Clustering {
     * whose hash repartition would destroy the Z-order. Run after
     * enough upserts have interleaved unclustered rows that file
     * min/max ranges drift wide. Same no-window manifest publish; the
-    * guard, the base read and the publish share one root listing.
+    * guards, the base read and the publish share one root listing, and
+    * a plain parquet directory is refused before anything is written.
     */
   def recluster(spark: org.apache.spark.sql.SparkSession, root: String,
                 cols: Seq[String], targetFiles: Int, bits: Int = 8,
@@ -159,6 +160,7 @@ object Clustering {
     // reads only the bare base — a pending MOR overlay would be
     // silently superseded by the republish; fold it first
     val l = VersionedTable.list(spark, root)
+    l.requireVersionedOrEmpty()
     l.requireNoPendingDeltas("recluster")
     val base = VersionedTable.scanLayers(spark, root, Seq(l.current))
     VersionedTable.publishOn(l, cluster(base, cols, targetFiles, bits),

@@ -87,86 +87,6 @@ object LakeStorage {
       .option("path", path)
       .saveAsTable(table)
 
-  /** Compact a table or partition directory's small files: rewrite to
-    * `targetFiles` parquet files via a round-robin repartition.
-    * Small-file proliferation is the classic lake pathology — streaming
-    * sinks and dynamic partition writes leave thousands of KB-sized
-    * files whose per-file open/footer cost dominates scans and whose
-    * listing cost dominates planning. Returns the row count (for the
-    * caller's invariant check; the rewrite itself never changes data).
-    *
-    * When `path` is a [[VersionedTable]] root the compaction routes
-    * through [[VersionedTable.compact]] — the rewrite publishes as a
-    * new immutable version and there is NO reader window at all. For a
-    * plain parquet directory it falls back to the rename-pair swap
-    * below, whose transient PATH_NOT_FOUND window [[readRetrying]]
-    * absorbs; new tables should be versioned.
-    */
-  def compact(spark: SparkSession, path: String, targetFiles: Int): Long = {
-    require(targetFiles > 0, s"target file count must be positive, got $targetFiles")
-    if (VersionedTable.isVersioned(spark, path))
-      return VersionedTable.compact(spark, path, targetFiles)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new Path(path)
-    val df = spark.read.parquet(path).repartition(targetFiles)
-    // Unique suffixes: concurrent compactions of different datasets (or
-    // a crashed predecessor's leftovers) never collide on a fixed name.
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(s"${path}_compact_${token}_tmp")
-    val backup = new Path(s"${path}_compact_${token}_bak")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val n = spark.read.parquet(tmp.toString).count()
-    // Swap by rename pairs, never delete-then-rename: a crash at any
-    // point leaves the full data at a recoverable path (live, backup,
-    // or tmp) — the old delete-first order had a window where the
-    // dataset existed nowhere.
-    //
-    // CONCURRENT-READER CONTRACT (spec-pinned in IngestLakeSpec):
-    //  - a reader that resolves `path` BETWEEN the two renames gets a
-    //    PATH_NOT_FOUND AnalysisException — never partial data. The
-    //    window is transient (two directory renames); [[readRetrying]]
-    //    absorbs it.
-    //  - a scan PLANNED against the pre-compact file listing can fail
-    //    mid-read once the backup directory is deleted (files gone
-    //    under it). Re-planning (retrying the read) repairs it — the
-    //    data is equal, only the file layout changed.
-    //  - a transactional table format (manifest indirection) is the
-    //    real fix at multi-writer scale; this contract is what plain
-    //    directory parquet can honor.
-    if (!fs.rename(target, backup))
-      throw new java.io.IOException(s"compact: could not move $target aside")
-    if (!fs.rename(tmp, target)) {
-      fs.rename(backup, target) // restore the original
-      throw new java.io.IOException(s"compact: could not publish $tmp")
-    }
-    fs.delete(backup, true)
-    n
-  }
-
-  /** Reader-side counterpart of [[compact]]'s swap window: a parquet
-    * read that treats a missing path as TRANSIENT, retrying with
-    * backoff. The only moment a compacted dataset's path is absent is
-    * the instant between compact's two renames, so a handful of short
-    * retries converts the race into at-most-milliseconds of latency.
-    * A genuinely absent dataset still fails after `attempts` tries —
-    * this does not mask real errors, it bounds the swap race.
-    */
-  def readRetrying(spark: SparkSession, path: String, attempts: Int = 5,
-                   backoffMs: Long = 100): DataFrame = {
-    var tries = 0
-    while (true) {
-      try return spark.read.parquet(path)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if tries < attempts - 1 && e.getMessage != null &&
-              e.getMessage.toUpperCase.contains("PATH_NOT_FOUND") =>
-          tries += 1
-          Thread.sleep(backoffMs)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** Snapshot diff — change-data-capture between two corpus versions
     * by key + content fingerprint: `added` (key only in `newDf`),
     * `removed` (only in `oldDf`), `changed` (both, fingerprints

@@ -190,13 +190,9 @@ object SnapshotGroup {
       committed.map(manifestTs).maxOption.map(_ + 1).getOrElse(0L))
     val token = java.util.UUID.randomUUID().toString.take(8)
     val name = f"$ManifestPrefix$ts%013d-$token"
-    val tmp = new Path(rootP, s".$name.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(pins.map { case (n, v) => s"$n\t$v" }
-      .mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, new Path(rootP, name)))
+    if (!VersionedTable.renameIntoPlace(fs, new Path(rootP, s".$name.tmp"),
+        new Path(rootP, name),
+        pins.map { case (n, v) => s"$n\t$v" }.mkString("", "\n", "\n")))
       throw new IllegalStateException(
         s"could not commit $kind manifest $name under $groupRoot")
     name

@@ -7,10 +7,9 @@ import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Manifest-pointer publish for plain-parquet datasets — the engine's
-  * substitute for a transactional table format's snapshot swap, closing
-  * the transient PATH_NOT_FOUND window that rename-pair swaps
-  * ([[LakeStorage.compact]]'s legacy path, the old delete-then-rename
-  * upsert sink) leave and `readRetrying` had to absorb.
+  * substitute for a transactional table format's snapshot swap, and
+  * the one way graft rewrites a table's files: a reader never finds
+  * the table's path absent or half-written.
   *
   * Layout (all under one table root):
   * {{{
@@ -226,21 +225,14 @@ object VersionedTable {
     * bootstrap) is overwritten, the empty store simply adopts; the
     * sidecar lands via create-then-rename so a concurrent reader
     * never sees a partial write (single-writer stores, like every
-    * sink here).
-    *
-    * `legacy` lists SUPERSEDED renderings of the SAME parameters (a
-    * caller changed its fingerprint format, not its semantics): a
-    * sidecar holding one of them is silently refreshed to `params`
-    * instead of rejected, so a format-only upgrade never forces a
-    * store rebase.
+    * sink here). Any other stamped string is a mismatch, including an
+    * older rendering of the same parameters.
     */
-  def requireParams(spark: SparkSession, root: String, params: String,
-                    legacy: Seq[String] = Nil): Unit =
-    requireParamsOn(list(spark, root), params, legacy)
+  def requireParams(spark: SparkSession, root: String, params: String): Unit =
+    requireParamsOn(list(spark, root), params)
 
   /** [[requireParams]] against the listing `l`. */
-  private[graft] def requireParamsOn(l: Listing, params: String,
-                                     legacy: Seq[String] = Nil): Unit = {
+  private[graft] def requireParamsOn(l: Listing, params: String): Unit = {
     // the layout guard runs before the stamp, so a legacy plain-parquet
     // root is never written to
     l.requireVersionedOrEmpty()
@@ -263,18 +255,14 @@ object VersionedTable {
     def stamp(): Unit = {
       val tmp = new Path(l.rootP,
         s".${ParamsFile}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write(params.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (listed)
-        require(fs.delete(pf, false),
-          s"failed to delete stale parameter sidecar $pf")
-      require(fs.rename(tmp, pf),
+      require(renameIntoPlace(fs, tmp, pf, params, () =>
+        if (listed)
+          require(fs.delete(pf, false),
+            s"failed to delete stale parameter sidecar $pf")),
         s"failed to publish parameter sidecar $pf (rename returned false)")
     }
     existing match {
       case Some(p) if p == params => ()
-      case Some(p) if legacy.contains(p) => stamp() // format-only refresh
       case Some(p) if l.base.isDefined =>
         throw new IllegalStateException(
           s"store at ${l.root} was built with parameters [$p] but this step " +
@@ -286,6 +274,23 @@ object VersionedTable {
         // absent, or stale over an unpublished root: (re)stamp
         stamp()
     }
+  }
+
+  /** Land `text` (UTF-8) as `dest` through the dot-temp `tmp`: write
+    * it, close it, run `beforeRename`, then rename it into place, so a
+    * concurrent reader sees the old file or the whole new one, never a
+    * partial write. Returns the rename's result — some Hadoop
+    * filesystems return false instead of throwing — for the caller to
+    * fail on in its own words.
+    */
+  private[lake] def renameIntoPlace(fs: FileSystem, tmp: Path, dest: Path,
+                                    text: String,
+                                    beforeRename: () => Unit = () => ()): Boolean = {
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    beforeRename()
+    fs.rename(tmp, dest)
   }
 
   /** Read the current version with the schema its marker records —
@@ -859,10 +864,14 @@ object VersionedTable {
       .orderBy("published_at", "name")
   }
 
-  /** [[LakeStorage.compact]] re-expressed over the manifest: rewrite
-    * the current version to `targetFiles` files as a NEW version — no
-    * rename of live data, no reader window at all. Returns the row
-    * count (invariant-check hook; the rewrite never changes data).
+  /** Small-file compaction: rewrite the current version to
+    * `targetFiles` files as a NEW version — no rename of live data, no
+    * reader window at all. Streaming sinks and dynamic partition
+    * writes leave many KB-sized files whose per-file open and footer
+    * cost dominates scans. Returns the row count (invariant-check
+    * hook; the rewrite never changes data). A root holding loose,
+    * unversioned parquet is refused before anything is written
+    * ([[requireVersionedOrEmpty]]): migrate it first.
     *
     * The hash `repartition` DESTROYS a Z-ordered layout: inherited
     * stats are recomputed honestly (correctness never degrades), but
@@ -876,6 +885,7 @@ object VersionedTable {
     require(targetFiles > 0,
       s"target file count must be positive, got $targetFiles")
     val l = list(spark, root)
+    l.requireVersionedOrEmpty()
     l.requireNoPendingDeltas("compact")
     val v = publishOn(l, scanLayers(spark, root, Seq(l.current))
       .repartition(targetFiles), keepVersions).current

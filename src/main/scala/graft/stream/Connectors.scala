@@ -446,8 +446,9 @@ object Connectors {
     * 1-row-per-trigger driver stream whose foreachBatch invokes the
     * pluggable `fetch` (the HTTP-client seam — no egress in this
     * environment, so specs inject a deterministic fake) and hands the
-    * page to `sink`. Cadence comes from the trigger; checkpointing
-    * makes the poll loop restartable.
+    * page to `sink`. Cadence comes from the trigger, so any tick
+    * stream serves, e.g. `spark.readStream.format("rate").load()`;
+    * checkpointing makes the poll loop restartable.
     */
   def pollingQuery(ticks: DataFrame, trigger: Trigger, checkpointDir: String,
                    fetch: Long => DataFrame,
@@ -459,12 +460,6 @@ object Connectors {
         sink(fetch(batchId), batchId)
       }
       .start()
-
-  /** Default tick driver for [[pollingQuery]]: the rate source at one
-    * row per second (the trigger, not the rate, sets poll cadence).
-    */
-  def rateTicks(spark: SparkSession): DataFrame =
-    spark.readStream.format("rate").option("rowsPerSecond", "1").load()
 
   /** KV cache rows (S14, Redis `setex business_analytics:{id} ttl json`,
     * `streaming_processor.py:309-329`): key = prefix + key column,

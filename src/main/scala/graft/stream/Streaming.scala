@@ -1093,18 +1093,14 @@ object Streaming {
     * a caller happened to list them) and injective: each key is
     * length-prefixed, so a raw external header literally named `"a,b"`
     * (the repo deliberately supports such names elsewhere) can never
-    * collide with the two keys `a` and `b`. The r15 comma-join had
-    * both flaws; it is kept as a legacy alias so stores stamped with
-    * it refresh in place instead of rejecting — but only in the exact
-    * key order of the calling step (any other legacy ordering needs a
-    * one-time manual sidecar refresh; parsing the ambiguous old format
-    * to accept more would re-open the collision it fixes).
+    * collide with the two keys `a` and `b`. A sink stamped with the
+    * older comma-joined rendering, which had both flaws, is refused
+    * like any other mismatch: rebase it, or rewrite its `_params` by
+    * hand once (parsing the ambiguous old format would re-open the
+    * collision this one fixes).
     */
   private[graft] def morKeyParams(keys: Seq[String]): String =
     s"morUpsert;keys=${keys.sorted.map(k => s"${k.length}:$k").mkString(";")}"
-
-  private[graft] def morKeyParamsLegacy(keys: Seq[String]): Seq[String] =
-    Seq(s"morUpsert;keys=${keys.mkString(",")}")
 
   /** Pending-delta count at which a merge-on-read sink folds its
     * overlay ([[morUpsertStep]]). A sink that lands one delta per batch
@@ -1136,8 +1132,7 @@ object Streaming {
     // newest-per-key merge and what compaction folds — pin them like
     // the monitor stores' parameters (CDC and plain upsert share one
     // key contract per table)
-    VersionedTable.requireParamsOn(l, morKeyParams(keys),
-      legacy = morKeyParamsLegacy(keys))
+    VersionedTable.requireParamsOn(l, morKeyParams(keys))
     val upserted =
       if (l.base.isEmpty)
         VersionedTable.publishOn(l, ups, statsColumns = statsColumns)

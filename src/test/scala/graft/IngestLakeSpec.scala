@@ -217,65 +217,6 @@ class IngestLakeSpec extends SparkSpec {
       nw.orderBy("doc_id").collect().toSeq)
   }
 
-  test("compact rewrites a fragmented directory into few files, data intact") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
-    val df = (1L to 1000L).toDF("id")
-    df.repartition(50).write.parquet(dir) // pathological small files
-    def files() = new java.io.File(dir).listFiles
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(files() >= 50)
-    val n = LakeStorage.compact(spark, dir, targetFiles = 2)
-    assert(n === 1000L)
-    assert(files() <= 2)
-    assert(spark.read.parquet(dir).as[Long].collect().sorted.toSeq
-      === (1L to 1000L))
-    // the rename-pair swap leaves no tmp/backup residue, and its unique
-    // suffixes let a second compaction run without colliding with the
-    // first one's (already-cleaned) working paths
-    val n2 = LakeStorage.compact(spark, dir, targetFiles = 1)
-    assert(n2 === 1000L)
-    val leftovers = new java.io.File(dir).getParentFile.listFiles
-      .map(_.getName).filter(_.contains("_compact_"))
-    assert(leftovers.isEmpty, s"compaction left working dirs: ${leftovers.toSeq}")
-  }
-
-  test("compact's swap window: readers see PATH_NOT_FOUND, never partial data; readRetrying absorbs it") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_compact_rd").toString + "/t"
-    (1L to 100L).toDF("id").repartition(8).write.parquet(dir)
-    // Reproduce the exact between-renames state with the same
-    // filesystem op compact uses: the live path is momentarily absent
-    // (moved to backup), the replacement not yet renamed in.
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new org.apache.hadoop.fs.Path(dir + "_compact_test_bak")
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir), bak))
-    // Contract point 1: a mid-swap reader fails loudly with a missing
-    // path — it can never observe a half-renamed mixture.
-    val e = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.read.parquet(dir)
-    }
-    assert(e.getMessage.toUpperCase.contains("PATH_NOT_FOUND"))
-    // Contract point 2: readRetrying rides out the window — a
-    // concurrent "compactor" completes the second rename while the
-    // reader is backing off.
-    val restorer = new Thread(() => {
-      Thread.sleep(250)
-      fs.rename(bak, new org.apache.hadoop.fs.Path(dir)); ()
-    })
-    restorer.start()
-    val got = LakeStorage.readRetrying(spark, dir, attempts = 10, backoffMs = 100)
-      .as[Long].collect().sorted.toSeq
-    restorer.join()
-    assert(got === (1L to 100L))
-    // Contract point 3: a genuinely absent dataset still fails after
-    // the bounded retries — the helper masks the race, not real errors.
-    intercept[org.apache.spark.sql.AnalysisException] {
-      LakeStorage.readRetrying(spark, dir + "_nope", attempts = 2, backoffMs = 10)
-    }
-  }
-
   test("audited JSONL read parses good lines and quarantines malformed ones") {
     import org.apache.spark.sql.types._
     val dir = Files.createTempDirectory("graft_jsonl").toString

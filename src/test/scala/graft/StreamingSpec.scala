@@ -778,7 +778,7 @@ class StreamingSpec extends SparkSpec {
       e3.getMessage.contains("keys=1:k;1:v"))
   }
 
-  test("MOR key pin: order-insensitive, comma-injective, refreshes the r15 legacy stamp in place") {
+  test("MOR key pin: order-insensitive, comma-injective, refuses an r15-stamped sink") {
     import graft.lake.VersionedTable
     import graft.stream.Streaming
     val dir = java.nio.file.Files.createTempDirectory("graft_morpin").toString
@@ -797,9 +797,9 @@ class StreamingSpec extends SparkSpec {
         Seq("k1,k2"), ab)
     }
     assert(eComma.getMessage.contains("5:k1,k2"))
-    // (3) a store stamped with the r15 comma format is refreshed in
-    // place on the next write — a format-only upgrade never forces a
-    // store rebase — while a genuinely different key set still rejects
+    // (3) a sink stamped with the r15 comma format is refused with the
+    // rebase message, its stamp left as it was — never silently
+    // re-pinned to the new rendering
     val legacy = dir + "/legacy"
     Streaming.morUpsertStep(Seq((1L, 2L, "a")).toDF("k1", "k2", "v"),
       Seq("k1", "k2"), legacy)
@@ -812,14 +812,14 @@ class StreamingSpec extends SparkSpec {
     out.write("morUpsert;keys=k1,k2"
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
-    Streaming.morUpsertStep(Seq((1L, 2L, "b")).toDF("k1", "k2", "v"),
-      Seq("k1", "k2"), legacy)
-    assert(new String(java.nio.file.Files.readAllBytes(sidecar),
-      java.nio.charset.StandardCharsets.UTF_8) === "morUpsert;keys=2:k1;2:k2")
-    intercept[IllegalStateException] {
-      Streaming.morUpsertStep(Seq((1L, "c")).toDF("k1", "v"),
-        Seq("k1"), legacy)
+    val stamped = java.nio.file.Files.readAllBytes(sidecar).toSeq
+    val eLegacy = intercept[IllegalStateException] {
+      Streaming.morUpsertStep(Seq((1L, 2L, "b")).toDF("k1", "k2", "v"),
+        Seq("k1", "k2"), legacy)
     }
+    assert(eLegacy.getMessage.contains("[morUpsert;keys=k1,k2]") &&
+      eLegacy.getMessage.contains("[morUpsert;keys=2:k1;2:k2]"))
+    assert(java.nio.file.Files.readAllBytes(sidecar).toSeq === stamped)
   }
 
   test("MOR sink refuses a legacy unversioned layout WITHOUT writing its key pin into it") {

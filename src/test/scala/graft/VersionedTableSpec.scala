@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.lake.{LakeStorage, VersionedTable}
+import graft.lake.VersionedTable
 
 /** Manifest-pointer publish: the concurrent-reader contract (old or new
   * data, never an error, NO retry anywhere), version retention, orphan
@@ -302,12 +302,12 @@ class VersionedTableSpec extends SparkSpec {
     assertComplete()
   }
 
-  test("LakeStorage.compact routes a versioned root through the manifest (no swap window)") {
+  test("VersionedTable.compact publishes a new version: no swap window") {
     val root = tmpRoot("cmp")
     // fragmented initial version: many small files
     VersionedTable.publish(spark.range(1000).toDF("id").repartition(16), root)
     val before = VersionedTable.currentVersion(spark, root).get
-    val n = LakeStorage.compact(spark, root, targetFiles = 2)
+    val n = VersionedTable.compact(spark, root, targetFiles = 2)
     assert(n === 1000L)
     val after = VersionedTable.currentVersion(spark, root).get
     assert(after !== before) // compaction published a NEW version
@@ -441,7 +441,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.publish(df.repartitionByRange(4, col("k")), root,
       statsColumns = Seq("k"), bloomColumns = Seq("s"))
     // compact() and upsertBatch() pass no stats args…
-    LakeStorage.compact(spark, root, targetFiles = 4)
+    VersionedTable.compact(spark, root, targetFiles = 4)
     VersionedTable.upsertBatch(spark,
       Seq((1000L, "x")).toDF("k", "s"), Seq("k"), root)
     // …yet the newest version still carries the full spec and prunes
@@ -1147,6 +1147,25 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.upsertBatch(spark,
       Seq((2L, "new")).toDF("k", "v"), Seq("k"), fresh)
     assert(VersionedTable.readCurrent(spark, fresh).count() === 1)
+  }
+
+  test("compact and recluster refuse a plain parquet directory with the migration message") {
+    import graft.lake.Clustering
+    val root = tmpRoot("plain")
+    spark.range(100).toDF("k").repartition(4).write.parquet(root)
+    def files() = new java.io.File(root).listFiles.toSeq
+      .map(f => f.getName -> f.length).sorted
+    val before = files()
+    val refusals = Seq(
+      intercept[IllegalArgumentException] {
+        VersionedTable.compact(spark, root, targetFiles = 1)
+      },
+      intercept[IllegalArgumentException] {
+        Clustering.recluster(spark, root, Seq("k"), targetFiles = 1)
+      })
+    refusals.foreach(e => assert(e.getMessage.contains("unversioned data")))
+    assert(files() === before, "a refused rewrite touched the directory")
+    assert(spark.read.parquet(root).count() === 100L)
   }
 
   test("rollbackTo restores a prior version's content and discards pending deltas") {

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # One-command round gate — the full local correctness protocol:
-#   0. (informational) the src/main and src/test non-comment LoC
+#   0. (informational) the src/main and src/test non-comment LoC, and
+#      the src/main object-level public def count
 #   1. unit specs (incl. PartitionInvarianceSpec's 12-family
 #      bit-identical check at two awkward execution configs), then the
 #      benchmark harness's own tests — its build compiles the engine
@@ -23,11 +24,15 @@ cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
 
 # Non-comment Scala LoC of the engine and of its specs — the count a
-# change's LoC claim quotes. Informational: it never fails the gate.
+# change's LoC claim quotes — and the engine's object-level public defs,
+# the API surface a change states beside its LoC. Informational: neither
+# ever fails the gate.
 for d in src/main src/test; do
   echo "roundcheck: $d non-comment LoC" \
     "$(find "$d" -name '*.scala' -exec cat {} + | grep -cvE '^\s*($|//|\*|/\*\*)' || true)"
 done
+echo "roundcheck: src/main object-level public defs" \
+  "$(find src/main -name '*.scala' -exec cat {} + | grep -cE '^  def ' || true)"
 
 sbt -batch test
 (cd perfbench && sbt -batch test)
